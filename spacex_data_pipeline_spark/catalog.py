@@ -13,6 +13,7 @@ column pruning and predicate pushdown into the parquet reader — check with
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,10 +40,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # cores — the 100 TB failure mode is a single monolithic ingest file (or a
 # one-row-group writer), where the whole first stage of every query runs
 # on one task. The guard fires only when BOTH hold:
-#   (a) the input is a single file of at least SPARK_GRAFT_FANOUT_MIN_BYTES
-#       (default 1 GiB — two orders of magnitude above every local fixture,
-#       so local/bench behavior is byte-identical and the driver's
-#       lower-core-count runs stay comparable), and
+#   (a) the input holds a single data file of at least
+#       SPARK_GRAFT_FANOUT_MIN_BYTES (default 1 GiB — two orders of
+#       magnitude above every local fixture, so local/bench behavior is
+#       byte-identical and the driver's lower-core-count runs stay
+#       comparable): a bare file, or a directory whose only data file it
+#       is (a one-part-file Spark output is the same hazard), and
 #   (b) the scan actually plans fewer partitions than defaultParallelism
 #       (a well-row-grouped 10 GiB file already splits via
 #       maxPartitionBytes and is left alone).
@@ -57,20 +60,46 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _FANOUT_MIN_BYTES_DEFAULT = 1 << 30
 
 
+def _fanout_floor() -> int:
+    # read per call (not at import) so tests can exercise the guard by env;
+    # a malformed value warns and falls back to the default instead of
+    # failing every table() call
+    raw = os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES")
+    if raw is None:
+        return _FANOUT_MIN_BYTES_DEFAULT
+    try:
+        return int(raw)
+    except ValueError:
+        warnings.warn(
+            f"SPARK_GRAFT_FANOUT_MIN_BYTES={raw!r} is not an integer; "
+            f"using the default {_FANOUT_MIN_BYTES_DEFAULT}",
+            stacklevel=2,
+        )
+        return _FANOUT_MIN_BYTES_DEFAULT
+
+
+def _single_data_file_bytes(path: str) -> int | None:
+    """Size of the one data file behind ``path`` (a file, or a directory
+    holding exactly one file that is not hidden or ``_``-prefixed, the
+    names Spark's reader skips), else None. ``os`` calls only: this runs
+    on every table() call and must not start a Spark job."""
+    try:
+        if os.path.isfile(path):
+            return os.path.getsize(path)
+        with os.scandir(path) as it:
+            data = [e for e in it if not e.name.startswith(("_", "."))]
+        if len(data) == 1 and data[0].is_file():
+            return data[0].stat().st_size
+    except OSError:
+        pass
+    return None
+
+
 def _fan_out_single_split(
     spark: SparkSession, df: DataFrame, path: str
 ) -> DataFrame:
-    # threshold read per call (not at import) so tests can exercise the
-    # guard by env; one getenv per table() call is noise
-    floor = int(
-        os.environ.get(
-            "SPARK_GRAFT_FANOUT_MIN_BYTES", str(_FANOUT_MIN_BYTES_DEFAULT)
-        )
-    )
-    try:
-        if not os.path.isfile(path) or os.path.getsize(path) < floor:
-            return df
-    except OSError:
+    size = _single_data_file_bytes(path)
+    if size is None or size < _fanout_floor():
         return df
     par = spark.sparkContext.defaultParallelism
     # .rdd here only PLANS the scan (no job); its partition count is the

@@ -11,7 +11,11 @@ one we would also want on a real multi-executor cluster:
   (airflow/dags/spacex_api_dag.py:40 ``tz_convert(None)``), and the DuckDB
   oracle compares timestamps as UTC.
 - Arrow enabled — all pandas interchange (Pandas UDFs, createDataFrame)
-  goes through Arrow batches.
+  goes through Arrow batches. REST ingest (``sources.rest_api.normalize``)
+  hands Spark an Arrow table itself, whatever this conf says, so no Python
+  worker touches the raw batch; its ``load_ts`` crosses as a UTC instant
+  and keeps process-local semantics (a naive stamp is local wall time,
+  as in ``TimestampType.toInternal``), not the UTC session timezone's.
 """
 
 from __future__ import annotations

@@ -92,6 +92,42 @@ def test_fanout_guard_never_fires_at_fixture_scale(spark, sf_smoke):
         assert "Repartition" not in plan, name
 
 
+def test_fanout_guard_malformed_floor_falls_back_to_default(
+    spark, sf_smoke, monkeypatch
+):
+    """A malformed SPARK_GRAFT_FANOUT_MIN_BYTES must not break table(): it
+    warns and the 1 GiB default applies, so fixtures stay un-fanned."""
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_BYTES", "1GiB")
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_FANOUT_MIN_BYTES"):
+        df = catalog.table(spark, sf_smoke, "orders")
+    assert "Repartition" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_fanout_guard_treats_one_file_directory_like_a_file(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """A table directory holding exactly one data file (plus Spark's
+    ``_SUCCESS`` marker) is guarded like the bare file; a second data file
+    takes it out of the guard."""
+    import os
+    import shutil
+
+    table_dir = tmp_path / "orders.parquet"
+    catalog.table(spark, sf_smoke, "orders").coalesce(1).write.parquet(str(table_dir))
+    parts = [f for f in os.listdir(table_dir) if f.endswith(".parquet")]
+    assert len(parts) == 1 and os.path.exists(table_dir / "_SUCCESS")
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_BYTES", "1")
+    fanned = catalog.table(spark, str(tmp_path), "orders")
+    assert (
+        fanned.rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
+    assert _rows(fanned) == _rows(catalog.table(spark, sf_smoke, "orders"))
+    shutil.copy(table_dir / parts[0], table_dir / ("copy-" + parts[0]))
+    two = catalog.table(spark, str(tmp_path), "orders")
+    assert "Repartition" not in two._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_fanout_guard_fires_above_floor_and_keeps_pushdown(
     spark, sf_smoke, monkeypatch
 ):

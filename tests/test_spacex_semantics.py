@@ -144,3 +144,122 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     assert {r["year"]: r["launches"] for r in mart3.collect()} == {
         y: 2 * r["launches"] for y, r in rows1.items()
     }
+
+
+# One record per coerce rule: non-bool success/upcoming, malformed, float,
+# string and NULL flight_number, a record without ``id`` that falls back to
+# ``launch_id``, NULL and non-string details, a non-string name, and text
+# that UTF-8 cannot encode.
+COERCE_PAYLOAD = [
+    {"id": "p1", "name": "ok", "date_utc": "2020-01-01T00:00:00.000Z", "success": True,
+     "rocket": "r1", "details": None, "flight_number": 1, "upcoming": False},
+    {"id": "p2", "name": 5, "date_utc": None, "success": "yes", "rocket": None,
+     "details": {"k": 1}, "flight_number": "12", "upcoming": 1},
+    {"launch_id": "p3", "name": "fallback", "success": None, "flight_number": "x",
+     "upcoming": None},
+    {"id": "p4", "success": 0, "flight_number": 3.9, "details": ["a"]},
+    {"id": "p5", "success": False, "flight_number": None, "upcoming": True},
+    {"id": None, "launch_id": None, "flight_number": [1]},
+    # lone surrogate escapes, as json.loads returns them for "\ud800"
+    {"id": "p7", "name": "a\ud800b", "rocket": "\udc00\ud800", "details": "\ud83d\ude00"},
+]
+COERCE_EXPECTED = [
+    ("p1", "ok", "2020-01-01T00:00:00.000Z", True, "r1", None, 1, False, BATCH_TS),
+    ("p2", "5", None, None, None, "{'k': 1}", 12, None, BATCH_TS),
+    ("p3", "fallback", None, None, None, None, None, None, BATCH_TS),
+    ("p4", None, None, None, None, "['a']", 3, None, BATCH_TS),
+    ("p5", None, None, False, None, None, None, True, BATCH_TS),
+    (None, None, None, None, None, None, None, None, BATCH_TS),
+    ("p7", "a\ufffdb", None, None, "\ufffd\ufffd", "\ufffd\ufffd", None, None, BATCH_TS),
+]
+
+
+def test_normalize_pins_every_coerce_rule(spark):
+    raw = rest_api.normalize(spark, COERCE_PAYLOAD, load_ts=BATCH_TS)
+    assert raw.schema == rest_api.RAW_SCHEMA
+    assert [tuple(r) for r in raw.collect()] == COERCE_EXPECTED
+
+
+def test_normalize_flight_number_outside_int64_is_null(spark):
+    """Cast-with-null-on-error covers integers that do not fit a LONG: one
+    such record must not fail the whole batch."""
+    lo, hi = -(1 << 63), (1 << 63) - 1
+    payload = [
+        {"id": "big", "flight_number": 2**70},
+        {"id": "neg", "flight_number": -(2**64)},
+        {"id": "inf", "flight_number": float("inf")},
+        {"id": "str", "flight_number": str(2**63)},
+        {"id": "hi", "flight_number": hi},
+        {"id": "lo", "flight_number": lo},
+    ]
+    raw = rest_api.normalize(spark, payload, load_ts=BATCH_TS)
+    got = {r["launch_id"]: r["flight_number"] for r in raw.collect()}
+    assert got == {"big": None, "neg": None, "inf": None, "str": None, "hi": hi, "lo": lo}
+
+
+def test_normalize_empty_payload_keeps_raw_schema(spark):
+    raw = rest_api.normalize(spark, [], load_ts=BATCH_TS)
+    assert raw.schema == rest_api.RAW_SCHEMA
+    assert raw.collect() == []
+
+
+def test_normalize_load_ts_is_process_local_instant(spark, tmp_path, monkeypatch):
+    """A naive ``load_ts`` is wall time in the process's timezone, as
+    Spark's own ``TimestampType.toInternal`` reads it; the session timezone
+    (UTC) must not re-interpret it. Checked on the written parquet's raw
+    epoch-micros, not through ``collect()``, which would convert back."""
+    import glob
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        want = T.TimestampType().toInternal(BATCH_TS)
+        path = str(tmp_path / "raw")
+        sinks.append(rest_api.normalize(spark, PAYLOAD, load_ts=BATCH_TS), path)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    # the zone took effect: New York wall time is 4 h behind UTC in June
+    assert want - T.TimestampNTZType().toInternal(BATCH_TS) == 4 * 3600 * 10**6
+    micros = []
+    for f in glob.glob(path + "/*.parquet"):
+        col = pq.read_table(f, columns=["load_ts"]).column("load_ts")
+        micros += col.cast("timestamp[us]").cast("int64").to_pylist()
+    assert micros == [want] * len(PAYLOAD)
+
+
+def test_append_pipeline_lands_batch_as_one_file_without_python_workers(
+    spark, tmp_path, monkeypatch
+):
+    """The raw batch reaches the JVM as Arrow: its lineage has no
+    ``PythonRDD`` (no job over it starts a Python worker), and a batch of
+    at most 10,000 rows is one partition, so an append writes one file."""
+    import os
+
+    from spacex_data_pipeline_spark.plans.warehouse import Warehouse, run_spacex_pipeline
+
+    payload = [
+        {"id": f"k{i}", "name": f"n{i}", "date_utc": "2021-05-01T00:00:00.000Z",
+         "success": i % 3 != 0, "flight_number": i, "upcoming": False}
+        for i in range(10_000)
+    ]
+    seen = []
+    real_append = sinks.append
+
+    def spy(df, path, partition_by=None):
+        seen.append(df)
+        real_append(df, path, partition_by)
+
+    monkeypatch.setattr(sinks, "append", spy)
+    wh = Warehouse(str(tmp_path / "wh"))
+    mart = run_spacex_pipeline(spark, wh, fetch=lambda: payload, load_ts=BATCH_TS, mode="append")
+    assert {r["year"]: r["launches"] for r in mart.collect()} == {2021: 10_000}
+    raw_dir = wh.path("raw", "spacex_launches")
+    assert len([f for f in os.listdir(raw_dir) if f.endswith(".parquet")]) == 1
+    (raw,) = seen
+    lineage = raw._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
