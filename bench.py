@@ -845,6 +845,13 @@ def main() -> None:
             # 25-field toString truncation and WARNs once into the tail;
             # raising the cap keeps the driver-parsed tail pure signal
             "spark.sql.debug.maxToStringFields": "2000",
+            # _group_exec_stats reads the status tracker, which keeps only
+            # the most recent retainedJobs/retainedStages (default 1000
+            # each). A whole sf0.1 pass runs ~2.2k jobs and ~4k stages, its
+            # largest group ~35 jobs and ~60 stages; 10000 keeps every job
+            # and stage of any group until its stats are read.
+            "spark.ui.retainedJobs": "10000",
+            "spark.ui.retainedStages": "10000",
         },
     )
 

@@ -8,6 +8,22 @@ Postgres schemas ``raw`` / ``analytics`` (SURVEY.md §1.4).
 Scans stay fully declarative (``spark.read.parquet``) so Catalyst performs
 column pruning and predicate pushdown into the parquet reader — check with
 ``df.explain("formatted")`` → ``PushedFilters`` / ``ReadSchema``.
+
+Postgres keeps each table's schema in its catalog; a bare parquet read
+instead starts a Spark job that reads a footer to infer it. ``table`` keeps
+a process-level record of the schemas Spark has inferred, so only the first
+read of a file version pays that job; every later read, on any SparkContext
+in the process, pins the recorded ``StructType`` with
+``spark.read.schema(...)`` and starts none. A record is keyed by the path,
+the ``os.stat`` identity of the data behind it (size, ``mtime_ns`` and inode
+of the file, or of every data file Spark lists under a directory) and the
+session values of the confs Spark's parquet schema inference reads
+(``_INFERENCE_CONFS``). The record is exact, not an approximation: it holds
+the very schema Spark's own inference returned for those inputs, and a
+rewritten or added file or a flipped conf is a different key, so a miss
+infers exactly as a plain read does. Only ``StructType`` is kept — a
+DataFrame is bound to its SparkContext. Paths ``os`` cannot stat (object
+stores) are read and inferred as a plain read every time.
 """
 
 from __future__ import annotations
@@ -17,6 +33,7 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -78,28 +95,57 @@ def _fanout_floor() -> int:
         return _FANOUT_MIN_BYTES_DEFAULT
 
 
-def _single_data_file_bytes(path: str) -> int | None:
-    """Size of the one data file behind ``path`` (a file, or a directory
-    holding exactly one file that is not hidden or ``_``-prefixed, the
-    names Spark's reader skips), else None. ``os`` calls only: this runs
-    on every table() call and must not start a Spark job."""
+def _skipped_by_spark(name: str) -> bool:
+    # the names Spark's file listing leaves out (HadoopFSUtils
+    # .shouldFilterOutPathName): hidden, in-flight copies, and
+    # ``_``-prefixed names that are not ``k=v`` partition directories
+    return (
+        name.startswith(".")
+        or name.endswith("._COPYING_")
+        or (name.startswith("_") and "=" not in name)
+    )
+
+
+def _data_files(path: str) -> tuple[tuple[str, int, int, int], ...] | None:
+    """``(name, size, mtime_ns, inode)`` of each data file Spark reads
+    behind ``path``: the bare file itself (name ``""``), or every listed
+    file under a directory, by path relative to it, sorted. None when
+    ``os`` cannot stat it (a missing path, an object-store URI). ``os``
+    calls only: this runs on every table() call and must not start a
+    Spark job."""
+
+    def ident(name: str, st: os.stat_result) -> tuple[str, int, int, int]:
+        return (name, st.st_size, st.st_mtime_ns, st.st_ino)
+
+    def walk(d: str, prefix: str):
+        with os.scandir(d) as it:
+            for e in it:
+                if _skipped_by_spark(e.name):
+                    continue
+                if e.is_dir():
+                    yield from walk(e.path, f"{prefix}{e.name}/")
+                else:
+                    yield ident(prefix + e.name, e.stat())
+
     try:
         if os.path.isfile(path):
-            return os.path.getsize(path)
-        with os.scandir(path) as it:
-            data = [e for e in it if not e.name.startswith(("_", "."))]
-        if len(data) == 1 and data[0].is_file():
-            return data[0].stat().st_size
+            return (ident("", os.stat(path)),)
+        return tuple(sorted(walk(path, "")))
     except OSError:
-        pass
-    return None
+        return None
 
 
 def _fan_out_single_split(
-    spark: SparkSession, df: DataFrame, path: str
+    spark: SparkSession, df: DataFrame, files: tuple | None
 ) -> DataFrame:
-    size = _single_data_file_bytes(path)
-    if size is None or size < _fanout_floor():
+    # fires only when ``_data_files`` found one data file: a bare file, or
+    # a directory holding exactly one file and no subdirectory data
+    if (
+        files is None
+        or len(files) != 1
+        or "/" in files[0][0]
+        or files[0][1] < _fanout_floor()
+    ):
         return df
     par = spark.sparkContext.defaultParallelism
     # .rdd here only PLANS the scan (no job); its partition count is the
@@ -109,10 +155,55 @@ def _fan_out_single_split(
     return df.repartition(par)
 
 
+# Session confs that change the schema Spark infers from parquet footers:
+# every flag ParquetToSparkSchemaConverter(SQLConf) reads in Spark 4.1.2,
+# plus the two that choose which footers inference reads.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+# path -> (its data files when recorded, {conf values: the schema Spark
+# inferred}); a new file version replaces the old version's record
+_SCHEMAS: dict[str, tuple[tuple, dict[tuple, StructType]]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str, files: tuple | None) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema pinned when Spark has
+    already inferred it for this file version under these confs."""
+    if files is None:
+        return spark.read.parquet(path)
+    # None: unset, so this Spark's default applies
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    recorded, schemas = _SCHEMAS.get(path, (None, {}))
+    if recorded == files and confs in schemas:
+        return spark.read.schema(schemas[confs]).parquet(path)
+    df = spark.read.parquet(path)
+    # Record only if no file changed while Spark read the footers. Every
+    # store is one assignment of a correct record, so concurrent callers
+    # can at worst drop a record, never pin a wrong schema.
+    if _data_files(path) == files:
+        if recorded != files:
+            schemas = {}
+            _SCHEMAS[path] = (files, schemas)
+        schemas[confs] = df.schema
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    files = _data_files(path)
     if name == "events":
         # The fixture generator has shipped events.ts under two physical
         # types across rounds: parquet TIMESTAMP(NANOS) (which Spark's
@@ -128,7 +219,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # therefore reads ALL nanos-timestamp parquet as LONG; this module
         # is the single place that converts.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path, files)
         ts_type = df.schema["ts"].dataType.simpleString()
         if ts_type == "bigint":
             # nanos epoch as LONG: truncate to micros with integer `div`
@@ -139,8 +230,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # session tz is pinned to UTC (session.py), so this cast is
             # value-identical and keeps the public schema stable.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return _fan_out_single_split(spark, df, path)
-    return _fan_out_single_split(spark, spark.read.parquet(path), path)
+        return _fan_out_single_split(spark, df, files)
+    return _fan_out_single_split(spark, _read_parquet(spark, path, files), files)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

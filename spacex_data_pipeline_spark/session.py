@@ -16,6 +16,8 @@ one we would also want on a real multi-executor cluster:
   worker touches the raw batch; its ``load_ts`` crosses as a UTC instant
   and keeps process-local semantics (a naive stamp is local wall time,
   as in ``TimestampType.toInternal``), not the UTC session timezone's.
+- Driver heap ``SPARK_GRAFT_DRIVER_MEM``, by default half of physical
+  memory and at most 16g (``default_driver_memory``).
 """
 
 from __future__ import annotations
@@ -27,6 +29,18 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half of
+    physical memory, at most 16g. A heap as large as the host lets one
+    long-lived JVM grow until the kernel's OOM killer ends it; half leaves
+    room for the JVM's off-heap memory, Python and the OS."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
+        return "16g"
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
 
 
 def build_session(
@@ -52,7 +66,10 @@ def build_session(
         # and a session-wide flip mid-flight would silently change later
         # reads (ADVICE r1). catalog.table owns the ns→us conversion.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )

@@ -7,10 +7,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The engine's 16 GB default driver heap is as large as a 16 GB host: over a
-# whole suite the test JVM grows into it until the kernel's OOM killer ends
-# it, and every later test fails on a refused connection. The suite's data
-# (sf0.001-sf0.01) fits a 4 GB heap; CLI tests' child JVMs inherit this too.
+# The engine's default driver heap is half of physical memory (at most
+# 16g). The suite runs child JVMs beside its own (CLI and schema-memo
+# tests), and its data (sf0.001-sf0.01) fits a 4 GB heap, so it caps every
+# JVM it starts at 4g; a heap grown into the whole host was OOM-killed
+# partway through the suite.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 from spacex_data_pipeline_spark.session import build_session  # noqa: E402

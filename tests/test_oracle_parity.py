@@ -12,6 +12,7 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import math
+import zlib
 
 import duckdb
 import pytest
@@ -132,16 +133,47 @@ def _assert_parity(name, spark, sf_oracle, ducks):
 # The full 347-entry sweep is `slow` (r15, VERDICT r14 #6: it alone is most
 # of the ~50-minute suite, which overflowed the round driver's pytest
 # budget and turned the verify gate red on a green tree). The default gate
-# keeps a deterministic every-9th sample (~39 entries spanning the
-# registry); the driver separately hash-checks its 50-entry window, and
-# the full sweep still runs by name or with -m "slow or not slow".
+# keeps a deterministic ~1/9 sample chosen by a stable hash of the entry
+# name, so registering an unrelated entry never changes which entries it
+# covers (the positional every-9th stride over sorted names it replaced
+# shifted with every insertion). The 39 entries that stride last covered
+# stay pinned by name, so nothing the gate checked drops out of it.
+# DRIVER_WINDOW's 50 entries are hash-checked separately, and the full
+# sweep still runs by name or with -m "slow or not slow".
+_STRIDE_SAMPLE = {
+    "ab_funnel_stage_rates", "asof_join_last_purchase",
+    "bigram_collocations_docs", "bootstrap_poisson_revenue_ci",
+    "cluster_quality_profile", "contrastive_pairs_embeddings",
+    "curriculum_order_docs", "decontaminate_bloom_docs",
+    "dedup_incremental_snapshot", "dedup_ngram_span_stats",
+    "dedup_survivorship_shift", "dsir_importance_scores",
+    "er_entity_golden_records", "exact_order_statistics_orders",
+    "funnel_conversion_rates", "having_active_customers",
+    "interarrival_dispersion_events", "ks_drift_order_prices",
+    "mann_kendall_trend_daily", "mixture_temperature_sampling",
+    "multimodal_resize_meta", "orders_global_running_total",
+    "pca_second_direction_embeddings", "priority_mix_shift_monthly",
+    "q16_supplier_relationship_count", "q3_unshipped_revenue",
+    "quantile_normalize_quality", "resample_user_daily_locf",
+    "scalar_functions_part", "sessionize_events",
+    "ship_lag_percentiles_by_priority", "snapshot_diff_orders",
+    "source_typicality_report", "string_predicates_part",
+    "text_quality_docs", "theil_sen_daily_slope", "union_all_order_events",
+    "weighted_median_price_by_flag", "winnowing_near_pairs_docs",
+}
+FAST_SAMPLE = [
+    n for n in ORACLE_CASES
+    if n in _STRIDE_SAMPLE or zlib.crc32(n.encode()) % 9 == 0
+]
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize("name", ORACLE_CASES)
 def test_oracle_parity(name, spark, sf_oracle, ducks):
     _assert_parity(name, spark, sf_oracle, ducks)
 
 
-@pytest.mark.parametrize("name", ORACLE_CASES[::9])
+@pytest.mark.parametrize("name", FAST_SAMPLE)
 def test_oracle_parity_fast_sample(name, spark, sf_oracle, ducks):
     _assert_parity(name, spark, sf_oracle, ducks)
 

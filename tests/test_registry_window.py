@@ -26,11 +26,21 @@ from spacex_data_pipeline_spark.queries import DRIVER_WINDOW, REGISTRY, queries
 # schema + canonical value multiset). r15 is an optimization round and
 # registers nothing; the 8 r14 registrations rotated INTO the r15
 # window, so the set is empty.
-# Everything in PREVIOUSLY_DRIVER_GREEN has a green driver row (r1-r14)
-# under behavior-identical code.
+# Everything in PREVIOUSLY_DRIVER_GREEN has a fully matching
+# CORRECTNESS_r*.json row (r1-r15) under behavior-identical code.
 NEW_AWAITING_WINDOW: set[str] = set()
 
 PREVIOUSLY_DRIVER_GREEN = {
+    # -- r15 window first-timers (the 8 r14 registrations), all green on
+    #    rows, schema and hash (CORRECTNESS_r15) --
+    "good_turing_coverage_estimate",
+    "horvitz_thompson_strata_estimate",
+    "ivfpq_append_recall_drift",
+    "lsh_recall_vs_bands",
+    "minhash_jaccard_calibration",
+    "neardup_transitivity_audit",
+    "ratio_estimator_orders",
+    "source_epoch_plan",
     # -- r13 window first-timers (the 30 r12 registrations), all green
     #    (CORRECTNESS_r13: 50/50, zero err) --
     "repeat_purchase_curve",

@@ -398,3 +398,24 @@ def test_containment_df_cap_is_monotone_and_bounded(spark):
     dropped = set(uncapped) - set(capped)
     assert dropped  # the boilerplate-only pairs did get dropped
     assert all(a < 100 and b < 100 for a, b in dropped)
+
+
+def test_default_driver_heap_never_exceeds_physical_memory(monkeypatch):
+    """session.default_driver_memory is half of physical memory, capped
+    at 16g, so an unset SPARK_GRAFT_DRIVER_MEM cannot size the heap to
+    the whole host."""
+    import os
+
+    from spacex_data_pipeline_spark import session
+
+    def heap_bytes() -> int:
+        v = session.default_driver_memory()
+        return int(v[:-1]) << {"m": 20, "g": 30}[v[-1]]
+
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert 0 < heap_bytes() <= min(phys // 2, 16 << 30)
+    for host in (1 << 30, 16 << 30, 1 << 40):  # 1 GiB, 16 GiB, 1 TiB
+        sizes = {"SC_PHYS_PAGES": host // 4096, "SC_PAGE_SIZE": 4096}
+        monkeypatch.setattr(os, "sysconf", sizes.__getitem__)
+        assert heap_bytes() <= min(host // 2, 16 << 30)
+    assert session.default_driver_memory() == "16384m"  # the 1 TiB host

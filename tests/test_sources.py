@@ -734,3 +734,148 @@ def test_write_sorted_buckets_more_buckets_than_rows(spark, tmp_path):
     assert dirs == [0, 1, 2]
     back = spark.read.parquet(path)
     assert sorted((r.k, r.v) for r in back.collect()) == [(1, 10), (2, 20), (3, 30)]
+
+
+# -- catalog.table schema memo ---------------------------------------------
+
+# Run in a child process: the memo must serve a SparkContext started after
+# the one that inferred, and the shared test session cannot be stopped.
+_FRESH_CONTEXT_PROBE = r"""
+import json, sys
+from spacex_data_pipeline_spark import catalog
+from spacex_data_pipeline_spark.session import build_session
+
+sf_dir, nanos_dir = sys.argv[1:3]
+s = build_session(app_name="schema-memo-first")
+inferred = {n: catalog.table(s, sf_dir, n).schema.json() for n in catalog.TABLES}
+healed = catalog.table(s, nanos_dir, "events")
+first_rows = sorted(map(tuple, healed.collect()))
+want_rows = sorted(map(tuple, catalog.table(s, sf_dir, "events").collect()))
+s.stop()
+
+s = build_session(app_name="schema-memo-second")
+sc = s.sparkContext
+sc.setJobGroup("memo", "memo")
+pinned = {n: catalog.table(s, sf_dir, n).schema.json() for n in catalog.TABLES}
+healed = catalog.table(s, nanos_dir, "events")
+jobs = len(sc.statusTracker().getJobIdsForGroup("memo"))
+second_rows = sorted(map(tuple, healed.collect()))
+s.stop()
+print(json.dumps({
+    "jobs": jobs,
+    "schemas_equal": pinned == inferred,
+    "ts_type": healed.schema["ts"].dataType.simpleString(),
+    "rows_equal": first_rows == second_rows == want_rows,
+    "rows": len(second_rows),
+}))
+"""
+
+
+def test_schema_memo_fresh_context_runs_no_footer_job(sf_smoke, tmp_path):
+    """Once a process has inferred a table's schema, a read on a later
+    SparkContext pins it and starts no job: all 10 fixture tables keep
+    their inferred schemas, and a TIMESTAMP(NANOS) events file still
+    heals to ``timestamp`` with the same rows."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(os.path.join(sf_smoke, "events.parquet"))
+    i = ev.schema.get_field_index("ts")
+    ev = ev.set_column(i, "ts", ev.column("ts").cast(pa.timestamp("ns")))
+    nanos_dir = tmp_path / "nanos"
+    nanos_dir.mkdir()
+    pq.write_table(ev, nanos_dir / "events.parquet", version="2.6")
+    assert pq.read_schema(nanos_dir / "events.parquet").field("ts").type.unit == "ns"
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, "-c", _FRESH_CONTEXT_PROBE, sf_smoke, str(nanos_dir)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    got = json.loads(run.stdout.strip().splitlines()[-1])
+    assert got["jobs"] == 0
+    assert got["schemas_equal"]
+    assert got["ts_type"] == "timestamp"
+    assert got["rows_equal"] and got["rows"] > 0
+
+
+def _read_counting_jobs(spark, sf_dir, name):
+    """catalog.table under a fresh job group -> (df, jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"schema-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = catalog.table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_schema_memo_sees_a_rewritten_file(spark, tmp_path):
+    """Rewriting the file at the same path with an extra column is a new
+    file version: the column shows up instead of the recorded schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "part.parquet"
+    pq.write_table(pa.table({"k": [1, 2]}), path)
+    assert catalog.table(spark, str(tmp_path), "part").columns == ["k"]
+    assert _read_counting_jobs(spark, str(tmp_path), "part")[1] == 0
+
+    pq.write_table(pa.table({"k": [1, 2], "extra": ["a", "b"]}), path)
+    df = catalog.table(spark, str(tmp_path), "part")
+    assert df.columns == ["k", "extra"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (2, "b")]
+
+
+def test_schema_memo_misses_when_a_directory_gains_a_part_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "orders.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"k": [1]}), d / "part-0.parquet")
+    df, jobs = _read_counting_jobs(spark, str(tmp_path), "orders")
+    assert jobs >= 1  # the first read infers
+    df, jobs = _read_counting_jobs(spark, str(tmp_path), "orders")
+    assert jobs == 0  # a hit pins the recorded schema
+
+    pq.write_table(pa.table({"k": [2]}), d / "part-1.parquet")
+    df, jobs = _read_counting_jobs(spark, str(tmp_path), "orders")
+    assert jobs >= 1
+    assert sorted(r.k for r in df.collect()) == [1, 2]
+
+
+def test_schema_memo_keys_on_binary_as_string(spark, tmp_path):
+    """A conf the parquet schema converter reads is part of the key:
+    flipping spark.sql.parquet.binaryAsString changes the read type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"b": pa.array([b"x", b"y"], pa.binary())}),
+        tmp_path / "part.parquet",
+    )
+
+    def read_type():
+        df = catalog.table(spark, str(tmp_path), "part")
+        return df.schema["b"].dataType.simpleString(), sorted(r.b for r in df.collect())
+
+    assert read_type() == ("binary", [bytearray(b"x"), bytearray(b"y")])
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        assert read_type() == ("string", ["x", "y"])
+    finally:
+        spark.conf.set(key, prev)
+    assert read_type()[0] == "binary"
