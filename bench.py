@@ -813,7 +813,9 @@ def machine_calibration() -> dict:
         best = min(best, time.perf_counter() - t0)
     import multiprocessing as mp
 
-    n = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32)))
+    from spacex_data_pipeline_spark.session import default_parallelism
+
+    n = default_parallelism()
     par = float("inf")
     try:
         with mp.Pool(n) as pool:
