@@ -9,11 +9,7 @@ plan; a TABLE is a parquet CTAS. Lineage IS the logical plan.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
-
-Model = Callable[[SparkSession], DataFrame]
+from pyspark.sql import DataFrame
 
 
 def materialize_view(df: DataFrame, name: str) -> DataFrame:
@@ -46,12 +42,3 @@ def materialize_table(
         out.createOrReplaceTempView(name)
     return out
 
-
-def run_dag(spark: SparkSession, models: dict[str, Model]) -> dict[str, DataFrame]:
-    """Run models in declaration order (a dict preserves insertion order);
-    each model may reference earlier ones via the temp-view catalog —
-    the 2-model chain of the reference needs nothing fancier."""
-    out: dict[str, DataFrame] = {}
-    for name, model in models.items():
-        out[name] = materialize_view(model(spark), name)
-    return out

@@ -16,6 +16,7 @@ stable (order-insensitive value hash over columns sorted by name):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -57,208 +58,159 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.table(spark, sf_dir, name)
 
 
-# Per-process share of the documents (doc_id, shingle-hash) posting list
-# (VERDICT r11 "next round" #4, the _PCA_GRAM_CACHE pattern applied to
-# the shingle stage): fifteen registry entries — the Jaccard/containment
+# Shared passes: corpus-wide intermediates that several registry entries
+# consume, built once per SparkContext and handed to every consumer. The
+# one store below holds them all; every pass goes through @shared_pass.
+_SHARED: dict[tuple[str, str, str], object] = {}
+
+
+def shared_pass(build: Callable[[SparkSession, str], object]):
+    """Get-or-build one shared pass per (pass name, SparkContext, sf_dir).
+
+    ``build(spark, sf_dir)`` is deterministic over the data at ``sf_dir``
+    and runs the same operator code its consumers would run in-plan, so a
+    consumer handed the stored result gets the values it would have built
+    itself: sharing changes wall-clock only, never an answer. The key
+    holds the context's applicationId because materialized blocks live on
+    the context that made them; passes that hold collected Python values
+    follow the same rule, so a new context also re-reads data that
+    changed at ``sf_dir``. Only one SparkContext can be live in a
+    process, so a miss drops every entry of another application: a
+    stopped context's blocks are already gone, and its handles could
+    never be used again."""
+
+    @functools.wraps(build)
+    def get(spark: SparkSession, sf_dir: str):
+        app = spark.sparkContext.applicationId
+        key = (build.__name__, app, sf_dir)
+        if key not in _SHARED:
+            for dead in [k for k in _SHARED if k[1] != app]:
+                del _SHARED[dead]
+            _SHARED[key] = build(spark, sf_dir)
+        return _SHARED[key]
+
+    return get
+
+
+# The documents (doc_id, shingle-hash) posting list, k = 3 (VERDICT r11
+# "next round" #4): fifteen registry entries — the Jaccard/containment
 # pair generators, connected-components consumers, and every composed
 # dedup report — run the SAME corpus-wide tokenize+shingle+materialize
 # pass over the same table, so a registry-wide sweep paid that full-text
-# scan once PER ENTRY. Cache the MATERIALIZED DataFrame handle per
-# (SparkContext, sf_dir, k): localCheckpoint blocks live on the context,
-# so keying by applicationId makes a dead context's handle unreachable
-# (a fresh context rebuilds instead of crashing), and construction is
-# identical to the per-entry build — first-run and cached results are
-# the same blocks, so this cannot change any answer, only how often the
-# text scan runs. The pair generators keep building their own postings
-# when none is passed (the CLI path prunes a FILTERED corpus and must
-# not see the raw-table cache).
-_SHINGLE_POSTINGS_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+# scan once PER ENTRY. The pair generators keep building their own
+# postings when none is passed (the CLI path prunes a FILTERED corpus and
+# must not see the raw-table pass).
+@shared_pass
+def _doc_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.dedup import shingle_postings
+
+    return shingle_postings(_t(spark, sf_dir, "documents"), "doc_id", "text", 3)
 
 
-def _doc_shingle_postings(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    sh = _SHINGLE_POSTINGS_CACHE.get(key)
-    if sh is None:
-        from .operators.dedup import shingle_postings
+# The per-doc set-size table of the shared posting list (r14, guide §2.4 —
+# don't recompute what a sweep already aggregated): every Jaccard/
+# containment consumer of the postings re-aggregates it, and the Jaccard
+# shape aggregates it TWICE (na/nb join sides alias differently,
+# defeating exchange reuse — verified in
+# plans/r14/dedup_ngram_jaccard_before.txt: two independent
+# full-postings HashAggregates).
+@shared_pass
+def _doc_shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.dedup import materialize
 
-        sh = shingle_postings(_t(spark, sf_dir, "documents"), "doc_id", "text", k)
-        _SHINGLE_POSTINGS_CACHE[key] = sh
-    return sh
-
-
-# One more derived share (r14 optimization, guide §2.4 — don't recompute
-# what a sweep already aggregated): every Jaccard/containment consumer of
-# the shared posting list re-aggregates the per-doc set-size table, and
-# the Jaccard shape aggregates it TWICE (na/nb join sides alias
-# differently, defeating exchange reuse — verified in
-# plans/r14/dedup_ngram_jaccard_before.txt: two independent full-postings
-# HashAggregates). The sizes are a pure deterministic aggregate of the
-# already-materialized postings — identical values to each consumer's
-# in-plan aggregate — so caching the materialized handle changes
-# wall-clock only, never an answer.
-_SHINGLE_SIZES_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+    return materialize(
+        _doc_shingle_postings(spark, sf_dir)
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
-def _doc_shingle_sizes(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    sz = _SHINGLE_SIZES_CACHE.get(key)
-    if sz is None:
-        from .operators.dedup import materialize
-
-        sz = materialize(
-            _doc_shingle_postings(spark, sf_dir, k)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        _SHINGLE_SIZES_CACHE[key] = sz
-    return sz
-
-
-# Same sharing rule one level up: EIGHT entries (components, savings,
-# representatives, rates-by-source/domain, size histogram, the composed
-# reports) derive the identical (doc_id, component) assignment — CC
-# min-label fixpoint over the J≥0.8 pair graph — and the fixpoint is the
-# expensive stage (iterative joins, one pass per cluster diameter).
-# Deterministic by construction (min-label over a deterministic pair
-# set), so caching the materialized handle per (context, sf_dir) changes
-# wall-clock only, never an answer.
-_DOC_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The (doc_id, component) assignment — CC min-label fixpoint over the
+# J≥0.8 pair graph: EIGHT entries (components, savings, representatives,
+# rates-by-source/domain, size histogram, the composed reports) derive
+# it, and the fixpoint is the expensive stage (iterative joins, one pass
+# per cluster diameter).
+@shared_pass
 def _doc_cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    comp = _DOC_CC_CACHE.get(key)
-    if comp is None:
-        from .operators.dedup import connected_components, materialize
+    from .operators.dedup import connected_components, materialize
 
-        docs = _t(spark, sf_dir, "documents")
-        # r15: the edge list is the shared verified pair table — built
-        # once per context for ALL its consumers, not once more here
-        pairs = _doc_jaccard_pairs80(spark, sf_dir)
-        comp = materialize(connected_components(docs.select("doc_id"), pairs))
-        _DOC_CC_CACHE[key] = comp
-    return comp
+    docs = _t(spark, sf_dir, "documents")
+    # r15: the edge list is the shared verified pair table
+    pairs = _doc_jaccard_pairs80(spark, sf_dir)
+    return materialize(connected_components(docs.select("doc_id"), pairs))
 
 
-# The same sharing rule on the LINKAGE side (VERDICT r12 "next round"
-# #6): three ER entries — the fuzzy-pair table, its per-distance stats,
-# and the golden-record closure — all verify the IDENTICAL blocked
-# Levenshtein pair set over customer names (gram explode + candidate
-# join + banded edit distance, the family's expensive stage). Cache the
-# MATERIALIZED pair handle per (context, sf_dir); deterministic by
-# construction (df-capped candidates, exact threshold verify), so this
-# changes wall-clock only, never an answer. er_blocking_report keeps its
-# own build: it audits the intermediate stages (hot keys, raw
-# candidates), which the verified-pairs handle no longer exposes.
-_CUST_FUZZY_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The LINKAGE side (VERDICT r12 "next round" #6): three ER entries — the
+# fuzzy-pair table, its per-distance stats, and the golden-record closure
+# — all verify the IDENTICAL blocked Levenshtein pair set over customer
+# names (gram explode + candidate join + banded edit distance, the
+# family's expensive stage). er_blocking_report keeps its own build: it
+# audits the intermediate stages (hot keys, raw candidates), which the
+# verified-pairs handle does not expose.
+@shared_pass
 def _cust_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _CUST_FUZZY_PAIRS_CACHE.get(key)
-    if pairs is None:
-        from .operators.dedup import materialize
-        from .operators.linkage import blocked_fuzzy_pairs
+    from .operators.dedup import materialize
+    from .operators.linkage import blocked_fuzzy_pairs
 
-        pairs = materialize(
-            blocked_fuzzy_pairs(
-                _t(spark, sf_dir, "customer"), "c_custkey", "c_name"
-            )
-        )
-        _CUST_FUZZY_PAIRS_CACHE[key] = pairs
-    return pairs
+    return materialize(
+        blocked_fuzzy_pairs(_t(spark, sf_dir, "customer"), "c_custkey", "c_name")
+    )
 
 
-# One rung up the same ladder (r15, VERDICT r14 #3 — the _doc_cc_components
-# mirror on the linkage side): the CC min-label fixpoint over the shared
-# fuzzy-pair graph is the ER family's second expensive stage (iterative
-# joins, one pass per cluster diameter), and it was rebuilt on every
-# invocation of the golden-records entry even though the pair table it
-# closes over is already the shared materialized handle. Cache the
-# MATERIALIZED (c_custkey as doc_id, component) assignment per
-# (context, sf_dir): deterministic by construction (min-label over the
-# deterministic verified pair set), so this changes wall-clock only,
-# never an answer.
-_CUST_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# One rung up the same ladder (r15, VERDICT r14 #3 — the
+# _doc_cc_components mirror on the linkage side): the CC min-label
+# fixpoint over the shared fuzzy-pair graph, (c_custkey as doc_id,
+# component), is the ER family's second expensive stage, and the
+# golden-records entry rebuilt it on every invocation.
+@shared_pass
 def _cust_cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    comp = _CUST_CC_CACHE.get(key)
-    if comp is None:
-        from .operators.dedup import connected_components, materialize
+    from .operators.dedup import connected_components, materialize
 
-        cust = _t(spark, sf_dir, "customer")
-        pairs = _cust_fuzzy_pairs(spark, sf_dir)
-        comp = materialize(
-            connected_components(
-                cust.select(F.col("c_custkey").alias("doc_id")),
-                pairs.select(
-                    F.col("a_key").alias("doc_a"), F.col("b_key").alias("doc_b")
-                ),
-            )
+    cust = _t(spark, sf_dir, "customer")
+    pairs = _cust_fuzzy_pairs(spark, sf_dir)
+    return materialize(
+        connected_components(
+            cust.select(F.col("c_custkey").alias("doc_id")),
+            pairs.select(F.col("a_key").alias("doc_a"), F.col("b_key").alias("doc_b")),
         )
-        _CUST_CC_CACHE[key] = comp
-    return comp
+    )
 
 
-# Corpus trigram model, shared the same way (r15, VERDICT r14 #5): the
+# The corpus trigram model, (tf, model) (r15, VERDICT r14 #5): the
 # char-trigram tf pass (normalize + explode + per-doc count — a full-text
 # corpus scan) feeds BOTH typicality entries (per-doc and per-source),
-# and within one entry the trigram model aggregated from it is referenced
-# twice (broadcast scoring join + corpus total), so a sweep paid the
-# corpus pass once per entry per invocation and the model aggregate twice
-# per plan. Cache the MATERIALIZED (tf, model) handles per
-# (context, sf_dir); both are pure deterministic aggregates built through
-# the operator's own trigram_tf code path — identical values to each
-# consumer's in-plan build, wall-clock only, never an answer.
-_TRIGRAM_MODEL_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+# and within one entry the model aggregated from it is referenced twice
+# (broadcast scoring join + corpus total). Built through the operator's
+# own trigram_tf code path.
+@shared_pass
 def _doc_trigram_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _TRIGRAM_MODEL_CACHE.get(key)
-    if got is None:
-        from .operators.dedup import materialize
-        from .operators.text import trigram_tf
+    from .operators.dedup import materialize
+    from .operators.text import trigram_tf
 
-        tf = materialize(trigram_tf(_t(spark, sf_dir, "documents")))
-        model = materialize(
-            tf.groupBy("tri").agg(F.sum("tf").alias("c"))
-        )
-        got = (tf, model)
-        _TRIGRAM_MODEL_CACHE[key] = got
-    return got
+    tf = materialize(trigram_tf(_t(spark, sf_dir, "documents")))
+    model = materialize(tf.groupBy("tri").agg(F.sum("tf").alias("c")))
+    return tf, model
 
 
-# BM25 inverted-index base, shared the same way (r15): three bench
-# entries (text_bm25_topk, bm25_self_retrieval_mrr, hybrid_retrieval_rrf)
-# run bm25_topk over the same raw documents table with the same id/text
+# The BM25 inverted-index base (r15): three bench entries
+# (text_bm25_topk, bm25_self_retrieval_mrr, hybrid_retrieval_rrf) run
+# bm25_topk over the same raw documents table with the same id/text
 # columns, so each rebuilt the identical corpus tokenize+posexplode+tf
 # aggregate — the retrieval family's one corpus-sized pass (df/dl/total
 # mass all derive from it; in production it IS the stored inverted
-# index, built once per corpus snapshot). Cache the MATERIALIZED tf
-# handle per (context, sf_dir); built through the operator's own bm25_tf
-# code path — identical values, wall-clock only, never an answer.
-_BM25_TF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# index, built once per corpus snapshot).
+@shared_pass
 def _doc_bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tf = _BM25_TF_CACHE.get(key)
-    if tf is None:
-        from .operators.dedup import materialize
-        from .operators.text import bm25_tf
+    from .operators.dedup import materialize
+    from .operators.text import bm25_tf
 
-        tf = materialize(bm25_tf(_t(spark, sf_dir, "documents")))
-        _BM25_TF_CACHE[key] = tf
-    return tf
+    return materialize(bm25_tf(_t(spark, sf_dir, "documents")))
 
 
-# Verified near-dup pair tables, shared the same way (r15, second push —
-# the scan audit's residual worklist): the postings self-join behind
+# Verified near-dup pair tables (r15, second push — the scan audit's
+# residual worklist): the postings self-join behind
 # ngram_jaccard_pairs(k=3, threshold=0.8) is the single most duplicated
 # expensive subtree left in the registry — SIX call sites build the
 # byte-identical table (the _doc_cc_components fixpoint's edge list,
@@ -267,76 +219,52 @@ def _doc_bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # neardup_transitivity_audit), and containment_pairs(k=3,
 # threshold_pct=80, min_shingles=5) likewise has FOUR
 # (_doc_chain_depths' walk edges, containment_neardup_docs,
-# containment_prune_report, containment_groupkfold). Cache the
-# MATERIALIZED full operator outputs per (context, sf_dir); consumers
-# project the columns they used before. Built through the operators'
-# own code paths over the shared postings/sizes handles — identical
-# values to each consumer's in-plan build, wall-clock only, never an
-# answer. (The threshold=0.2 table is NOT shared: its only repeat
-# consumer besides dedup_threshold_sweep is the HEADLINE entry
+# containment_prune_report, containment_groupkfold). Both hold the full
+# operator outputs; consumers project the columns they used before.
+# (The threshold=0.2 table is NOT shared: its only repeat consumer
+# besides dedup_threshold_sweep is the HEADLINE entry
 # dedup_ngram_jaccard, whose bench number must stay the standalone cost
 # of producing the pair list.)
-_JACCARD_PAIRS80_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CONTAINMENT_PAIRS80_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@shared_pass
 def _doc_jaccard_pairs80(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) — exact verified Jaccard pairs, k=3,
-    threshold 0.8, materialized once per (context, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    jp = _JACCARD_PAIRS80_CACHE.get(key)
-    if jp is None:
-        from .operators.dedup import materialize, ngram_jaccard_pairs
+    threshold 0.8."""
+    from .operators.dedup import materialize, ngram_jaccard_pairs
 
-        jp = materialize(
-            ngram_jaccard_pairs(
-                _t(spark, sf_dir, "documents"), k=3, threshold=0.8,
-                postings=_doc_shingle_postings(spark, sf_dir),
-                sizes=_doc_shingle_sizes(spark, sf_dir),
-            )
+    return materialize(
+        ngram_jaccard_pairs(
+            _t(spark, sf_dir, "documents"), k=3, threshold=0.8,
+            postings=_doc_shingle_postings(spark, sf_dir),
+            sizes=_doc_shingle_sizes(spark, sf_dir),
         )
-        _JACCARD_PAIRS80_CACHE[key] = jp
-    return jp
+    )
 
 
+@shared_pass
 def _doc_containment_pairs80(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, a_size, inter, containment_pct) — exact containment
-    pairs, k=3, threshold 80 pct, min_shingles=5, materialized once per
-    (context, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cp = _CONTAINMENT_PAIRS80_CACHE.get(key)
-    if cp is None:
-        from .operators.dedup import containment_pairs, materialize
+    pairs, k=3, threshold 80 pct, min_shingles=5."""
+    from .operators.dedup import containment_pairs, materialize
 
-        cp = materialize(
-            containment_pairs(
-                _t(spark, sf_dir, "documents"), "doc_id", "text", k=3,
-                threshold_pct=80, min_shingles=5,
-                postings=_doc_shingle_postings(spark, sf_dir),
-                sizes=_doc_shingle_sizes(spark, sf_dir),
-            )
+    return materialize(
+        containment_pairs(
+            _t(spark, sf_dir, "documents"), "doc_id", "text", k=3,
+            threshold_pct=80, min_shingles=5,
+            postings=_doc_shingle_postings(spark, sf_dir),
+            sizes=_doc_shingle_sizes(spark, sf_dir),
         )
-        _CONTAINMENT_PAIRS80_CACHE[key] = cp
-    return cp
+    )
 
 
-# Containment chain depths, shared the same way (r13): the acyclic
-# strict-size containment walk (see containment_chain_depth's docstring
-# for the algebra) is the expensive stage behind both the depth
-# histogram and the scorecard's transitive-survival column; one walk
-# per (context, sf_dir) serves both. Deterministic (exact integer
-# frontier joins over a deterministic pair set) — wall-clock only.
-_CHAIN_DEPTH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Containment chain depths (r13): the acyclic strict-size containment
+# walk (see containment_chain_depth's docstring for the algebra) is the
+# expensive stage behind both the depth histogram and the scorecard's
+# transitive-survival column; one walk serves both.
+@shared_pass
 def _doc_chain_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, depth int) — depth of the longest strict-size
     containment chain starting at each doc (0 = contained in nothing
     bigger), walk capped at 8."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    dep = _CHAIN_DEPTH_CACHE.get(key)
-    if dep is not None:
-        return dep
     from .operators.dedup import materialize
 
     docs = _t(spark, sf_dir, "documents")
@@ -367,7 +295,7 @@ def _doc_chain_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach = levels[0]
     for lv in levels[1:]:
         reach = reach.unionByName(lv)
-    dep = materialize(
+    return materialize(
         docs.select("doc_id")
         .join(
             reach.groupBy(F.col("head").alias("doc_id")).agg(
@@ -380,8 +308,6 @@ def _doc_chain_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.coalesce("dmax", F.lit(0)).cast("int").alias("depth")
         )
     )
-    _CHAIN_DEPTH_CACHE[key] = dep
-    return dep
 
 
 # ---------------------------------------------------------------------------
@@ -13464,7 +13390,67 @@ def ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SORTED_FOOTER_CACHE: dict[str, list[tuple]] = {}
+# The sorted-bucket layout's footer cells (bucket, n_rows, min, max):
+# writing the layout and reading its footers is the entry's whole cost,
+# and repeated plan builds in one context share one write.
+@shared_pass
+def _sorted_footer_cells(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    import datetime as _dt
+    import glob
+    import os
+    import re as _re
+    import shutil
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
+    from .sources.sinks import write_sorted_buckets
+
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_shipdate", "l_orderkey", "l_linenumber"
+    )
+    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    if "://" in wh or wh.startswith("file:"):
+        wh = urlparse(wh).path or wh
+    path = os.path.join(
+        wh,
+        "_sorted_layout",
+        "%s_pid%d"
+        % (_re.sub(r"\W+", "_", sf_dir.strip("/")), os.getpid()),
+    )
+    # The write sits INSIDE the try/finally so a failure mid-write
+    # still removes the pid-suffixed directory (ADVICE r10: a write
+    # crash must not leak a half-written layout under the warehouse).
+    try:
+        write_sorted_buckets(
+            li,
+            path,
+            ["l_shipdate", "l_orderkey", "l_linenumber"],
+            grain=F.date_trunc("month", F.col("l_shipdate")),
+            n_buckets=8,
+        )
+        cells = []
+        for d in sorted(glob.glob(f"{path}/__bucket=*")):
+            bucket = int(d.rsplit("=", 1)[1])
+            n_rows, mn, mx = 0, None, None
+            for fpath in glob.glob(f"{d}/*.parquet"):
+                pf = pq.ParquetFile(fpath)
+                idx = pf.schema_arrow.get_field_index("l_shipdate")
+                md = pf.metadata
+                n_rows += md.num_rows
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(idx).statistics
+                    mn = st.min if mn is None else min(mn, st.min)
+                    mx = st.max if mx is None else max(mx, st.max)
+            # shipdate is a midnight timestamp in the raw table;
+            # report the calendar DATE (the grain a range-scan
+            # predicate uses)
+            if isinstance(mn, _dt.datetime):
+                mn, mx = mn.date(), mx.date()
+            cells.append((bucket, n_rows, mn, mx))
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+    return cells
 
 
 @register(
@@ -13513,69 +13499,11 @@ def sorted_layout_footer_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-process path (pid suffix — concurrent pytest-xdist workers or
     parallel plan builds each get their own directory, so no reader
     ever sees a half-written layout), and the directory is REMOVED as
-    soon as the footers are read — the per-process cells cache serves
-    repeated plan builds, and nothing is left on disk. The report
+    soon as the footers are read — the shared cells pass serves
+    repeated plan builds in one context, and nothing is left on disk. The report
     itself is a handful of rows — all downstream expressions run on
     |buckets| rows."""
-    cells = _SORTED_FOOTER_CACHE.get(sf_dir)
-    if cells is None:
-        import glob
-        import os
-        import re as _re
-        import shutil
-        from urllib.parse import urlparse
-
-        import pyarrow.parquet as pq
-
-        from .sources.sinks import write_sorted_buckets
-
-        li = _t(spark, sf_dir, "lineitem").select(
-            "l_shipdate", "l_orderkey", "l_linenumber"
-        )
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        if "://" in wh or wh.startswith("file:"):
-            wh = urlparse(wh).path or wh
-        path = os.path.join(
-            wh,
-            "_sorted_layout",
-            "%s_pid%d"
-            % (_re.sub(r"\W+", "_", sf_dir.strip("/")), os.getpid()),
-        )
-        # The write sits INSIDE the try/finally so a failure mid-write
-        # still removes the pid-suffixed directory (ADVICE r10: a write
-        # crash must not leak a half-written layout under the warehouse).
-        try:
-            write_sorted_buckets(
-                li,
-                path,
-                ["l_shipdate", "l_orderkey", "l_linenumber"],
-                grain=F.date_trunc("month", F.col("l_shipdate")),
-                n_buckets=8,
-            )
-            cells = []
-            for d in sorted(glob.glob(f"{path}/__bucket=*")):
-                bucket = int(d.rsplit("=", 1)[1])
-                n_rows, mn, mx = 0, None, None
-                for fpath in glob.glob(f"{d}/*.parquet"):
-                    pf = pq.ParquetFile(fpath)
-                    idx = pf.schema_arrow.get_field_index("l_shipdate")
-                    md = pf.metadata
-                    n_rows += md.num_rows
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx).statistics
-                        mn = st.min if mn is None else min(mn, st.min)
-                        mx = st.max if mx is None else max(mx, st.max)
-                # shipdate is a midnight timestamp in the raw table;
-                # report the calendar DATE (the grain a range-scan
-                # predicate uses)
-                import datetime as _dt
-
-                if isinstance(mn, _dt.datetime):
-                    mn, mx = mn.date(), mx.date()
-                cells.append((bucket, n_rows, mn, mx))
-        finally:
-            shutil.rmtree(path, ignore_errors=True)
-        _SORTED_FOOTER_CACHE[sf_dir] = cells
+    cells = _sorted_footer_cells(spark, sf_dir)
     rep = spark.createDataFrame(
         cells, "bucket_id long, n_rows long, min_ship date, max_ship date"
     )
@@ -14200,78 +14128,55 @@ def funnel_stage_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# Collected PCA state per dataset (ADVICE r10): the PCA entries all
-# need the same exact-integer Gram cells and the same 64 micro-unit
-# weights, and each used to re-run the full power iteration — including
-# the corpus-wide Gram Arrow stage — at plan-build time, so a
-# registry-wide sweep paid the Gram pass once PER ENTRY
-# (dedup.materialize's localCheckpoint is not shared across entries).
-# Cache the COLLECTED artifacts per sf_dir (same pattern as
-# _SORTED_FOOTER_CACHE): plain Python ints, safe across sessions, exact
-# by construction (the pipeline is integer-deterministic, so first-run
-# and cached values are identical). With the cells cached, the corpus
-# is touched exactly ONCE per process per dataset for the whole PCA
-# family; everything downstream re-parallelizes ≤ d² = 4096 rows.
-_PCA_GRAM_CACHE: dict[str, list[tuple]] = {}
-_PCA_DIRECTION_CACHE: dict[str, list[int]] = {}
-_PCA_SECOND_CACHE: dict[str, list[int]] = {}
+# Collected PCA state (ADVICE r10): the PCA entries all need the same
+# exact-integer Gram cells and the same 64 micro-unit weights, and each
+# used to re-run the full power iteration — including the corpus-wide
+# Gram Arrow stage — at plan-build time, so a registry-wide sweep paid
+# the Gram pass once PER ENTRY. The shared passes hold the COLLECTED
+# artifacts (plain Python ints), so the corpus is touched exactly ONCE
+# per context per dataset for the whole PCA family; everything
+# downstream re-parallelizes ≤ d² = 4096 rows.
+@shared_pass
+def _pca_gram_cells(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    from .operators.dedup import materialize
+    from .operators.similarity import gram_matrix_quantized, mirror_gram_cells
+
+    g = materialize(gram_matrix_quantized(_t(spark, sf_dir, "embeddings")))
+    return [(r.i, r.j, int(r.g)) for r in mirror_gram_cells(g).collect()]
 
 
 def _pca_gram_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-mirror exact Gram cells as a d²-row DataFrame. The corpus
-    Arrow stage runs once per process per dataset; afterwards the 4096
-    collected cells (three ints each — the sanctioned dimension-bounded
-    collect class) re-parallelize on demand."""
-    cells = _PCA_GRAM_CACHE.get(sf_dir)
-    if cells is None:
-        from .operators.dedup import materialize
-        from .operators.similarity import (
-            gram_matrix_quantized,
-            mirror_gram_cells,
-        )
-
-        g = materialize(
-            gram_matrix_quantized(_t(spark, sf_dir, "embeddings"))
-        )
-        cells = [(r.i, r.j, int(r.g)) for r in mirror_gram_cells(g).collect()]
-        _PCA_GRAM_CACHE[sf_dir] = cells
+    """Full-mirror exact Gram cells as a d²-row DataFrame: the 4096
+    collected cells (three ints each — the sanctioned
+    dimension-bounded collect class) re-parallelized."""
     import decimal as _decimal
 
     return spark.createDataFrame(
-        [(i, j, _decimal.Decimal(g)) for i, j, g in cells],
+        [(i, j, _decimal.Decimal(g)) for i, j, g in _pca_gram_cells(spark, sf_dir)],
         "i int, j int, g decimal(38,0)",
     )
 
 
+@shared_pass
 def _pca_direction_micro(spark: SparkSession, sf_dir: str) -> list[int]:
-    w = _PCA_DIRECTION_CACHE.get(sf_dir)
-    if w is None:
-        from .operators.similarity import power_iteration_from_cells
+    from .operators.similarity import power_iteration_from_cells
 
-        rows = power_iteration_from_cells(
-            _pca_gram_full(spark, sf_dir)
-        ).collect()  # |d| = 64 rows — the sanctioned dimension-bounded class
-        w = [int(r.v_micro) for r in sorted(rows, key=lambda r: r.pos)]
-        _PCA_DIRECTION_CACHE[sf_dir] = w
-    return w
+    rows = power_iteration_from_cells(
+        _pca_gram_full(spark, sf_dir)
+    ).collect()  # |d| = 64 rows — the sanctioned dimension-bounded class
+    return [int(r.v_micro) for r in sorted(rows, key=lambda r: r.pos)]
 
 
+@shared_pass
 def _pca_second_direction_micro(spark: SparkSession, sf_dir: str) -> list[int]:
-    w = _PCA_SECOND_CACHE.get(sf_dir)
-    if w is None:
-        from .operators.similarity import (
-            deflate_gram_cells,
-            power_iteration_from_cells,
-        )
+    from .operators.similarity import deflate_gram_cells, power_iteration_from_cells
 
-        g2 = deflate_gram_cells(
-            _pca_gram_full(spark, sf_dir),
-            _pca_direction_micro(spark, sf_dir),
-        )
-        rows = power_iteration_from_cells(g2).collect()  # |d| = 64 rows
-        w = [int(r.v_micro) for r in sorted(rows, key=lambda r: r.pos)]
-        _PCA_SECOND_CACHE[sf_dir] = w
-    return w
+    g2 = deflate_gram_cells(
+        _pca_gram_full(spark, sf_dir),
+        _pca_direction_micro(spark, sf_dir),
+    )
+    rows = power_iteration_from_cells(g2).collect()  # |d| = 64 rows
+    return [int(r.v_micro) for r in sorted(rows, key=lambda r: r.pos)]
 
 
 @register(
@@ -14316,7 +14221,7 @@ def pca_top_direction_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     on ≤ d² rows (see similarity.power_iteration_top_direction). The
     collected 64-row result is cached per dataset and re-parallelized
     here (ADVICE r10) so the three PCA entries pay the Gram pass once
-    per process — first-run and cached values are identical because
+    per context — first-run and cached values are identical because
     the pipeline is integer-deterministic end to end."""
     w = _pca_direction_micro(spark, sf_dir)
     return spark.createDataFrame(
@@ -15420,7 +15325,7 @@ def pca_second_direction_embeddings(spark: SparkSession, sf_dir: str) -> DataFra
     integer power method runs on G₂. Both stages are truncating-DIV
     deterministic, so the 64 outputs hash-compare exactly against the
     oracle's HUGEINT replay of the full two-eigenvector chain. Scale:
-    the corpus is touched once per process (the cached Gram pass);
+    the corpus is touched once per context (the shared Gram pass);
     deflation and iteration never exceed d² = 4096 rows."""
     w = _pca_second_direction_micro(spark, sf_dir)
     return spark.createDataFrame(
@@ -15457,7 +15362,7 @@ def pca_projection_map_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary so the output is |labels| scalar rows). Both projections
     are exact BIGINT folds of the cached micro-unit directions
     (zip_with dot products, map-side); means are ONE IEEE divide each.
-    Scale: after the once-per-process Gram pass, this is a single
+    Scale: after the once-per-context Gram pass, this is a single
     shuffle-free projection pass plus a |labels|-sized groupBy."""
     emb = _t(spark, sf_dir, "embeddings")
     w1 = _pca_direction_micro(spark, sf_dir)
@@ -15894,7 +15799,7 @@ def pca_explained_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-1 and rank-2 projections capture, the number that decides
     whether the 2-D map is worth serving. Scale: both quotients are
     d²-row join-aggregates over the cached cells; the corpus is not
-    touched at all (the Gram pass already ran once per process)."""
+    touched at all (the Gram pass already ran once per context)."""
     full = _pca_gram_full(spark, sf_dir)
     trace = full.filter(F.col("i") == F.col("j")).agg(
         F.sum("g").cast("long").alias("trace")
@@ -20017,158 +19922,124 @@ def similarity_margin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # associative and duplicate-insensitive, so min over a source's docs'
 # mins == min over the source's shingle multiset == the per-source
 # aggregate both engines replay) — one shingle-explode + 16-min pass
-# instead of one per entry. Deterministic — wall-clock only.
-_DOC_MINHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
+# instead of one per entry.
 _MINHASH_PERMS = 16
 
 
+@shared_pass
 def _doc_md5_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _DOC_MINHASH_CACHE.get(key)
-    if sig is None:
-        from .functions.hashing import md5_int60, normalize_text, shingles_from_words
-        from .operators.dedup import materialize
+    from .functions.hashing import md5_int60, normalize_text, shingles_from_words
+    from .operators.dedup import materialize
 
-        docs = _t(spark, sf_dir, "documents")
-        shs = docs.select(
-            "doc_id",
-            "source",
-            F.split(normalize_text(F.col("text")), " ").alias("__words"),
-        ).select(
-            "doc_id",
-            "source",
-            F.explode(shingles_from_words(F.col("__words"), 3)).alias("s"),
+    docs = _t(spark, sf_dir, "documents")
+    shs = docs.select(
+        "doc_id",
+        "source",
+        F.split(normalize_text(F.col("text")), " ").alias("__words"),
+    ).select(
+        "doc_id",
+        "source",
+        F.explode(shingles_from_words(F.col("__words"), 3)).alias("s"),
+    )
+    return materialize(
+        shs.groupBy("doc_id", "source").agg(
+            *[
+                F.min(md5_int60(F.concat(F.lit(f"mh{i}:"), F.col("s")))).alias(f"m{i}")
+                for i in range(_MINHASH_PERMS)
+            ]
         )
-        sig = materialize(
-            shs.groupBy("doc_id", "source").agg(
-                *[
-                    F.min(
-                        md5_int60(F.concat(F.lit(f"mh{i}:"), F.col("s")))
-                    ).alias(f"m{i}")
-                    for i in range(_MINHASH_PERMS)
-                ]
-            )
-        )
-        _DOC_MINHASH_CACHE[key] = sig
-    return sig
+    )
 
 
-# One level further down the same sharing rule: the 8×2 BANDING of the
-# md5 signatures and the per-(band, key) candidate self-join (each
-# pair's FIRST colliding band) are consumed by the band-collision curve
-# (cost side), the recall-vs-bands curve (yield side), and the
-# signature-agreement calibration (r14) — the banded explode is cheap
-# but the bucket-bounded pair join is the expensive stage, paid once per
-# (context, sf_dir). Deterministic (md5 mins, min-band) — wall-clock
-# only, never an answer.
-_LSH_BANDED_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+# One level further down: the 8×2 BANDING of the md5 signatures and the
+# per-(band, key) candidate self-join (each pair's FIRST colliding band)
+# are consumed by the band-collision curve (cost side), the
+# recall-vs-bands curve (yield side), and the signature-agreement
+# calibration (r14) — the banded explode is cheap but the bucket-bounded
+# pair join is the expensive stage.
 _LSH_BANDS = 8
 
 
+@shared_pass
 def _doc_lsh_banded_pairs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(banded, pairs): per-doc band keys (doc_id, band, k1, k2) and the
     distinct candidate pairs (da < db) with their first colliding band —
     both materialized, from the shared md5 MinHash signatures."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LSH_BANDED_CACHE.get(key)
-    if cached is None:
-        from .operators.dedup import materialize
+    from .operators.dedup import materialize
 
-        sig = _doc_md5_minhash_sigs(spark, sf_dir)
-        banded = materialize(
-            sig.select(
-                "doc_id",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(b).cast("int").alias("band"),
-                                F.col(f"m{2 * b}").alias("k1"),
-                                F.col(f"m{2 * b + 1}").alias("k2"),
-                            )
-                            for b in range(_LSH_BANDS)
-                        ]
-                    )
-                ).alias("__bk"),
-            ).select("doc_id", "__bk.band", "__bk.k1", "__bk.k2")
+    sig = _doc_md5_minhash_sigs(spark, sf_dir)
+    banded = materialize(
+        sig.select(
+            "doc_id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).cast("int").alias("band"),
+                            F.col(f"m{2 * b}").alias("k1"),
+                            F.col(f"m{2 * b + 1}").alias("k2"),
+                        )
+                        for b in range(_LSH_BANDS)
+                    ]
+                )
+            ).alias("__bk"),
+        ).select("doc_id", "__bk.band", "__bk.k1", "__bk.k2")
+    )
+    b2 = banded.select(
+        F.col("doc_id").alias("db"),
+        F.col("band").alias("band2"),
+        F.col("k1").alias("j1"),
+        F.col("k2").alias("j2"),
+    )
+    pairs = materialize(
+        banded.join(
+            b2,
+            (F.col("band") == F.col("band2"))
+            & (F.col("k1") == F.col("j1"))
+            & (F.col("k2") == F.col("j2"))
+            & (F.col("doc_id") < F.col("db")),
         )
-        b2 = banded.select(
-            F.col("doc_id").alias("db"),
-            F.col("band").alias("band2"),
-            F.col("k1").alias("j1"),
-            F.col("k2").alias("j2"),
-        )
-        pairs = materialize(
-            banded.join(
-                b2,
-                (F.col("band") == F.col("band2"))
-                & (F.col("k1") == F.col("j1"))
-                & (F.col("k2") == F.col("j2"))
-                & (F.col("doc_id") < F.col("db")),
-            )
-            .groupBy(F.col("doc_id").alias("da"), "db")
-            .agg(F.min("band").alias("first_band"))
-        )
-        cached = (banded, pairs)
-        _LSH_BANDED_CACHE[key] = cached
-    return cached
+        .groupBy(F.col("doc_id").alias("da"), "db")
+        .agg(F.min("band").alias("first_band"))
+    )
+    return banded, pairs
+
+
+# Distinct (order, part) basket items (r14): both market-basket entries
+# (pair mining + association rules) reference the SAME distinct
+# projection of lineitem 4-5 times each (basket count, per-part counts,
+# both self-join sides) and every reference re-ran the scan+DISTINCT
+# shuffle — zero ReusedExchange in the before-plans
+# (plans/r14/association_rules_parts_before.txt).
+@shared_pass
+def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.dedup import materialize
+
+    return materialize(
+        _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    )
 
 
 # The part co-purchase edge list (distinct part pairs sharing an order,
 # a < b canonical), shared by the graph-census family (r13): triangle
 # census and degree assortativity both pay the C(lines_per_order, 2)
-# fan-out + DISTINCT once per (context, sf_dir). Deterministic —
-# wall-clock only.
-_PART_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-# Distinct (order, part) basket items, shared the same way (r14): both
-# market-basket entries (pair mining + association rules) reference the
-# SAME distinct projection of lineitem 4-5 times each (basket count,
-# per-part counts, both self-join sides) and every reference re-ran the
-# scan+DISTINCT shuffle — zero ReusedExchange in the before-plans
-# (plans/r14/association_rules_parts_before.txt). One materialized pass
-# per (context, sf_dir) serves all references; deterministic, so
-# wall-clock only.
-_BASKET_ITEMS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    li = _BASKET_ITEMS_CACHE.get(key)
-    if li is None:
-        from .operators.dedup import materialize
-
-        li = materialize(
-            _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-        )
-        _BASKET_ITEMS_CACHE[key] = li
-    return li
-
-
+# fan-out + DISTINCT.
+@shared_pass
 def _part_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    e = _PART_EDGES_CACHE.get(key)
-    if e is None:
-        from .operators.dedup import materialize
+    from .operators.dedup import materialize
 
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        lt = li.select(
-            F.col("l_orderkey").alias("bo"), F.col("l_partkey").alias("bp")
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    lt = li.select(F.col("l_orderkey").alias("bo"), F.col("l_partkey").alias("bp"))
+    return materialize(
+        li.join(
+            lt,
+            (F.col("l_orderkey") == F.col("bo")) & (F.col("l_partkey") < F.col("bp")),
         )
-        e = materialize(
-            li.join(
-                lt,
-                (F.col("l_orderkey") == F.col("bo"))
-                & (F.col("l_partkey") < F.col("bp")),
-            )
-            .select(F.col("l_partkey").alias("a"), F.col("bp").alias("b"))
-            .distinct()
-        )
-        _PART_EDGES_CACHE[key] = e
-    return e
+        .select(F.col("l_partkey").alias("a"), F.col("bp").alias("b"))
+        .distinct()
+    )
 
 
 @register(

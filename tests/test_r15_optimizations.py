@@ -157,3 +157,112 @@ def test_fanout_guard_fires_above_floor_and_keeps_pushdown(
             "o_orderkey", "o_totalprice"
         )
     )
+
+
+# -- the shared-pass store -------------------------------------------------
+
+# Run in a child process: the store must be seen across a context restart,
+# and the shared test session cannot be stopped.
+_STORE_PROBE = r"""
+import json, sys
+from spacex_data_pipeline_spark import queries
+from spacex_data_pipeline_spark.session import build_session
+
+def keys_of(app):
+    # every module-level dict in queries, so no hand-written store escapes
+    return [
+        repr(k)
+        for v in vars(queries).values() if isinstance(v, dict)
+        for k in v if isinstance(k, tuple) and app in k
+    ]
+
+sf_dir = sys.argv[1]
+s = build_session(app_name="shared-pass-first")
+sc = s.sparkContext
+first_app = sc.applicationId
+built = queries._doc_shingle_sizes(s, sf_dir)
+first_rows = sorted(map(tuple, built.collect()))
+sc.setJobGroup("again", "again")
+again = queries._doc_shingle_sizes(s, sf_dir)
+again_jobs = len(sc.statusTracker().getJobIdsForGroup("again"))
+s.stop()
+
+s = build_session(app_name="shared-pass-second")
+sc = s.sparkContext
+sc.setJobGroup("rebuild", "rebuild")
+rebuilt = queries._doc_shingle_sizes(s, sf_dir)
+rebuild_jobs = len(sc.statusTracker().getJobIdsForGroup("rebuild"))
+second_rows = sorted(map(tuple, rebuilt.collect()))
+print(json.dumps({
+    "same_object": again is built,
+    "again_jobs": again_jobs,
+    "rebuild_jobs": rebuild_jobs,
+    "rows_equal": first_rows == second_rows,
+    "rows": len(second_rows),
+    "dead_keys": keys_of(first_app),
+    "live_keys": keys_of(sc.applicationId),
+}))
+s.stop()
+"""
+
+
+@pytest.fixture(scope="module")
+def store_probe(sf_smoke, tmp_path_factory):
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, "-c", _STORE_PROBE, sf_smoke],
+        cwd=tmp_path_factory.mktemp("store"), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    return json.loads(run.stdout.strip().splitlines()[-1])
+
+
+def test_shared_pass_reuses_within_a_context(store_probe):
+    """A second call of a shared pass on the same context hands out the
+    stored object and starts no job."""
+    assert store_probe["same_object"]
+    assert store_probe["again_jobs"] == 0
+
+
+def test_shared_pass_rebuilds_and_evicts_after_restart(store_probe):
+    """After ``spark.stop()`` and a new session, the pass is rebuilt (it
+    runs jobs, and its rows equal the first build's), and no module-level
+    dict in ``queries`` still holds an entry of the stopped application."""
+    assert store_probe["rebuild_jobs"] > 0
+    assert store_probe["rows_equal"] and store_probe["rows"] > 0
+    assert store_probe["dead_keys"] == []
+    # the sizes pass and the postings it builds on
+    assert len(store_probe["live_keys"]) == 2
+
+
+def test_queries_has_no_hand_written_cache_dict():
+    """The shared-pass store is the only module-level empty dict in
+    ``queries`` besides REGISTRY, so no hand-written cache can come back
+    beside it."""
+    import ast
+    import inspect
+
+    from spacex_data_pipeline_spark import queries
+
+    empty = []
+    for node in ast.parse(inspect.getsource(queries)).body:
+        if isinstance(node, ast.Assign):
+            targets, value = node.targets, node.value
+        elif isinstance(node, ast.AnnAssign):
+            targets, value = [node.target], node.value
+        else:
+            continue
+        if (isinstance(value, ast.Dict) and not value.keys) or (
+            isinstance(value, ast.Call)
+            and isinstance(value.func, ast.Name)
+            and value.func.id in ("dict", "defaultdict")
+        ):
+            empty += [t.id for t in targets if isinstance(t, ast.Name)]
+    assert sorted(empty) == ["REGISTRY", "_SHARED"]

@@ -98,35 +98,6 @@ def test_json_quarantine_keeps_corrupt_lines(spark, tmp_path):
     df.unpersist()
 
 
-def test_run_dag_chains_models_through_views(spark, sf_oracle):
-    """plans.materialize.run_dag: models run in declaration order and later
-    models resolve earlier ones by view name — the dbt 2-model chain shape
-    (staging view feeding a mart) with nothing hard-coded to spacex."""
-    from spacex_data_pipeline_spark.plans.materialize import run_dag
-
-    out = run_dag(
-        spark,
-        {
-            "dag_stg": lambda s: catalog.table(s, sf_oracle, "orders").select(
-                "o_orderkey", F.year("o_orderdate").alias("oyear")
-            ),
-            "dag_mart": lambda s: s.table("dag_stg")
-            .groupBy("oyear")
-            .agg(F.count(F.lit(1)).alias("n")),
-        },
-    )
-    assert set(out) == {"dag_stg", "dag_mart"}
-    want = (
-        catalog.table(spark, sf_oracle, "orders")
-        .groupBy(F.year("o_orderdate"))
-        .count()
-        .count()
-    )
-    assert spark.table("dag_mart").count() == want
-    for v in ("dag_stg", "dag_mart"):
-        spark.catalog.dropTempView(v)
-
-
 def test_ensure_database_creates_namespace(spark):
     """sinks.ensure_database: the schema-DDL twin of the reference's
     CREATE SCHEMA IF NOT EXISTS (spacex_api_dag.py:25-27) — idempotent."""
