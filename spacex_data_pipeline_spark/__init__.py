@@ -15,7 +15,6 @@ Layout:
     operators/  — staging, marts, relational surface, dedup, similarity,
                   text analysis, multimodal
     plans/      — view/CTAS materialization (the reference's dbt layer)
-    streaming/  — Structured Streaming ingest + windowed rollups
     queries     — the driver-facing registry: name → (spark fn, oracle SQL)
 """
 

@@ -222,6 +222,13 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
     pd.add_argument("--index", required=True, help="index directory")
     pd.add_argument("ids", nargs="+", type=int, help="doc ids to delete")
 
+    pk = sub.add_parser(
+        "index-compact",
+        help="physically reclaim a text index's tombstoned docs (their ids "
+        "become re-addable)",
+    )
+    pk.add_argument("--index", required=True, help="index directory")
+
     sub.add_parser("list-queries", help="list registered query names")
 
     sub.add_parser(
@@ -543,6 +550,11 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
 
             tombstone_text_index(spark, args.index, args.ids)
             print(f"index {args.index} -= {len(set(args.ids))} docs (tombstoned)")
+        elif args.cmd == "index-compact":
+            from .operators.text import compact_text_index
+
+            n = compact_text_index(spark, args.index)
+            print(f"index {args.index} compacted ({n} docs reclaimed)")
         elif args.cmd == "explain":
             # the plan-inspection loop this repo's own tuning used
             # (tests/test_plans.py asserts the plans; this verb shows them)

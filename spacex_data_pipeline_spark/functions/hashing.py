@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-MERSENNE61 = (1 << 61) - 1
-
 
 def normalize_text(col: Column) -> Column:
     """Lowercase, collapse whitespace — canonical form for near-dup hashing."""
@@ -154,9 +152,9 @@ def cms_bucket(seed: Column, key: Column, width: int) -> Column:
     """Count-min-sketch bucket for ``key`` under hash row ``seed``:
     the md5-derived 60-bit integer (engine-identical in DuckDB via
     ``('0x' || substr(md5(...), 1, 15))::UBIGINT::BIGINT``) reduced mod
-    the row width. Shared by the batch sketch store
-    (queries.cms_mergeable_user_counts) and its streaming twin
-    (streaming.rollup.cms_cells_stream) so both populate identical cells.
+    the row width. Shared by the sketch stores
+    (queries.cms_mergeable_user_counts, queries.cms_store_monthly_read)
+    so both populate identical cells.
     """
     h = F.conv(
         F.substring(
@@ -183,9 +181,7 @@ def hll_register(key: Column) -> tuple[Column, Column]:
     """(register, rho) pair for the mergeable HLL register store.
     Registers merge by MAX — associative and idempotent, so per-grain
     cells roll up to any range (and replay safely) with no rescan.
-    Shared by the batch store (queries.hll_register_store_users) and
-    its streaming twin (streaming.rollup.hll_registers_stream) so both
-    populate identical cells."""
+    Used by the register store (queries.hll_register_store_users)."""
     h = F.conv(
         F.substring(
             F.md5(F.concat_ws(":", F.lit("hll"), key.cast("string"))), 1, 15

@@ -20,7 +20,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEC = "decimal(18,4)"
-DEC_FACTOR = "decimal(8,4)"
 DEC_MONEY = "decimal(8,2)"
 DEC_FACTOR2 = "decimal(4,2)"
 
@@ -29,19 +28,6 @@ def dec(col: Column | str) -> Column:
     """Exact fixed-point view of a double column (4 fractional digits)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast(DEC)
-
-
-def dec_factor(col: Column) -> Column:
-    """Small-range factor (e.g. ``1 - discount``) as DECIMAL(8,4).
-
-    CRITICAL for oracle parity: a *single* double op (one subtract, one
-    add) is IEEE-deterministic across engines, but *chained* double
-    products can differ by 1 ulp (contraction/codegen differences), which
-    flips the decimal cast at boundary rows. So: compute each factor with
-    one double op, snap it to decimal, and keep all multiplication in
-    exact decimal arithmetic.
-    """
-    return col.cast(DEC_FACTOR)
 
 
 def dec_money(col: Column | str) -> Column:
@@ -67,8 +53,14 @@ def dec_money(col: Column | str) -> Column:
 def dec_factor2(col: Column) -> Column:
     """2-decimal factor (1±discount/tax, TPC-H spec values) as
     DECIMAL(4,2): keeps money×factor(×factor) products ≤ 18 digits — see
-    :func:`dec_money`. Same single-double-op-then-snap contract as
-    :func:`dec_factor`."""
+    :func:`dec_money`.
+
+    CRITICAL for oracle parity: a *single* double op (one subtract, one
+    add) is IEEE-deterministic across engines, but *chained* double
+    products can differ by 1 ulp (contraction/codegen differences), which
+    flips the decimal cast at boundary rows. So: compute each factor with
+    one double op, snap it to decimal, and keep all multiplication in
+    exact decimal arithmetic."""
     return col.cast(DEC_FACTOR2)
 
 

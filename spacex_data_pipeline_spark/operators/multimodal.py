@@ -7,10 +7,9 @@ a filter on (modality, byte_len) never touches payload bytes.
 The decode step is STUBBED (no image/audio libs in this container): the
 Spark-side plumbing — schema, Arrow batch shape, ``mapInPandas`` signature,
 partition sizing — is real and tested; ``decode_image_meta`` computes a
-deterministic fake decode from the payload so results are verifiable, the
-header parsers are real stdlib implementations (raising ``ValueError`` on
-malformed bytes), and :func:`real_decoder` shows where Pillow/torchaudio
-would slot in (import-gated: used automatically when the lib is present).
+deterministic fake decode from the payload so results are verifiable; a
+real decoder (Pillow, torchaudio) would slot into the same ``mapInPandas``
+batch function.
 
 At 100 TB: binary payloads dominate bytes → size partitions by
 ``spark.sql.files.maxPartitionBytes`` (payload-aware), keep metadata in
@@ -25,10 +24,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "doc_id bigint, media binary, modality string, byte_len int, checksum_md5 string"
-)
 
 DECODED_SCHEMA = (
     "doc_id bigint, width int, height int, n_pixels bigint, checksum_md5 string"
@@ -77,96 +72,6 @@ def decode_image_meta(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(decode, schema=DECODED_SCHEMA)
-
-
-def _parse_dimensions(payload: bytes) -> tuple[int, int]:
-    """Stdlib-only (width, height) from real image bytes — PNG, GIF,
-    baseline/progressive JPEG. This parses the actual on-disk formats
-    (public file-format specs), so the capability gate exercises a real
-    decode path even on containers without imaging libs; full pixel
-    decode still wants Pillow.
-
-    PNG: 8-byte signature, then the IHDR chunk (must be first per spec)
-    carries big-endian u32 width/height; its CRC32 (stdlib zlib) is
-    verified so truncated/corrupt payloads fail loudly instead of
-    returning garbage dimensions.
-    GIF: 6-byte signature, then little-endian u16 logical-screen size.
-    JPEG: walk the marker segments to the first SOFn frame header
-    (C0–CF minus DHT/JPG/DAC), big-endian u16 height then width.
-    Length-less markers (TEM 0x01, RST0–7, SOI, EOI) advance by 2, and
-    consecutive 0xFF fill/padding bytes before a marker are skipped, per
-    the ITU-T T.81 marker syntax.
-    """
-    import struct
-    import zlib
-
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        if len(payload) < 33 or payload[12:16] != b"IHDR":
-            raise ValueError("corrupt PNG: missing IHDR")
-        if zlib.crc32(payload[12:29]) != struct.unpack(">I", payload[29:33])[0]:
-            raise ValueError("corrupt PNG: IHDR CRC mismatch")
-        w, h = struct.unpack(">II", payload[16:24])
-        return w, h
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        if len(payload) < 10:
-            raise ValueError("corrupt GIF: truncated header")
-        w, h = struct.unpack("<HH", payload[6:10])
-        return w, h
-    if payload[:2] == b"\xff\xd8":  # JPEG SOI
-        n = len(payload)
-        i = 2
-        while i + 2 <= n:
-            if payload[i] != 0xFF:
-                break
-            # 0xFF bytes may be used as fill before any marker (T.81
-            # B.1.1.2) — skip them so the byte after the LAST 0xFF is
-            # read as the marker code.
-            while i + 1 < n and payload[i + 1] == 0xFF:
-                i += 1
-            if i + 2 > n:
-                break
-            marker = payload[i + 1]
-            if marker == 0xD9:  # EOI with no SOF seen
-                break
-            if marker == 0x01 or 0xD0 <= marker <= 0xD8:
-                # TEM / RSTn / SOI carry no length field
-                i += 2
-                continue
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                if i + 9 > n:
-                    break
-                h, w = struct.unpack(">HH", payload[i + 5 : i + 9])
-                return w, h
-            if i + 4 > n:
-                break
-            seg_len = struct.unpack(">H", payload[i + 2 : i + 4])[0]
-            if seg_len < 2:
-                raise ValueError("corrupt JPEG: invalid segment length")
-            i += 2 + seg_len
-        raise ValueError("corrupt JPEG: no SOF frame header")
-    raise ValueError("unrecognized image format")
-
-
-def real_decoder(payload: bytes) -> tuple[int, int]:
-    """Real image decode — (width, height) from actual image bytes.
-
-    Pillow where it exists (full decode, every format it knows);
-    otherwise the stdlib header parser above handles PNG/GIF/JPEG for
-    real — signature, structure, and CRC are all verified against the
-    published specs, so this is an honest decode of the container
-    format, not a deterministic fake (that remains decode_image_meta's
-    role for oracle-checkable plumbing tests). Formats neither path
-    understands raise: ValueError from the parser for corrupt/unknown
-    bytes. Same mapInPandas plumbing either way — swap this in for
-    decode_image_meta's arithmetic in the batch loop."""
-    try:
-        from PIL import Image
-    except ImportError:
-        return _parse_dimensions(payload)
-    import io
-
-    with Image.open(io.BytesIO(payload)) as im:
-        return im.size
 
 
 RESIZED_SCHEMA = (

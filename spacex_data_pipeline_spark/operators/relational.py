@@ -39,13 +39,6 @@ def anti_join(left: DataFrame, right: DataFrame, on: Column | str) -> DataFrame:
     return left.join(right, on, "left_anti")
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on: Column | str, how: str = "inner") -> DataFrame:
-    """Fact⋈dimension with an explicit broadcast hint: at 100 TB the fact
-    side never shuffles for a dimension join — the dim ships to every
-    executor once."""
-    return fact.join(F.broadcast(dim), on, how)
-
-
 def ranked_per_group(
     df: DataFrame,
     partition: Sequence[str],

@@ -6,9 +6,6 @@ pure composition of window functions (lag → gap flag → running sum), which
 keeps it SQL-expressible (DuckDB oracle) and shuffle-minimal: ONE shuffle
 on user_id serves both windows and the final per-session aggregation —
 Catalyst reuses the partitioning.
-
-The streaming twin (built-in ``F.session_window`` with the same gap)
-lives in streaming/rollup.py; this batch form is its replay/backfill.
 """
 
 from __future__ import annotations

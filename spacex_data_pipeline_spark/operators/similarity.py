@@ -556,7 +556,7 @@ def assign_to_cells(
 ) -> DataFrame:
     """Nearest-centroid assignment against an arbitrary (cell, cv) set —
     the shuffle-free packed-broadcast matmul-argmax map pass shared by
-    the first-K IVF build and k-means refinement (see
+    the first-K IVF build and frozen-centroid appends (see
     :func:`ivf_assign_cells` for the exactness argument)."""
     import numpy as np
     import pandas as pd
@@ -614,103 +614,6 @@ def assign_to_cells(
         .crossJoin(F.broadcast(packed))
         .mapInPandas(assign, schema=f"{id_col} long, {vec_col} {vec_type}, cell int")
     )
-
-
-def kmeans_refine(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame, list[float]]:
-    """Lloyd refinement of the IVF centroids — the 'production build
-    would k-means them' step the first-K init stands in for. Returns
-    (assigned, centroids, inertia_history) where inertia is the mean
-    spherical distance 1 − cos(v, centroid) per iteration (including
-    the initial assignment), so callers/tests can see convergence.
-
-    Shapes per iteration, all from the existing toolbox:
-    - centroid update: applyInPandas per cell — one Arrow batch per
-      cell, numpy column mean, L2-normalized (spherical k-means: the
-      mean direction is the argmax-cosine centroid); cell size bounds
-      task memory exactly like every other per-cell op here.
-    - reassignment: the shared shuffle-free :func:`assign_to_cells`.
-    - assignments are ``localCheckpoint``ed per round (iterative-loop
-      lineage rule) and inertia is ONE scalar per round — the
-      sanctioned driver-side fixpoint pattern; vectors never visit the
-      driver.
-
-    Unlike the first-K build, refined assignments are NOT SQL-oracle
-    replicable (float mean-sums are order-dependent in the last bits),
-    so this ships as a library operator locked by property tests
-    (monotone inertia, assignment-consistency) rather than a registry
-    row — the registered IVF queries keep the deterministic init.
-
-    Inputs are L2-normalized ONCE up front (and the returned assignment
-    rows carry the normalized vectors): with unit vectors the assignment
-    objective (max dot) and the reported inertia (mean 1 − cos) are the
-    SAME spherical-Lloyd objective, so the monotone-inertia history is a
-    true invariant — on raw vectors the unweighted mean of 1 − cos can
-    rise while the |v|-weighted objective falls. Zero vectors pass
-    through unscaled and contribute a constant distance of 1.
-    """
-    import numpy as np
-    import pandas as pd
-
-    vec_type = embeddings.schema[vec_col].dataType.simpleString()
-    elem_type = embeddings.schema[vec_col].dataType.elementType.simpleString()
-    unit = F.transform(
-        F.col(vec_col), lambda x: (x.cast("double") / F.col("__n")).cast(elem_type)
-    )
-    embeddings = (
-        # norm projected in its own select so the transform lambda doesn't
-        # re-expand the fold per element (the shingles inlining trap); one
-        # narrow map pass, checkpointed so the loop never recomputes it.
-        embeddings.select(id_col, vec_col, norm_ltr(F.col(vec_col)).alias("__n"))
-        .select(
-            id_col,
-            F.when(F.col("__n") == 0, F.col(vec_col)).otherwise(unit).alias(vec_col),
-        )
-        .localCheckpoint()
-    )
-    assigned, cents = ivf_assign_cells(embeddings, n_centroids, id_col, vec_col)
-    assigned = assigned.localCheckpoint()
-
-    def mean_inertia(a: DataFrame, c: DataFrame) -> float:
-        # batched numpy, NOT the fenced per-row HOF cosine: this runs per
-        # corpus row every iteration. Zero-norm rows count as distance 1.
-        joined = a.join(F.broadcast(c), "cell").select(vec_col, "cv")
-
-        def gen(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                v = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                cv = np.vstack(pdf["cv"].to_numpy()).astype(np.float64)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    cos = (v * cv).sum(axis=1) / (
-                        np.linalg.norm(v, axis=1) * np.linalg.norm(cv, axis=1)
-                    )
-                yield pd.DataFrame({"d": 1.0 - np.where(np.isnan(cos), 0.0, cos)})
-
-        return joined.mapInPandas(gen, "d double").agg(F.avg("d")).collect()[0][0]
-
-    def cell_mean(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-        m = mat.mean(axis=0)
-        n = np.linalg.norm(m)
-        if n > 0:
-            m = m / n
-        return pd.DataFrame({"cell": [key[0]], "cv": [m.astype(np.float32)]})
-
-    history = [mean_inertia(assigned, cents)]
-    for _ in range(n_iter):
-        cents = assigned.groupBy("cell").applyInPandas(
-            cell_mean, schema=f"cell int, cv {vec_type}"
-        )
-        assigned = assign_to_cells(embeddings, cents, id_col, vec_col).localCheckpoint()
-        history.append(mean_inertia(assigned, cents))
-    return assigned, cents, history
 
 
 def ivf_topk(
@@ -817,8 +720,8 @@ def pq_codebooks(
     """Product-quantization codebooks: the vector space is split into
     ``m`` contiguous subspaces of dim/m dims; subspace j's code c is the
     j-th subvector of the c-th vector by id — deterministic and RNG-free
-    (the ivf_assign_cells discipline: a production build k-means-refines
-    each subspace codebook via kmeans_refine, but the encode/ADC
+    (the ivf_assign_cells discipline: a production build would k-means-
+    refine each subspace codebook, but the encode/ADC
     mechanics — the part the engine owns — are identical).
 
     Returns (subspace int, code int, cv array) — m·n_codes rows, always
@@ -902,10 +805,10 @@ def pq_encode_with(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """:func:`pq_encode` against a GIVEN (subspace, code, cv) codebook —
-    the encode half split out so an incremental index update can encode
-    a new batch with the FROZEN codebooks of the persisted index
-    (re-deriving them from the batch would silently re-train the
-    quantizer and make old and new codes incomparable)."""
+    the encode half split out so appended vectors can be encoded with
+    FROZEN codebooks (queries.ivfpq_append_recall_drift); re-deriving
+    them from the appended batch would silently re-train the quantizer
+    and make old and new codes incomparable."""
     d = dim // m
     subs = F.array(
         *[
@@ -1094,236 +997,6 @@ def pq_ivf_topk(
     w2 = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), id_col)
     return (
         scored.withColumn("__brn", F.row_number().over(w1))
-        .filter(F.col("__brn") <= k)
-        .withColumn("rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank", "adc")
-    )
-
-
-def persist_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    m: int = 4,
-    n_codes: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF-PQ serving index: the per-vector PQ codes
-    written as a parquet table PARTITIONED BY the IVF cell (so a probe
-    reads n_probe directories, not the corpus — the storage layout
-    SCALE.md promises), plus the tiny centroid and codebook tables.
-    Build once per corpus snapshot; the search path
-    (:func:`search_ivfpq_index`) never touches the float corpus.
-    Also writes an ``ids`` registry (partitioned by id bucket) so
-    :func:`update_ivfpq_index` can collision-check a delta batch with a
-    partition-pruned read instead of scanning the code bodies."""
-    assigned, cents = ivf_assign_cells(embeddings, n_centroids, id_col, vec_col)
-    codes = pq_encode(embeddings, m, n_codes, dim, id_col, vec_col)
-    idx = assigned.select(F.col(id_col), "cell").join(codes, id_col)
-    idx.write.mode("overwrite").partitionBy("cell").parquet(path + "/codes")
-    cents.write.mode("overwrite").parquet(path + "/centroids")
-    pq_codebooks(embeddings, m, n_codes, dim, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(path + "/codebooks")
-    _ivfpq_id_registry(embeddings, id_col).write.mode("overwrite").partitionBy(
-        "id_bucket"
-    ).parquet(path + "/ids")
-
-
-def _ivfpq_id_registry(embeddings: DataFrame, id_col: str) -> DataFrame:
-    return embeddings.select(
-        F.col(id_col),
-        F.pmod(F.col(id_col), F.lit(64)).cast("int").alias("id_bucket"),
-    )
-
-
-def update_ivfpq_index(
-    spark,
-    new_embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incrementally ADD a vector batch to a persisted IVF-PQ index —
-    the standard production move (FAISS add-with-frozen-quantizer): the
-    batch is assigned against the index's FROZEN centroids and encoded
-    with its FROZEN codebooks (read back from the index, never
-    re-derived — re-training on the delta would make old and new codes
-    incomparable), and its code rows APPEND into the cell partition
-    directories; no existing file is rewritten and served results are
-    bit-identical to a full rebuild over the union (test-pinned, given
-    the same quantizer seeds). Quantizer drift — centroids that no
-    longer reflect the corpus after many appends — is a rebuild
-    decision, not an append-time one.
-
-    Append-only by contract: ids already indexed (or tombstoned) raise,
-    via the partition-pruned ids registry."""
-    import os
-
-    cents = spark.read.parquet(path + "/centroids")
-    cbs = spark.read.parquet(path + "/codebooks")
-    m = cbs.select("subspace").distinct().count()
-    dim = len(cbs.select("cv").first()["cv"]) * m
-
-    ids = new_embeddings.select(F.col(id_col)).distinct()
-    if os.path.isdir(path + "/tombstones"):
-        n_dead = (
-            spark.read.parquet(path + "/tombstones")
-            .join(F.broadcast(ids), id_col, "left_semi")
-            .count()
-        )
-        if n_dead:
-            raise ValueError(
-                f"update_ivfpq_index: {n_dead} incoming id(s) are tombstoned — "
-                "the serve-time anti-join would hide the new vectors; "
-                "rebuild the index or use fresh ids"
-            )
-    buckets = [
-        r[0]
-        for r in ids.select(F.pmod(F.col(id_col), F.lit(64)).cast("int").alias("b"))
-        .distinct()
-        .collect()
-    ]
-    n_clash = (
-        spark.read.parquet(path + "/ids")
-        .filter(F.col("id_bucket").isin(buckets))
-        .join(F.broadcast(ids), id_col, "left_semi")
-        .count()
-    )
-    if n_clash:
-        raise ValueError(
-            f"update_ivfpq_index: {n_clash} incoming id(s) already indexed — "
-            "appending would duplicate them in every probe they land in"
-        )
-    assigned = assign_to_cells(new_embeddings, cents, id_col, vec_col)
-    codes = pq_encode_with(new_embeddings, cbs, m, dim, id_col, vec_col)
-    idx = assigned.select(F.col(id_col), "cell").join(codes, id_col)
-    idx.write.mode("append").partitionBy("cell").parquet(path + "/codes")
-    _ivfpq_id_registry(new_embeddings, id_col).write.mode("append").partitionBy(
-        "id_bucket"
-    ).parquet(path + "/ids")
-
-
-def tombstone_ivfpq_index(
-    spark, path: str, ids: list[int], id_col: str = "vec_id"
-) -> None:
-    """Logically DELETE vectors from a persisted IVF-PQ index: append
-    id tombstones; the serve path anti-joins them (broadcast — deletes
-    between rebuilds are small) BEFORE ranking, so served top-k equals
-    an index rebuilt without the vectors exactly — ADC scores are
-    per-vector (no corpus statistics), which makes the tombstone
-    equivalence trivial-exact, unlike BM25's df/avgdl corrections.
-    Unknown ids raise (checked against the partition-pruned registry)."""
-    buckets = sorted({i % 64 for i in ids})
-    found = {
-        r[0]
-        for r in spark.read.parquet(path + "/ids")
-        .filter(F.col("id_bucket").isin(buckets))
-        .filter(F.col(id_col).isin(ids))
-        .select(id_col)
-        .collect()
-    }
-    missing = set(ids) - found
-    if missing:
-        raise ValueError(f"tombstone_ivfpq_index: ids not in index: {sorted(missing)}")
-    spark.createDataFrame([(i,) for i in sorted(set(ids))], f"{id_col} bigint").write.mode(
-        "append"
-    ).parquet(path + "/tombstones")
-
-
-def search_ivfpq_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 4,
-    n_buckets: int = 64,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Serve ANN queries from a persisted IVF-PQ index: probe cells are
-    chosen by exact query·centroid dots (the |q|·C affinity table is
-    computed and COLLECTED on the driver — |q|·n_probe ints, the
-    client-side step every ANN server runs; FAISS does the same), the
-    code table is read with a STATIC partition filter on those cells
-    (plan shows PartitionFilters — only n_probe·|q| directories are
-    listed), and scoring is the broadcast-LUT ADC fold + exact
-    two-level rank of pq_ivf_topk. Results are bit-identical to the
-    in-memory pq_ivf_topk on the same corpus (test-pinned).
-
-    ``queries``: (query_id, qv) — full-precision query vectors."""
-    from pyspark.sql import Window
-
-    cents = spark.read.parquet(path + "/centroids")
-    cbs = spark.read.parquet(path + "/codebooks")
-    qaff = queries.crossJoin(F.broadcast(cents)).withColumn(
-        "aff", dot_ltr(F.col("qv"), F.col("cv"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("aff").desc(), F.col("cell"))
-    probes = (
-        qaff.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "cell")
-    )
-    probe_rows = probes.collect()  # |q|·n_probe rows — the client-side step
-    cells = sorted({r.cell for r in probe_rows})
-    codes = spark.read.parquet(path + "/codes").filter(F.col("cell").isin(cells))
-    import os
-
-    if os.path.isdir(path + "/tombstones"):
-        dead = spark.read.parquet(path + "/tombstones").select(id_col).distinct()
-        codes = codes.join(F.broadcast(dead), id_col, "left_anti")
-
-    dim = len(cbs.select("cv").first()["cv"]) * cbs.select(
-        "subspace"
-    ).distinct().count()
-    m = cbs.select("subspace").distinct().count()
-    d = dim // m
-    qsubs = F.array(
-        *[
-            F.struct(
-                F.lit(j).cast("int").alias("subspace"),
-                F.slice(F.col("qv"), j * d + 1, d).alias("qsv"),
-            )
-            for j in range(m)
-        ]
-    )
-    lut = (
-        queries.select("query_id", F.explode(qsubs).alias("__s"))
-        .select(
-            "query_id",
-            F.col("__s.subspace").alias("subspace"),
-            F.col("__s.qsv").alias("qsv"),
-        )
-        .join(F.broadcast(cbs), "subspace")
-        .select(
-            "query_id", "subspace", "code", dot_ltr(F.col("qsv"), F.col("cv")).alias("part")
-        )
-    )
-    cand = (
-        codes.join(
-            F.broadcast(spark.createDataFrame(probe_rows, "query_id long, cell int")),
-            "cell",
-        )
-        .filter(F.col(id_col) != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-        .groupBy("query_id", id_col)
-        .agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("subspace", "part"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["part"],
-            ).alias("adc")
-        )
-    )
-    w1 = Window.partitionBy(
-        "query_id", F.pmod(F.col(id_col), F.lit(n_buckets))
-    ).orderBy(F.col("adc").desc(), id_col)
-    w2 = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), id_col)
-    return (
-        cand.withColumn("__brn", F.row_number().over(w1))
         .filter(F.col("__brn") <= k)
         .withColumn("rank", F.row_number().over(w2).cast("int"))
         .filter(F.col("rank") <= k)
@@ -1600,47 +1273,6 @@ def covariance_matrix_quantized(
     )
 
 
-def power_iteration_top_direction(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    scale: int = 1_000_000,
-    iters: int = 3,
-) -> DataFrame:
-    """Top principal DIRECTION of the corpus second-moment matrix by
-    fixed-iteration integer power method — the consumer the Gram pass
-    exists for (VERDICT r9 #6): v_{k+1} = rescale(G · v_k), starting
-    from the all-ones vector, where rescale maps the vector to integer
-    micro-units (v·scale DIV max|v|, truncating division — identical
-    toward-zero semantics in Spark ``DIV`` and DuckDB ``//``). Every
-    matvec runs in exact DECIMAL(38,0) (HUGEINT in the oracle):
-    |G| ≤ n·scale² ≈ 2·10¹⁵ at sf0.1, so a matvec entry is ≤
-    d·|G|·scale ≈ 10²³ and the pre-rescale product ≤ 10²⁹ — five-plus
-    orders of headroom, and the fixed iteration count with exact
-    arithmetic makes the result hash-comparable across engines (a
-    float power method would drift by summation order and never
-    converge bit-identically).
-
-    Scale shape: the corpus is touched ONCE, by the Gram pass's single
-    Arrow stage (each batch a d×d integer matmul partial); the cells
-    are checkpointed (``dedup.materialize``) so the iterations reuse
-    them rather than re-running the Arrow stage, and every subsequent
-    operator — mirror, three join+aggregate matvecs, the max-|u|
-    rescale — runs on ≤ d² = 4096 rows, bounded by the DIMENSION, not
-    the corpus. The per-iteration max is a 1-row broadcast (the
-    sanctioned dimension-bounded collect class, here not even
-    collected). Iteration count is data-independent; convergence
-    looping just extends the same plan."""
-    from .dedup import materialize
-
-    cells = materialize(
-        gram_matrix_quantized(embeddings, vec_col=vec_col, dim=dim, scale=scale)
-    )
-    return power_iteration_from_cells(
-        mirror_gram_cells(cells), dim=dim, scale=scale, iters=iters
-    )
-
-
 def mirror_gram_cells(cells: DataFrame) -> DataFrame:
     """Upper-triangle (i ≤ j) Gram cells → the FULL mirrored matrix with
     the DECIMAL(38,0) cast the exact matvecs require. One definition
@@ -1660,12 +1292,19 @@ def power_iteration_from_cells(
     scale: int = 1_000_000,
     iters: int = 3,
 ) -> DataFrame:
-    """The matvec/rescale loop of :func:`power_iteration_top_direction`,
-    split out so it can run over ANY exact-integer cell matrix — the
-    original Gram, or the deflated matrix :func:`deflate_gram_cells`
-    produces for the second direction. ``full`` must be the FULL
-    (mirrored) matrix with columns (i int, j int, g decimal(38,0));
-    every operation here is bounded by d² rows."""
+    """Top direction of an exact-integer cell matrix by fixed-iteration
+    integer power method: v_{k+1} = rescale(G · v_k) from the all-ones
+    vector, where rescale maps the vector to integer micro-units
+    (v·scale DIV max|v|, truncating division — identical toward-zero
+    semantics in Spark ``DIV`` and DuckDB ``//``). Every matvec runs in
+    exact DECIMAL(38,0) (HUGEINT in the oracle), so the fixed iteration
+    count makes the result hash-comparable across engines (a float power
+    method would drift by summation order and never converge
+    bit-identically). The matrix is the original Gram or the deflated
+    matrix :func:`deflate_gram_cells` produces for the second direction.
+    ``full`` must be the FULL (mirrored) matrix with columns (i int,
+    j int, g decimal(38,0)); every operation here is bounded by d² rows,
+    and the per-iteration max is a 1-row broadcast."""
     v = (
         full.sparkSession.range(dim)
         .select(F.col("id").cast("int").alias("pos"), F.lit(1).cast("long").alias("v"))

@@ -62,27 +62,6 @@ def char_ratio_counter(chars_per_token: float):
     return lambda col: F.ceil(F.length(col) / F.lit(r)).cast("int")
 
 
-def pandas_tokenizer_counter(count_fn):
-    """Wrap a REAL tokenizer's per-string count (e.g.
-    ``lambda s: len(enc.encode(s))`` for a tiktoken/HF encoding) as an
-    Arrow-batched token counter. This is the sanctioned Python surface —
-    a pandas_udf over Arrow batches, never a row-at-a-time Python UDF —
-    so an exact-BPE budget costs one vectorized scan column, not a
-    per-row interpreter round trip. Nulls count as 0."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # explicit returnType + locally-bound pd: the module's postponed
-    # annotations (string 'pd.Series') would not resolve for the
-    # type-hint inferrer with pandas imported only in this scope
-    def _count(s):
-        return s.map(lambda t: count_fn(t) if t is not None else 0).astype("int32")
-
-    _count.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    u = pandas_udf(_count, "int")
-    return lambda col: u(col)
-
-
 def resolve_token_counter(counter="whitespace"):
     """Resolve a token-counting MODEL to a Column function — the
     pluggable surface every token-mass consumer (corpus budgets, mixture
@@ -95,8 +74,8 @@ def resolve_token_counter(counter="whitespace"):
     - ``"bpe"``: the BPE-pretokenizer regex count (JVM regex, no
       Python).
     - a number: chars-per-token ratio model (``char_ratio_counter``).
-    - a callable ``Column -> Column``: used as-is — pass
-      ``pandas_tokenizer_counter(...)`` for a real tokenizer.
+    - a callable ``Column -> Column``: used as-is (a real tokenizer
+      wraps in here).
     """
     if callable(counter):
         return counter
@@ -110,12 +89,6 @@ def resolve_token_counter(counter="whitespace"):
         "counter must be 'whitespace' | 'bpe' | chars-per-token number | "
         f"Column->Column callable, got {counter!r}"
     )
-
-
-def stopword_ratio(col: Column) -> Column:
-    toks = tokens(col)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    return n_stop.cast("double") / F.greatest(F.size(toks), F.lit(1))
 
 
 def punct_ratio(col: Column) -> Column:
@@ -698,7 +671,7 @@ def pack_token_bins(
     arithmetic end-to-end, so the assignment is oracle-checkable.
     ``counter`` swaps the token-count model (resolve_token_counter) —
     pack in tokenizer units by passing "bpe", a chars-per-token ratio,
-    or a pandas_tokenizer_counter; whitespace stays the oracle default.
+    or a Column->Column counter; whitespace stays the oracle default.
     """
     from pyspark.sql import Window
 
@@ -756,10 +729,9 @@ def chunk_documents(docs: DataFrame, size: int = 16, id_col: str = "doc_id", tex
 
     The UDTF class is built inside the registration helper so cloudpickle
     ships it by value (module-level classes pickle by reference and break
-    on workers — see streaming/stateful.py). Row-at-a-time Python is the
-    UDTF contract; for bulk chunking prefer the pure-column equivalent
-    (explode over a sequence) — this operator exists to exercise and
-    document the UDTF path.
+    on workers). Row-at-a-time Python is the UDTF contract; for bulk
+    chunking prefer the pure-column equivalent (explode over a sequence)
+    — this operator exists to exercise and document the UDTF path.
     """
     spark = docs.sparkSession
     _ensure_chunk_udtf(spark)
@@ -1020,95 +992,6 @@ def bpe_pair_counts(
             F.count_distinct(F.col("__word")).alias("n_words"),
         )
     )
-
-
-def _merge_pair(syms: Column, left: Column, right: Column) -> Column:
-    """Left-to-right single-pass merge of adjacent (left, right) symbol
-    occurrences in a symbol array — the BPE apply step as a pure fold
-    (``aggregate``), matching the reference trainer's greedy scan:
-    in 'aaa' with pair (a,a) the first two symbols merge and the third
-    survives alone."""
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == left)
-            & (x == right),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.concat(left, right)),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def bpe_learn_merges(
-    vocab: DataFrame,
-    n_merges: int = 10,
-    word_col: str = "word",
-    count_col: str = "wcount",
-    checkpoint: str = "local",
-) -> list[tuple[int, str, str, int]]:
-    """Greedy BPE training over a weighted vocabulary: ``n_merges``
-    iterations of (count adjacent symbol pairs) → (merge the argmax
-    pair corpus-wide). Returns ``[(step, left, right, pair_count)]`` —
-    the learned merge table, in order.
-
-    Distribution contract: each iteration is ONE aggregation over the
-    type table (pair, Σwcount) plus a narrow map applying the merge —
-    the corpus itself is never touched after word_vocab. The argmax is
-    the sanctioned driver-side scalar per iteration (exactly the
-    k-means-inertia pattern, similarity.py): one 4-field row collected
-    per merge, deterministic via the (count DESC, left, right) total
-    order. The evolving symbol table is re-materialized each step
-    (strategy knob, operators/dedup.materialize) so step k+1's scan
-    does not replay steps 1..k's folds.
-
-    Pair counting counts overlapping occurrences (standard trainer
-    behavior); the apply step merges left-to-right non-overlapping
-    (_merge_pair), so 'aaa' contributes 2 to (a,a)'s count but yields
-    ['aa','a'] after the merge — property-tested against a pure-Python
-    reference model in tests/test_properties.py."""
-    from .dedup import materialize
-
-    w = F.col(word_col)
-    syms = vocab.filter(F.length(w) >= 1).select(
-        F.col(count_col).alias("__wc"),
-        F.transform(
-            F.sequence(F.lit(1), F.length(w)),
-            lambda i: F.substring(w, i, F.lit(1)),
-        ).alias("__syms"),
-    )
-    syms = materialize(syms, checkpoint)
-    merges: list[tuple[int, str, str, int]] = []
-    for step in range(1, n_merges + 1):
-        s = F.col("__syms")
-        adj = F.zip_with(
-            F.slice(s, 1, F.size(s) - 1),
-            F.slice(s, 2, F.size(s) - 1),
-            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-        )
-        best = (
-            syms.filter(F.size(s) >= 2)
-            .select(F.col("__wc"), F.explode(adj).alias("p"))
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("__wc").alias("c"))
-            .orderBy(F.col("c").desc(), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        left, right, count = best[0]["l"], best[0]["r"], int(best[0]["c"])
-        merges.append((step, left, right, count))
-        syms = materialize(
-            syms.select(
-                "__wc", _merge_pair(s, F.lit(left), F.lit(right)).alias("__syms")
-            ),
-            checkpoint,
-        )
-    return merges
 
 
 def length_bucketed_batches(
@@ -1613,46 +1496,6 @@ def search_text_index(
     )
 
 
-def bpe_apply_merges(
-    docs: DataFrame,
-    merges: list[tuple[int, str, str, int]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply a learned BPE merge table (bpe_learn_merges' output) to the
-    corpus: every word splits to characters, then each merge replays in
-    training order (the exact tokenizer-apply rule — order matters, a
-    later merge can consume an earlier merge's output). Returns
-    ``(id, n_words, n_tokens)`` where n_tokens is the corpus token
-    count under the learned vocabulary — the number a token budget
-    would use once the tokenizer is trained.
-
-    Scale: a pure narrow map — |merges| chained array folds per word,
-    zero shuffle; for production-sized merge tables (10k+) switch the
-    apply to an Arrow-batched pandas UDF wrapping a real tokenizer
-    (pandas_tokenizer_counter), which is the same trade the token-count
-    models document."""
-    toks = _with_tokens(docs, id_col, text_col)
-    syms_of = lambda w: F.transform(  # noqa: E731
-        F.sequence(F.lit(1), F.length(w)),
-        lambda i: F.substring(w, i, F.lit(1)),
-    )
-    per_word = F.transform(F.col("__toks"), lambda w: syms_of(w))
-    for _, left, right, _count in merges:
-        per_word_prev = per_word
-        per_word = F.transform(
-            per_word_prev, lambda s: _merge_pair(s, F.lit(left), F.lit(right))
-        )
-    n_tokens = F.aggregate(
-        F.transform(per_word, lambda s: F.size(s)), F.lit(0), lambda a, v: a + v
-    )
-    return toks.select(
-        F.col(id_col),
-        F.size(F.col("__toks")).cast("int").alias("n_words"),
-        n_tokens.cast("int").alias("n_tokens"),
-    )
-
-
 def hashed_features(
     docs: DataFrame,
     dims: int = 32,
@@ -1719,9 +1562,7 @@ def model_weights(
     """The dims-sized weight table both corpus-fit linear models share:
     ``(bucket, w_cls, w_dsir)`` — the classifier cross-difference and the
     DSIR affinity cross-difference (see model_scores). Fit ONCE on a
-    corpus snapshot, then broadcast to batch scorers (model_scores) or
-    pack into one row for the stateless streaming gate
-    (streaming.filters.pack_model_weights / model_gate_stream).
+    corpus snapshot, then broadcast to the batch scorers (model_scores).
 
     ``tf`` may pass a precomputed hashed-feature table
     ``(id, lang, source, bucket, w)`` so fit and scoring share one

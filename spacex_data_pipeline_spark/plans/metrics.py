@@ -104,32 +104,6 @@ def metrics_summary(nodes: list[dict]) -> dict:
     }
 
 
-def observed_write(df: DataFrame, path: str, observations: dict) -> dict:
-    """Write ``df`` to parquet while OBSERVING aggregate metrics on the
-    rows as they stream through the write — Spark's ``Observation`` API
-    (an accumulator-backed aggregate riding the job), so row counts /
-    null tallies / sums cost ZERO extra scans and ZERO extra actions.
-    The production pattern for freshness/volume monitoring on every
-    sink: the alternative — ``df.count()`` before the write — reruns
-    the whole plan.
-
-    ``observations`` maps metric name → aggregate Column (e.g.
-    ``{"rows": F.count(F.lit(1)), "null_keys": F.sum(
-    F.col("k").isNull().cast("int"))}``). Returns the observed values.
-    Unlike :func:`run_with_metrics` (a diagnostic that executes the
-    plan to inspect it), this instruments a write you were doing
-    anyway; the same call shape works per-micro-batch in streaming
-    foreachBatch sinks."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    names = sorted(observations)
-    df.observe(obs, *[observations[n].alias(n) for n in names]).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return dict(obs.get)
-
-
 def format_metrics_tree(nodes: list[dict]) -> str:
     """Human-readable annotated tree (the CLI ``explain --analyze``
     rendering)."""

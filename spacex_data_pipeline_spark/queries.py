@@ -1889,9 +1889,9 @@ def session_sequences_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("extension", "streaming-batch-twin"),
 )
 def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour rollup — the batch twin of the Structured Streaming
-    windowed aggregation in streaming/rollup.py (same grouping, same
-    results on a replay)."""
+    """Tumbling 1-hour rollup: ``F.window`` on event time, the grouping a
+    watermarked Structured Streaming aggregation would use, computed in
+    batch."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -3054,8 +3054,8 @@ def resample_user_daily_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hopping_window_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping (sliding) windows in batch: 10-minute windows every 5
     minutes — each event lands in exactly two hops. Spark's `window()`
-    expands hops map-side then hash-aggregates; the streaming twin is the
-    same expression under a watermark. The oracle derives the hop starts
+    expands hops map-side then hash-aggregates; a streaming job would run
+    the same expression under a watermark. The oracle derives the hop starts
     arithmetically (time_bucket − k·hop), a genuinely different
     formulation of the same semantics."""
     ev = _t(spark, sf_dir, "events")
@@ -3130,9 +3130,7 @@ def interval_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval (range) join: every purchase paired with the same user's
     views from the preceding hour — the attribution join. Equi on
     user_id (the shuffle key) + a time-range residual predicate, so this
-    is a hash/merge join with a post-filter, never a cartesian. The
-    streaming twin (streaming/joins.py) runs the same condition as a
-    watermarked stream-stream join and is replay-tested equal."""
+    is a hash/merge join with a post-filter, never a cartesian."""
     ev = _t(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
@@ -4033,7 +4031,7 @@ def token_mass_models_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     this measures it per source. All three counters come from
     operators/text.resolve_token_counter, the same pluggable surface
     pack_token_bins and length_bucketed_batches now accept (a real
-    tokenizer plugs in via pandas_tokenizer_counter without touching
+    tokenizer plugs in as a Column->Column counter without touching
     any consumer). One scan, three narrow map columns, one
     |sources|-key shuffle."""
     from .operators.text import resolve_token_counter
@@ -7082,9 +7080,8 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     by corpus occurrence — the argmax candidates the first merge would
     choose from. The corpus collapses to the weighted TYPE table first
     (text.word_vocab — one corpus shuffle), then pair mining runs over
-    the vocabulary (Heaps-law-sized); the full greedy trainer
-    (text.bpe_learn_merges) iterates this exact aggregate per merge and
-    is property-tested against a pure-Python reference model."""
+    the vocabulary (Heaps-law-sized); a full greedy trainer would iterate
+    this exact aggregate once per merge."""
     from .operators.text import bpe_pair_counts, word_vocab
 
     pairs = bpe_pair_counts(word_vocab(_t(spark, sf_dir, "documents")))
@@ -12397,8 +12394,8 @@ _Z16_SQL = " + ".join(
 def zorder_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Layout advisor for data-skipping — quantifies, per candidate
     physical layout, how much of each probe dimension's domain a
-    point predicate must still scan (the decision input behind
-    ``sinks.write_zordered``): rows are bucketed into 64 simulated
+    point predicate must still scan (the decision input for a Z-ORDER
+    write layout): rows are bucketed into 64 simulated
     files under three layouts — arrival order (scaled l_orderkey
     prefix), single-key sort (scaled l_partkey prefix), and Morton
     Z-ORDER over (partkey, suppkey) — and each layout reports the
@@ -14218,7 +14215,7 @@ def pca_top_direction_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the 64 output micro-units hash-compare exactly (the pagerank_
     word_graph discipline applied to linear algebra). The corpus is
     read once by the Gram's single Arrow stage; everything after runs
-    on ≤ d² rows (see similarity.power_iteration_top_direction). The
+    on ≤ d² rows (see similarity.power_iteration_from_cells). The
     collected 64-row result is cached per dataset and re-parallelized
     here (ADVICE r10) so the three PCA entries pay the Gram pass once
     per context — first-run and cached values are identical because
@@ -15456,9 +15453,8 @@ def hll_register_store_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic raw estimate is the point here, accuracy bounds are
     the DataSketches entry's job). Scale: one map-side-combined
     shuffle of |days|·256 cells; merges touch ≤256 rows per range.
-    Streaming twin: streaming/rollup.hll_registers_stream populates
-    identical cells on arrival (registers are max-monoids, so replay
-    and late data are idempotent)."""
+    Registers are max-monoids, so replayed and late data merge
+    idempotently."""
     from .functions.hashing import HLL_REGISTERS, HLL_RHO_CAP, hll_register
 
     from .operators.dedup import materialize
@@ -21925,10 +21921,9 @@ def _ivfpq_append_drift_oracle(
     query_ids=(0, 1, 2, 3, 4), k=10, n_probe=4, n_centroids=16, n_stages=4
 ) -> str:
     """SQL replica of the frozen-quantizer append-drift recall audit:
-    cells/codebooks train on the STAGE-0 subset only (the
-    persist_ivfpq_index snapshot), every later stage is encoded with
-    them (the update_ivfpq_index contract), and recall@10 is measured
-    per cumulative corpus."""
+    cells/codebooks train on the STAGE-0 subset only, every later stage
+    is encoded with them (the quantizer never retrains), and recall@10
+    is measured per cumulative corpus."""
     ids = ",".join(str(i) for i in query_ids)
     denom = k * len(query_ids)
     return f"""
@@ -22063,20 +22058,20 @@ def _ivfpq_append_drift_oracle(
 def ivfpq_append_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RECALL DRIFT of a frozen-quantizer IVF-PQ index across
     incremental appends — the measured answer to the rebuild decision
-    update_ivfpq_index explicitly defers ("quantizer drift is a
-    rebuild decision, not an append-time one"): the corpus is split
+    a frozen-quantizer append leaves open (quantizer drift is a rebuild
+    decision, not an append-time one): the corpus is split
     into an initial snapshot (stage 0, an engine-identical md5 parity
     bit) and four append batches (stages 1-4 from the same hash);
     centroids AND PQ codebooks train on the stage-0 subset ONLY (the
-    persist_ivfpq_index build), every vector is assigned and encoded
-    against those FROZEN structures (the update_ivfpq_index contract —
-    appended codes are comparable to old ones exactly because the
-    quantizer never retrains), and recall@10 at the production
-    n_probe = 4 is measured after each cumulative append against the
-    exact cosine top-10 over the SAME grown corpus. A falling curve
-    means the appended mass has drifted away from the frozen cells —
-    the signal to rebuild; the measured-not-assumed discipline of
-    ivfpq_nprobe_recall_curve applied over the index LIFECYCLE axis.
+    initial index build), every vector is assigned and encoded against
+    those FROZEN structures (appended codes are comparable to old ones
+    exactly because the quantizer never retrains), and recall@10 at the
+    production n_probe = 4 is measured after each cumulative append
+    against the exact cosine top-10 over the SAME grown corpus. A
+    falling curve means the appended mass has drifted away from the
+    frozen cells — the signal to rebuild; the measured-not-assumed
+    discipline of ivfpq_nprobe_recall_curve applied over the index
+    LIFECYCLE axis.
     (Like the n_probe curve, the drift need not be monotone: appends
     both add quantization-overrated impostors and replace true
     neighbors.) Exactness: stage membership is integer md5 algebra;

@@ -18,8 +18,9 @@ variant README.md:59-82). Re-design:
   default) land as one parquet file. ``load_ts`` keeps Spark's semantics
   for a Python datetime: a naive stamp is wall time in the process's local
   timezone (``TimestampType.toInternal``), not in the session timezone.
-- At 100 TB scale the same schema drives ``spark.read.schema(s).json(path)``
-  over landed files — :func:`read_landed_json`.
+- At 100 TB scale the same schema would drive
+  ``spark.read.schema(s).json(path)`` over landed files instead of a
+  driver-side fetch.
 
 The canonical raw schema is the union of the reference's two ingest variants
 (SURVEY.md §1.3 decision): DAG contributes ``flight_number``/``upcoming``,
@@ -164,64 +165,3 @@ def ingest(
 ) -> DataFrame:
     """extract_and_load, minus the load: fetch → normalize → raw DataFrame."""
     return normalize(spark, fetch(), load_ts=load_ts)
-
-
-def read_landed_json(spark: SparkSession, path: str) -> DataFrame:
-    """Scale path: schema-pinned scan over landed JSON files.
-
-    ``from_json``-free — the reader itself applies the schema, so corrupt
-    records null out per-column exactly like the coerce path above.
-    """
-    api_schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("date_utc", T.StringType()),
-            T.StructField("success", T.BooleanType()),
-            T.StructField("rocket", T.StringType()),
-            T.StructField("details", T.StringType()),
-            T.StructField("flight_number", T.LongType()),
-            T.StructField("upcoming", T.BooleanType()),
-        ]
-    )
-    return (
-        spark.read.schema(api_schema)
-        .json(path)
-        .withColumnRenamed("id", "launch_id")
-        .withColumn("load_ts", F.current_timestamp())
-    )
-
-
-def read_landed_json_quarantine(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-pinned JSON scan that QUARANTINES corrupt lines instead of
-    silently nulling them: rows that fail to parse keep their raw text
-    in ``_corrupt_record`` (all data columns null), so the caller splits
-    good from bad with one filter and bad lines survive for replay —
-    the ingest-hygiene variant of :func:`read_landed_json` a production
-    feed needs (a poisoned line must neither kill the 100 TB job nor
-    vanish).
-
-    PERMISSIVE + columnNameOfCorruptRecord is Spark's per-record
-    dead-letter mechanism; the quarantine column costs nothing on clean
-    data (null column, prunable).
-    """
-    api_schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("date_utc", T.StringType()),
-            T.StructField("success", T.BooleanType()),
-            T.StructField("rocket", T.StringType()),
-            T.StructField("details", T.StringType()),
-            T.StructField("flight_number", T.LongType()),
-            T.StructField("upcoming", T.BooleanType()),
-            T.StructField("_corrupt_record", T.StringType()),
-        ]
-    )
-    return (
-        spark.read.schema(api_schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-        .withColumnRenamed("id", "launch_id")
-    )

@@ -1,9 +1,12 @@
 """Warehouse sinks — the reference's ``to_sql`` load step, Spark-native.
 
 Reference behaviors reproduced (SURVEY.md §2.1 S3-S5):
-- append  — ``df.to_sql(..., if_exists="append")`` (spacex_api_dag.py:48-49)
-- overwrite — ``if_exists="replace"`` (README.md:80)
+- append  — ``df.to_sql(..., if_exists="append")`` (spacex_api_dag.py:48-49):
+  :func:`append`
+- overwrite — ``if_exists="replace"`` (README.md:80): :func:`write_snapshot`
 - schema DDL — ``create schema if not exists raw`` (spacex_api_dag.py:25-27)
+  needs no counterpart: ``raw/`` is a path-based namespace of the
+  warehouse (plans/warehouse.py), created by the first write.
 
 Plus the fix the reference needs: its daily append of a full snapshot
 duplicates rows across runs (SURVEY.md §2.4). :func:`write_snapshot` makes
@@ -21,10 +24,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def ensure_database(spark: SparkSession, name: str) -> None:
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")
-
-
 def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """Parquet append — TASK-atomic, not TRANSACTION-atomic, by decision.
 
@@ -39,16 +38,9 @@ def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> N
     and (c) readers of an append table go through :func:`dedup_on_read`,
     which also masks replayed batches. On a cluster with a lakehouse
     format available, swap ``format("parquet")`` for ``format("delta")``
-    here and in :func:`overwrite`; the call sites do not change.
+    here and in :func:`write_snapshot`; the call sites do not change.
     """
     w = df.write.mode("append").format("parquet")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
-
-
-def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite").format("parquet")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
@@ -90,8 +82,8 @@ def compact(
 ) -> int:
     """Small-file compaction: rewrite a parquet table into
     ceil(rows / target) files — the maintenance op an append-heavy
-    warehouse needs (every streaming/daily append leaves one-file-per-
-    batch debris; thousands of tiny files throttle scans with per-file
+    warehouse needs (every daily append leaves one-file-per-batch
+    debris; thousands of tiny files throttle scans with per-file
     open cost and starve row-group pruning). Returns the file count
     after compaction.
 
@@ -192,69 +184,6 @@ def upsert_by_key(spark: SparkSession, df: DataFrame, path: str, key: str) -> in
     return _staged_swap(merged, path, stem="upsert")
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 8,
-    sort_by: str | None = None,
-) -> None:
-    """Write a BUCKETED managed table: rows hash-partitioned into
-    ``n_buckets`` files by ``key`` (optionally sorted within buckets) —
-    the pre-shuffle that makes every later equi-join or aggregation on
-    the key SHUFFLE-FREE. At 100 TB this is the difference between a
-    nightly fact↔fact join paying two corpus-wide exchanges per run and
-    paying them ONCE at write time: two tables bucketed the same way
-    join with zero Exchange nodes (plan-asserted in
-    tests/test_sources.py), and Spark skips the sort too when both
-    sides are bucket-sorted.
-
-    Bucketing requires the session catalog (``saveAsTable``) — the
-    bucket spec lives in table metadata, which a bare parquet path
-    cannot carry; pair with ``ensure_database`` for namespacing. Use
-    the SAME n_buckets on both sides of a planned join (mismatched
-    counts fall back to a shuffle on one side)."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort_by is not None:
-        w = w.sortBy(sort_by)
-    w.format("parquet").saveAsTable(table)
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int | None = None,
-) -> int:
-    """Write parquet in GLOBALLY SORTED layout: range-repartition on the
-    sort key(s) (sampled range boundaries — one shuffle), sort within
-    each partition, write. The point is data-skipping: parquet stores
-    min/max statistics per row group, and a sorted layout makes those
-    intervals DISJOINT, so a predicate on the sort key prunes to the few
-    row groups whose range overlaps — the poor man's clustered index,
-    and the single highest-leverage layout decision for a 100 TB fact
-    table scanned by time ranges (cf. Delta/Iceberg OPTIMIZE ... ZORDER;
-    for ONE sort key a plain range sort dominates Z-ordering).
-
-    Scan-side nothing changes: the same pushed filter that always
-    reached the scan now skips whole row groups via the footer stats
-    instead of decoding pages — layout work moves the cost from every
-    query to one write. Returns the file count written. Choose
-    ``n_files`` so row groups land near the 128 MB default
-    (``spark.sql.files.maxPartitionBytes``); None lets the range
-    exchange keep the session's shuffle parallelism."""
-    parts = [F.col(c) for c in sort_cols]
-    out = (
-        df.repartitionByRange(n_files, *parts)
-        if n_files is not None
-        else df.repartitionByRange(*parts)
-    )
-    out.sortWithinPartitions(*parts).write.mode("overwrite").parquet(path)
-    import os
-
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
-
-
 def write_sorted_buckets(
     df: DataFrame,
     path: str,
@@ -262,12 +191,13 @@ def write_sorted_buckets(
     grain: Column,
     n_buckets: int,
 ) -> int:
-    """:func:`write_sorted`'s DETERMINISTIC sibling: same globally-sorted
-    skippable layout, but file boundaries come from an EXACT global
-    NTILE over the total order instead of repartitionByRange's sampled
-    range boundaries — every engine (and every rerun) assigns byte-for-
-    byte the same rows to the same bucket, which is what lets a DuckDB
-    oracle predict the written footers row-for-row
+    """Write parquet in a globally sorted, DETERMINISTIC layout: file
+    boundaries come from an EXACT global NTILE over the total order
+    instead of repartitionByRange's sampled range boundaries, so each
+    file's min/max footer stats cover a disjoint key range (a predicate
+    on the sort key skips whole files) and every engine (and every
+    rerun) assigns byte-for-byte the same rows to the same bucket, which
+    is what lets a DuckDB oracle predict the written footers row-for-row
     (sorted_layout_footer_report drives this through the driver).
 
     The global row number is the distributed two-phase prefix scan
@@ -277,7 +207,7 @@ def write_sorted_buckets(
     one task → one file per bucket, rows sorted within. ``grain`` must
     be a prefix function of ``order_cols[0]`` and the order unique-total
     (global_row_number's contract). Cost: one bucket-table window plus
-    one data shuffle — the same shuffle count as write_sorted.
+    one data shuffle.
 
     Returns the number of parquet files written (== n_buckets when
     every bucket is non-empty)."""
@@ -304,242 +234,3 @@ def write_sorted_buckets(
     import glob
 
     return len(glob.glob(f"{path.rstrip('/')}/__bucket=*/*.parquet"))
-
-
-def write_with_quarantine(
-    df: DataFrame,
-    checks: dict[str, Column],
-    good_path: str,
-    quarantine_path: str,
-) -> tuple[int, int]:
-    """Route rows through named data-quality checks in ONE pass: rows
-    passing every check land at ``good_path``; failing rows land at
-    ``quarantine_path`` WITH a ``failed_checks`` column naming the rules
-    they broke — the standard ingest quarantine pattern (bad records are
-    triaged and replayed, never silently dropped, and never poison the
-    good table). Both outputs share one schema, so ``failed_checks``
-    rides along empty on good rows (readers of the good table can drop
-    it; rewriting it away would cost the second pass this op avoids).
-
-    Single job: the flag is computed once and the write partitions by it
-    (two directories, one scan, no double evaluation of the checks);
-    the partition dirs then promote into the two targets via renames.
-    Row counts come from the parquet FOOTERS (pyarrow metadata) — no
-    second Spark scan. Returns (n_good, n_quarantined)."""
-    import glob
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    failed = F.concat_ws(
-        ",",
-        F.array_compact(
-            F.array(
-                *[
-                    F.when(~F.coalesce(cond, F.lit(False)), F.lit(name))
-                    for name, cond in sorted(checks.items())
-                ]
-            )
-        ),
-    )
-    staging = good_path.rstrip("/") + ".__quarantine_split__"
-    (
-        df.withColumn("failed_checks", failed)
-        .withColumn("__ok", F.col("failed_checks") == "")
-        .write.mode("overwrite")
-        .partitionBy("__ok")
-        .parquet(staging)
-    )
-
-    def promote(src: str, dst: str) -> int:
-        shutil.rmtree(dst, ignore_errors=True)
-        os.makedirs(dst)
-        n = 0
-        if os.path.isdir(src):
-            for f in os.listdir(src):
-                os.rename(os.path.join(src, f), os.path.join(dst, f))
-        for f in glob.glob(dst + "/*.parquet"):
-            n += pq.ParquetFile(f).metadata.num_rows
-        return n
-
-    n_good = promote(staging + "/__ok=true", good_path)
-    n_bad = promote(staging + "/__ok=false", quarantine_path)
-    shutil.rmtree(staging, ignore_errors=True)
-    return n_good, n_bad
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 10,
-    n_files: int = 16,
-) -> int:
-    """Write parquet in Z-ORDER (Morton-curve) layout over TWO numeric
-    columns — :func:`write_sorted` prunes perfectly on its sort key and
-    not at all on anything else; interleaving the bits of both columns'
-    bucket numbers gives each row group a small min/max BOX in (a, b)
-    space, so predicates on EITHER column (or both) skip most groups —
-    the Delta/Iceberg ``OPTIMIZE ... ZORDER BY`` move, hand-rolled as
-    pure column expressions.
-
-    Bucketing is uniform over each column's observed [min, max] (one
-    cheap agg; a production layout would use quantile boundaries for
-    heavily skewed columns — with TPC-H-uniform keys the difference is
-    nil). The Morton key is 2·``bits`` wide, built from ``bits``
-    shift/mask/or rounds per column — all JVM, no UDF; then one range
-    exchange + in-partition sort on the key, exactly write_sorted's
-    write path. Returns the file count."""
-    stats = df.agg(
-        F.min(col_a).alias("a_lo"),
-        F.max(col_a).alias("a_hi"),
-        F.min(col_b).alias("b_lo"),
-        F.max(col_b).alias("b_hi"),
-    )
-    n_buckets = 1 << bits
-    with_stats = df.join(F.broadcast(stats))
-
-    def bucket(c, lo, hi):
-        # clamp to [0, n_buckets-1]; degenerate (constant) column → 0
-        span = F.col(hi) - F.col(lo)
-        raw = F.when(span > 0, ((F.col(c) - F.col(lo)) * n_buckets / span)).otherwise(
-            F.lit(0)
-        )
-        return F.least(raw.cast("long"), F.lit(n_buckets - 1))
-
-    ba, bb = bucket(col_a, "a_lo", "a_hi"), bucket(col_b, "b_lo", "b_hi")
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(ba, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        ).bitwiseOR(F.shiftleft(F.shiftright(bb, i).bitwiseAND(F.lit(1)), 2 * i))
-    keyed = with_stats.select(*df.columns, z.alias("__z"))
-    (
-        keyed.repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    import os
-
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])
-
-
-def delete_by_keys(
-    spark: SparkSession,
-    path: str,
-    keys: DataFrame,
-    key: str,
-    partition_col: str | None = None,
-) -> dict:
-    """Hard-delete every row whose ``key`` appears in ``keys`` — the
-    GDPR/CCPA right-to-be-forgotten primitive a path-based warehouse
-    needs (appends and upserts never remove; erasure requests demand a
-    rewrite of the files that contain the subject).
-
-    With ``partition_col`` set the rewrite is PARTITION-SCOPED: a
-    broadcast semi-join finds which partitions contain tombstoned keys,
-    and ONLY those directories are rewritten (each through the same
-    verified staged swap as :func:`compact`); untouched partitions'
-    files stay byte-identical on disk — at 100 TB an erasure batch
-    touching 0.1% of days rewrites 0.1% of the table. The affected-
-    partition list is collected to the driver: it is bounded by
-    |partitions| (dimension-sized, the sanctioned collect class), never
-    by rows. Without ``partition_col`` the whole table rewrites (the
-    small-table / building-block form, like upsert_by_key).
-
-    The anti-join is NULL-SAFE (eqNullSafe) for the same reason
-    upsert_by_key's is: a NULL key in the tombstone set must delete
-    NULL-key rows, not silently miss them. Deletion is idempotent —
-    re-running the same tombstones deletes 0 further rows. Partition
-    directories are resolved against the actual on-disk listing
-    (Hive %XX-escaped values, NULL → ``__HIVE_DEFAULT_PARTITION__``),
-    and any unresolvable value aborts BEFORE the first rewrite so a
-    failed run never leaves the table partially erased.
-
-    Returns ``{"rows_deleted", "partitions_rewritten",
-    "partitions_total"}`` (partition counts are -1 for the whole-table
-    form). NOTE: parquet rewrite removes the rows; physical residue on
-    previously-deleted-then-backed-up media is the storage layer's
-    problem, and compaction backups (``.__delete_old__``) are dropped
-    on success as part of the swap."""
-    existing = spark.read.parquet(path)
-    tomb = keys.select(F.col(key).alias("__k")).distinct()
-    cond = existing[key].eqNullSafe(F.col("__k"))
-    n_del = existing.join(F.broadcast(tomb), cond, "left_semi").count()
-    if partition_col is None:
-        if n_del:
-            kept = existing.join(F.broadcast(tomb), cond, "left_anti")
-            _staged_swap(kept, path, stem="delete")
-        return {
-            "rows_deleted": n_del,
-            "partitions_rewritten": -1,
-            "partitions_total": -1,
-        }
-    import os
-
-    dirs = [d for d in os.listdir(path) if d.startswith(f"{partition_col}=")]
-    parts_total = len(dirs)
-    # One row per affected value, alongside SPARK's own string rendering
-    # of it: the partition-path writer formats values via the engine's
-    # string cast (lowercase booleans 'true'/'false', Java Double
-    # rendering '1.0E16', Spark date/timestamp/decimal formats), which
-    # Python str() does NOT reproduce — so ask the engine, never format
-    # driver-side (a legitimate tombstone set must not abort on a
-    # rendering mismatch).
-    affected = [
-        (r[0], r[1])
-        for r in existing.join(F.broadcast(tomb), cond, "left_semi")
-        .select(
-            F.col(partition_col),
-            F.col(partition_col).cast("string").alias("__render"),
-        )
-        .distinct()
-        .collect()
-    ]
-    # Resolve each affected value to its ON-DISK directory name instead
-    # of formatting the raw value into a path: Spark Hive-escapes
-    # path-hostile characters (':', '%', '#', ...) as %XX when writing
-    # partition dirs and writes NULL as __HIVE_DEFAULT_PARTITION__, so
-    # f"{col}={value}" misses both. Any value that does not resolve
-    # fails HERE — before the loop — so an erasure run is never left
-    # partially applied.
-    from urllib.parse import unquote
-
-    on_disk = {unquote(d.split("=", 1)[1]): d for d in dirs}
-    null_dir = f"{partition_col}=__HIVE_DEFAULT_PARTITION__"
-    resolved = []
-    unresolvable = []
-    for v, rendered in affected:
-        name = (
-            (null_dir if null_dir in set(dirs) else None)
-            if v is None
-            else on_disk.get(rendered)
-        )
-        (resolved.append(name) if name is not None else unresolvable.append(repr(v)))
-    if unresolvable:
-        raise ValueError(
-            f"delete_by_keys: no on-disk partition directory under {path} for "
-            f"{partition_col} values {unresolvable}; refusing to start a "
-            "partial rewrite (re-run after resolving — deletion is idempotent)"
-        )
-    import shutil
-
-    for name in resolved:
-        sub = f"{path.rstrip('/')}/{name}"
-        part = spark.read.parquet(sub)
-        kept = part.join(F.broadcast(tomb), part[key].eqNullSafe(F.col("__k")), "left_anti")
-        if kept.isEmpty():
-            # every row of this partition was tombstoned — drop the
-            # directory itself (an empty parquet dir breaks readers)
-            shutil.rmtree(sub)
-        else:
-            _staged_swap(kept, sub, stem="delete")
-    return {
-        "rows_deleted": n_del,
-        "partitions_rewritten": len(affected),
-        "partitions_total": parts_total,
-    }

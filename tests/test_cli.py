@@ -299,8 +299,9 @@ def test_cli_index_build_and_search(spark, sf_oracle, tmp_path, capsys):
 def test_cli_index_update_and_tombstone(spark, sf_oracle, tmp_path, capsys):
     """The incremental maintenance verbs: build on a partial corpus,
     index-update appends the rest (stats sum to the full corpus),
-    index-tombstone logically deletes — and a tombstoned id is refused
-    by a later update."""
+    index-tombstone logically deletes, a tombstoned id is refused by a
+    later update, and index-compact reclaims the tombstones so the same
+    id can be re-added."""
     from spacex_data_pipeline_spark import catalog
     from spacex_data_pipeline_spark.operators.text import persist_text_index
 
@@ -321,14 +322,18 @@ def test_cli_index_update_and_tombstone(spark, sf_oracle, tmp_path, capsys):
     # refused: 301 is tombstoned now
     import pytest as _pytest
 
+    readd = [
+        "index-update", "--sf-dir", sf_oracle, "--index", idx,
+        "--min-id", "301", "--max-id", "302",
+    ]
     with _pytest.raises(ValueError, match="tombstoned"):
-        main(
-            [
-                "index-update", "--sf-dir", sf_oracle, "--index", idx,
-                "--min-id", "301", "--max-id", "302",
-            ],
-            _spark=spark,
-        )
+        main(readd, _spark=spark)
+    capsys.readouterr()
+    assert main(["index-compact", "--index", idx], _spark=spark) == 0
+    assert "(2 docs reclaimed)" in capsys.readouterr().out
+    # both tombstones reclaimed, one id back
+    assert main(readd, _spark=spark) == 0
+    assert f"n_docs={n_total - 1}" in capsys.readouterr().out
 
 
 def test_cli_prep_training_model_filter_flag(spark, sf_oracle, tmp_path):

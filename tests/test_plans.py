@@ -404,39 +404,6 @@ def test_run_with_metrics_broadcast_join_moves_no_shuffle_bytes(spark, sf):
     assert s["shuffle_bytes_written"] < 1_000_000  # agg partials only
 
 
-def test_observed_write_counts_without_second_scan(spark, sf, tmp_path):
-    """observed_write must return metrics matching the written data
-    exactly — counted by the write job itself (Observation accumulators),
-    not a second scan. Cross-checked against the parquet footers."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from spacex_data_pipeline_spark import catalog
-    from spacex_data_pipeline_spark.plans.metrics import observed_write
-
-    import pyspark.sql.functions as SF
-
-    orders = catalog.table(spark, sf, "orders")
-    out = str(tmp_path / "observed")
-    got = observed_write(
-        orders,
-        out,
-        {
-            "rows": SF.count(SF.lit(1)),
-            "null_dates": SF.sum(SF.col("o_orderdate").isNull().cast("int")),
-            "total_price": SF.sum("o_totalprice"),
-        },
-    )
-    assert got["rows"] == 15000
-    assert got["null_dates"] == 0
-    footer_rows = sum(
-        pq.ParquetFile(f).metadata.num_rows for f in glob.glob(out + "/*.parquet")
-    )
-    assert footer_rows == got["rows"]
-    assert got["total_price"] > 0
-
-
 def test_bloom_decontamination_probe_is_map_side(spark, sf):
     """The bloom variant's corpus side must stay a MAP: the bitmap
     attaches via a 1-row broadcast (nested-loop on a singleton, not a

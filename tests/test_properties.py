@@ -144,63 +144,6 @@ def test_length_bucketed_batches_bound_padding(spark):
             assert t // 64 == bucket
 
 
-@given(payload=st.binary(max_size=512))
-@settings(max_examples=300, deadline=None)
-def test_image_parser_terminates_and_never_returns_garbage(payload):
-    """The stdlib image-dimension parser must, for ARBITRARY bytes,
-    either raise ValueError or return the dimensions a spec-valid header
-    actually encodes — never hang (the JPEG walker has loops) and never
-    return dimensions from a payload whose signature it doesn't know."""
-    from spacex_data_pipeline_spark.operators.multimodal import _parse_dimensions
-
-    known_sig = (
-        payload[:8] == b"\x89PNG\r\n\x1a\n"
-        or payload[:6] in (b"GIF87a", b"GIF89a")
-        or payload[:2] == b"\xff\xd8"
-    )
-    try:
-        w, h = _parse_dimensions(payload)
-    except ValueError:
-        return  # loud failure is always acceptable
-    assert known_sig, "returned dimensions for an unrecognized signature"
-    assert 0 <= w <= 0xFFFFFFFF and 0 <= h <= 0xFFFFFFFF
-
-
-@given(
-    fills=st.integers(min_value=0, max_value=3),
-    n_rst=st.integers(min_value=0, max_value=4),
-    pad=st.binary(max_size=16),
-    width=st.integers(min_value=1, max_value=0xFFFF),
-    height=st.integers(min_value=1, max_value=0xFFFF),
-)
-@settings(max_examples=100, deadline=None)
-def test_jpeg_walker_finds_sof_through_arbitrary_preambles(
-    fills, n_rst, pad, width, height
-):
-    """Any spec-valid marker preamble — fill bytes, TEM/RST length-less
-    markers, APPn segments with arbitrary payload — must not stop the
-    walker from reaching SOF0 and reading the true dimensions."""
-    import struct
-
-    from spacex_data_pipeline_spark.operators.multimodal import _parse_dimensions
-
-    app1 = b"\xff\xe1" + struct.pack(">H", 2 + len(pad)) + pad
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">H", 11)
-        + b"\x08"
-        + struct.pack(">H", height)
-        + struct.pack(">H", width)
-        + b"\x03"
-        + b"\x00" * 6
-    )
-    preamble = b"\xff" * fills + b"\xff\x01"
-    for r in range(n_rst):
-        preamble += bytes([0xFF, 0xD0 + (r % 8)])
-    jpeg = b"\xff\xd8" + preamble + app1 + sof0 + b"\xff\xd9"
-    assert _parse_dimensions(jpeg) == (width, height)
-
-
 # URL-ish strings: scheme (mixed case) + host labels + optional port +
 # path segments (may contain literal 'utm_' text) + query params (some
 # utm_*) + optional fragment. Deliberately messier than the synthesized
@@ -444,57 +387,6 @@ def test_bm25_matches_python_reference(texts):
 
 @settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(
-    words=st.lists(
-        st.text(alphabet="abc", min_size=1, max_size=6), min_size=1, max_size=12
-    ),
-    counts=st.lists(st.integers(min_value=1, max_value=9), min_size=12, max_size=12),
-)
-def test_bpe_learn_merges_match_python_reference(words, counts):
-    """For ANY weighted vocabulary: the distributed greedy BPE trainer
-    emits the same merge table as a direct Python model (overlap-counted
-    pair statistics, left-to-right non-overlapping apply, argmax by
-    (count DESC, left, right)) — including the tie-break and the
-    merged-symbol cascade across steps."""
-    from spacex_data_pipeline_spark.operators.text import bpe_learn_merges
-
-    spark = _get_spark()
-    vocab_map: dict[str, int] = {}
-    for w, c in zip(words, counts):
-        vocab_map[w] = vocab_map.get(w, 0) + c
-
-    # python reference model
-    vocab = [(list(w), c) for w, c in vocab_map.items()]
-    expected = []
-    for step in range(1, 4):
-        pc: dict[tuple[str, str], int] = {}
-        for syms, c in vocab:
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] = pc.get((a, b), 0) + c
-        if not pc:
-            break
-        (left, right), c = min(
-            pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        expected.append((step, left, right, c))
-        nxt = []
-        for syms, wc in vocab:
-            out: list[str] = []
-            for x in syms:
-                if out and out[-1] == left and x == right:
-                    out[-1] = left + right
-                else:
-                    out.append(x)
-            nxt.append((out, wc))
-        vocab = nxt
-
-    df = spark.createDataFrame(
-        list(vocab_map.items()), "word string, wcount int"
-    )
-    assert bpe_learn_merges(df, n_merges=3) == expected
-
-
-@settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
     texts=st.lists(
         st.lists(
             st.sampled_from(["alpha", "beta", "gamma", "delta", "epsilon"]),
@@ -722,210 +614,6 @@ def test_skyline_2d_matches_quadratic_reference(pts, shift):
     assert got == want
 
 
-class _FoldStubState:
-    """GroupState double for driving the streaming folds directly."""
-
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-_fold_events = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=3600),  # offset seconds
-        st.sampled_from(["view", "click", "purchase"]),
-    ),
-    min_size=0,
-    max_size=40,
-)
-
-
-@settings(deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(events=_fold_events, n_cuts=st.integers(min_value=0, max_value=4), data=st.data())
-def test_funnel_fold_matches_quadratic_reference(events, n_cuts, data):
-    """The funnel fold == the O(n²) last-prior definition for ANY
-    in-order event sequence, under ANY split of the sequence into
-    consecutive triggers AND any chunking within a trigger: each click
-    pairs with the latest view at-or-before it, each purchase with the
-    latest click at-or-before it, latencies in truncated epoch
-    seconds. Event ids are assigned in time order (in-order arrival —
-    the contract the watermark guarantees); ties across types resolve
-    by funnel order exactly like the batch join's inclusive bound.
-    Trigger cuts are constrained to STRICT timestamp boundaries: a
-    same-ts pair straddling a trigger is precisely the late-data case
-    the watermark exists to prevent (the already-emitted row is
-    frozen), so it is out of the parity contract — within a trigger,
-    chunking and chunk delivery order remain fully adversarial."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from spacex_data_pipeline_spark.streaming.stateful import _make_funnel_fold
-
-    # in-order arrival: sort offsets, ids in arrival order
-    seq = sorted(events, key=lambda e: e[0])
-    rows = [
-        (i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=off), typ)
-        for i, (off, typ) in enumerate(seq)
-    ]
-    # quadratic reference over the funnel-ordered sequence
-    order = {"view": 0, "click": 1, "purchase": 2}
-    ref_sorted = sorted(rows, key=lambda r: (r[1], order[r[2]], r[0]))
-    want = []
-    for idx, (eid, ts, typ) in enumerate(ref_sorted):
-        if typ == "click":
-            prior = [r for r in ref_sorted[:idx] if r[2] == "view" and r[1] <= ts]
-            if prior:
-                v = max(prior, key=lambda r: r[1])
-                want.append(("view_to_click", eid, int(ts.timestamp()) - int(v[1].timestamp())))
-        elif typ == "purchase":
-            prior = [r for r in ref_sorted[:idx] if r[2] == "click" and r[1] <= ts]
-            if prior:
-                c = max(prior, key=lambda r: r[1])
-                want.append(("click_to_purchase", eid, int(ts.timestamp()) - int(c[1].timestamp())))
-    # drive the fold across random trigger cuts + random chunk cuts
-    valid_cuts = [
-        c
-        for c in range(len(rows) + 1)
-        if c in (0, len(rows)) or rows[c - 1][1] < rows[c][1]
-    ]
-    cuts = sorted(
-        data.draw(
-            st.lists(
-                st.sampled_from(valid_cuts),
-                min_size=min(n_cuts, len(valid_cuts)),
-                max_size=min(n_cuts, len(valid_cuts)),
-            )
-        )
-    )
-    triggers, prev = [], 0
-    for c in [*cuts, len(rows)]:
-        triggers.append(rows[prev:c])
-        prev = c
-    fold = _make_funnel_fold()
-    state = _FoldStubState()
-    got = []
-    for trig in triggers:
-        if not trig:
-            continue
-        k = data.draw(st.integers(min_value=1, max_value=3))
-        chunks = [
-            pd.DataFrame(
-                {
-                    "event_id": [r[0] for r in part],
-                    "ts": [pd.Timestamp(r[1]) for r in part],
-                    "user_id": [7] * len(part),
-                    "event_type": [r[2] for r in part],
-                    "value": [0.0] * len(part),
-                }
-            )
-            for part in (trig[i::k] for i in range(k))
-            if part
-        ]
-        # chunk delivery order is arbitrary — reverse it for adversity
-        (out,) = list(fold((7,), iter(reversed(chunks)), state))
-        got.extend(
-            (r.stage, r.event_id, r.lat) for r in out.itertuples(index=False)
-        )
-    assert sorted(got) == sorted(want)
-
-
-@settings(deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(events=_fold_events, n_cuts=st.integers(min_value=0, max_value=4), data=st.data())
-def test_attribution_fold_matches_quadratic_reference(events, n_cuts, data):
-    """The attribution fold == the O(n²) last-touch definition for ANY
-    in-order sequence under trigger splits at strict-ts boundaries and
-    adversarial within-trigger chunking: each purchase credits the
-    latest view/click at-or-before it within the 1h lookback (ties by
-    the batch total order: touch before same-ts purchase, greatest
-    event id among same-ts touches), else 'direct'."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from spacex_data_pipeline_spark.streaming.stateful import (
-        _make_attribution_fold,
-    )
-
-    seq = sorted(events, key=lambda e: e[0])
-    rows = [
-        (i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=off), typ)
-        for i, (off, typ) in enumerate(seq)
-    ]
-    want = []
-    for eid, ts, typ in rows:
-        if typ != "purchase":
-            continue
-        touches = [
-            r
-            for r in rows
-            if r[2] in ("view", "click") and r[1] <= ts
-        ]
-        if touches:
-            t = max(touches, key=lambda r: (r[1], r[0]))
-            lat = int((ts - t[1]).total_seconds() * 1_000_000)
-            if lat <= 3600 * 1_000_000:
-                want.append((eid, t[2], lat))
-            else:
-                want.append((eid, "direct", None))
-        else:
-            want.append((eid, "direct", None))
-    valid_cuts = [
-        c
-        for c in range(len(rows) + 1)
-        if c in (0, len(rows)) or rows[c - 1][1] < rows[c][1]
-    ]
-    cuts = sorted(
-        data.draw(
-            st.lists(
-                st.sampled_from(valid_cuts),
-                min_size=min(n_cuts, len(valid_cuts)),
-                max_size=min(n_cuts, len(valid_cuts)),
-            )
-        )
-    )
-    triggers, prev = [], 0
-    for c in [*cuts, len(rows)]:
-        triggers.append(rows[prev:c])
-        prev = c
-    fold = _make_attribution_fold(3600 * 1_000_000)
-    state = _FoldStubState()
-    got = []
-    for trig in triggers:
-        if not trig:
-            continue
-        k = data.draw(st.integers(min_value=1, max_value=3))
-        chunks = [
-            pd.DataFrame(
-                {
-                    "event_id": [r[0] for r in part],
-                    "ts": [pd.Timestamp(r[1]) for r in part],
-                    "user_id": [7] * len(part),
-                    "event_type": [r[2] for r in part],
-                    "value": [1.0] * len(part),
-                }
-            )
-            for part in (trig[i::k] for i in range(k))
-            if part
-        ]
-        (out,) = list(fold((7,), iter(reversed(chunks)), state))
-        got.extend(
-            (r.p_event_id, r.attributed_type, None if pd.isna(r.lat_us) else int(r.lat_us))
-            for r in out.itertuples(index=False)
-        )
-    assert sorted(got, key=repr) == sorted(want, key=repr)
-
-
 @settings(deadline=None, max_examples=25, suppress_health_check=[HealthCheck.too_slow])
 @given(
     vals=st.lists(
@@ -974,74 +662,6 @@ def test_grouped_exact_percentiles_matches_rank_definition(vals, grain_div):
         n = len(vs)
         for q in (50, 90):
             want[(g, q)] = (n, vs[max(1, (q * n + 99) // 100) - 1])
-    assert got == want
-
-
-@settings(deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(
-    offsets=st.lists(
-        st.integers(min_value=0, max_value=3600), min_size=0, max_size=40
-    ),
-    n_cuts=st.integers(min_value=0, max_value=4),
-    data=st.data(),
-)
-def test_gap_fold_matches_consecutive_difference_reference(offsets, n_cuts, data):
-    """The gap fold == plain consecutive differences of truncated epoch
-    seconds over the (ts, event_id)-ordered sequence, for ANY split
-    into consecutive triggers and ANY within-trigger chunking/delivery
-    order. Ids are assigned in arrival order (the in-order contract),
-    so trigger cuts may fall anywhere — even between same-timestamp
-    events: the (ts, id) guard admits the later id and the emitted gap
-    is 0, exactly like the batch window."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from spacex_data_pipeline_spark.streaming.stateful import _gap_fold
-
-    seq = sorted(offsets)
-    rows = [
-        (i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=off))
-        for i, off in enumerate(seq)
-    ]
-    want = [
-        (rows[i][0], int(rows[i][1].timestamp()) - int(rows[i - 1][1].timestamp()))
-        for i in range(1, len(rows))
-    ]
-    cuts = sorted(
-        data.draw(
-            st.lists(
-                st.integers(min_value=0, max_value=len(rows)),
-                min_size=n_cuts,
-                max_size=n_cuts,
-            )
-        )
-    )
-    triggers, prev = [], 0
-    for c in [*cuts, len(rows)]:
-        triggers.append(rows[prev:c])
-        prev = c
-    state = _FoldStubState()
-    got = []
-    for trig in triggers:
-        if not trig:
-            continue
-        k = data.draw(st.integers(min_value=1, max_value=3))
-        chunks = [
-            pd.DataFrame(
-                {
-                    "event_id": [r[0] for r in part],
-                    "ts": [pd.Timestamp(r[1]) for r in part],
-                    "user_id": [7] * len(part),
-                    "event_type": ["view"] * len(part),
-                    "value": [0.0] * len(part),
-                }
-            )
-            for part in (trig[i::k] for i in range(k))
-            if part
-        ]
-        (out,) = list(_gap_fold((7, "view"), iter(reversed(chunks)), state))
-        got.extend((int(r.event_id), int(r.gap_sec)) for r in out.itertuples(index=False))
     assert got == want
 
 
