@@ -347,88 +347,11 @@ METHODOLOGY = {
         "(shared footer on distinct bodies — viral buckets from partial "
         "overlap, not exact duplication)"
     ),
-    "r7_late": (
-        "extended set grew by the TPC-H breadth entries (q4/q6/q7/q9/q14/"
-        "q18/q19) and the semantic-curation pair; "
-        "semantic_decontaminate_embeddings was reshaped from interpreted-"
-        "HOF scoring (13.0 s first measurement) to the packed-broadcast "
-        "BLAS argmax tile (~1.4 s) before first being recorded here"
-    ),
-    "r15": (
-        "additions only: per-query exec_stats (jobs/stages/tasks from the "
-        "status tracker, final timed pass) and input_layout (per-table "
-        "bytes + planned scan splits) land in bench_out.json so the "
-        "cores-scaling ratio ~1 at this SF is attributable to single-task "
-        "scans in-artifact; timing loop, warmup, min-of-3, noop sink and "
-        "the stdout line are unchanged. Honest-accounting note (VERDICT "
-        "r14 #3, pre-existing since r11): entries that ride a shared "
-        "per-context pass (_doc_shingle_postings/_sizes, _basket_items, "
-        "_doc_cc_components, _cust_fuzzy_pairs, _doc_md5_minhash_sigs, "
-        "and r15's _cust_cc_components, _doc_trigram_model, _doc_bm25_tf, "
-        "_doc_jaccard_pairs80, _doc_containment_pairs80) pay the build in "
-        "the FIRST consumer's first timed pass; min-of-3 therefore "
-        "reports the ridden cost for those entries — the sweep-amortized "
-        "number, not the standalone cost. The shares model a real sweep "
-        "(one build serves every consumer in this same process); nothing "
-        "persists across bench invocations."
-    ),
-    "notes": (
-        "r6: shingle_df_stats reshaped (GK sketch + exact histogram; the "
-        "0-key exact percentile is gone from the plan); dedup_reports "
-        "derives all four dedup report tables from ONE pairs+CC run "
-        "(expect ≈ one dedup_savings_report, vs the four standalone "
-        "entries' summed cost); new line-dedup / URL / incremental "
-        "entries are first-timed this round. skew_linededup: at sf0.1's "
-        "hot-line df (~1e3) the one-shuffle window form WINS (0.28 vs "
-        "0.59 s) — the two-level aggregate form is a capacity escape for "
-        "extreme df (bounds every reducer), not a speed win at this "
-        "scale; both are benched so the crossover is measured, not "
-        "guessed. r7: the LAST stdout line is now the compact driver "
-        "schema only (metric/value/unit/queries/sf) so the driver's "
-        "bounded stdout-tail capture always holds one complete JSON "
-        "line; the full artifact (extended/skew/methodology) lives in "
-        "bench_out.json. Timed passes raised to 3 this round to settle "
-        "the r6 extended-set noise question (VERDICT r6 what's-wrong "
-        "#3). Prior r5 notes (cross-split leakage broadcast fix, "
-        "single-materialization checkpoints, edge-touched-only CC) "
-        "stand. r7 late: a 'calibration' field records a fixed "
-        "single-thread CPU workload — three same-code r7 runs drifted "
-        "12.3→16.2 s headline uniformly across unchanged queries (host "
-        "variance, no steal/freq change visible); normalize cross-round "
-        "comparisons by the calibration scalar before reading any "
-        "per-query delta as a regression. r8: the VERDICT r6 extended-"
-        "set regression watch closes as noise — dedup_cluster_"
-        "representatives measured 4.02 (r6) / 3.52 (r7) / 3.48 (r8) s "
-        "on unchanged code. rfm_customer_segments 0.57→1.36 s is REAL "
-        "and bought: three naive single-reducer NTILE sorts became "
-        "three bounded two-phase prefix scans (skew_globalrank_* "
-        "quantifies the per-scan constant: 0.34 naive vs 0.61 two-"
-        "phase at a scale where one task holds everything — the form "
-        "that still terminates when one task cannot). r8 third push: "
-        "the experiment-statistics / drift / attribution / fingerprint "
-        "/ interval-overlap entries and the q2/q11/q20 adaptations are "
-        "first-timed; a stale pre-fix bloom_semi figure (50.5 s, the "
-        "O(m) array-scan probe) was re-measured at ~1.3 s after the "
-        "word-map bit-test fix. r10: calibration runs BOTH before "
-        "(calibration_pre) and after (calibration_post == calibration) "
-        "the timed passes so a mid-run contention ramp is visible in "
-        "one artifact; the r1-anchor calibrated ratio is renamed "
-        "shared12_vs_r1_calibrated_lower_bound and computed with the "
-        "smaller of the two probes — the RAW ratio is the primary "
-        "figure (ADVICE r9: a fully-parallel probe over-corrects "
-        "unless queries saturate all cores like the probe does). The "
-        "sanctioned bounded-window WARNs are silenced via log4j level "
-        "on WindowExec; the regression guard is the per-name whitelist "
-        "test in tests/test_plans.py. r11: the VERDICT r10 what's-wrong "
-        "#3 watch (dedup_group_size_histogram 2.89->4.04 s, "
-        "dedup_rates_by_source 3.22->4.11 s in the r10 artifact) closes "
-        "as shared-host variance: both re-measured at/below their r9 "
-        "times on unchanged code this round (histogram 2.73 s, rates "
-        "3.26 s, first r11 artifact) with the rest of the ladder flat; "
-        "no shared-CC-map restructuring needed. The eight r11 "
-        "second-push entries (trend tests, Markov mix, dup-gram "
-        "coverage, containment, streaks, dispersion, diversity) are "
-        "first-timed in this round's extended set."
+    "shared_passes": (
+        "an entry that rides a per-context shared pass pays the build in "
+        "the first consumer's first timed pass, so min-of-3 reports the "
+        "ridden (sweep-amortized) cost, not the standalone cost; nothing "
+        "persists across bench invocations"
     ),
 }
 

@@ -99,7 +99,7 @@ def connected_components_r14(nodes, edges, id_col="doc_id",
         edges.select(F.col(left).alias("src"), F.col(right).alias("dst"))
         .union(edges.select(F.col(right).alias("src"), F.col(left).alias("dst")))
     )
-    sym = dedup_mod.materialize(sym, "local")
+    sym = dedup_mod.materialize(sym)
     touched = (
         sym.select("src")
         .distinct()
@@ -121,7 +121,7 @@ def connected_components_r14(nodes, edges, id_col="doc_id",
                 (upd < F.col("label")).alias("__chg"),
             )
         )
-        new_labels = dedup_mod.materialize(new_labels, "local")
+        new_labels = dedup_mod.materialize(new_labels)
         changed = new_labels.filter(F.col("__chg")).count()
         labels = new_labels.select("node", F.col("new_label").alias("label"))
         if changed == 0:

@@ -36,47 +36,22 @@ from ..functions.hashing import (
 )
 
 
-def materialize(df: DataFrame, checkpoint: str = "local") -> DataFrame:
-    """Materialize an intermediate a plan references many times, by one of
-    three strategies — the executor-loss trade (ADVICE r5) as a CALLER
-    CHOICE instead of module prose:
+def materialize(df: DataFrame) -> DataFrame:
+    """Materialize an intermediate a plan references many times:
+    ``localCheckpoint()`` — eager, executor-local blocks, lineage cut.
+    Eager on purpose: a lazy materialization does not dedupe compute
+    across a plan's references within the first action (measured:
+    minhash 2.6→3.5 s, simhash 5.0→6.5 s, jaccard 2.0→2.6 s with
+    eager=False).
 
-    - ``"local"`` (default): ``localCheckpoint(eager=True)`` — fastest
-      (executor-local blocks, no lineage). An executor loss mid-job
-      kills the job instead of recomputing; right for this single-JVM
-      harness and restartable batch audits.
-    - ``"reliable"``: ``checkpoint(eager=True)`` — blocks written to the
-      session's ``spark.sparkContext.setCheckpointDir`` (HDFS/object
-      store on a cluster). Survives executor loss; costs a durable
-      write. The long-multi-tenant-100 TB-run setting. Raises a clear
-      error if no checkpoint dir is configured.
-    - ``"persist"``: ``persist(DISK_ONLY)`` + an eager ``count()`` —
-      keeps LINEAGE (lost partitions recompute instead of failing the
-      job) at local-disk cost, no checkpoint dir needed.
-
-    Eager in all three modes, deliberately: a lazy materialization does
-    not dedupe compute across a plan's references within the first
-    action (measured: minhash 2.6→3.5 s, simhash 5.0→6.5 s, jaccard
-    2.0→2.6 s with eager=False)."""
-    if checkpoint == "local":
-        return df.localCheckpoint()
-    if checkpoint == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().checkpointDir().isEmpty():
-            raise ValueError(
-                "checkpoint='reliable' needs "
-                "spark.sparkContext.setCheckpointDir(<hdfs/s3/dbfs path>)"
-            )
-        return df.checkpoint()
-    if checkpoint == "persist":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        out.count()
-        return out
-    raise ValueError(
-        f"checkpoint must be 'local' | 'reliable' | 'persist', got {checkpoint!r}"
-    )
+    The one place the strategy is fixed. Local blocks have no lineage,
+    so an executor loss mid-job kills the job instead of recomputing —
+    right for this single-JVM engine and restartable batch audits. A
+    cluster deployment that must survive executor loss swaps
+    ``df.localCheckpoint()`` for ``df.checkpoint()`` here (with
+    ``setCheckpointDir`` on HDFS/object store), the same one-place swap
+    ``sinks.append`` documents for Delta."""
+    return df.localCheckpoint()
 
 
 def exact_dedup_first(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -286,7 +261,6 @@ def duplicate_ngram_spans(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Substring-level exact-duplicate statistics: for every document,
     how much of it is covered by token n-grams that occur MORE THAN ONCE
@@ -313,38 +287,34 @@ def duplicate_ngram_spans(
     gram TEXT — identical modulo 64-bit collisions (the line-dedup
     argument, ~2^-64 at any real corpus). The gram table feeds both the
     count aggregate and the dup-flag join — single-materialization rule
-    (``checkpoint``: local | reliable | persist | none). The token
-    table itself is materialized under the same rule (r14): the plan
-    references ``base`` from the gram fan-out AND the final per-doc
-    stats select, and column pruning cannot save the second reference —
-    ``n_tokens`` is size(tokens(text)), so each reference re-ran the
-    full tokenize regex over the corpus. Storage note (ADVICE r14 #4):
-    the base table carries the full ``__toks`` arrays, so under
-    ``checkpoint='reliable'`` this is a second durable corpus-sized
-    write per call (on top of the gram table); if that cost matters on
-    a cluster, checkpoint a pruned (id, n_tokens, __toks) projection or
-    use 'local'/'persist'."""
+    (:func:`materialize`). The token table itself is materialized under
+    the same rule (r14): the plan references ``base`` from the gram
+    fan-out AND the final per-doc stats select, and column pruning
+    cannot save the second reference — ``n_tokens`` is
+    size(tokens(text)), so each reference re-ran the full tokenize regex
+    over the corpus. Storage note (ADVICE r14 #4): the base table
+    carries the full ``__toks`` arrays, so a durable ``checkpoint()``
+    swapped into :func:`materialize` makes this a second corpus-sized
+    write per call (on top of the gram table)."""
     from ..functions.numeric import pct_rate
     from .text import tokens
 
     t = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-    base = t.select(id_col, F.size("__toks").alias("n_tokens"), "__toks")
-    if checkpoint != "none":
-        base = materialize(base, checkpoint)
+    base = materialize(t.select(id_col, F.size("__toks").alias("n_tokens"), "__toks"))
     pos = base.filter(F.col("n_tokens") >= n).select(
         F.col(id_col),
         "__toks",
         F.explode(F.sequence(F.lit(1), F.col("n_tokens") - (n - 1))).alias("start"),
     )
-    grams = pos.select(
-        F.col(id_col),
-        "start",
-        F.xxhash64(
-            *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(n)]
-        ).alias("h"),
+    grams = materialize(
+        pos.select(
+            F.col(id_col),
+            "start",
+            F.xxhash64(
+                *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(n)]
+            ).alias("h"),
+        )
     )
-    if checkpoint != "none":
-        grams = materialize(grams, checkpoint)
     cnt = grams.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
     dup = grams.join(cnt.filter(F.col("c") > 1).select("h"), "h")
     ndup = dup.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_dup_grams"))
@@ -383,7 +353,6 @@ def duplicate_span_docs(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Exact-substring dedup SURGERY (the removal pass
     duplicate_ngram_spans budgets for): every corpus-duplicated token
@@ -410,27 +379,25 @@ def duplicate_span_docs(
     the plan references ``base`` THREE times (gram fan-out, the
     positional token explode, the final n_tokens select) and each
     reference re-ran the tokenize regex corpus-wide — one pass now
-    serves all three (same trade as the gram checkpoint below)."""
+    serves all three (same trade as the gram table below)."""
     from .text import tokens
 
     t = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-    base = t.select(id_col, F.size("__toks").alias("n_tokens"), "__toks")
-    if checkpoint != "none":
-        base = materialize(base, checkpoint)
+    base = materialize(t.select(id_col, F.size("__toks").alias("n_tokens"), "__toks"))
     pos = base.filter(F.col("n_tokens") >= n).select(
         F.col(id_col),
         "__toks",
         F.explode(F.sequence(F.lit(1), F.col("n_tokens") - (n - 1))).alias("start"),
     )
-    grams = pos.select(
-        F.col(id_col),
-        "start",
-        F.xxhash64(
-            *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(n)]
-        ).alias("h"),
+    grams = materialize(
+        pos.select(
+            F.col(id_col),
+            "start",
+            F.xxhash64(
+                *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(n)]
+            ).alias("h"),
+        )
     )
-    if checkpoint != "none":
-        grams = materialize(grams, checkpoint)
     stats = grams.groupBy("h").agg(
         F.count(F.lit(1)).alias("c"),
         F.min(F.struct(F.col(id_col).alias("d"), F.col("start").alias("s"))).alias(
@@ -488,7 +455,6 @@ def shingle_postings(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """The (id, shingle-hash) posting list both set-similarity joins run
     on: normalize → split → k-word shingles → 8-byte xxhash64 → explode,
@@ -510,8 +476,7 @@ def shingle_postings(
         toks.select(
             F.col(id_col),
             F.explode(shingle_hashes_from_words(F.col("__words"), k)).alias("h"),
-        ),
-        checkpoint,
+        )
     )
 
 
@@ -522,7 +487,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.2,
     max_shingle_df: int | None = None,
-    checkpoint: str = "local",
     postings: DataFrame | None = None,
     sizes: DataFrame | None = None,
 ) -> DataFrame:
@@ -555,8 +519,8 @@ def ngram_jaccard_pairs(
     action (measured: jaccard 2.0→2.6 s with eager=False; the
     materialization itself bought 2.16→1.99 s at sf0.1). Fault-tolerance
     trade (ADVICE r5): localCheckpoint blocks have NO lineage — an
-    executor loss kills the job; a long 100 TB run should pass
-    checkpoint='reliable'/'persist' (see :func:`materialize`).
+    executor loss kills the job; :func:`materialize` names the one-place
+    swap a long cluster run makes.
 
     ``sizes``: a pre-aggregated per-doc set-size table (columns
     ``(id_col, n)``, one row per doc with ≥1 shingle) to skip the two
@@ -570,7 +534,7 @@ def ngram_jaccard_pairs(
     sh = (
         postings
         if postings is not None
-        else shingle_postings(docs, id_col, text_col, k, checkpoint)
+        else shingle_postings(docs, id_col, text_col, k)
     )
     if sizes is None:
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
@@ -618,7 +582,6 @@ def containment_pairs(
     threshold_pct: int = 80,
     min_shingles: int = 5,
     max_shingle_df: int | None = None,
-    checkpoint: str = "local",
     postings: DataFrame | None = None,
     sizes: DataFrame | None = None,
 ) -> DataFrame:
@@ -630,7 +593,7 @@ def containment_pairs(
     how large the host document is — the signal a training-data
     pipeline wants for boilerplate inclusion, quotation chains, and
     doc-in-doc wrapping. Same shared-shingle equi-join skeleton (only
-    pairs sharing ≥1 shingle materialize; posting list checkpointed
+    pairs sharing ≥1 shingle materialize; posting list materialized
     once, both join sides + the size join read the materialized
     blocks), but DIRECTIONAL: (a,b) with a≠b, normalized by |A| only.
     The threshold compare is exact-integer (inter·100 ≥ pct·|A|), so no
@@ -650,7 +613,7 @@ def containment_pairs(
     sh = (
         postings
         if postings is not None
-        else shingle_postings(docs, id_col, text_col, k, checkpoint)
+        else shingle_postings(docs, id_col, text_col, k)
     )
     if sizes is None:
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
@@ -694,7 +657,6 @@ def df_cap_loss_curve(
     k: int = 3,
     threshold: float = 0.2,
     caps: tuple[int, ...] = (4, 8, 16, 32, 64),
-    checkpoint: str = "local",
     postings: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT recall cost of the hot-shingle df-cap, per cap: a true
@@ -716,7 +678,7 @@ def df_cap_loss_curve(
     sh = (
         postings
         if postings is not None
-        else shingle_postings(docs, id_col, text_col, k, checkpoint)
+        else shingle_postings(docs, id_col, text_col, k)
     )
     dfh = sh.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("df"))
     shd = sh.join(dfh, "h")
@@ -793,7 +755,6 @@ def jaccard_pairs_prefix_filtered(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.2,
-    checkpoint: str = "local",
     postings: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard pairs via PPJoin-style PREFIX FILTERING (Chaudhuri
@@ -837,8 +798,7 @@ def jaccard_pairs_prefix_filtered(
             toks.select(
                 F.col(id_col),
                 F.explode(shingle_hashes_from_words(F.col("__words"), k)).alias("h"),
-            ),
-            checkpoint,
+            )
         )
     df_tbl = sh.groupBy("h").agg(F.count(F.lit(1)).alias("__df"))
     w_rank = Window.partitionBy(id_col).orderBy("__df", "h")
@@ -900,7 +860,6 @@ def minhash_lsh_candidates(
     bands: int = 32,
     threshold: float = 0.2,
     max_bucket_size: int | None = None,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates with estimated Jaccard.
 
@@ -957,7 +916,7 @@ def minhash_lsh_candidates(
             F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"),
         )
     )
-    sigs = materialize(sigs, checkpoint)
+    sigs = materialize(sigs)
     rows_per_band = num_hashes // bands
     # Band rows carry ONLY (id, band, key) — the 64-long signature never
     # rides through the docs×bands self-join shuffle (512 B/row saved);
@@ -1046,7 +1005,6 @@ def simhash_near_pairs(
     text_col: str = "text",
     max_hamming: int = 16,
     fingerprints: DataFrame | None = None,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, candidates via block
     equality (pigeonhole over 4 blocks ⇒ catches distance ≤ 3 exactly;
@@ -1062,9 +1020,7 @@ def simhash_near_pairs(
     fps = (
         fingerprints
         if fingerprints is not None
-        else materialize(
-            simhash_fingerprints(docs, id_col, text_col), checkpoint
-        )
+        else materialize(simhash_fingerprints(docs, id_col, text_col))
     )
     pairs = None
     for blk in range(4):
@@ -1092,7 +1048,6 @@ def connected_components(
     left: str = "doc_a",
     right: str = "doc_b",
     max_iter: int = 20,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Connected components over a near-dup pair graph → canonical dedup
     groups: every node gets ``component`` = the minimum id reachable from
@@ -1104,16 +1059,19 @@ def connected_components(
     distributed CC. Rounds needed = graph diameter; dup clusters are
     near-cliques, so 2–3 rounds in practice (the large-star/small-star
     variant halves rounds on pathological chains; not needed here).
-    Per-round lineage is truncated with ``localCheckpoint`` — without it
-    the plan doubles every iteration and the job DAG explodes. The
-    convergence check is one scalar count per round (driver-side scalars
-    are the sanctioned pattern for iterative fixpoints — the DATA never
-    visits the driver).
+    Each round's labels are cut from their lineage with
+    :func:`materialize` before the next round reads them, so every round
+    plans the same small join: the round references the previous labels
+    twice (propagation join and update join), and an uncut plan doubles
+    every round until planning alone exhausts the driver. The
+    convergence check is one scalar count per round over the
+    materialized labels (driver-side scalars are the sanctioned pattern
+    for iterative fixpoints — the DATA never visits the driver).
     """
     import warnings
 
     # Materialize the symmetrized edge list ONCE before iterating: every
-    # round joins against it, and without the checkpoint each join would
+    # round joins against it, and without materializing each join would
     # re-execute the full upstream candidate-generation pipeline (the
     # n-gram shingle join that produced the edges) — measured 6.3s → 2.4s
     # at sf0.1, and at 100 TB the difference is re-running dedup candidate
@@ -1123,7 +1081,7 @@ def connected_components(
         edges.select(F.col(left).alias("src"), F.col(right).alias("dst"))
         .union(edges.select(F.col(right).alias("src"), F.col(left).alias("dst")))
     )
-    sym = materialize(sym, checkpoint)
+    sym = materialize(sym)
     # Iterate ONLY over nodes that touch an edge: a node with no edge is
     # its own component and can never change label, so carrying it
     # through every round materializes |V| rows per iteration for
@@ -1149,7 +1107,6 @@ def connected_components(
     )
     labels = touched.select(F.col("src").alias("node"), F.col("src").alias("label"))
     changed = 0
-    prev_cached = None
     for _ in range(max_iter):
         nbr = (
             sym.join(labels, sym.dst == labels.node)
@@ -1160,53 +1117,17 @@ def connected_components(
         # materialization per round plus a cheap count over the already-
         # materialized result, instead of a second old-vs-new join job
         upd = F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label")))
-        new_labels = (
-            labels.join(nbr, labels.node == nbr.src, "left")
-            .select(
+        new_labels = materialize(
+            labels.join(nbr, labels.node == nbr.src, "left").select(
                 "node",
                 upd.alias("new_label"),
                 (upd < F.col("label")).alias("__chg"),
             )
         )
-        if checkpoint == "local":
-            # r15 (per-round job-count trim, VERDICT r14 #7): persist +
-            # count materializes the round AND returns the convergence
-            # scalar in ONE job (the count's full scan populates every
-            # cached partition), where eager localCheckpoint + count was
-            # two jobs per round — at ~0.25-0.3 s fixed cost per job
-            # that is the dominant per-round cost for the 2-3-round
-            # near-clique graphs this runs on. The next round's join
-            # reads the InMemoryRelation, so lineage stays bounded
-            # exactly as with the checkpoint; each round unpersists its
-            # predecessor (only the final round's labels stay resident —
-            # touched-node-sized, freed with the context). On executor
-            # loss, persist RECOMPUTES from lineage instead of failing
-            # the job — strictly safer than localCheckpoint at scale.
-            from pyspark import StorageLevel
-
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-            changed = new_labels.filter(F.col("__chg")).count()
-            if prev_cached is not None:
-                prev_cached.unpersist(False)
-            prev_cached = new_labels
-        else:
-            new_labels = materialize(new_labels, checkpoint)
-            changed = new_labels.filter(F.col("__chg")).count()
+        changed = new_labels.filter(F.col("__chg")).count()
         labels = new_labels.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             break
-    if prev_cached is not None:
-        # Truncate lineage ONCE at convergence (one cheap job over the
-        # touched-node-sized cache) and release the cached blocks: the
-        # converged labels are consumed by arbitrary downstream plans
-        # (often referenced more than once), and leaving them as a
-        # persisted view would (a) print the whole fixpoint lineage into
-        # every consumer's explain output and (b) hold the last round's
-        # cache for the context lifetime. Net jobs per fixpoint:
-        # rounds + 1 instead of 2·rounds.
-        labels = materialize(labels, "local")
-        prev_cached.unpersist(False)
-        prev_cached = None
     if changed != 0:
         # ADVICE r2: never return unconverged labels silently — a dup
         # chain with diameter > max_iter would yield non-minimal

@@ -58,51 +58,34 @@ def _blocking_stages(
     q: int,
     max_dist: int,
     max_gram_df: int,
-    right: DataFrame | None = None,
-    right_key_col: str | None = None,
-    right_name_col: str | None = None,
 ) -> dict[str, DataFrame]:
     """The shared pipeline stages (names → grams → hot/cold → candidates
     → verified pairs), returned by name so both the pair operator and
     the blocking-efficiency report derive from ONE definition."""
-
-    def _names(df, kc, nc):
-        return df.select(
-            F.col(kc).alias("k"), F.trim(F.lower(F.col(nc))).alias("nm")
-        )
-
-    def _grams(names):
-        return names.select(
-            "k", F.explode(positional_qgram_keys(F.col("nm"), q)).alias("gk")
-        )
-
-    names_a = _names(records, key_col, name_col)
-    grams_a = _grams(names_a)
-    if right is None:
-        names_b, grams_b = names_a, grams_a
-        df_basis = grams_a
-    else:
-        names_b = _names(right, right_key_col or key_col, right_name_col or name_col)
-        grams_b = _grams(names_b)
-        df_basis = grams_a.union(grams_b)
+    names = records.select(
+        F.col(key_col).alias("k"), F.trim(F.lower(F.col(name_col))).alias("nm")
+    )
+    grams = names.select(
+        "k", F.explode(positional_qgram_keys(F.col("nm"), q)).alias("gk")
+    )
     hot = (
-        df_basis.groupBy("gk")
+        grams.groupBy("gk")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > max_gram_df)
         .select("gk")
     )
-    cold_a = grams_a.join(F.broadcast(hot), "gk", "left_anti").alias("a")
-    cold_b = grams_b.join(F.broadcast(hot), "gk", "left_anti").alias("b")
-    pair_cond = F.col("a.gk") == F.col("b.gk")
-    if right is None:
-        pair_cond = pair_cond & (F.col("a.k") < F.col("b.k"))
+    cold = grams.join(F.broadcast(hot), "gk", "left_anti")
     cand = (
-        cold_a.join(cold_b, pair_cond)
+        cold.alias("a")
+        .join(
+            cold.alias("b"),
+            (F.col("a.gk") == F.col("b.gk")) & (F.col("a.k") < F.col("b.k")),
+        )
         .select(F.col("a.k").alias("a_key"), F.col("b.k").alias("b_key"))
         .distinct()
     )
-    an = names_a.select(F.col("k").alias("a_key"), F.col("nm").alias("a_name"))
-    bn = names_b.select(F.col("k").alias("b_key"), F.col("nm").alias("b_name"))
+    an = names.select(F.col("k").alias("a_key"), F.col("nm").alias("a_name"))
+    bn = names.select(F.col("k").alias("b_key"), F.col("nm").alias("b_name"))
     dist = F.levenshtein(F.col("a_name"), F.col("b_name"), max_dist)
     verified = (
         cand.join(an, "a_key")
@@ -114,8 +97,8 @@ def _blocking_stages(
         )
     )
     return {
-        "names": names_a,
-        "cold": cold_a,
+        "names": names,
+        "cold": cold,
         "hot": hot,
         "cand": cand,
         "verified": verified,
@@ -129,24 +112,14 @@ def blocked_fuzzy_pairs(
     q: int = 3,
     max_dist: int = 2,
     max_gram_df: int = 100,
-    right: DataFrame | None = None,
-    right_key_col: str | None = None,
-    right_name_col: str | None = None,
 ) -> DataFrame:
     """Matched record pairs ``(a_key, b_key, a_name, b_name, dist)``
-    with ``levenshtein(a_name, b_name) ≤ max_dist``, found via
-    positional q-gram blocking (module docstring). Names are compared
-    lowercased/trimmed.
-
-    Self-linkage (default): pairs within ``records``, canonicalized by
-    ``a_key < b_key``. Two-table linkage (``right=`` given): a comes
-    from ``records``, b from ``right`` — the master-list-vs-incoming-
-    feed reconciliation join. The hot-gram df cap is computed over the
-    UNION of both sides (a gram key hot on either side still causes
-    the D_left·D_right blowup)."""
+    within ``records``, canonicalized by ``a_key < b_key``, with
+    ``levenshtein(a_name, b_name) ≤ max_dist``, found via positional
+    q-gram blocking (module docstring). Names are compared
+    lowercased/trimmed."""
     return _blocking_stages(
-        records, key_col, name_col, q, max_dist, max_gram_df,
-        right, right_key_col, right_name_col,
+        records, key_col, name_col, q, max_dist, max_gram_df
     )["verified"]
 
 

@@ -239,7 +239,6 @@ def phash_neardup_pairs(
     max_hamming: int = 10,
     n_bands: int = 4,
     band_bits: int = 14,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Near-duplicate pairs among perceptual hashes via LSH banding —
     the media twin of the SimHash text path: split each 56-bit hash
@@ -250,13 +249,13 @@ def phash_neardup_pairs(
     Never all-pairs: the join fans out per bucket, and with real
     near-dup-heavy media the band buckets are what you'd cap (the
     audited simhash/minhash skew-cap pattern). The hash input is
-    materialized first (dedup.materialize ``checkpoint`` knob) so the
+    materialized first (:func:`dedup.materialize`) so the
     self-join's two sides read one computed hash table instead of
     running the upstream decode/hash stage twice. Returns
     (id_a, id_b, hamming) for verified pairs."""
     from .dedup import materialize
 
-    hashed = materialize(hashed.select(id_col, hash_col), checkpoint)
+    hashed = materialize(hashed.select(id_col, hash_col))
     mask = (1 << band_bits) - 1
     b = hashed.select(
         F.col(id_col).alias("__id"),

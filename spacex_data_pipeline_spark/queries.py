@@ -4028,23 +4028,18 @@ def token_mass_models_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (corpus_token_budget, mixture reports, packing) convertible to
     LLM-tokenizer units per source (VERDICT r6 missing #3): sources
     differ in punctuation/digit density, so ONE global factor is wrong —
-    this measures it per source. All three counters come from
-    operators/text.resolve_token_counter, the same pluggable surface
-    pack_token_bins and length_bucketed_batches now accept (a real
-    tokenizer plugs in as a Column->Column counter without touching
-    any consumer). One scan, three narrow map columns, one
+    this measures it per source. The three counters are
+    operators/text's token_count, bpe_token_count and
+    char_ratio_counter(4.0). One scan, three narrow map columns, one
     |sources|-key shuffle."""
-    from .operators.text import resolve_token_counter
+    from .operators.text import bpe_token_count, char_ratio_counter, token_count
 
-    ws = resolve_token_counter("whitespace")
-    bpe = resolve_token_counter("bpe")
-    ce = resolve_token_counter(4.0)
     t = F.col("text")
     per = _t(spark, sf_dir, "documents").select(
         "source",
-        ws(t).cast("long").alias("ws"),
-        bpe(t).cast("long").alias("bpe"),
-        ce(t).cast("long").alias("ce"),
+        token_count(t).cast("long").alias("ws"),
+        bpe_token_count(t).cast("long").alias("bpe"),
+        char_ratio_counter(4.0)(t).cast("long").alias("ce"),
     )
     return (
         per.groupBy("source")
@@ -8008,10 +8003,9 @@ def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     across reducers as map-side partial sums, never a single-task sort).
     The edge list is built once (degree join included) and checkpointed
     (materialize), so the three iterations reuse it instead of
-    recomputing the tokenize+distinct lineage; a production run swaps
-    checkpoint='reliable'. Iterations are data-independent in count —
-    the driver-facing entry pins 3 for the oracle; convergence looping
-    just extends the same plan."""
+    recomputing the tokenize+distinct lineage. Iterations are
+    data-independent in count — the registry entry pins 3 for the
+    oracle; convergence looping just extends the same plan."""
     from .functions.hashing import normalize_text
     from .operators.dedup import materialize
     from .operators.text import STOPWORDS

@@ -930,96 +930,6 @@ def test_contrastive_two_level_negatives_equal_direct_rank(spark, sf_oracle):
     assert got == want
 
 
-def test_materialize_strategies_agree(spark, sf_oracle, tmp_path):
-    """VERDICT r6 #4: the materialization strategy is a caller knob, not
-    prose. The reliable path (checkpoint dir under tmp_path — the
-    single-JVM stand-in for HDFS/object store) and the lineage-keeping
-    persist path must produce byte-identical pairs and components to the
-    default localCheckpoint path; 'reliable' without a configured
-    checkpoint dir must fail loudly, not silently fall back."""
-    from spacex_data_pipeline_spark.operators.dedup import (
-        connected_components,
-        materialize,
-        ngram_jaccard_pairs,
-    )
-
-    docs = catalog.table(spark, sf_oracle, "documents").limit(120)
-
-    def run(mode):
-        pairs = ngram_jaccard_pairs(docs, k=3, threshold=0.6, checkpoint=mode)
-        comp = connected_components(
-            docs.select("doc_id"), pairs, checkpoint=mode
-        )
-        return (
-            {(r.doc_a, r.doc_b, round(r.jaccard, 9)) for r in pairs.collect()},
-            {(r.doc_id, r.component) for r in comp.collect()},
-        )
-
-    base = run("local")
-
-    had_dir = not spark.sparkContext._jsc.sc().checkpointDir().isEmpty()
-    if not had_dir:
-        with pytest.raises(ValueError, match="reliable"):
-            materialize(docs, "reliable")
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    assert run("reliable") == base
-    assert run("persist") == base
-    with pytest.raises(ValueError, match="checkpoint must be"):
-        materialize(docs, "lazy")
-
-
-def test_token_counter_pluggability(spark, docs):
-    """resolve_token_counter is one surface for every token-mass
-    consumer: 'bpe', a chars-per-token ratio and a Column->Column
-    callable flow through pack_token_bins/length_bucketed_batches
-    unchanged — each proven by recomputing the expected n_tokens
-    independently."""
-    from spacex_data_pipeline_spark.operators.text import (
-        bpe_token_count,
-        length_bucketed_batches,
-        pack_token_bins,
-        resolve_token_counter,
-    )
-
-    d = docs.limit(40).select("doc_id", "text")
-
-    want_bpe = {
-        r.doc_id: r.n
-        for r in d.select(
-            "doc_id", bpe_token_count(F.col("text")).alias("n")
-        ).collect()
-    }
-    got = {r.doc_id: r.n_tokens for r in pack_token_bins(d, counter="bpe").collect()}
-    assert got == want_bpe
-
-    # fixed-ratio model: ceil(chars/8)
-    want_ce = {
-        r.doc_id: -(-r.n // 8)
-        for r in d.select("doc_id", F.length("text").alias("n")).collect()
-    }
-    got = {
-        r.doc_id: r.n_tokens
-        for r in length_bucketed_batches(d, counter=8.0).collect()
-    }
-    assert got == want_ce
-
-    # a caller-supplied Column->Column counter (here: letter runs) is
-    # used as-is
-    import re as _re
-
-    def tok(col):
-        return F.size(F.regexp_extract_all(col, F.lit("[A-Za-z]+"), 0)).cast("int")
-
-    want_py = {
-        r.doc_id: len(_re.findall(r"[A-Za-z]+", r.text)) for r in d.collect()
-    }
-    got = {r.doc_id: r.n_tokens for r in pack_token_bins(d, counter=tok).collect()}
-    assert got == want_py
-
-    with pytest.raises(ValueError, match="counter must be"):
-        resolve_token_counter("subword")
-
-
 def test_bm25_two_level_rank_matches_direct(spark, sf_oracle):
     """The bucketed two-level top-k is EXACT: (score DESC, doc_id) is a
     total order, so the direct single-window rank — recomputed here from
@@ -1557,36 +1467,6 @@ def test_centroid_confusion_separable_clusters(spark):
     assert got == {(0, 0): 20, (1, 1): 20, (0, 1): 1}
 
 
-def test_blocked_fuzzy_join_two_tables(spark):
-    """Master-vs-feed linkage: each corrupted feed name links to its
-    master record (and only it); exact same-side duplicates in the feed
-    do NOT pair with each other (cross-table mode pairs a-side with
-    b-side only)."""
-    from spacex_data_pipeline_spark.operators.linkage import blocked_fuzzy_pairs
-
-    master = spark.createDataFrame(
-        [(1, "Jonathan Smith"), (2, "Gertrude Blanchard"), (3, "Ahmed Haddad")],
-        "k long, name string",
-    )
-    feed = spark.createDataFrame(
-        [
-            (101, "Jonathon Smith"),    # 1 sub of master 1
-            (102, "Gertrude Blanchard"),  # exact copy of master 2
-            (103, "Gertrude Blanchard"),  # duplicate feed row
-            (104, "Zelda Quux"),        # no master
-        ],
-        "fk long, fname string",
-    )
-    got = {
-        (r.a_key, r.b_key): r.dist
-        for r in blocked_fuzzy_pairs(
-            master, "k", "name",
-            right=feed, right_key_col="fk", right_name_col="fname",
-        ).collect()
-    }
-    assert got == {(1, 101): 1, (2, 102): 0, (2, 103): 0}
-
-
 def test_text_index_persist_serve_matches_bm25(spark, sf_oracle, tmp_path):
     """Index-once/serve-many: search_text_index over the persisted
     posting table returns bit-identical (rank, score) to the in-memory
@@ -1748,6 +1628,73 @@ def test_text_index_tombstones_equal_rebuild(spark, sf_oracle, tmp_path):
         for r in search_text_index(spark, live7_path, terms, k=10).collect()
     }
     assert readded == want7
+
+
+def test_text_index_compaction_failed_swap_leaves_whole_old_index(
+    spark, tmp_path, monkeypatch
+):
+    """compact_text_index swaps the whole index directory. When the second
+    rename fails, the old index is found whole — at the path, or at the
+    backup — with every file it had and the same served results, never
+    a mix of compacted and uncompacted tables. A retry then compacts and
+    leaves no staging directory behind."""
+    import os
+
+    from spacex_data_pipeline_spark.operators.text import (
+        compact_text_index,
+        persist_text_index,
+        search_text_index,
+        tombstone_text_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta tok{i} tok{i % 3}") for i in range(8)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "ix")
+    persist_text_index(docs, path, n_term_buckets=4)
+    tombstone_text_index(spark, path, [2, 5], n_term_buckets=4)
+
+    def files(p):
+        return sorted(
+            os.path.relpath(os.path.join(d, f), p)
+            for d, _, fs in os.walk(p)
+            for f in fs
+        )
+
+    def served(p):
+        return sorted(
+            tuple(r)
+            for r in search_text_index(
+                spark, p, ["alpha", "tok2"], k=10, n_term_buckets=4
+            ).collect()
+        )
+
+    before_files, before = files(path), served(path)
+    real_rename, calls = os.rename, []
+
+    def second_rename_fails(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("second rename failed")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", second_rename_fails)
+    with pytest.raises(OSError, match="second rename failed"):
+        compact_text_index(spark, path)
+    monkeypatch.undo()
+
+    whole = path if os.path.isdir(path) else path + ".__compact_old__"
+    assert files(whole) == before_files
+    assert "tombstones" in os.listdir(whole)
+    assert served(whole) == before
+
+    if whole != path:
+        real_rename(whole, path)
+    assert compact_text_index(spark, path) == 2
+    assert sorted(os.listdir(path)) == ["doclens", "postings", "stats"]
+    assert served(path) == before
+    assert sorted(os.listdir(tmp_path)) == ["ix"]
 
 
 def test_blocking_report_accounts_for_planted_corpus(spark):
@@ -2347,7 +2294,7 @@ def test_bm25_self_retrieval_mrr_planted(spark):
 
     uniq = [(i, f"tok{i}a tok{i}b tok{i}c") for i in range(6)]
     docs = spark.createDataFrame(uniq, "doc_id long, text string")
-    ranked = bm25_topk(docs, [0, 1, 2], k=10, checkpoint="none")
+    ranked = bm25_topk(docs, [0, 1, 2], k=10)
     selfr = {r.query_id: r.rank for r in ranked.collect() if r.doc_id == r.query_id}
     assert selfr == {0: 1, 1: 1, 2: 1}
 
@@ -2355,10 +2302,7 @@ def test_bm25_self_retrieval_mrr_planted(spark):
     # keeps 0 first (0 < 99), so self still ranks 1 — but 99 now occupies
     # rank 2 of query 0's list
     dup = docs.union(spark.createDataFrame([(99, uniq[0][1])], "doc_id long, text string"))
-    r0 = {
-        r.rank: r.doc_id
-        for r in bm25_topk(dup, [0], k=10, checkpoint="none").collect()
-    }
+    r0 = {r.rank: r.doc_id for r in bm25_topk(dup, [0], k=10).collect()}
     assert r0[1] == 0 and r0[2] == 99
 
 

@@ -93,11 +93,15 @@ def test_prefix_filtered_shared_postings_equivalence(spark, sf_smoke):
     ) == _rows(jaccard_pairs_prefix_filtered(docs, k=3, threshold=0.8))
 
 
-def test_span_surgery_base_materialization_is_value_neutral(spark, sf_smoke):
-    """duplicate_span_docs' r14 token-table materialization (checkpoint
-    default) returns exactly the rows of the fully-lazy plan
-    (checkpoint='none' skips both the gram AND the base checkpoint)."""
+def test_span_surgery_base_materialization_is_value_neutral(
+    spark, sf_smoke, monkeypatch
+):
+    """duplicate_span_docs' r14 token-table materialization returns
+    exactly the rows of the fully-lazy plan (dedup.materialize patched to
+    the identity skips both the gram AND the base materialization)."""
+    from spacex_data_pipeline_spark.operators import dedup
+
     docs = catalog.table(spark, sf_smoke, "documents").limit(60)
-    assert _rows(duplicate_span_docs(docs, n=8)) == _rows(
-        duplicate_span_docs(docs, n=8, checkpoint="none")
-    )
+    got = _rows(duplicate_span_docs(docs, n=8))
+    monkeypatch.setattr(dedup, "materialize", lambda df: df)
+    assert got == _rows(duplicate_span_docs(docs, n=8))

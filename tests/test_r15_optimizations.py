@@ -58,28 +58,38 @@ def test_bm25_topk_shared_tf_equivalence(spark, sf_smoke):
     )
 
 
-def test_cc_persist_loop_matches_lazy_form(spark):
-    """connected_components' r15 one-job-per-round persist loop
-    (checkpoint='local' path) returns exactly the labels of the
-    unchanged two-job materialize path (checkpoint='persist') on a graph
-    with a diameter-3 chain, a near-clique, singletons, and
-    out-of-node-set edge endpoints."""
-    nodes = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    edges = spark.createDataFrame(
-        [
-            (1, 2), (2, 3), (3, 4),          # chain, diameter 3
-            (5, 6), (6, 7), (5, 7),          # near-clique
-            (8, 99),                         # endpoint outside node set
-        ],
-        "doc_a long, doc_b long",
-    )
+def test_cc_matches_union_find_reference(spark):
+    """connected_components labels every node with the minimum id of its
+    component in a pure-Python union-find over the same edges, on a graph
+    with a diameter-3 chain, a near-clique, singletons, and edges to an
+    endpoint outside the node set, which neither bridges two nodes nor
+    becomes a label."""
+    node_ids = range(10)
+    pairs = [
+        (1, 2), (2, 3), (3, 4),          # chain, diameter 3
+        (5, 6), (6, 7), (5, 7),          # near-clique
+        (8, 99), (99, 9),                # endpoint outside node set
+    ]
+    root = {n: n for n in node_ids}
+
+    def find(x):
+        while root[x] != x:
+            x = root[x]
+        return x
+
+    for a, b in pairs:
+        if a in root and b in root:
+            ra, rb = find(a), find(b)
+            root[max(ra, rb)] = min(ra, rb)
+    want = sorted((n, find(n)) for n in node_ids)
+
+    nodes = spark.createDataFrame([(n,) for n in node_ids], "doc_id long")
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     got = _rows(connected_components(nodes, edges))
-    want = _rows(connected_components(nodes, edges, checkpoint="persist"))
     assert got == want
-    comp = dict((r[0], r[1]) for r in got)
+    comp = dict(got)
     assert comp[4] == 1 and comp[7] == 5 and comp[0] == 0
-    # the outside endpoint neither bridges nor becomes a label
-    assert comp[8] == 8 and 99 not in comp
+    assert comp[8] == 8 and comp[9] == 9 and 99 not in comp
 
 
 def test_fanout_guard_never_fires_at_fixture_scale(spark, sf_smoke):
