@@ -317,16 +317,19 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
                     f"analytics.fct_spacex_launches_by_year "
                     f"<- {wh.path('analytics', 'fct_spacex_launches_by_year')}"
                 )
-                mart.show(100, truncate=False)
+                mart.orderBy("year").show(100, truncate=False)
         elif args.cmd == "query":
             from . import catalog
-            from .queries import REGISTRY
+            from .queries import REGISTRY, display_order
 
             if args.name not in REGISTRY:
                 print(f"unknown query {args.name!r}; try list-queries", file=sys.stderr)
                 return 2
             sf_dir = args.sf_dir or catalog.DEFAULT_SF_DIR
-            REGISTRY[args.name].fn(spark, sf_dir).show(args.limit, truncate=False)
+            q = REGISTRY[args.name]
+            display_order(q.fn(spark, sf_dir), q.order_by).show(
+                args.limit, truncate=False
+            )
         elif args.cmd == "cap-audit":
             from . import catalog
             from .operators.dedup import df_cap_loss_curve
@@ -341,7 +344,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
                 threshold=args.threshold,
                 caps=caps,
             )
-            curve.show(len(caps), truncate=False)
+            curve.orderBy("cap").show(len(caps), truncate=False)
         elif args.cmd == "prep-training":
             from pyspark.sql import functions as F
 

@@ -716,7 +716,6 @@ def df_cap_loss_curve(
             lost.alias("lost_pairs"),
             pct_rate(lost, F.count(F.lit(1))).alias("lost_pct"),
         )
-        .orderBy("cap")
     )
 
 
@@ -1044,15 +1043,14 @@ def simhash_near_pairs(
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
-    id_col: str = "doc_id",
-    left: str = "doc_a",
-    right: str = "doc_b",
     max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph → canonical dedup
-    groups: every node gets ``component`` = the minimum id reachable from
-    it. This is the step that turns pairwise candidates (MinHash/SimHash/
-    Jaccard output) into keep-one-per-group decisions in a real pipeline.
+    groups: every node (``nodes.doc_id``) gets ``component`` = the minimum
+    id reachable from it over the pairs (``edges.doc_a``, ``edges.doc_b``);
+    the output is (doc_id, component). This is the step that turns
+    pairwise candidates (MinHash/SimHash/Jaccard output) into
+    keep-one-per-group decisions in a real pipeline.
 
     Iterative min-label propagation: each round joins labels across the
     (symmetrized) edge list and takes the per-node min — the classic
@@ -1076,10 +1074,10 @@ def connected_components(
     # n-gram shingle join that produced the edges) — measured 6.3s → 2.4s
     # at sf0.1, and at 100 TB the difference is re-running dedup candidate
     # generation diameter-many times.
-    node_ids = nodes.select(F.col(id_col).alias("node"))
+    node_ids = nodes.select(F.col("doc_id").alias("node"))
     sym = (
-        edges.select(F.col(left).alias("src"), F.col(right).alias("dst"))
-        .union(edges.select(F.col(right).alias("src"), F.col(left).alias("dst")))
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     )
     sym = materialize(sym)
     # Iterate ONLY over nodes that touch an edge: a node with no edge is
@@ -1145,10 +1143,9 @@ def connected_components(
     # against the tiny converged label set — broadcastable by AQE — with
     # component defaulting to the node's own id.
     return (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(labels, "node", "left")
+        node_ids.join(labels, "node", "left")
         .select(
-            F.col("node").alias(id_col),
+            F.col("node").alias("doc_id"),
             F.coalesce(F.col("label"), F.col("node")).alias("component"),
         )
     )

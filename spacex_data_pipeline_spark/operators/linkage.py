@@ -178,4 +178,4 @@ def fuzzy_match_stats(pairs: DataFrame) -> DataFrame:
     n_ents = ents.groupBy("dist").agg(
         F.count_distinct(F.col("k")).alias("n_entities")
     )
-    return n_pairs.join(n_ents, "dist").orderBy("dist")
+    return n_pairs.join(n_ents, "dist")

@@ -8,7 +8,15 @@ SURVEY.md §2.3):
     sum(case when success then 1 else 0) -> conditional sum; NULL -> else
     sum(case when success then 0 else 1) -> NULL success counts as FAILURE
     round(100.0*s/nullif(count,0), 2)    -> pct_rate (div-by-zero -> NULL)
-    order by 1                           -> orderBy
+    order by 1                           -> at the reader (see below)
+
+The mart stores no row order. ``order by 1`` in a dbt model only orders
+the SELECT that fills the table; neither Postgres nor parquet keeps that
+order for a later reader. Here a global sort would also run its whole
+child a second time to sample range bounds and add a shuffle, on every
+build. So the order moves to whoever shows rows: the CLI's ``build``
+prints the mart ``orderBy("year")``, and ``fct_orders_by_year`` carries
+``order_by=("year",)`` in the query registry.
 
 The null-as-failure CASE semantics are the reference's one genuine semantic
 quirk (README.md:140) and are locked by golden tests.
@@ -44,16 +52,14 @@ def by_period_conditional_rollup(
     period_alias: str = "year",
 ) -> DataFrame:
     """Generic fct_*_by_year: yearly conditional counts + null-safe rate."""
-    out = (
+    return (
         fact.groupBy(F.year(F.col(ts_col)).cast("int").alias(period_alias))
         .agg(*conditional_counts(success))
         .withColumn(
             "success_rate_pct",
             pct_rate(F.col("successes"), F.col("launches")),
         )
-        .orderBy(period_alias)
     )
-    return out
 
 
 def fct_spacex_launches_by_year(stg: DataFrame) -> DataFrame:
@@ -63,5 +69,4 @@ def fct_spacex_launches_by_year(stg: DataFrame) -> DataFrame:
         stg.groupBy("year")
         .agg(*conditional_counts(F.col("success")))
         .withColumn("success_rate_pct", pct_rate(F.col("successes"), F.col("launches")))
-        .orderBy("year")
     )

@@ -1061,7 +1061,6 @@ def nearest_centroid_confusion(
         best.select("label", F.col("__b.clabel").alias("pred"))
         .groupBy("label", "pred")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("label", "pred")
     )
 
 
@@ -1157,7 +1156,6 @@ def label_compactness(
             ).alias("avg_cos"),
             F.min(F.when(ok, F.col("cos"))).alias("min_cos"),
         )
-        .orderBy("label")
     )
 
 
@@ -1212,7 +1210,6 @@ def gram_matrix_quantized(
         .mapInPandas(gen, schema="i int, j int, g long")
         .groupBy("i", "j")
         .agg(F.sum("g").alias("g"))
-        .orderBy("i", "j")
     )
 
 
@@ -1269,7 +1266,6 @@ def covariance_matrix_quantized(
                 / F.lit(float(scale))
             ).alias("cov"),
         )
-        .orderBy("i", "j")
     )
 
 
@@ -1320,7 +1316,7 @@ def power_iteration_from_cells(
             "pos",
             F.expr(f"CAST((u * {scale}) DIV m AS LONG)").alias("v"),
         )
-    return v.select("pos", F.col("v").alias("v_micro")).orderBy("pos")
+    return v.select("pos", F.col("v").alias("v_micro"))
 
 
 def deflate_gram_cells(

@@ -12,11 +12,20 @@ stable (order-insensitive value hash over columns sorted by name):
 - Integer-ish outputs are pinned: years → INT, counts/sums of ints → BIGINT
   (DuckDB SUM(int) is HUGEINT; the oracle casts it down).
 - LIMIT queries always order by a unique tiebreaker.
+- ORDER BY is display: ``order_by=``. A builder never ends in a global
+  sort; the entry names its display order as SQL sort specs in
+  ``register(..., order_by=("l_returnflag", "revenue DESC"))``, and only a
+  reader that shows rows applies it (``display_order``; the CLI's
+  ``query``). The oracle SQL keeps its ORDER BY, which the
+  order-insensitive hash ignores.
+- LIMIT queries keep their sort: there the order decides which rows come
+  out, and ``orderBy(...).limit(k)`` plans one TakeOrderedAndProject.
 """
 
 from __future__ import annotations
 
 import functools
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -33,17 +42,39 @@ class Query:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     tags: tuple[str, ...] = field(default=())
+    # Display order as SQL sort specs ("col", "col DESC"), applied only
+    # where rows are shown (display_order), never inside ``fn``.
+    order_by: tuple[str, ...] = field(default=())
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(
+    name: str,
+    oracle: str | None = None,
+    tags: tuple[str, ...] = (),
+    order_by: tuple[str, ...] = (),
+):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = Query(fn, oracle, tags)
+        REGISTRY[name] = Query(fn, oracle, tags, order_by)
         return fn
 
     return deco
+
+
+_SORT_SPEC = re.compile(r"\s*(?P<col>.+?)(?:\s+(?P<dir>ASC|DESC))?\s*", re.IGNORECASE)
+
+
+def display_order(df: DataFrame, specs: tuple[str, ...]) -> DataFrame:
+    """``df`` sorted by SQL sort specs ("col", "col DESC"), with SQL's
+    NULL placement (first under ASC, last under DESC); unsorted when
+    there are none."""
+    cols = []
+    for spec in specs:
+        m = _SORT_SPEC.fullmatch(spec)
+        cols.append(getattr(F.col(m["col"]), (m["dir"] or "asc").lower())())
+    return df.orderBy(*cols) if cols else df
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -327,6 +358,7 @@ def _doc_chain_depths(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY 1 ORDER BY 1
     """,
     tags=("reference", "mart", "A1-A6"),
+    order_by=("year",),
 )
 def fct_orders_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference mart (fct_spacex_launches_by_year.sql:3-11) transplanted
@@ -348,6 +380,7 @@ def fct_orders_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1 ORDER BY 1
     """,
     tags=("reference", "mart"),
+    order_by=("day",),
 )
 def fct_events_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same conditional-rate mart at daily grain over the events stream table
@@ -358,7 +391,6 @@ def fct_events_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.to_date("ts").alias("day"))
         .agg(*marts.conditional_counts(success))
         .withColumn("success_rate_pct", pct_rate(F.col("successes"), F.col("launches")))
-        .orderBy("day")
     )
 
 
@@ -444,6 +476,7 @@ def top_years_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_returnflag, l_linestatus
     """,
     tags=("agg", "filter", "tpch"),
+    order_by=("l_returnflag", "l_linestatus"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: filtered scan → 8-aggregate hash agg. The filter and
@@ -466,7 +499,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg("l_discount", "avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -525,6 +557,7 @@ def q3_unshipped_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, n_name
     """,
     tags=("join", "agg", "broadcast", "tpch"),
+    order_by=("revenue DESC", "n_name"),
 )
 def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: a 5-way star join. region/nation/customer are
@@ -559,7 +592,6 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("revenue")
         )
-        .orderBy(F.col("revenue").desc(), "n_name")
     )
 
 
@@ -1459,6 +1491,7 @@ def quality_percentile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY rk.q
     """,
     tags=("extension", "agg", "order-statistics"),
+    order_by=("q",),
 )
 def exact_order_statistics_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT global order statistics (min / quartiles / median / max as
@@ -1497,7 +1530,6 @@ def exact_order_statistics_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     return (
         rn.join(F.broadcast(rk), rn.rn == rk.rank_needed)
         .select("q", "rank_needed", "o_totalprice", "o_orderkey")
-        .orderBy("q")
     )
 
 
@@ -3520,6 +3552,7 @@ def data_quality_relationships(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tiled GROUP BY decile ORDER BY decile
     """,
     tags=("extension", "window", "agg"),
+    order_by=("decile",),
 )
 def customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile table of customer lifetime spend — the NTILE bucketing
@@ -3559,7 +3592,6 @@ def customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("spend").alias("max_spend"),
             (F.sum(dec("spend")).cast("double") / F.count(F.lit(1))).alias("avg_spend"),
         )
-        .orderBy("decile")
     )
 
 
@@ -3627,6 +3659,7 @@ def asof_join_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b GROUP BY bucket ORDER BY bucket
     """,
     tags=("agg", "histogram", "extension"),
+    order_by=("bucket",),
 )
 def histogram_order_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram of order value: width_bucket semantics (12
@@ -3652,7 +3685,6 @@ def histogram_order_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_totalprice").cast("double").alias("lo"),
             F.max("o_totalprice").cast("double").alias("hi"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -7140,6 +7172,7 @@ def er_fuzzy_pairs_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m GROUP BY m.d ORDER BY 1
     """,
     tags=("extension", "linkage"),
+    order_by=("dist",),
 )
 def er_fuzzy_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-edit-distance rollup of the fuzzy-match table (pair count +
@@ -7176,6 +7209,7 @@ def er_fuzzy_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY entity_id
     """,
     tags=("extension", "linkage", "iterative"),
+    order_by=("entity_id",),
 )
 def er_entity_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ER ladder's last rung: fuzzy match pairs → transitive closure
@@ -7204,7 +7238,6 @@ def er_entity_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         g.join(cust, g.entity_id == cust.c_custkey)
         .select("entity_id", "n_members", F.col("c_name").alias("rep_name"))
-        .orderBy("entity_id")
     )
 
 
@@ -7410,6 +7443,7 @@ def phrase_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM u GROUP BY 1 ORDER BY 1
     """,
     tags=("relational", "unpivot"),
+    order_by=("measure",),
 )
 def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long reshape via the native ``unpivot`` (melt) operator —
@@ -7430,7 +7464,6 @@ def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("val", "total"),
             F.max("val").cast("double").alias("max_val"),
         )
-        .orderBy("measure")
     )
 
 
@@ -7454,6 +7487,7 @@ def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b WHERE rk = 1 GROUP BY 1, 2 ORDER BY 1, 2
     """,
     tags=("extension", "similarity", "eval"),
+    order_by=("label", "pred"),
 )
 def centroid_confusion_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label nearest-centroid confusion matrix over the embedding
@@ -7483,6 +7517,7 @@ def centroid_confusion_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame
     ORDER BY 1
     """,
     tags=("extension", "analytics"),
+    order_by=("day",),
 )
 def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily active users vs trailing-7-day actives with the DAU/WAU
@@ -7514,7 +7549,6 @@ def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wau",
             pct_rate(F.col("dau"), F.col("wau")).alias("stickiness_pct"),
         )
-        .orderBy("day")
     )
 
 
@@ -7542,6 +7576,7 @@ def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 2
     """,
     tags=("extension", "dedup", "report"),
+    order_by=("source_a", "source_b"),
 )
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source content-overlap matrix: for every source pair, the
@@ -7589,7 +7624,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("shared_shingles"), F.least(F.col("n_a"), F.col("n_b"))
             ).alias("containment_pct"),
         )
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -7751,6 +7785,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cs GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "similarity", "eval"),
+    order_by=("label",),
 )
 def embedding_label_compactness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label class tightness: each vector's cosine to its own label
@@ -7777,6 +7812,7 @@ def embedding_label_compactness(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g ORDER BY i, j
     """,
     tags=("extension", "similarity", "linear-algebra"),
+    order_by=("i", "j"),
 )
 def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus Gram (second-moment) matrix over quantized embeddings —
@@ -7811,6 +7847,7 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY i, j
     """,
     tags=("extension", "similarity", "linear-algebra"),
+    order_by=("i", "j"),
 )
 def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact corpus covariance via the centering identity
@@ -8118,6 +8155,7 @@ def curriculum_order_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j GROUP BY 1, 2 ORDER BY 1, 2
     """,
     tags=("extension", "analytics"),
+    order_by=("cohort", "age"),
 )
 def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer-cohort lifetime-value matrix: customers grouped by
@@ -8141,7 +8179,6 @@ def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             dsum("o_totalprice", "revenue"),
         )
-        .orderBy("cohort", "age")
     )
 
 
@@ -8269,6 +8306,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderpriority
     """,
     tags=("tpch", "semi-join", "agg"),
+    order_by=("o_orderpriority",),
 )
 def q4_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (order-priority checking). The fixture lacks
@@ -8291,7 +8329,6 @@ def q4_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -8315,6 +8352,7 @@ def q4_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 2, 3
     """,
     tags=("tpch", "join", "broadcast", "agg"),
+    order_by=("supp_nation", "cust_nation", "ship_year"),
 )
 def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape (volume shipping): revenue between every ordered
@@ -8356,7 +8394,6 @@ def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("volume")
         )
-        .orderBy("supp_nation", "cust_nation", "ship_year")
     )
 
 
@@ -8376,6 +8413,7 @@ def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 2 DESC
     """,
     tags=("tpch", "join", "broadcast", "agg"),
+    order_by=("supp_nation", "order_year DESC"),
 )
 def q9_product_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (product-type profit). The fixture has no partsupp,
@@ -8404,7 +8442,6 @@ def q9_product_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", F.year("o_orderdate").cast("int").alias("order_year")
         )
         .agg(F.sum(margin).cast("decimal(38,4)").cast("double").alias("margin"))
-        .orderBy(F.col("supp_nation"), F.col("order_year").desc())
     )
 
 
@@ -8621,6 +8658,7 @@ def q19_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1
     """,
     tags=("tpch", "join", "broadcast", "conditional-agg"),
+    order_by=("order_year",),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape (national market share): the share of one supplier
@@ -8670,7 +8708,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(nation_vol).cast("double").alias("nation_volume"),
             F.sum(vol).cast("double").alias("total_volume"),
         )
-        .orderBy("order_year")
     )
 
 
@@ -8686,6 +8723,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custdist DESC, c_count DESC
     """,
     tags=("tpch", "outer-join", "agg"),
+    order_by=("custdist DESC", "c_count DESC"),
 )
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 (customer distribution): how many customers placed
@@ -8712,7 +8750,6 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.coalesce(F.col("__cnt"), F.lit(0)).cast("bigint").alias("c_count"))
         .groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
     )
 
 
@@ -8732,6 +8769,7 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY s_suppkey
     """,
     tags=("tpch", "scalar-subquery", "agg"),
+    order_by=("s_suppkey",),
 )
 def q15_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 (top supplier): supplier(s) with the maximum revenue
@@ -8759,7 +8797,6 @@ def q15_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "s_suppkey", "s_name", F.col("__rev").cast("double").alias("total_revenue")
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -8839,6 +8876,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_name
     """,
     tags=("tpch", "anti-join", "scalar-subquery", "agg"),
+    order_by=("n_name",),
 )
 def q22_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity): customers with
@@ -8880,7 +8918,6 @@ def q22_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("numcust"),
             F.sum(dec_money("c_acctbal")).cast("double").alias("totacctbal"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -8897,6 +8934,7 @@ def q22_dormant_high_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("tpch", "join", "conditional-agg"),
+    order_by=("ship_class",),
 )
 def q12_late_lines_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (shipping modes and order priority): for each
@@ -8929,7 +8967,6 @@ def q12_late_lines_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(hi, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(hi, 0).otherwise(1)).alias("low_line_count"),
         )
-        .orderBy("ship_class")
     )
 
 
@@ -8948,6 +8985,7 @@ def q12_late_lines_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
     tags=("tpch", "distinct", "anti-join", "agg"),
+    order_by=("supplier_cnt DESC", "p_brand", "p_type", "p_size"),
 )
 def q16_supplier_relationship_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape (parts/supplier relationship): how many distinct
@@ -8986,7 +9024,6 @@ def q16_supplier_relationship_count(spark: SparkSession, sf_dir: str) -> DataFra
         .join(F.broadcast(bad_supp), pairs.l_suppkey == bad_supp.s_suppkey, "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -9174,6 +9211,7 @@ def semantic_decontaminate_embeddings(spark: SparkSession, sf_dir: str) -> DataF
     ORDER BY a.cell
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "similarity", "text", "curation"),
+    order_by=("cell",),
 )
 def cluster_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-semantic-cluster quality profile: IVF cell assignment (the
@@ -9210,7 +9248,6 @@ def cluster_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_quality"),
             F.count_distinct(F.col("lang")).alias("n_langs"),
         )
-        .orderBy("cell")
     )
 
 
@@ -9230,6 +9267,7 @@ def cluster_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 2
     """,
     tags=("extension", "join", "range-join"),
+    order_by=("event_type", "day"),
 )
 def range_join_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-interval RANGE JOIN via time binning
@@ -9270,7 +9308,6 @@ def range_join_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.count_distinct(F.col("user_id")).alias("n_users"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -9286,6 +9323,7 @@ def range_join_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "incremental", "mart"),
+    order_by=("year",),
 )
 def incremental_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialization of the reference mart: orders split
@@ -9332,7 +9370,7 @@ def incremental_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "success_rate_pct", pct_rate(F.col("successes"), F.col("launches"))
     ).select(
         "year", "launches", "successes", "failures", "success_rate_pct"
-    ).orderBy("year")
+    )
 
 
 @register(
@@ -9356,6 +9394,7 @@ def incremental_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f GROUP BY source ORDER BY source
     """,
     tags=("extension", "text", "redaction", "report"),
+    order_by=("source",),
 )
 def pii_rates_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source PII exposure report — the which-crawls-leak table read
@@ -9389,7 +9428,6 @@ def pii_rates_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)),
             ).alias("pct_any_pii"),
         )
-        .orderBy("source")
     )
 
 
@@ -9415,6 +9453,7 @@ def pii_rates_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY col
     """,
     tags=("extension", "profiling", "report"),
+    order_by=("col",),
 )
 def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-profiling report (the dbt-docs / data-catalog table): per
@@ -9449,7 +9488,6 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_null",
             F.col("n_distinct").cast("bigint").alias("n_distinct"),
         )
-        .orderBy("col")
     )
 
 
@@ -9507,6 +9545,7 @@ def decontaminate_bloom_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY day
     """,
     tags=("extension", "agg", "approx", "sketch"),
+    order_by=("day",),
 )
 def hll_mergeable_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE distinct sketches (Apache DataSketches HLL via
@@ -9549,7 +9588,7 @@ def hll_mergeable_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.lit(0.05) * F.col("exact_users")
         ).alias("est_ok"),
     )
-    return day_rows.unionByName(all_row).orderBy("day")
+    return day_rows.unionByName(all_row)
 
 
 _CMS_D, _CMS_W = 3, 64  # depth (hash rows) × width (buckets per row)
@@ -9588,6 +9627,7 @@ _CMS_D, _CMS_W = 3, 64  # depth (hash rows) × width (buckets per row)
     ORDER BY user_id
     """,
     tags=("extension", "agg", "approx", "sketch"),
+    order_by=("user_id",),
 )
 def cms_mergeable_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE count-min frequency sketches (Cormode-Muthukrishnan),
@@ -9645,7 +9685,7 @@ def cms_mergeable_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cms_est",
         (F.col("cms_est") - F.col("exact_n")).alias("overcount"),
         (F.col("cms_est") >= F.col("exact_n")).alias("est_ok"),
-    ).orderBy("user_id")
+    )
 
 
 _QSK_WIDTH = 1000.0  # totalprice bin width; domain [1000, 500000) → ≤500 bins
@@ -9683,6 +9723,7 @@ _QSK_WIDTH = 1000.0  # totalprice bin width; domain [1000, 500000) → ≤500 bi
     ORDER BY q
     """,
     tags=("extension", "agg", "approx", "sketch"),
+    order_by=("q",),
 )
 def quantile_sketch_store_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE quantile sketches as per-day fixed-bin histograms: each
@@ -9734,7 +9775,6 @@ def quantile_sketch_store_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("bin") + 1) * F.lit(_QSK_WIDTH)).alias("est_hi"),
             "bin_n",
         )
-        .orderBy("q")
     )
 
 
@@ -9787,6 +9827,7 @@ def dedup_jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame
     ORDER BY o_orderkey
     """,
     tags=("extension", "window", "scan"),
+    order_by=("o_orderkey",),
 )
 def orders_global_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order GLOBAL running revenue/count in (orderdate, orderkey)
@@ -9818,7 +9859,7 @@ def orders_global_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "running_n",
         F.col("__run_v").cast("double").alias("running_revenue"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @register(
@@ -9838,6 +9879,7 @@ def orders_global_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id, bucket
     """,
     tags=("extension", "text", "features", "ml-prep"),
+    order_by=("doc_id", "bucket"),
 )
 def feature_hash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick (signed) bag-of-words features, 32 buckets — the
@@ -9853,7 +9895,7 @@ def feature_hash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return hashed_features(
         _t(spark, sf_dir, "documents"), dims=32, signed=True
-    ).orderBy("doc_id", "bucket")
+    )
 
 
 @register(
@@ -9888,6 +9930,7 @@ def feature_hash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sc GROUP BY 1, 2 ORDER BY 1, 2
     """,
     tags=("extension", "text", "features", "ml-prep", "classifier"),
+    order_by=("actual_en", "pred_en"),
 )
 def hashed_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality/language filtering, integer-exact end to end: a
@@ -9951,7 +9994,6 @@ def hashed_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("score").cast("long").alias("sum_score"),
         )
-        .orderBy("actual_en", "pred_en")
     )
 
 
@@ -9981,6 +10023,7 @@ def hashed_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2 ORDER BY tf.doc_id
     """,
     tags=("extension", "text", "features", "ml-prep", "sampling"),
+    order_by=("doc_id",),
 )
 def dsir_importance_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-shaped data selection (Xie et al. 2023, "Data Selection for
@@ -10024,7 +10067,6 @@ def dsir_importance_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         tf.join(F.broadcast(wt), "bucket")
         .groupBy("doc_id", "source")
         .agg(F.sum(F.col("w") * F.col("w_b")).cast("long").alias("importance"))
-        .orderBy("doc_id")
     )
 
 
@@ -10045,6 +10087,7 @@ def dsir_importance_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "dedup", "iterative", "ml-prep", "split"),
+    order_by=("fold",),
 )
 def group_kfold_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware K-fold assignment (sklearn GroupKFold at corpus
@@ -10076,7 +10119,6 @@ def group_kfold_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_chars").cast("long").alias("chars_total"),
         )
-        .orderBy("fold")
     )
 
 
@@ -10093,6 +10135,7 @@ def group_kfold_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "join", "semi", "bloom", "scale"),
+    order_by=("l_returnflag",),
 )
 def bloom_semi_lineitem_high_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-returnflag item count + gross revenue of lineitems belonging to
@@ -10119,7 +10162,6 @@ def bloom_semi_lineitem_high_value(spark: SparkSession, sf_dir: str) -> DataFram
             F.count(F.lit(1)).cast("long").alias("n_items"),
             F.sum(dec_money("l_extendedprice")).cast("double").alias("gross_revenue"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -10147,6 +10189,7 @@ def bloom_semi_lineitem_high_value(spark: SparkSession, sf_dir: str) -> DataFram
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "agg", "percentile", "robust-stats", "quality"),
+    order_by=("o_orderpriority",),
 )
 def mad_outliers_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection per order priority: median absolute
@@ -10193,7 +10236,7 @@ def mad_outliers_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mad",
         "n_outliers",
         pct_rate(F.col("n_outliers"), F.col("n_orders")).alias("outlier_pct"),
-    ).orderBy("o_orderpriority")
+    )
 
 
 @register(
@@ -10407,6 +10450,7 @@ def join_size_forecast_orders_lineitem(spark: SparkSession, sf_dir: str) -> Data
     FROM g ORDER BY decile
     """,
     tags=("extension", "agg", "window", "analytics", "order-statistics"),
+    order_by=("decile",),
 )
 def lorenz_curve_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lorenz curve companion to gini_customer_spend: customers sorted
@@ -10454,7 +10498,7 @@ def lorenz_curve_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             (100 * F.sum("decile_cents").over(w)).cast("double") / F.col("tot")
         ).alias("cum_share_pct"),
-    ).orderBy("decile")
+    )
 
 
 @register(
@@ -10480,6 +10524,7 @@ def lorenz_curve_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base LEFT JOIN nt USING (decile) ORDER BY base.decile
     """,
     tags=("extension", "text", "analytics", "tokenizer"),
+    order_by=("decile",),
 )
 def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps-law vocabulary growth: the corpus in doc_id-rank deciles,
@@ -10524,7 +10569,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         "new_terms",
         F.sum("new_terms").over(w).cast("long").alias("vocab_size"),
-    ).orderBy("decile")
+    )
 
 
 @register(
@@ -10572,6 +10617,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sc GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "text", "features", "ml-prep", "pipeline", "report"),
+    order_by=("source",),
 )
 def model_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production shape of model-based curation: extract hashed
@@ -10607,7 +10653,6 @@ def model_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("selected_tokens"),
         )
-        .orderBy("source")
     )
 
 
@@ -11167,6 +11212,7 @@ def _drift_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t ORDER BY bucket
     """,
     tags=("extension", "agg", "quality", "drift", "report"),
+    order_by=("bucket",),
 )
 def distribution_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket distribution drift between the early (<1998) and late
@@ -11191,7 +11237,6 @@ def distribution_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("abs_diff_scaled"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -11448,6 +11493,7 @@ def ks_drift_order_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM a GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "asof", "analytics", "sessionize"),
+    order_by=("attributed_type",),
 )
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch marketing attribution: every purchase credits the most
@@ -11507,7 +11553,6 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(1000000.0)
             ).alias("mean_latency_sec"),
         )
-        .orderBy("attributed_type")
     )
 
 
@@ -11531,6 +11576,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM h GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "agg", "quality", "audit"),
+    order_by=("o_year",),
 )
 def snapshot_fingerprint_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-independent per-partition table fingerprint — the cheap
@@ -11575,7 +11621,6 @@ def snapshot_fingerprint_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sum_fingerprint"),
         )
-        .orderBy("o_year")
     )
 
 
@@ -11694,6 +11739,7 @@ def experiment_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "join", "range", "sessionize", "analytics"),
+    order_by=("incident_start",),
 )
 def session_incident_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incident blast-radius report: for every above-average-error hour
@@ -11747,7 +11793,6 @@ def session_incident_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_sessions"),
             F.countDistinct("user_id").cast("long").alias("n_users"),
         )
-        .orderBy("incident_start")
     )
 
 
@@ -11777,6 +11822,7 @@ def session_incident_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 3
     """,
     tags=("tpch", "correlated-subquery", "join"),
+    order_by=("p_partkey", "s_suppkey"),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2's SHAPE, adapted partsupp-free (the test schema carries
@@ -11831,7 +11877,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             F.col("__mp").cast("double").alias("min_price"),
         )
-        .orderBy("p_partkey", "s_suppkey")
     )
 
 
@@ -11857,6 +11902,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1
     """,
     tags=("tpch", "agg", "having", "scalar-subquery"),
+    order_by=("p_partkey",),
 )
 def q11_important_part_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11's SHAPE, adapted partsupp-free (no availqty/supplycost
@@ -11907,7 +11953,6 @@ def q11_important_part_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "share"
             ),
         )
-        .orderBy("p_partkey")
     )
 
 
@@ -11935,6 +11980,7 @@ def q11_important_part_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2 ORDER BY 1
     """,
     tags=("tpch", "exists", "agg"),
+    order_by=("s_suppkey",),
 )
 def q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20's SHAPE, adapted partsupp-free (no availqty — 'excess
@@ -11980,7 +12026,6 @@ def q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_excess_parts"),
             F.sum("qty").cast("long").alias("excess_qty"),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -12007,6 +12052,7 @@ def q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per, bounds ORDER BY 1
     """,
     tags=("extension", "agg", "quality", "report"),
+    order_by=("event_type",),
 )
 def partition_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-completeness report — the catchup/backfill planner's input
@@ -12045,7 +12091,6 @@ def partition_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "first_seen",
             "last_seen",
         )
-        .orderBy("event_type")
     )
 
 
@@ -12079,6 +12124,7 @@ def partition_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j ORDER BY digit
     """,
     tags=("extension", "agg", "quality", "audit"),
+    order_by=("digit",),
 )
 def benford_first_digit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit screen over order totals — the classic
@@ -12131,7 +12177,7 @@ def benford_first_digit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "observed",
         "expected",
         (dev * dev / F.col("expected")).alias("chi2_term"),
-    ).orderBy("digit")
+    )
 
 
 @register(
@@ -12171,6 +12217,7 @@ def benford_first_digit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w, t, t1 ORDER BY 1
     """,
     tags=("extension", "agg", "analytics", "experiment", "funnel"),
+    order_by=("stage",),
 )
 def ab_funnel_stage_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-stage A/B read-out across the view/click/purchase funnel:
@@ -12225,7 +12272,7 @@ def ab_funnel_stage_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         r0.alias("rate_control"),
         r1.alias("rate_treat"),
         ((r1 - r0) / F.nullif(se, F.lit(0.0))).alias("z_score"),
-    ).orderBy("stage")
+    )
 
 
 _SESSION_SEQ_SQL = """
@@ -12281,6 +12328,7 @@ _SESSION_SEQ_SQL = """
     ORDER BY pattern
     """,
     tags=("extension", "sessionize", "analytics", "text"),
+    order_by=("pattern",),
 )
 def session_pattern_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP-lite behavioral pattern census over assembled session
@@ -12327,7 +12375,6 @@ def session_pattern_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pct_of_sessions"
             ),
         )
-        .orderBy("pattern")
     )
 
 
@@ -12384,6 +12431,7 @@ _Z16_SQL = " + ".join(
     ORDER BY layout
     """.replace("__Z16__", _Z16_SQL),
     tags=("extension", "layout", "report", "scale"),
+    order_by=("layout",),
 )
 def zorder_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Layout advisor for data-skipping — quantifies, per candidate
@@ -12500,7 +12548,6 @@ def zorder_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_files") * (F.col("__shi") - F.col("__slo") + 1),
             ).alias("suppkey_scan_pct"),
         )
-        .orderBy("layout")
     )
 
 
@@ -12522,6 +12569,7 @@ def zorder_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY price_cents, p_size, p_partkey
     """,
     tags=("extension", "relational", "skyline"),
+    order_by=("price_cents", "p_size", "p_partkey"),
 )
 def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SKYLINE / Pareto-frontier preference query — the parts no other
@@ -12551,7 +12599,7 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return skyline_2d(p, "price_cents", "p_size").select(
         "p_partkey", "p_name", "price_cents", "p_size"
-    ).orderBy("price_cents", "p_size", "p_partkey")
+    )
 
 
 @register(
@@ -12576,6 +12624,7 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "agg", "timeseries", "analytics"),
+    order_by=("event_type",),
 )
 def time_weighted_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average (the TimescaleDB ``time_weight`` staple,
@@ -12622,7 +12671,7 @@ def time_weighted_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("__vsum").cast("double") / F.col("n_intervals")).alias(
             "simple_avg"
         ),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -12745,6 +12794,7 @@ def autocorr_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY id_a, id_b
     """,
     tags=("extension", "multimodal", "dedup", "lsh", "pandas-udf"),
+    order_by=("id_a", "id_b"),
 )
 def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-duplicate detection over media payloads —
@@ -12774,9 +12824,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = documents_as_media(_t(spark, sf_dir, "documents"))
     hashed = dhash56_profile(media)
-    return phash_neardup_pairs(hashed, max_hamming=4).orderBy(
-        "id_a", "id_b"
-    )
+    return phash_neardup_pairs(hashed, max_hamming=4)
 
 
 @register(
@@ -12795,6 +12843,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t GROUP BY 1, 2 ORDER BY 1, 2
     """,
     tags=("extension", "agg", "timeseries", "analytics"),
+    order_by=("event_type", "day"),
 )
 def ohlc_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLC bars per event type — the canonical downsampling of a
@@ -12827,7 +12876,6 @@ def ohlc_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("__val", "__k").cast("double").alias("close"),
             F.count(F.lit(1)).cast("long").alias("n_events"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -12934,6 +12982,7 @@ def resample_user_daily_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1
     """,
     tags=("extension", "dedup", "report", "tuning"),
+    order_by=("threshold_x10",),
 )
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold-sensitivity sweep for near-dup dedup — the tuning table
@@ -12976,7 +13025,6 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_removed_keep_smallest"),
         )
-        .orderBy("threshold_x10")
     )
 
 
@@ -12998,6 +13046,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w ORDER BY day
     """,
     tags=("extension", "timeseries", "window", "stats"),
+    order_by=("day",),
 )
 def rolling_median_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7-day rolling median of the daily event count — the robust
@@ -13022,7 +13071,7 @@ def rolling_median_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = F.element_at(
         win, ((F.size(win) + 1) / 2).cast("int")
     ).cast("long")
-    return d.select("day", "n_events", med.alias("median_7d")).orderBy("day")
+    return d.select("day", "n_events", med.alias("median_7d"))
 
 
 @register(
@@ -13040,6 +13089,7 @@ def rolling_median_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "agg", "bitmap", "scale"),
+    order_by=("day",),
 )
 def bitmap_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT daily distinct users via bitmap aggregation — the third
@@ -13084,7 +13134,6 @@ def bitmap_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.sum("__n").cast("long").alias("n_events"),
         )
-        .orderBy("day")
     )
 
 
@@ -13114,6 +13163,7 @@ def bitmap_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM l GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "quality", "streaming", "report"),
+    order_by=("event_type",),
 )
 def event_disorder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time disorder audit — the table that SETS the streaming
@@ -13156,7 +13206,6 @@ def event_disorder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.max("__late_s").cast("long").alias("max_lateness_seconds"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -13191,6 +13240,7 @@ def event_disorder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY p.doc_id
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "text", "training-prep", "stats"),
+    order_by=("doc_id",),
 )
 def quantile_normalize_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source quantile NORMALIZATION of the quality score — the
@@ -13248,7 +13298,6 @@ def quantile_normalize_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_pct",
             F.col("__pooled_q").alias("calibrated_quality"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -13312,6 +13361,7 @@ def _ivf_nprobe_sweep_oracle(query_ids=(0, 1, 2, 3, 4), k=10, n_centroids=16) ->
     "ivf_nprobe_recall_sweep",
     oracle=_ivf_nprobe_sweep_oracle(),
     tags=("extension", "similarity", "report", "tuning"),
+    order_by=("n_probe",),
 )
 def ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FAISS tuning curve as a table — recall@10 at n_probe ∈
@@ -13377,7 +13427,6 @@ def ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hits",
             (F.col("hits").cast("double") / F.lit(denom)).alias("recall_at_10"),
         )
-        .orderBy("n_probe")
     )
 
 
@@ -13466,6 +13515,7 @@ def _sorted_footer_cells(spark: SparkSession, sf_dir: str) -> list[tuple]:
     FROM g, bounds ORDER BY bucket_id
     """,
     tags=("extension", "layout", "storage", "report"),
+    order_by=("bucket_id",),
 )
 def sorted_layout_footer_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The storage layer's claim, read back off DISK (VERDICT r8 #7):
@@ -13514,7 +13564,6 @@ def sorted_layout_footer_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 width, (F.datediff("__hi", "__lo") + 1).cast("long")
             ).alias("span_pct"),
         )
-        .orderBy("bucket_id")
     )
 
 
@@ -13550,6 +13599,7 @@ def sorted_layout_footer_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hit GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "experiment", "order-statistics"),
+    order_by=("q_pct",),
 )
 def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile treatment effects — the DISTRIBUTIONAL reading the
@@ -13632,7 +13682,6 @@ def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
             c1.alias("spend_treat_cents"),
             (c1 - c0).alias("qte_cents"),
         )
-        .orderBy("q_pct")
     )
 
 
@@ -13670,6 +13719,7 @@ def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pairs GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "bitmap", "analytics", "scale"),
+    order_by=("lag",),
 )
 def bitmap_retention_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention at lags 1–7 computed ENTIRELY by bitmap SET ALGEBRA on
@@ -13755,7 +13805,6 @@ def bitmap_retention_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("retained").cast("long").alias("retained"),
             pct_rate(F.sum("retained"), F.sum("active")).alias("retention_pct"),
         )
-        .orderBy("lag")
     )
 
 
@@ -13796,6 +13845,7 @@ def bitmap_retention_lag_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "warehouse", "scd", "join"),
+    order_by=("pit_priority",),
 )
 def pit_join_lineitem_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POINT-IN-TIME join against the SCD2 dimension — the query side of
@@ -13880,7 +13930,6 @@ def pit_join_lineitem_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_lines"),
             F.sum("price").cast("double").alias("revenue"),
         )
-        .orderBy("pit_priority")
     )
 
 
@@ -13910,6 +13959,7 @@ def pit_join_lineitem_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY b.day
     """,
     tags=("extension", "bitmap", "analytics", "scale"),
+    order_by=("day",),
 )
 def bitmap_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-over-day growth accounting (the canonical active-base
@@ -13977,7 +14027,6 @@ def bitmap_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             (F.col("active") - F.coalesce("prev_active", z)).alias("net_change"),
         )
-        .orderBy("day")
     )
 
 
@@ -14015,6 +14064,7 @@ def bitmap_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hit GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "asof", "order-statistics", "analytics"),
+    order_by=("stage",),
 )
 def funnel_stage_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-STAGE funnel latency percentiles — the tail view the overall
@@ -14115,7 +14165,6 @@ def funnel_stage_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
             F.max(F.when(F.col("q") == 50, F.col("lat"))).alias("p50_s"),
             F.max(F.when(F.col("q") == 90, F.col("lat"))).alias("p90_s"),
         )
-        .orderBy("stage")
     )
 
 
@@ -14199,6 +14248,7 @@ def _pca_second_direction_micro(spark: SparkSession, sf_dir: str) -> list[int]:
     FROM v3 ORDER BY pos
     """,
     tags=("extension", "similarity", "linear-algebra", "iterative"),
+    order_by=("pos",),
 )
 def pca_top_direction_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal direction of the embedding corpus — the consumer
@@ -14217,7 +14267,7 @@ def pca_top_direction_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _pca_direction_micro(spark, sf_dir)
     return spark.createDataFrame(
         [(i, v) for i, v in enumerate(w)], "pos int, v_micro bigint"
-    ).orderBy("pos")
+    )
 
 
 @register(
@@ -14322,6 +14372,7 @@ def pca_projection_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "asof", "analytics", "sweep"),
+    order_by=("lookback_sec",),
 )
 def attribution_lookback_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribution-window sensitivity from ONE as-of run — the
@@ -14386,7 +14437,6 @@ def attribution_lookback_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("attributed_revenue_cents"),
         )
-        .orderBy("lookback_sec")
     )
 
 
@@ -14437,6 +14487,7 @@ def attribution_lookback_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c, te ORDER BY decile
     """,
     tags=("extension", "ml-prep", "classifier", "window"),
+    order_by=("decile",),
 )
 def classifier_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile lift / cumulative-gains table for the hashed-NB language
@@ -14526,7 +14577,6 @@ def classifier_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             pct_rate(F.col("n_en"), F.col("n_docs")).alias("pct_en"),
             pct_rate(F.col("cum_en"), F.col("t_en")).alias("cum_gain_pct"),
         )
-        .orderBy("decile")
     )
 
 
@@ -14548,6 +14598,7 @@ def classifier_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per, t ORDER BY dow_mon0
     """,
     tags=("extension", "timeseries", "analytics"),
+    order_by=("dow_mon0",),
 )
 def dow_seasonality_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonality profile of the event stream — the
@@ -14585,7 +14636,6 @@ def dow_seasonality_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             pct_rate(F.col("n_events"), F.col("t_n")).alias("pct_events"),
             pct_rate(F.col("total_cents"), F.col("t_c")).alias("pct_value"),
         )
-        .orderBy("dow_mon0")
     )
 
 
@@ -14666,6 +14716,7 @@ def event_second_order_transitions(spark: SparkSession, sf_dir: str) -> DataFram
     FROM hit GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "order-statistics", "analytics"),
+    order_by=("priority",),
 )
 def ship_lag_percentiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fulfillment-SLA tail per order priority: exact P50/P90 of the
@@ -14718,7 +14769,6 @@ def ship_lag_percentiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFr
                 "p90_lag_days"
             ),
         )
-        .orderBy("priority")
     )
 
 
@@ -14848,6 +14898,7 @@ def association_rules_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m ORDER BY month
     """,
     tags=("extension", "agg", "sketch", "mergeable"),
+    order_by=("month",),
 )
 def moments_store_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE moments store — the fourth member of the sketch-store
@@ -14894,7 +14945,7 @@ def moments_store_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_cents",
         (F.col("sum_cents").cast("double") / n_d).alias("mean_cents"),
         (num.cast("double") / n_d / n_d).alias("var_cents2"),
-    ).orderBy("month")
+    )
 
 
 @register(
@@ -14936,6 +14987,7 @@ def moments_store_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "similarity", "linear-algebra"),
+    order_by=("label",),
 )
 def pca_projection_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label profile of the rank-1 projection — the read that says
@@ -14973,7 +15025,6 @@ def pca_projection_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("__p").cast("long").alias("min_proj"),
             F.max("__p").cast("long").alias("max_proj"),
         )
-        .orderBy("label")
     )
 
 
@@ -14994,6 +15045,7 @@ def pca_projection_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per, t ORDER BY dow_mon0, hour24
     """,
     tags=("extension", "timeseries", "analytics"),
+    order_by=("dow_mon0", "hour24"),
 )
 def weekly_activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The weekly activity heatmap — (Monday-zero weekday × hour-of-day)
@@ -15029,7 +15081,6 @@ def weekly_activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(100.0)
             ).alias("pct_of_week"),
         )
-        .orderBy("dow_mon0", "hour24")
     )
 
 
@@ -15134,6 +15185,7 @@ def order_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1
     """,
     tags=("extension", "analytics", "agg"),
+    order_by=("nation",),
 )
 def revenue_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration per nation as a Herfindahl–Hirschman
@@ -15176,7 +15228,6 @@ def revenue_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
             (F.col("sumsq").cast("double") / t_d / t_d).alias("hhi"),
         )
-        .orderBy("nation")
     )
 
 
@@ -15203,6 +15254,7 @@ def revenue_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hit GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "text", "order-statistics"),
+    order_by=("lang",),
 )
 def doc_length_percentiles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language document-length tail (P50/P90/P99 chars) — the
@@ -15238,7 +15290,6 @@ def doc_length_percentiles_by_lang(spark: SparkSession, sf_dir: str) -> DataFram
                 "p99_chars"
             ),
         )
-        .orderBy("lang")
     )
 
 
@@ -15306,6 +15357,7 @@ _PCA2_PREFIX = """
     FROM y3 ORDER BY pos
     """,
     tags=("extension", "similarity", "linear-algebra", "iterative"),
+    order_by=("pos",),
 )
 def pca_second_direction_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SECOND principal direction via exact rank-1 deflation (VERDICT
@@ -15321,7 +15373,7 @@ def pca_second_direction_embeddings(spark: SparkSession, sf_dir: str) -> DataFra
     w = _pca_second_direction_micro(spark, sf_dir)
     return spark.createDataFrame(
         [(i, v) for i, v in enumerate(w)], "pos int, v2_micro bigint"
-    ).orderBy("pos")
+    )
 
 
 @register(
@@ -15344,6 +15396,7 @@ def pca_second_direction_embeddings(spark: SparkSession, sf_dir: str) -> DataFra
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "similarity", "linear-algebra"),
+    order_by=("label",),
 )
 def pca_projection_map_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 2-D semantic map: per-label centroids in the plane spanned by
@@ -15385,7 +15438,6 @@ def pca_projection_map_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mean_p2"
             ),
         )
-        .orderBy("label")
     )
 
 
@@ -15429,6 +15481,7 @@ def pca_projection_map_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY day
     """,
     tags=("extension", "agg", "approx", "sketch"),
+    order_by=("day",),
 )
 def hll_register_store_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hand-rolled MERGEABLE HLL register store — the transparent
@@ -15493,7 +15546,7 @@ def hll_register_store_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nonzero_regs",
         (k_lit / F.col("__s").cast("double")).alias("est_users"),
     )
-    return day_rows.unionByName(all_row).orderBy("day")
+    return day_rows.unionByName(all_row)
 
 
 @register(
@@ -15523,6 +15576,7 @@ def hll_register_store_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY b.day
     """,
     tags=("extension", "bitmap", "analytics", "scale"),
+    order_by=("day",),
 )
 def bitmap_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 7-day EXACT distinct actives per day from the bitmap
@@ -15578,7 +15632,6 @@ def bitmap_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "dau_over_wau_pct"
             ),
         )
-        .orderBy("day")
     )
 
 
@@ -15606,6 +15659,7 @@ def bitmap_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o.type_a, o.type_b
     """,
     tags=("extension", "bitmap", "analytics", "scale"),
+    order_by=("type_a", "type_b"),
 )
 def bitmap_audience_overlap_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise audience overlap between event types from the bitmap
@@ -15674,7 +15728,6 @@ def bitmap_audience_overlap_types(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.col("overlap"), F.col("n_a") + F.col("n_b") - F.col("overlap")
             ).alias("jaccard_pct"),
         )
-        .orderBy("type_a", "type_b")
     )
 
 
@@ -15709,6 +15762,7 @@ def bitmap_audience_overlap_types(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM hit GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "agg", "percentiles", "scale"),
+    order_by=("n_name",),
 )
 def customer_spend_percentiles_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact lifetime-spend quartiles (+P90) per nation — the LTV
@@ -15751,7 +15805,6 @@ def customer_spend_percentiles_by_nation(spark: SparkSession, sf_dir: str) -> Da
             F.max(F.when(F.col("q_pct") == 75, F.col("cents"))).alias("p75_cents"),
             F.max(F.when(F.col("q_pct") == 90, F.col("cents"))).alias("p90_cents"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -15777,6 +15830,7 @@ def customer_spend_percentiles_by_nation(spark: SparkSession, sf_dir: str) -> Da
     FROM en, tr ORDER BY component
     """,
     tags=("extension", "similarity", "linear-algebra"),
+    order_by=("component",),
 )
 def pca_explained_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scree read for the two extracted directions: each one's
@@ -15829,7 +15883,6 @@ def pca_explained_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "trace",
             pct_rate(F.col("energy"), F.col("trace")).alias("share_pct"),
         )
-        .orderBy("component")
     )
 
 
@@ -15855,6 +15908,7 @@ def pca_explained_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM below b, ov, tot ORDER BY b.threshold
     """,
     tags=("extension", "governance", "quality"),
+    order_by=("threshold",),
 )
 def k_anonymity_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-ANONYMITY audit over the (nation, market-segment) quasi-
@@ -15908,7 +15962,6 @@ def k_anonymity_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100
             ).alias("pct_at_risk"),
         )
-        .orderBy("threshold")
     )
 
 
@@ -15932,6 +15985,7 @@ def k_anonymity_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o.lang_a, o.lang_b
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "text", "analytics"),
+    order_by=("lang_a", "lang_b"),
 )
 def vocab_overlap_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise vocabulary Jaccard between languages — the
@@ -15982,7 +16036,6 @@ def vocab_overlap_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("vocab_a") + F.col("vocab_b") - F.col("overlap"),
             ).alias("jaccard_pct"),
         )
-        .orderBy("lang_a", "lang_b")
     )
 
 
@@ -16001,6 +16054,7 @@ def vocab_overlap_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tf GROUP BY 1 ORDER BY 1
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "text", "analytics"),
+    order_by=("lang",),
 )
 def hapax_legomena_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hapax-legomenon share per language — the vocabulary-freshness
@@ -16032,7 +16086,6 @@ def hapax_legomena_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)),
             ).alias("hapax_pct"),
         )
-        .orderBy("lang")
     )
 
 
@@ -16056,6 +16109,7 @@ def hapax_legomena_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r, tot ORDER BY r.rank
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "text", "analytics"),
+    order_by=("rank",),
 )
 def token_rank_frequency_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The head of the rank-frequency (Zipf) curve: the global top-20
@@ -16095,7 +16149,6 @@ def token_rank_frequency_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             pct_rate(F.col("n"), F.col("total")).alias("share_pct"),
             pct_rate(F.col("__cum_n"), F.col("total")).alias("cum_share_pct"),
         )
-        .orderBy("rank")
     )
 
 
@@ -16121,6 +16174,7 @@ def token_rank_frequency_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM l ORDER BY n_name, yr
     """,
     tags=("extension", "window", "analytics"),
+    order_by=("n_name", "yr"),
 )
 def yoy_nation_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year revenue growth per nation — the board-deck trend
@@ -16159,7 +16213,7 @@ def yoy_nation_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         pct_rate(
             F.col("revenue_cents") - F.col("prev_cents"), F.col("prev_cents")
         ).alias("growth_pct"),
-    ).orderBy("n_name", "yr")
+    )
 
 
 @register(
@@ -16193,6 +16247,7 @@ def yoy_nation_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "warehouse", "scd", "window"),
+    order_by=("priority",),
 )
 def scd2_priority_version_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Version-lifetime profile of the SCD2 priority dimension — the
@@ -16243,7 +16298,6 @@ def scd2_priority_version_durations(spark: SparkSession, sf_dir: str) -> DataFra
             ).alias("avg_closed_days"),
             F.max("dur").cast("long").alias("max_closed_days"),
         )
-        .orderBy("priority")
     )
 
 
@@ -16260,6 +16314,7 @@ def scd2_priority_version_durations(spark: SparkSession, sf_dir: str) -> DataFra
     FROM h, t ORDER BY h.k
     """,
     tags=("extension", "agg", "profiling"),
+    order_by=("k",),
 )
 def lines_per_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fan-out profile of the order→lineitem relationship: how many
@@ -16284,7 +16339,6 @@ def lines_per_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100
             ).alias("share_pct"),
         )
-        .orderBy("k")
     )
 
 
@@ -16325,6 +16379,7 @@ def lines_per_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM a GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "asof", "analytics", "sessionize"),
+    order_by=("attributed_type",),
 )
 def attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIRST-touch attribution — the acquisition-credit mirror of
@@ -16390,7 +16445,6 @@ def attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(1000000.0)
             ).alias("mean_latency_sec"),
         )
-        .orderBy("attributed_type")
     )
 
 
@@ -16408,6 +16462,7 @@ def attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r WHERE rn % 50 = 1 ORDER BY rn
     """,
     tags=("extension", "sampling", "scale"),
+    order_by=("global_rn",),
 )
 def systematic_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Systematic (every k-th) sampling over a total order — the
@@ -16441,7 +16496,6 @@ def systematic_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "totalprice_cents",
             F.col("global_rn").cast("long").alias("global_rn"),
         )
-        .orderBy("global_rn")
     )
 
 
@@ -16481,6 +16535,7 @@ def systematic_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s ORDER BY event_type
     """,
     tags=("extension", "analytics", "timeseries"),
+    order_by=("event_type",),
 )
 def daily_count_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type least-squares trend of daily event volume — 'is this
@@ -16534,7 +16589,7 @@ def daily_count_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sy").cast("double") - slope * F.col("sx").cast("double"))
             / F.col("n_days").cast("double")
         ).alias("intercept"),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -16563,6 +16618,7 @@ def daily_count_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM top ORDER BY o_custkey
     """,
     tags=("extension", "analytics", "curation"),
+    order_by=("o_custkey",),
 )
 def time_decayed_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency-weighted customer value with EXACT dyadic decay — the
@@ -16615,7 +16671,7 @@ def time_decayed_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.expr("CAST(num % 1099511627776 AS DOUBLE)")
             / F.lit(1099511627776.0)
         ).alias("decayed_cents"),
-    ).orderBy("o_custkey")
+    )
 
 
 @register(
@@ -16658,6 +16714,7 @@ def time_decayed_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j ORDER BY day
     """,
     tags=("extension", "analytics", "timeseries", "sketch"),
+    order_by=("day",),
 )
 def rolling_moments_zscore_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-mean anomaly z-scores CONSUMED FROM the moments store —
@@ -16727,7 +16784,7 @@ def rolling_moments_zscore_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         mean_day.alias("mean_day"),
         trail_mean.alias("trail_mean"),
         z.alias("z"),
-    ).orderBy("day")
+    )
 
 
 @register(
@@ -16761,6 +16818,7 @@ def rolling_moments_zscore_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.lang, c.lang_guess
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "text", "quality"),
+    order_by=("lang", "lang_guess"),
 )
 def langid_confusion_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the marker-word language-ID against the
@@ -16799,7 +16857,6 @@ def langid_confusion_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100
             ).alias("pct_of_lang"),
         )
-        .orderBy("lang", "lang_guess")
     )
 
 
@@ -16948,6 +17005,7 @@ _DAILY_TYPE_COUNTS_SQL = """
     FROM s JOIN nd USING (event_type) ORDER BY event_type
     """,
     tags=("extension", "analytics", "timeseries"),
+    order_by=("event_type",),
 )
 def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test over daily event volume — the
@@ -17006,7 +17064,6 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "tau"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -17035,6 +17092,7 @@ def mann_kendall_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type, n_pairs ORDER BY event_type
     """,
     tags=("extension", "analytics", "timeseries"),
+    order_by=("event_type",),
 )
 def theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen ROBUST slope of daily event volume — the median of all
@@ -17090,7 +17148,6 @@ def theil_sen_daily_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("event_type", F.col("n_pairs").cast("long").alias("n_pairs"))
         .agg(F.avg("slope").alias("slope_per_day"))
-        .orderBy("event_type")
     )
 
 
@@ -17137,6 +17194,7 @@ def _markov_oracle(iters: int = 8) -> str:
     "markov_stationary_event_mix",
     oracle=_markov_oracle(8),
     tags=("extension", "analytics", "iterative"),
+    order_by=("event_type",),
 )
 def markov_stationary_event_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the per-user event-type Markov chain
@@ -17187,7 +17245,7 @@ def markov_stationary_event_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     return spark.createDataFrame(
         rows, "event_type string, n_out long, stationary_ppm long"
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -17215,6 +17273,7 @@ def markov_stationary_event_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tokc LEFT JOIN covc USING (source) ORDER BY source
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "dedup", "text"),
+    order_by=("source",),
 )
 def dup_ngram_coverage_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-5-gram TOKEN COVERAGE per source — the RefinedWeb/
@@ -17292,7 +17351,6 @@ def dup_ngram_coverage_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             covered.cast("long").alias("covered_tokens"),
             pct_rate(covered, F.col("total_tokens")).alias("dup_coverage_pct"),
         )
-        .orderBy("source")
     )
 
 
@@ -17320,6 +17378,7 @@ def dup_ngram_coverage_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_a, doc_b
     """,
     tags=("extension", "dedup"),
+    order_by=("doc_a", "doc_b"),
 )
 def containment_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric CONTAINMENT near-dup pairs C(A→B) = |A∩B|/|A| ≥ 80%
@@ -17335,9 +17394,7 @@ def containment_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment is trivially total. Rides the SHARED materialized
     containment pair table (_doc_containment_pairs80) — one postings
     self-join per sweep across the containment family (r15)."""
-    return _doc_containment_pairs80(spark, sf_dir).orderBy(
-        "doc_a", "doc_b"
-    )
+    return _doc_containment_pairs80(spark, sf_dir)
 
 
 @register(
@@ -17360,6 +17417,7 @@ def containment_neardup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM longest GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "analytics", "sessionization"),
+    order_by=("streak_days",),
 )
 def activity_streaks_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-active-day streak per user, as a corpus
@@ -17388,7 +17446,6 @@ def activity_streaks_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         longest.groupBy(F.col("streak_days").cast("long").alias("streak_days"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
-        .orderBy("streak_days")
     )
 
 
@@ -17419,6 +17476,7 @@ def activity_streaks_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s ORDER BY event_type
     """,
     tags=("extension", "analytics", "timeseries"),
+    order_by=("event_type",),
 )
 def interarrival_dispersion_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type inter-arrival BURSTINESS via the index of dispersion
@@ -17456,7 +17514,7 @@ def interarrival_dispersion_events(spark: SparkSession, sf_dir: str) -> DataFram
             " - CAST(sum_gap_sec AS DECIMAL(38,0)) * sum_gap_sec) * 1000)"
             " div nullif(CAST(n_gaps AS DECIMAL(38,0)) * sum_gap_sec, 0) AS LONG)"
         ).alias("dispersion_milli"),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -17477,6 +17535,7 @@ def interarrival_dispersion_events(spark: SparkSession, sf_dir: str) -> DataFram
     FROM g GROUP BY source ORDER BY source
     """,
     tags=("extension", "text"),
+    order_by=("source",),
 )
 def trigram_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-to-total word-trigram ratio per source — the standard
@@ -17518,7 +17577,6 @@ def trigram_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "diversity_pct"
             ),
         )
-        .orderBy("source")
     )
 
 
@@ -17562,6 +17620,7 @@ def trigram_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY d.source ORDER BY d.source
     """,
     tags=("extension", "dedup", "curation"),
+    order_by=("source",),
 )
 def containment_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation DECISION on top of containment_neardup_docs: per
@@ -17608,7 +17667,6 @@ def containment_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             chars_dropped.cast("long").alias("chars_dropped"),
             pct_rate(chars_dropped, F.sum("n_chars")).alias("dropped_pct"),
         )
-        .orderBy("source")
     )
 
 
@@ -17632,6 +17690,7 @@ def containment_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY k.k, t.buyers ORDER BY k
     """,
     tags=("extension", "agg", "analytics", "retention"),
+    order_by=("k",),
 )
 def repeat_purchase_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeat-purchase survival curve: for k = 1..10, how many customers
@@ -17664,7 +17723,6 @@ def repeat_purchase_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "pct_of_buyers"
             ),
         )
-        .orderBy("k")
     )
 
 
@@ -17688,6 +17746,7 @@ def repeat_purchase_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p ORDER BY month, priority
     """,
     tags=("extension", "agg", "window", "timeseries"),
+    order_by=("month", "priority"),
 )
 def priority_mix_shift_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month ORDER-PRIORITY mix shift in exact parts-per-
@@ -17716,7 +17775,7 @@ def priority_mix_shift_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "ppm",
         (F.col("ppm") - F.lag("ppm").over(lagw)).cast("long").alias("delta_ppm"),
-    ).orderBy("month", "priority")
+    )
 
 
 @register(
@@ -17734,6 +17793,7 @@ def priority_mix_shift_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM h, t ORDER BY bucket_lo
     """,
     tags=("extension", "agg", "skew", "analytics"),
+    order_by=("bucket_lo",),
 )
 def user_event_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Power-of-two histogram of per-user event counts — the degree
@@ -17763,7 +17823,6 @@ def user_event_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
             pct_rate(F.col("n_users"), F.col("total")).alias("pct_users"),
         )
-        .orderBy("bucket_lo")
     )
 
 
@@ -17782,6 +17841,7 @@ def user_event_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w JOIN m USING (dow) ORDER BY day
     """,
     tags=("extension", "agg", "timeseries", "seasonality"),
+    order_by=("day",),
 )
 def weekday_adjusted_daily_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week-adjusted daily event volume: each day's count minus
@@ -17812,7 +17872,6 @@ def weekday_adjusted_daily_volume(spark: SparkSession, sf_dir: str) -> DataFrame
             mean.alias("dow_mean"),
             (F.col("n").cast("double") - mean).alias("residual"),
         )
-        .orderBy("day")
     )
 
 
@@ -17840,6 +17899,7 @@ def weekday_adjusted_daily_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     GROUP BY priority, n_gaps ORDER BY priority
     """,
     tags=("extension", "window", "percentile", "analytics"),
+    order_by=("priority",),
 )
 def median_order_gap_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median days between a customer's consecutive orders, grouped by
@@ -17882,7 +17942,6 @@ def median_order_gap_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("priority", F.col("n_gaps").cast("long").alias("n_gaps"))
         .agg(F.avg("gap").alias("median_gap_days"))
-        .orderBy("priority")
     )
 
 
@@ -17954,6 +18013,7 @@ def supplier_part_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "agg", "decimal"),
+    order_by=("year",),
 )
 def discount_lift_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discount give-back by ship year: gross revenue, the absolute
@@ -17985,7 +18045,6 @@ def discount_lift_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "discount_pct"
             ),
         )
-        .orderBy("year")
     )
 
 
@@ -18048,6 +18107,7 @@ def fixed_size_sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "dedup", "text", "curation"),
+    order_by=("source",),
 )
 def ngram_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-occurrence 3-shingle NOVELTY per source: a doc's shingle is
@@ -18089,7 +18149,6 @@ def ngram_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce(F.sum("n_sh"), F.lit(0)).cast("long"),
             ).alias("novelty_pct"),
         )
-        .orderBy("source")
     )
 
 
@@ -18116,6 +18175,7 @@ def ngram_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "text", "quality", "report"),
+    order_by=("source",),
 )
 def char_class_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-class composition per source in exact parts-per-million
@@ -18155,7 +18215,7 @@ def char_class_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CAST((sn - sa - sd - ss) * 1000000 div NULLIF(sn, 0) AS BIGINT)"
         ).alias("other_ppm"),
-    ).orderBy("source")
+    )
 
 
 @register(
@@ -18188,6 +18248,7 @@ def char_class_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY split, source
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "sampling", "split", "report"),
+    order_by=("split", "source"),
 )
 def split_source_mix_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-fairness audit: per (split, source), the source's token
@@ -18234,7 +18295,6 @@ def split_source_mix_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "- src_tokens * 1000000 div total AS BIGINT)"
             ).alias("dev_ppm"),
         )
-        .orderBy("split", "source")
     )
 
 
@@ -18258,6 +18318,7 @@ def split_source_mix_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s, t ORDER BY shard
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "sampling", "report", "skew"),
+    order_by=("shard",),
 )
 def shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-shard load balance under the production shard function
@@ -18295,7 +18356,6 @@ def shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             pct_rate(F.col("n_docs") * 8, F.col("td")).alias("doc_load_pct"),
             pct_rate(F.col("tokens") * 8, F.col("tt")).alias("token_load_pct"),
         )
-        .orderBy("shard")
     )
 
 
@@ -18418,6 +18478,7 @@ def neardup_cluster_length_spread(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM agg a, tot ORDER BY a.source
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "curation", "report", "iterative"),
+    order_by=("source",),
 )
 def source_curation_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-source curation DECISION TABLE (VERDICT r11 candidate):
@@ -18512,7 +18573,6 @@ def source_curation_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             decision.alias("decision"),
         )
-        .orderBy("source")
     )
 
 
@@ -18553,6 +18613,7 @@ def source_curation_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "dedup", "iterative", "ml-prep", "split"),
+    order_by=("fold",),
 )
 def containment_groupkfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTAINMENT-AWARE GroupKFold (VERDICT r11 candidate): fold groups
@@ -18596,7 +18657,6 @@ def containment_groupkfold(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_chars").cast("long").alias("chars_total"),
         )
-        .orderBy("fold")
     )
 
 
@@ -18623,6 +18683,7 @@ def containment_groupkfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM byday ORDER BY day
     """,
     tags=("extension", "window", "interval", "analytics"),
+    order_by=("day",),
 )
 def orders_open_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open-order BACKLOG timeline by interval sweep-line: an order is
@@ -18659,7 +18720,7 @@ def orders_open_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "delta_open",
         F.sum("delta_open").over(w).cast("long").alias("open_orders"),
-    ).orderBy("day")
+    )
 
 
 @register(
@@ -18683,6 +18744,7 @@ def orders_open_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dd ORDER BY day
     """,
     tags=("extension", "window", "timeseries", "analytics"),
+    order_by=("day",),
 )
 def max_drawdown_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak-to-current DRAWDOWN of the daily revenue series — the
@@ -18711,7 +18773,7 @@ def max_drawdown_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("peak") - F.col("rev")).cast("double"),
             F.col("peak").cast("double"),
         ).alias("drawdown_pct"),
-    ).orderBy("day")
+    )
 
 
 @register(
@@ -18867,6 +18929,7 @@ def triangle_census_part_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "window", "percentile", "order-statistics"),
+    order_by=("l_returnflag",),
 )
 def weighted_median_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUANTITY-WEIGHTED exact quartiles of line price per return flag —
@@ -18931,7 +18994,6 @@ def weighted_median_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.when(4 * F.col("cw") >= 3 * F.col("totw"), F.col("l_extendedprice"))
             ).alias("wq75"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -18976,6 +19038,7 @@ def weighted_median_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame
     ORDER BY 1, 2
     """,
     tags=("extension", "window", "analytics", "segmentation"),
+    order_by=("seg_from", "seg_to"),
 )
 def spend_quartile_migration_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year spend-QUARTILE migration matrix: customers are
@@ -19049,7 +19112,6 @@ def spend_quartile_migration_customers(spark: SparkSession, sf_dir: str) -> Data
             "n_customers",
             pct_rate(F.col("n_customers"), F.col("t")).alias("row_pct"),
         )
-        .orderBy("seg_from", "seg_to")
     )
 
 
@@ -19073,6 +19135,7 @@ def spend_quartile_migration_customers(spark: SparkSession, sf_dir: str) -> Data
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "agg", "growth", "analytics"),
+    order_by=("week",),
 )
 def new_vs_returning_users_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly NEW vs RETURNING user split — the growth-accounting
@@ -19101,7 +19164,6 @@ def new_vs_returning_users_weekly(spark: SparkSession, sf_dir: str) -> DataFrame
                 "new_pct"
             ),
         )
-        .orderBy("week")
     )
 
 
@@ -19135,6 +19197,7 @@ def new_vs_returning_users_weekly(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM isl GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "window", "gaps-islands", "analytics"),
+    order_by=("burst_days",),
 )
 def purchase_burst_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purchase BURSTS via tolerance gaps-and-islands: consecutive order
@@ -19179,7 +19242,6 @@ def purchase_burst_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_custkey").cast("long").alias("n_customers"),
             F.max("span").cast("long").alias("max_span_days"),
         )
-        .orderBy("burst_days")
     )
 
 
@@ -19212,6 +19274,7 @@ def purchase_burst_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM mm ORDER BY month
     """,
     tags=("extension", "agg", "growth", "analytics"),
+    order_by=("month",),
 )
 def catalog_entry_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog COLD-START curve: parts and suppliers by the month their
@@ -19249,7 +19312,7 @@ def catalog_entry_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("new_parts").over(w).cast("long").alias("cum_parts"),
         "new_suppliers",
         F.sum("new_suppliers").over(w).cast("long").alias("cum_suppliers"),
-    ).orderBy("month")
+    )
 
 
 @register(
@@ -19303,6 +19366,7 @@ def catalog_entry_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1
     """,
     tags=("extension", "agg", "approx", "sketch"),
+    order_by=("month",),
 )
 def quantile_store_monthly_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-grain RANGE READS of the mergeable histogram store — the
@@ -19381,7 +19445,6 @@ def quantile_store_monthly_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "in_bin"
             ),
         )
-        .orderBy("month")
     )
 
 
@@ -19421,6 +19484,7 @@ def quantile_store_monthly_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM caps, jp GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "dedup", "skew", "audit"),
+    order_by=("cap",),
 )
 def shingle_df_cap_loss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RECALL COST of the hot-shingle df-cap, measured exactly: a true
@@ -19487,6 +19551,7 @@ def shingle_df_cap_loss_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g, t ORDER BY 1, 2
     """,
     tags=("extension", "dedup", "curation", "audit"),
+    order_by=("lang", "len_bucket"),
 )
 def dedup_survivorship_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVIVORSHIP BIAS of near-dup dedup, measured as the (lang ×
@@ -19538,7 +19603,6 @@ def dedup_survivorship_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             after_pct.alias("after_pct"),
             F.round(after_pct - before_pct, 2).alias("shift_pp"),
         )
-        .orderBy("lang", "len_bucket")
     )
 
 
@@ -19563,6 +19627,7 @@ def dedup_survivorship_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "text", "analytics"),
+    order_by=("lang",),
 )
 def sentence_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SENTENCE segmentation statistics per language — the
@@ -19599,7 +19664,6 @@ def sentence_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("avg_words_per_sentence"),
         )
-        .orderBy("lang")
     )
 
 
@@ -19631,6 +19695,7 @@ def sentence_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dep GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "dedup", "iterative", "audit"),
+    order_by=("depth",),
 )
 def containment_chain_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment NESTING depth histogram: hierarchy edges are
@@ -19657,7 +19722,6 @@ def containment_chain_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         _doc_chain_depths(spark, sf_dir)
         .groupBy("depth")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .orderBy("depth")
     )
 
 
@@ -19722,6 +19786,7 @@ def _minhash_source_overlap_oracle(n_perms: int = 16) -> str:
     "source_minhash_overlap",
     oracle=_minhash_source_overlap_oracle(),
     tags=("extension", "dedup", "approx", "sketch", "curation"),
+    order_by=("source_a", "source_b"),
 )
 def source_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SOURCE-level MinHash overlap estimation, calibrated against the
@@ -19805,7 +19870,7 @@ def source_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "matches",
         est.alias("est_pct"),
         F.round(F.abs(est - jacc), 2).alias("err_pp"),
-    ).orderBy("source_a", "source_b")
+    )
 
 
 @register(
@@ -19835,6 +19900,7 @@ def source_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "similarity", "curation"),
+    order_by=("query_id",),
 )
 def similarity_margin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-neighbor CONFIDENCE MARGIN per sampled query vector
@@ -19901,7 +19967,6 @@ def similarity_margin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("top1_cos") - F.col("top2_cos")).alias("margin"),
             (F.col("__same") == 1).alias("same_label"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -20184,6 +20249,7 @@ def _lsh_band_curve_oracle(n_perms: int = 16, n_bands: int = 8) -> str:
     "lsh_band_collision_curve",
     oracle=_lsh_band_curve_oracle(),
     tags=("extension", "dedup", "report", "tuning"),
+    order_by=("band",),
 )
 def lsh_band_collision_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-band COLLISION observability of MinHash-LSH banding — the
@@ -20242,7 +20308,6 @@ def lsh_band_collision_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("new_pairs", F.lit(0).cast("long")).alias("new_pairs"),
             "cum_pairs",
         )
-        .orderBy("band")
     )
 
 
@@ -20261,6 +20326,7 @@ def lsh_band_collision_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p GROUP BY 1, 2 ORDER BY 1, 2
     """,
     tags=("extension", "dedup", "curation", "report"),
+    order_by=("source_a", "source_b"),
 )
 def cross_source_copy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WHO copies WHOM: exact-duplicate pairs (byte-identical text, md5
@@ -20296,7 +20362,6 @@ def cross_source_copy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
             F.count_distinct("ck").cast("long").alias("n_groups"),
         )
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -20468,6 +20533,7 @@ def bootstrap_poisson_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 2
     """,
     tags=("extension", "agg", "approx", "sketch"),
+    order_by=("month", "c_custkey"),
 )
 def cms_store_monthly_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-grain RANGE READS of the mergeable count-min store — the
@@ -20551,7 +20617,6 @@ def cms_store_monthly_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 >= F.coalesce("exact_n", F.lit(0).cast("long"))
             ).alias("est_ok"),
         )
-        .orderBy("month", "c_custkey")
     )
 
 
@@ -20647,6 +20712,7 @@ def _ivfpq_nprobe_curve_oracle(query_ids=(0, 1, 2, 3, 4), k=10, n_centroids=16) 
     "ivfpq_nprobe_recall_curve",
     oracle=_ivfpq_nprobe_curve_oracle(),
     tags=("extension", "similarity", "report", "tuning", "quantization"),
+    order_by=("n_probe",),
 )
 def ivfpq_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the FULL IVF-PQ search at n_probe ∈ {1,2,4,8,16} —
@@ -20774,7 +20840,6 @@ def ivfpq_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(denom)
             ).alias("recall_at_10"),
         )
-        .orderBy("n_probe")
     )
 
 
@@ -20803,6 +20868,7 @@ def ivfpq_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM act a JOIN ex e USING (month) ORDER BY 1
     """,
     tags=("extension", "bitmap", "agg", "scale"),
+    order_by=("month",),
 )
 def bitmap_store_monthly_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-grain RANGE READS of the bitmap word store — the fourth
@@ -20851,7 +20917,6 @@ def bitmap_store_monthly_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "merge_ok"
             ),
         )
-        .orderBy("month")
     )
 
 
@@ -20877,6 +20942,7 @@ def bitmap_store_monthly_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d GROUP BY 1 ORDER BY 1
     """,
     tags=("extension", "analytics", "stats"),
+    order_by=("decile",),
 )
 def event_type_diversity_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral-diversity histogram: each user's event-type mix
@@ -20913,7 +20979,6 @@ def event_type_diversity_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_users"),
             F.sum("n_events").cast("long").alias("events_total"),
         )
-        .orderBy("decile")
     )
 
 
@@ -20943,6 +21008,7 @@ def event_type_diversity_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1, 2
     """,
     tags=("extension", "analytics", "stats"),
+    order_by=("flag", "priority"),
 )
 def ship_lag_interaction_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-way ADDITIVE-MODEL decomposition of shipping lag over
@@ -21007,7 +21073,6 @@ def ship_lag_interaction_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
             pred.alias("additive_pred"),
             (cm - pred).alias("interaction"),
         )
-        .orderBy("flag", "priority")
     )
 
 
@@ -21064,6 +21129,7 @@ def ship_lag_interaction_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY 1
     """,
     tags=("extension", "sampling", "stats"),
+    order_by=("priority",),
 )
 def neyman_allocation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEYMAN (optimal) stratified-sampling allocation, planned AND
@@ -21171,7 +21237,6 @@ def neyman_allocation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("n_sampled", F.lit(0).cast("long")), F.col("n")
             ).alias("sample_pct"),
         )
-        .orderBy("priority")
     )
 
 
@@ -21460,6 +21525,7 @@ def _ht_oracle() -> str:
     "horvitz_thompson_strata_estimate",
     oracle=_ht_oracle(),
     tags=("extension", "stats", "sampling"),
+    order_by=("priority",),
 )
 def horvitz_thompson_strata_estimate(
     spark: SparkSession, sf_dir: str
@@ -21529,7 +21595,6 @@ def horvitz_thompson_strata_estimate(
                 2,
             ).alias("err_pct"),
         )
-        .orderBy("priority")
     )
 
 
@@ -21567,6 +21632,7 @@ def horvitz_thompson_strata_estimate(
     FROM a ORDER BY source
     """.replace("__TOKS__", _TOKS_SQL),
     tags=("extension", "text", "mixture", "curation"),
+    order_by=("source",),
 )
 def source_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPSAMPLING epoch plan toward a uniform source mixture — the
@@ -21632,7 +21698,7 @@ def source_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "share_after_pct"
         ),
         F.round(F.lit(100.0) / F.col("k"), 2).alias("target_share_pct"),
-    ).orderBy("source")
+    )
 
 
 def _lsh_banded_pairs_sql(n_perms: int = 16, n_bands: int = 8) -> str:
@@ -21714,6 +21780,7 @@ def _lsh_recall_vs_bands_oracle(threshold: float = 0.5, n_bands: int = 8) -> str
     "lsh_recall_vs_bands",
     oracle=_lsh_recall_vs_bands_oracle(),
     tags=("extension", "dedup", "report", "tuning"),
+    order_by=("n_bands",),
 )
 def lsh_recall_vs_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The YIELD side of the LSH banding decision —
@@ -21772,7 +21839,6 @@ def lsh_recall_vs_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "precision_pct"
             ),
         )
-        .orderBy("n_bands")
     )
 
 
@@ -21819,6 +21885,7 @@ def _minhash_calibration_oracle(n_perms: int = 16) -> str:
     "minhash_jaccard_calibration",
     oracle=_minhash_calibration_oracle(),
     tags=("extension", "dedup", "report", "tuning", "approx"),
+    order_by=("sig_matches",),
 )
 def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CALIBRATION of the MinHash Jaccard estimator on the pairs LSH
@@ -21907,7 +21974,6 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_jaccard",
             "max_jaccard",
         )
-        .orderBy("sig_matches")
     )
 
 
@@ -22048,6 +22114,7 @@ def _ivfpq_append_drift_oracle(
     "ivfpq_append_recall_drift",
     oracle=_ivfpq_append_drift_oracle(),
     tags=("extension", "similarity", "report", "tuning", "quantization"),
+    order_by=("stage",),
 )
 def ivfpq_append_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RECALL DRIFT of a frozen-quantizer IVF-PQ index across
@@ -22237,7 +22304,6 @@ def ivfpq_append_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(denom)
             ).alias(f"recall_at_{k}"),
         )
-        .orderBy("stage")
     )
 
 

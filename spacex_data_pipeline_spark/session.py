@@ -30,6 +30,17 @@ one we would also want on a real multi-executor cluster:
   Python-worker tasks, where the JVM's own stop takes about 35 ms.
   ``build_session`` gives each context's server a shutdown that wakes
   both polls first.
+- No Python call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  PySpark 4 walks the Python stack and makes about three JVM calls for
+  every Column function (``F.col``, ``F.sum``, ...), to record where in
+  user code each expression was built; that was most of the py4j
+  traffic of building a registry DataFrame. The cost: an analysis error
+  (unresolved column, bad cast) no longer names the DataFrame call site
+  that built the failing expression, only the expression itself.
+  PySpark reads the flag once per process, at the first Column call made
+  while a session is active, so a process whose first session did not
+  come from ``build_session`` keeps capturing.
 """
 
 from __future__ import annotations
@@ -117,6 +128,7 @@ def build_session(
         .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spacex_data_pipeline_spark.__main__ import main
+from spacex_data_pipeline_spark.queries import REGISTRY
 from spacex_data_pipeline_spark.sources import rest_api
 
 from tests.test_spacex_semantics import PAYLOAD
@@ -63,6 +64,31 @@ def test_cli_query_and_listing(spark, sf_oracle, capsys):
     listing = capsys.readouterr().out
     assert "fct_orders_by_year" in listing and "oracle" in listing
     assert main(["query", "nope_not_a_query"], _spark=spark) == 2
+
+
+def test_cli_query_shows_rows_in_the_entry_order(spark, sf_oracle, capsys):
+    """The entry's plan carries no sort; `query` applies its
+    ``order_by=("custdist DESC", "c_count DESC")`` to the rows it shows,
+    and shows every row of the entry."""
+    name = "q13_order_count_distribution"
+    assert REGISTRY[name].order_by == ("custdist DESC", "c_count DESC")
+    assert main(
+        ["query", name, "--sf-dir", sf_oracle, "--limit", "1000"], _spark=spark
+    ) == 0
+    table = [
+        [c.strip() for c in line.strip("|").split("|")]
+        for line in capsys.readouterr().out.splitlines()
+        if line.startswith("|")
+    ]
+    header, body = table[0], table[1:]
+    shown = [
+        (int(r[header.index("custdist")]), int(r[header.index("c_count")]))
+        for r in body
+    ]
+    assert shown == sorted(shown, reverse=True)
+    rows = REGISTRY[name].fn(spark, sf_oracle).collect()
+    assert sorted(shown) == sorted((r.custdist, r.c_count) for r in rows)
+    assert len(set(shown)) > 1
 
 
 def test_cli_tables_lists_warehouse_after_build(spark, tmp_path, capsys):

@@ -3086,9 +3086,10 @@ def test_quartile_migration_shares_and_domains(spark, sf_smoke):
 def test_new_vs_returning_accounting(spark, sf_smoke):
     """new + returning = active per week; total new across weeks equals
     the distinct-user count; the first week is all-new."""
-    from spacex_data_pipeline_spark.queries import REGISTRY
+    from spacex_data_pipeline_spark.queries import REGISTRY, display_order
 
-    rows = REGISTRY["new_vs_returning_users_weekly"].fn(spark, sf_smoke).collect()
+    q = REGISTRY["new_vs_returning_users_weekly"]
+    rows = display_order(q.fn(spark, sf_smoke), q.order_by).collect()
     assert all(r.new_users + r.returning_users == r.active_users for r in rows)
     ev = catalog.table(spark, sf_smoke, "events")
     n_users = ev.select("user_id").distinct().count()
@@ -3390,7 +3391,7 @@ def test_degree_assortativity_star_graph(spark, tmp_path):
 def test_lsh_band_curve_twin_docs(spark, tmp_path):
     """Two byte-identical docs share every band (first_band 0, one
     cumulative pair throughout); an unrelated doc adds no collisions."""
-    from spacex_data_pipeline_spark.queries import REGISTRY
+    from spacex_data_pipeline_spark.queries import REGISTRY, display_order
 
     d = str(tmp_path)
     t1 = "the quick brown fox jumps over the lazy dog again and again"
@@ -3400,7 +3401,8 @@ def test_lsh_band_curve_twin_docs(spark, tmp_path):
          (3, t2, "en", "s1", len(t2))],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).coalesce(1).write.parquet(f"{d}/documents.parquet")
-    rows = REGISTRY["lsh_band_collision_curve"].fn(spark, d).collect()
+    q = REGISTRY["lsh_band_collision_curve"]
+    rows = display_order(q.fn(spark, d), q.order_by).collect()
     assert [r.band for r in rows] == list(range(8))
     for r in rows:
         assert r.n_buckets == 2  # twin bucket + the loner's
@@ -3810,15 +3812,14 @@ def test_lsh_yield_and_calibration_agree_with_cost_curve(spark, sf_oracle):
     pair mass must both equal the cost curve's cumulative pair set at
     band 7; recall/candidates are monotone in b; every calibration
     bucket's envelope brackets its estimate band sanely."""
-    from spacex_data_pipeline_spark.queries import REGISTRY
+    from spacex_data_pipeline_spark.queries import REGISTRY, display_order
 
     cost = {
         r.band: r.cum_pairs
         for r in REGISTRY["lsh_band_collision_curve"].fn(spark, sf_oracle).collect()
     }
-    yield_rows = (
-        REGISTRY["lsh_recall_vs_bands"].fn(spark, sf_oracle).collect()
-    )
+    q = REGISTRY["lsh_recall_vs_bands"]
+    yield_rows = display_order(q.fn(spark, sf_oracle), q.order_by).collect()
     assert [r.n_bands for r in yield_rows] == list(range(1, 9))
     assert yield_rows[-1].candidate_pairs == cost[7]
     for a, b in zip(yield_rows, yield_rows[1:]):

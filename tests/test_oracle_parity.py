@@ -18,7 +18,7 @@ import duckdb
 import pytest
 
 from spacex_data_pipeline_spark import catalog
-from spacex_data_pipeline_spark.queries import REGISTRY
+from spacex_data_pipeline_spark.queries import _SORT_SPEC, REGISTRY
 
 
 def _canon_cell(v) -> str:
@@ -107,9 +107,44 @@ def test_oracle_dtype_canon(name, ducks):
     )
 
 
+_LIMITS = {"GlobalLimit", "LocalLimit", "Tail"}
+
+
+def unlimited_global_sorts(df) -> list[str]:
+    """Every global Sort in ``df``'s optimized plan that has no
+    GlobalLimit, LocalLimit or Tail above it, as a one-line plan string.
+    Such a sort only sets the display order, which every sink drops, yet
+    it runs its child a second time to sample range bounds and adds a
+    range shuffle; ORDER BY belongs in ``register(order_by=...)``."""
+    found = []
+    stack = [(df._jdf.queryExecution().optimizedPlan(), False)]
+    while stack:
+        node, limited = stack.pop()
+        name = node.nodeName()
+        if name == "Sort" and getattr(node, "global")() and not limited:
+            found.append(node.simpleString(10))
+        limited = limited or name in _LIMITS
+        kids = node.children()
+        stack.extend((kids.apply(i), limited) for i in range(kids.size()))
+    return found
+
+
+def order_by_problems(name, df) -> list[str]:
+    """What is wrong with ``name``'s plan and display order: a global sort
+    no limit needs, or an ``order_by`` spec that names no output column."""
+    cols = set(df.columns)
+    return [f"{name}: display-only {s}" for s in unlimited_global_sorts(df)] + [
+        f"{name}: order_by {spec!r} names no output column of {sorted(cols)}"
+        for spec in REGISTRY[name].order_by
+        if _SORT_SPEC.fullmatch(spec)["col"] not in cols
+    ]
+
+
 def _assert_parity(name, spark, sf_oracle, ducks):
     q = REGISTRY[name]
     sdf = q.fn(spark, sf_oracle)
+    problems = order_by_problems(name, sdf)
+    assert not problems, problems
     spark_cols = [c.lower() for c in sdf.columns]
     spark_rows = [tuple(r) for r in sdf.collect()]
 
@@ -176,6 +211,26 @@ def test_oracle_parity(name, spark, sf_oracle, ducks):
 @pytest.mark.parametrize("name", FAST_SAMPLE)
 def test_oracle_parity_fast_sample(name, spark, sf_oracle, ducks):
     _assert_parity(name, spark, sf_oracle, ducks)
+
+
+@pytest.mark.slow
+def test_no_entry_plan_ends_in_a_display_sort(spark, sf_smoke):
+    """The whole registry at sf0.001, plans only: no global sort without a
+    limit above it, and every ``order_by`` spec names an output column.
+    The fast gate checks the same on FAST_SAMPLE inside _assert_parity."""
+    problems = []
+    for name, q in REGISTRY.items():
+        problems += order_by_problems(name, q.fn(spark, sf_smoke))
+    assert not problems, "\n".join(problems)
+
+
+def test_unlimited_global_sorts_sees_only_unlimited_sorts(spark):
+    df = spark.range(10).withColumnRenamed("id", "k")
+    assert unlimited_global_sorts(df) == []
+    assert len(unlimited_global_sorts(df.orderBy("k"))) == 1
+    assert len(unlimited_global_sorts(df.orderBy("k").select("k"))) == 1
+    assert unlimited_global_sorts(df.orderBy("k").limit(3)) == []
+    assert unlimited_global_sorts(df.sortWithinPartitions("k")) == []
 
 
 def test_every_entry_is_oracle_backed():

@@ -187,3 +187,14 @@ def test_context_stop_is_prompt(tmp_path, unix):
     assert got["after_stop_rows"] == 7
     assert max(got["trivial_s"]) < 0.25, got["trivial_s"]
     assert max(got["acc_s"]) < 0.25, got["acc_s"]
+
+
+def test_build_session_turns_off_call_site_capture(spark):
+    """PySpark 4 records a Python call site for every Column function
+    unless the session turns it off; the flag is read once per process."""
+    from pyspark.errors import utils
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    F.col("x")
+    assert utils.is_debugging_enabled() is False
