@@ -527,7 +527,6 @@ def _overlap_binned(spark, sf_dir):
         "session_end",
         "incident_start",
         "incident_end",
-        bin_seconds=3600,
     )
 
 

@@ -84,7 +84,7 @@ def ngram_jaccard_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spacex_data_pipeline_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), k=3, threshold=0.2,
+        _t(spark, sf_dir, "documents"), threshold=0.2,
         postings=_doc_shingle_postings(spark, sf_dir),
     )
 

@@ -147,10 +147,10 @@ def groupkfold_with_cc(spark, sf_dir, cc_fn):
     sh = _doc_shingle_postings(spark, sf_dir)
     sz = _doc_shingle_sizes(spark, sf_dir)
     jp = ngram_jaccard_pairs(
-        docs, k=3, threshold=0.8, postings=sh, sizes=sz
+        docs, threshold=0.8, postings=sh, sizes=sz
     ).select("doc_a", "doc_b")
     ct = containment_pairs(
-        docs, "doc_id", "text", k=3, threshold_pct=80, min_shingles=5,
+        docs, threshold_pct=80, min_shingles=5,
         postings=sh, sizes=sz,
     ).select("doc_a", "doc_b")
     comp = cc_fn(docs.select("doc_id"), jp.unionByName(ct))

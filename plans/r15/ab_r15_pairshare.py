@@ -43,7 +43,7 @@ from spacex_data_pipeline_spark.session import build_session  # noqa: E402
 
 def _own_jp80(spark, sf_dir):
     return dedup_mod.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), k=3, threshold=0.8,
+        _t(spark, sf_dir, "documents"), threshold=0.8,
         postings=_doc_shingle_postings(spark, sf_dir),
         sizes=_doc_shingle_sizes(spark, sf_dir),
     )
@@ -51,8 +51,7 @@ def _own_jp80(spark, sf_dir):
 
 def _own_ct80(spark, sf_dir):
     return dedup_mod.containment_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", k=3,
-        threshold_pct=80, min_shingles=5,
+        _t(spark, sf_dir, "documents"), threshold_pct=80, min_shingles=5,
         postings=_doc_shingle_postings(spark, sf_dir),
         sizes=_doc_shingle_sizes(spark, sf_dir),
     )
@@ -83,7 +82,7 @@ def simhash_old(spark, sf_dir):
     fa = fps.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
     fb = fps.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
     banded = dedup_mod.simhash_near_pairs(
-        docs, max_hamming=16, fingerprints=fps
+        docs, fingerprints=fps
     ).select("doc_a", "doc_b", F.lit(True).alias("banded"))
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (

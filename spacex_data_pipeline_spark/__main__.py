@@ -43,6 +43,22 @@ def _fetch_from(path: str | None) -> Callable[[], Sequence[dict[str, Any]]]:
     return fetch
 
 
+def _bounded(kind: type, lo: float, hi: float | None = None) -> Callable[[str], Any]:
+    """argparse ``type=`` for a number in [lo, hi]: a bad value is a
+    usage error (exit 2) before any Spark work, not a failure inside a
+    job that may already have overwritten the output."""
+
+    def parse(text: str):
+        v = kind(text)
+        if not (v >= lo and (hi is None or v <= hi)):  # NaN fails too
+            bound = f">= {lo}" if hi is None else f"in [{lo}, {hi}]"
+            raise argparse.ArgumentTypeError(f"must be {bound}, got {text}")
+        return v
+
+    parse.__name__ = kind.__name__
+    return parse
+
+
 def main(argv: Sequence[str] | None = None, _spark=None) -> int:
     """CLI entry. ``_spark``: test hook — inject an existing session
     (which the CLI then does not stop) instead of building one."""
@@ -101,11 +117,17 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
     )
     pp.add_argument("--sf-dir", default=None, help="fixture table directory")
     pp.add_argument("--out", required=True, help="output directory for shards")
-    pp.add_argument("--shards", type=int, default=8, help="training shards per split")
     pp.add_argument(
-        "--val-pct", type=float, default=0.01, help="validation split fraction"
+        "--shards", type=_bounded(int, 1), default=8, help="training shards per split"
     )
-    pp.add_argument("--test-pct", type=float, default=0.01, help="test split fraction")
+    pp.add_argument(
+        "--val-pct", type=_bounded(float, 0), default=0.01,
+        help="validation split fraction",
+    )
+    pp.add_argument(
+        "--test-pct", type=_bounded(float, 0), default=0.01,
+        help="test split fraction (--val-pct + --test-pct <= 1)",
+    )
     pp.add_argument(
         "--line-dedup",
         action="store_true",
@@ -131,7 +153,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
     )
     pp.add_argument(
         "--containment-df-cap",
-        type=int,
+        type=_bounded(int, 1),
         default=None,
         metavar="N",
         help="with --containment-prune: drop shingles appearing in more "
@@ -143,7 +165,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
     )
     pp.add_argument(
         "--typicality-tail-pct",
-        type=float,
+        type=_bounded(float, 0, 100),
         default=None,
         metavar="P",
         help="drop the P%% least corpus-typical docs by the trigram-LM "
@@ -161,7 +183,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
     )
     pp.add_argument(
         "--curriculum-phases",
-        type=int,
+        type=_bounded(int, 1),
         default=None,
         metavar="K",
         help="annotate every doc with a curriculum phase 1..K (global "
@@ -202,7 +224,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
     )
     ps.add_argument("--index", required=True, help="index directory (index-build --out)")
     ps.add_argument("terms", nargs="+", help="query terms")
-    ps.add_argument("--k", type=int, default=10, help="results to return")
+    ps.add_argument("--k", type=_bounded(int, 1), default=10, help="results to return")
 
     pu = sub.add_parser(
         "index-update",
@@ -246,6 +268,10 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
     )
 
     args = p.parse_args(argv)
+    if args.cmd == "prep-training" and args.val_pct + args.test_pct > 1:
+        pp.error(
+            f"--val-pct + --test-pct must be <= 1, got {args.val_pct} + {args.test_pct}"
+        )
 
     # list-queries / ledger / tables need no Spark session
     if args.cmd == "list-queries":
@@ -398,8 +424,6 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
                 cont = materialize(
                     containment_pairs(
                         kept,
-                        "doc_id",
-                        "text",
                         max_shingle_df=args.containment_df_cap,
                     ).select("doc_a", "doc_b")
                 )
@@ -415,9 +439,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
                 # n_kept counts blank lines too (always-kept structure),
                 # so it cannot tell an emptied doc from a live one — gate
                 # on surviving CONTENT lines (ADVICE r6)
-                ld = line_dedup_docs(kept, "doc_id", "text").filter(
-                    F.col("n_kept_nonblank") > 0
-                )
+                ld = line_dedup_docs(kept).filter(F.col("n_kept_nonblank") > 0)
                 kept = kept.drop("text").join(
                     ld.select("doc_id", F.col("text_dedup").alias("text")),
                     "doc_id",
@@ -430,9 +452,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
                 # --line-dedup drops line-emptied docs.
                 from .operators.dedup import duplicate_span_docs
 
-                sd = duplicate_span_docs(kept, n=8).filter(
-                    F.trim(F.col("text_dedup")) != ""
-                )
+                sd = duplicate_span_docs(kept).filter(F.trim(F.col("text_dedup")) != "")
                 kept = kept.drop("text").join(
                     sd.select("doc_id", F.col("text_dedup").alias("text")),
                     "doc_id",
@@ -469,7 +489,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
                     ).select("doc_id"),
                     "doc_id",
                 )
-            flags = contamination_flags(kept, bench, k=5)
+            flags = contamination_flags(kept, bench)
             clean = kept.join(
                 flags.filter(~F.col("contaminated")).select("doc_id"), "doc_id"
             )

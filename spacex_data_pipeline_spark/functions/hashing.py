@@ -121,11 +121,11 @@ def band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
     )
 
 
-def rolling_hash(col: Column, mod: int = (1 << 31) - 1, base: int = 31) -> Column:
+def rolling_hash(col: Column) -> Column:
     """Polynomial rolling hash over the characters of a string column.
 
-    ``h = (h * base + ascii(char)) % mod`` folded left-to-right with
-    ``F.aggregate`` — exact 64-bit integer arithmetic (base * mod < 2^63,
+    ``h = (h * 31 + ascii(char)) % (2^31 - 1)`` folded left-to-right with
+    ``F.aggregate`` — exact 64-bit integer arithmetic (31 · (2^31 - 1) < 2^63,
     no overflow), fully JVM-side, and expressible in ANSI SQL for the
     DuckDB oracle (``list_reduce`` twin). Used for document fingerprinting.
     """
@@ -133,7 +133,7 @@ def rolling_hash(col: Column, mod: int = (1 << 31) - 1, base: int = 31) -> Colum
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
+        lambda acc, ch: (acc * 31 + F.ascii(ch)) % ((1 << 31) - 1),
     )
 
 

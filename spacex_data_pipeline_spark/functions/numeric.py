@@ -80,7 +80,7 @@ def nullif(col: Column, value: Column) -> Column:
     return F.when(col == value, F.lit(None)).otherwise(col)
 
 
-def pct_rate(numer: Column, denom: Column, scale: int = 2) -> Column:
-    """``round(100.0 * numer / nullif(denom, 0), scale)`` — the reference's
+def pct_rate(numer: Column, denom: Column) -> Column:
+    """``round(100.0 * numer / nullif(denom, 0), 2)`` — the reference's
     success-rate expression with its divide-by-zero guard."""
-    return F.round(F.lit(100.0) * numer / nullif(denom, F.lit(0)), scale)
+    return F.round(F.lit(100.0) * numer / nullif(denom, F.lit(0)), 2)

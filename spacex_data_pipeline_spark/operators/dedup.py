@@ -35,6 +35,12 @@ from ..functions.hashing import (
     shingles_from_words,
 )
 
+# Word-shingle size of the posting list, the pair generators and the
+# shared passes built on it.
+SHINGLE_K = 3
+# Word n-gram size of the benchmark-contamination check, exact and Bloom.
+CONTAMINATION_K = 5
+
 
 def materialize(df: DataFrame) -> DataFrame:
     """Materialize an intermediate a plan references many times:
@@ -79,8 +85,6 @@ def exact_dedup_rows(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
 
 def line_dedup_flags(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     two_level: bool = False,
     scope_col: str | None = None,
     with_norm: bool = False,
@@ -133,10 +137,10 @@ def line_dedup_flags(
     groups on xxhash64(norm) longs while a SQL oracle groups on the
     normalized string — identical modulo 64-bit collisions (~2^-64).
     """
-    carry = [F.col(id_col)] + ([F.col(scope_col)] if scope_col else [])
+    carry = [F.col("doc_id")] + ([F.col(scope_col)] if scope_col else [])
     lines = docs.select(
         *carry,
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "line"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("line_no", "line"),
     )
     norm = F.trim(F.regexp_replace(F.lower(F.col("line")), r"\s+", " "))
     nb_key = (
@@ -148,7 +152,7 @@ def line_dedup_flags(
         .withColumn(
             "__k",
             F.when(
-                F.col("__blank"), F.xxhash64(F.col(id_col), F.col("line_no"))
+                F.col("__blank"), F.xxhash64(F.col("doc_id"), F.col("line_no"))
             ).otherwise(nb_key),
         )
     )
@@ -164,18 +168,18 @@ def line_dedup_flags(
         winners = (
             lines.filter(~F.col("__blank"))
             .groupBy("__k")
-            .agg(F.min(F.struct(id_col, "line_no")).alias("__w"))
+            .agg(F.min(F.struct("doc_id", "line_no")).alias("__w"))
         )
         return _out(
             lines.join(winners, "__k", "left")
             .withColumn(
                 "keep",
                 F.col("__blank")
-                | (F.struct(F.col(id_col), F.col("line_no")) == F.col("__w")),
+                | (F.struct(F.col("doc_id"), F.col("line_no")) == F.col("__w")),
             )
             .drop("__k", "__w")
         )
-    w = Window.partitionBy("__k").orderBy(id_col, "line_no")
+    w = Window.partitionBy("__k").orderBy("doc_id", "line_no")
     return _out(
         lines.withColumn(
             "keep", F.col("__blank") | (F.row_number().over(w) == 1)
@@ -183,9 +187,7 @@ def line_dedup_flags(
     )
 
 
-def line_dedup_docs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def line_dedup_docs(docs: DataFrame) -> DataFrame:
     """Reassembled line-deduplicated corpus: every doc survives, with its
     duplicate lines removed and the remainder rejoined in original order.
 
@@ -198,9 +200,9 @@ def line_dedup_docs(
     CONTENT lines (blank lines are always kept as structure, so
     ``n_kept > 0`` alone cannot tell an emptied doc from a live one —
     ADVICE r6: filter training corpora on n_kept_nonblank > 0)."""
-    lines = line_dedup_flags(docs, id_col, text_col, with_norm=True)
+    lines = line_dedup_flags(docs, with_norm=True)
     kept_struct = F.when(F.col("keep"), F.struct("line_no", "line"))
-    return lines.groupBy(id_col).agg(
+    return lines.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(F.col("keep").cast("long")).alias("n_kept"),
         F.sum(
@@ -228,40 +230,37 @@ def shingle_docs(docs: DataFrame, id_col: str, text_col: str, k: int = 3) -> Dat
     )
 
 
-def shingle_hash_docs(docs: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(id, shingle-hash) pairs with NO string construction: the k word
-    columns feed ``xxhash64`` directly (multi-arg), skipping concat and
-    array_distinct entirely. Duplicates are kept — min/bit-vote aggregation
-    downstream is multiset-safe for min (min(set) == min(multiset)).
+def shingle_hash_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, shingle-hash) pairs with NO string construction: the
+    ``SHINGLE_K`` word columns feed ``xxhash64`` directly (multi-arg),
+    skipping concat and array_distinct entirely. Duplicates are kept —
+    min/bit-vote aggregation downstream is multiset-safe for min
+    (min(set) == min(multiset)).
     The fast path for MinHash; n-gram Jaccard keeps string shingles because
     its oracle joins on shingle text.
 
-    Contract: docs with fewer than k words produce NO shingles and are
-    invisible to MinHash candidacy — sub-k-word near-dup detection is
-    degenerate anyway; exact_dedup_* catches identical tiny docs."""
+    Contract: docs with fewer than ``SHINGLE_K`` words produce NO
+    shingles and are invisible to MinHash candidacy — sub-k-word near-dup
+    detection is degenerate anyway; exact_dedup_* catches identical tiny
+    docs."""
     toks = docs.select(
         F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__words")
     )
     w = F.col("__words")
-    pos = toks.filter(F.size(w) >= k).select(
+    pos = toks.filter(F.size(w) >= SHINGLE_K).select(
         F.col(id_col),
         w,
-        F.explode(F.sequence(F.lit(1), F.size(w) - (k - 1))).alias("__i"),
+        F.explode(F.sequence(F.lit(1), F.size(w) - (SHINGLE_K - 1))).alias("__i"),
     )
     return pos.select(
         F.col(id_col),
         F.xxhash64(
-            *[F.element_at(F.col("__words"), F.col("__i") + j) for j in range(k)]
+            *[F.element_at(F.col("__words"), F.col("__i") + j) for j in range(SHINGLE_K)]
         ).alias("h"),
     )
 
 
-def duplicate_ngram_spans(
-    docs: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicate_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """Substring-level exact-duplicate statistics: for every document,
     how much of it is covered by token n-grams that occur MORE THAN ONCE
     anywhere in the corpus (including repeats inside the same document).
@@ -299,16 +298,16 @@ def duplicate_ngram_spans(
     from ..functions.numeric import pct_rate
     from .text import tokens
 
-    t = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-    base = materialize(t.select(id_col, F.size("__toks").alias("n_tokens"), "__toks"))
+    t = docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
+    base = materialize(t.select("doc_id", F.size("__toks").alias("n_tokens"), "__toks"))
     pos = base.filter(F.col("n_tokens") >= n).select(
-        F.col(id_col),
+        F.col("doc_id"),
         "__toks",
         F.explode(F.sequence(F.lit(1), F.col("n_tokens") - (n - 1))).alias("start"),
     )
     grams = materialize(
         pos.select(
-            F.col(id_col),
+            F.col("doc_id"),
             "start",
             F.xxhash64(
                 *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(n)]
@@ -317,28 +316,28 @@ def duplicate_ngram_spans(
     )
     cnt = grams.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
     dup = grams.join(cnt.filter(F.col("c") > 1).select("h"), "h")
-    ndup = dup.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_dup_grams"))
+    ndup = dup.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_dup_grams"))
     cov = (
         dup.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.sequence(F.col("start"), F.col("start") + F.lit(n - 1))
             ).alias("p"),
         )
         .distinct()
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_dup_tokens"))
     )
     return (
         base.select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.greatest(F.col("n_tokens") - (n - 1), F.lit(0)).alias("n_grams"),
         )
-        .join(ndup, id_col, "left")
-        .join(cov, id_col, "left")
+        .join(ndup, "doc_id", "left")
+        .join(cov, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "n_grams",
             F.coalesce("n_dup_grams", F.lit(0).cast("long")).alias("n_dup_grams"),
@@ -348,15 +347,10 @@ def duplicate_ngram_spans(
     )
 
 
-def duplicate_span_docs(
-    docs: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicate_span_docs(docs: DataFrame) -> DataFrame:
     """Exact-substring dedup SURGERY (the removal pass
     duplicate_ngram_spans budgets for): every corpus-duplicated token
-    n-gram keeps its FIRST occurrence — the globally minimal
+    8-gram keeps its FIRST occurrence — the globally minimal
     (doc, start) owner, same ownership rule as line dedup — and every
     token covered by a NON-owner duplicated gram is removed; survivors
     reassemble in original order. Deterministic: ownership is a pure
@@ -382,49 +376,47 @@ def duplicate_span_docs(
     serves all three (same trade as the gram table below)."""
     from .text import tokens
 
-    t = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-    base = materialize(t.select(id_col, F.size("__toks").alias("n_tokens"), "__toks"))
-    pos = base.filter(F.col("n_tokens") >= n).select(
-        F.col(id_col),
+    t = docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
+    base = materialize(t.select("doc_id", F.size("__toks").alias("n_tokens"), "__toks"))
+    pos = base.filter(F.col("n_tokens") >= 8).select(
+        F.col("doc_id"),
         "__toks",
-        F.explode(F.sequence(F.lit(1), F.col("n_tokens") - (n - 1))).alias("start"),
+        F.explode(F.sequence(F.lit(1), F.col("n_tokens") - 7)).alias("start"),
     )
     grams = materialize(
         pos.select(
-            F.col(id_col),
+            F.col("doc_id"),
             "start",
             F.xxhash64(
-                *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(n)]
+                *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(8)]
             ).alias("h"),
         )
     )
     stats = grams.groupBy("h").agg(
         F.count(F.lit(1)).alias("c"),
-        F.min(F.struct(F.col(id_col).alias("d"), F.col("start").alias("s"))).alias(
+        F.min(F.struct(F.col("doc_id").alias("d"), F.col("start").alias("s"))).alias(
             "__own"
         ),
     )
     nonowner = (
         grams.join(stats.filter(F.col("c") > 1), "h")
         .filter(
-            (F.col(id_col) != F.col("__own.d")) | (F.col("start") != F.col("__own.s"))
+            (F.col("doc_id") != F.col("__own.d")) | (F.col("start") != F.col("__own.s"))
         )
-        .select(id_col, "start")
+        .select("doc_id", "start")
     )
     removed = (
         nonowner.select(
-            F.col(id_col),
-            F.explode(
-                F.sequence(F.col("start"), F.col("start") + F.lit(n - 1))
-            ).alias("p"),
+            F.col("doc_id"),
+            F.explode(F.sequence(F.col("start"), F.col("start") + F.lit(7))).alias("p"),
         )
         .distinct()
     )
     toks_pos = base.select(
-        F.col(id_col), F.posexplode("__toks").alias("p0", "tok")
-    ).select(F.col(id_col), (F.col("p0") + 1).alias("p"), "tok")
-    kept = toks_pos.join(removed.withColumn("__rm", F.lit(1)), [id_col, "p"], "left")
-    rebuilt = kept.groupBy(id_col).agg(
+        F.col("doc_id"), F.posexplode("__toks").alias("p0", "tok")
+    ).select(F.col("doc_id"), (F.col("p0") + 1).alias("p"), "tok")
+    kept = toks_pos.join(removed.withColumn("__rm", F.lit(1)), ["doc_id", "p"], "left")
+    rebuilt = kept.groupBy("doc_id").agg(
         F.concat_ws(
             " ",
             F.transform(
@@ -439,10 +431,10 @@ def duplicate_span_docs(
         F.sum(F.col("__rm").cast("long")).alias("__n_removed"),
     )
     return (
-        base.select(id_col, "n_tokens")
-        .join(rebuilt, id_col, "left")
+        base.select("doc_id", "n_tokens")
+        .join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.coalesce("__n_removed", F.lit(0).cast("long")).alias("n_removed_tokens"),
             F.coalesce("text_dedup", F.lit("")).alias("text_dedup"),
@@ -450,41 +442,33 @@ def duplicate_span_docs(
     )
 
 
-def shingle_postings(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def shingle_postings(docs: DataFrame) -> DataFrame:
     """The (id, shingle-hash) posting list both set-similarity joins run
-    on: normalize → split → k-word shingles → 8-byte xxhash64 → explode,
-    MATERIALIZED (see :func:`materialize`) because every consumer plan
-    references it 4-5 times (self-join sides, size joins, hot-shingle
-    scan) and alias projections defeat exchange reuse. Exposed as its
-    own operator so a sweep that runs several shingle-based audits over
-    the SAME corpus (Jaccard pairs, containment, components, the
-    composed reports) builds it ONCE and passes it via the generators'
-    ``postings=`` parameter — at 100 TB the tokenize+shingle scan is a
-    full-corpus text pass, and an audit sweep has no reason to pay it
-    per-report. Join on the hash, never the string: Jaccard/containment
+    on: normalize → split → ``SHINGLE_K``-word shingles → 8-byte
+    xxhash64 → explode, MATERIALIZED (see :func:`materialize`) because
+    every consumer plan references it 4-5 times (self-join sides, size
+    joins, hot-shingle scan) and alias projections defeat exchange reuse.
+    Exposed as its own operator so a sweep that runs several
+    shingle-based audits over the SAME corpus (Jaccard pairs,
+    containment, components, the composed reports) builds it ONCE and
+    passes it via the generators' ``postings=`` parameter — at 100 TB the
+    tokenize+shingle scan is a full-corpus text pass, and an audit sweep
+    has no reason to pay it per-report. Join on the hash, never the string: Jaccard/containment
     need only COUNTS of shared shingles, long keys shrink the shuffle
     ~4×, and birthday collision odds at 64 bits are ~1e-9 at sf0.1."""
     toks = docs.select(
-        F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__words")
+        F.col("doc_id"), F.split(normalize_text(F.col("text")), " ").alias("__words")
     )
     return materialize(
         toks.select(
-            F.col(id_col),
-            F.explode(shingle_hashes_from_words(F.col("__words"), k)).alias("h"),
+            F.col("doc_id"),
+            F.explode(shingle_hashes_from_words(F.col("__words"), SHINGLE_K)).alias("h"),
         )
     )
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
     threshold: float = 0.2,
     max_shingle_df: int | None = None,
     postings: DataFrame | None = None,
@@ -510,7 +494,7 @@ def ngram_jaccard_pairs(
     oracle-checked mode).
 
     ``postings``: a pre-built :func:`shingle_postings` table (columns
-    ``(id_col, h)``, already materialized) to share ONE tokenize+shingle
+    ``(doc_id, h)``, already materialized) to share ONE tokenize+shingle
     corpus pass across several consumers in a sweep; None (default)
     builds it here. Either way the posting list is materialized once —
     the plan references it four times (self-join sides + size joins,
@@ -523,7 +507,7 @@ def ngram_jaccard_pairs(
     swap a long cluster run makes.
 
     ``sizes``: a pre-aggregated per-doc set-size table (columns
-    ``(id_col, n)``, one row per doc with ≥1 shingle) to skip the two
+    ``(doc_id, n)``, one row per doc with ≥1 shingle) to skip the two
     size aggregations this plan otherwise runs over the FULL posting
     list (the na/nb join sides alias differently, so Spark's exchange
     reuse never merges them — the r14 pass measured both aggregates
@@ -534,10 +518,10 @@ def ngram_jaccard_pairs(
     sh = (
         postings
         if postings is not None
-        else shingle_postings(docs, id_col, text_col, k)
+        else shingle_postings(docs)
     )
     if sizes is None:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     join_side = sh
     if max_shingle_df is not None:
         hot = (
@@ -552,15 +536,13 @@ def ngram_jaccard_pairs(
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("nb"))
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     return (
         pairs.join(na, "doc_a")
         .join(nb, "doc_b")
@@ -576,9 +558,6 @@ def ngram_jaccard_pairs(
 
 def containment_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
     threshold_pct: int = 80,
     min_shingles: int = 5,
     max_shingle_df: int | None = None,
@@ -606,17 +585,17 @@ def containment_pairs(
     a LOWER bound for pairs that shared hot shingles — the
     boilerplate-match pairs a containment audit wants to ignore anyway;
     default None = exact, the oracle-checked mode). ``sizes``: pre-built
-    per-doc set sizes ``(id_col, n)`` — same sharing contract as
+    per-doc set sizes ``(doc_id, n)`` — same sharing contract as
     :func:`ngram_jaccard_pairs`; None derives them here."""
     from ..functions.numeric import pct_rate
 
     sh = (
         postings
         if postings is not None
-        else shingle_postings(docs, id_col, text_col, k)
+        else shingle_postings(docs)
     )
     if sizes is None:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     join_side = sh
     if max_shingle_df is not None:
         hot = (
@@ -626,14 +605,14 @@ def containment_pairs(
             .select("h")
         )
         join_side = sh.join(F.broadcast(hot), "h", "left_anti")
-    a = join_side.select(F.col(id_col).alias("doc_a"), F.col("h").alias("a_h"))
-    b = join_side.select(F.col(id_col).alias("doc_b"), F.col("h").alias("b_h"))
+    a = join_side.select(F.col("doc_id").alias("doc_a"), F.col("h").alias("a_h"))
+    b = join_side.select(F.col("doc_id").alias("doc_b"), F.col("h").alias("b_h"))
     pairs = (
         a.join(b, (F.col("a_h") == F.col("b_h")) & (F.col("doc_a") != F.col("doc_b")))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("a_size"))
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("a_size"))
     return (
         pairs.join(na, "doc_a")
         .filter(
@@ -652,9 +631,6 @@ def containment_pairs(
 
 def df_cap_loss_curve(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
     threshold: float = 0.2,
     caps: tuple[int, ...] = (4, 8, 16, 32, 64),
     postings: DataFrame | None = None,
@@ -678,19 +654,19 @@ def df_cap_loss_curve(
     sh = (
         postings
         if postings is not None
-        else shingle_postings(docs, id_col, text_col, k)
+        else shingle_postings(docs)
     )
     dfh = sh.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("df"))
     shd = sh.join(dfh, "h")
-    rhs = shd.select(F.col("h").alias("h2"), F.col(id_col).alias("db"))
+    rhs = shd.select(F.col("h").alias("h2"), F.col("doc_id").alias("db"))
     p = (
-        shd.join(rhs, (F.col("h") == F.col("h2")) & (F.col(id_col) < F.col("db")))
-        .groupBy(F.col(id_col).alias("da"), "db")
+        shd.join(rhs, (F.col("h") == F.col("h2")) & (F.col("doc_id") < F.col("db")))
+        .groupBy(F.col("doc_id").alias("da"), "db")
         .agg(F.count(F.lit(1)).alias("inter"), F.min("df").alias("mindf"))
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    na = sizes.select(F.col(id_col).alias("da"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("db"), F.col("n").alias("nb"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    na = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
     jp = (
         p.join(na, "da")
         .join(nb, "db")
@@ -750,9 +726,6 @@ def containment_dropped_ids(cont: DataFrame) -> DataFrame:
 
 def jaccard_pairs_prefix_filtered(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
     threshold: float = 0.2,
     postings: DataFrame | None = None,
 ) -> DataFrame:
@@ -790,22 +763,22 @@ def jaccard_pairs_prefix_filtered(
         sh = postings
     else:
         toks = docs.select(
-            F.col(id_col),
-            F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
+            F.col("doc_id"),
+            F.split(normalize_text(F.col("text")), " ").alias("__words"),
         )
         sh = materialize(
             toks.select(
-                F.col(id_col),
-                F.explode(shingle_hashes_from_words(F.col("__words"), k)).alias("h"),
+                F.col("doc_id"),
+                F.explode(shingle_hashes_from_words(F.col("__words"), SHINGLE_K)).alias("h"),
             )
         )
     df_tbl = sh.groupBy("h").agg(F.count(F.lit(1)).alias("__df"))
-    w_rank = Window.partitionBy(id_col).orderBy("__df", "h")
-    w_size = Window.partitionBy(id_col)
+    w_rank = Window.partitionBy("doc_id").orderBy("__df", "h")
+    w_size = Window.partitionBy("doc_id")
     prefix = (
         sh.join(df_tbl, "h")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "h",
             F.row_number().over(w_rank).alias("__r"),
             F.count(F.lit(1)).over(w_size).alias("__n"),
@@ -814,28 +787,26 @@ def jaccard_pairs_prefix_filtered(
             F.col("__r")
             <= F.col("__n") - F.floor(F.lit(threshold) * F.col("__n")) + 1
         )
-        .select(id_col, "h")
+        .select("doc_id", "h")
     )
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.h") == F.col("b.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sets = sh.groupBy(id_col).agg(
+    sets = sh.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("h")).alias("hs"), F.count(F.lit(1)).alias("n")
     )
     sa = sets.select(
-        F.col(id_col).alias("doc_a"), F.col("hs").alias("__ha"), F.col("n").alias("na")
+        F.col("doc_id").alias("doc_a"), F.col("hs").alias("__ha"), F.col("n").alias("na")
     )
     sb = sets.select(
-        F.col(id_col).alias("doc_b"), F.col("hs").alias("__hb"), F.col("n").alias("nb")
+        F.col("doc_id").alias("doc_b"), F.col("hs").alias("__hb"), F.col("n").alias("nb")
     )
     inter = F.size(F.array_intersect("__ha", "__hb"))
     return (
@@ -852,11 +823,6 @@ def jaccard_pairs_prefix_filtered(
 
 def minhash_lsh_candidates(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 32,
     threshold: float = 0.2,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -888,10 +854,10 @@ def minhash_lsh_candidates(
     # Shingles are hashed straight from the word columns (no string
     # building); the i-th hash family re-hashes only the resulting 8-byte
     # long (seeded xxhash64) — variable-length string hashing per family
-    # would cost num_hashes full text passes per shingle. (Affine a*h+b
+    # would cost 64 full text passes per shingle. (Affine a*h+b
     # mixing would be cheaper still, but wrapping long multiply throws
     # under Spark 4's ANSI mode.)
-    sh = shingle_hash_docs(docs, id_col, text_col, k)
+    sh = shingle_hash_docs(docs, "doc_id", "text")
     # Materialize the signature table ONCE (localCheckpoint, same pattern
     # as connected_components' edge list): the plan references sigs three
     # times (band explode + the two per-side re-attach joins), and the
@@ -903,27 +869,26 @@ def minhash_lsh_candidates(
     # at 100 TB this is the difference between one corpus-wide shingle
     # pass and three. Measured 2.54 s → 2.21 s at sf0.1.
     sigs = (
-        sh.groupBy(id_col)
+        sh.groupBy("doc_id")
         .agg(
             *[
                 F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"h{i}")
-                for i in range(num_hashes)
+                for i in range(64)
             ]
         )
         .select(
-            F.col(id_col),
-            F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"),
+            F.col("doc_id"),
+            F.array(*[F.col(f"h{i}") for i in range(64)]).alias("sig"),
         )
     )
     sigs = materialize(sigs)
-    rows_per_band = num_hashes // bands
     # Band rows carry ONLY (id, band, key) — the 64-long signature never
     # rides through the docs×bands self-join shuffle (512 B/row saved);
     # signatures re-attach to the (few) deduped candidate pairs afterward.
     banded = sigs.select(
-        id_col,
-        F.explode(band_keys(F.col("sig"), bands, rows_per_band)).alias("bk"),
-    ).select(id_col, "bk.band", "bk.key")
+        "doc_id",
+        F.explode(band_keys(F.col("sig"), 32, 2)).alias("bk"),
+    ).select("doc_id", "bk.band", "bk.key")
     if max_bucket_size is not None:
         wb = Window.partitionBy("band", "key")
         banded = (
@@ -937,18 +902,18 @@ def minhash_lsh_candidates(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
     cand = pair_ids.join(
-        sigs.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a")), "doc_a"
+        sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")), "doc_a"
     ).join(
-        sigs.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b")), "doc_b"
+        sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")), "doc_b"
     )
     est = F.aggregate(
         F.zip_with(
@@ -958,7 +923,7 @@ def minhash_lsh_candidates(
         ),
         F.lit(0),
         lambda acc, v: acc + v,
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(64.0)
     return (
         cand.withColumn("est_jaccard", est)
         .filter(F.col("est_jaccard") >= threshold)
@@ -966,9 +931,7 @@ def minhash_lsh_candidates(
     )
 
 
-def simhash_fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per doc via bit-vote hash aggregation.
 
     explode shingles → xxhash64 → for each bit, vote +1/-1 → groupBy(doc)
@@ -977,8 +940,8 @@ def simhash_fingerprints(
     for banded Hamming search).
     """
     h = F.xxhash64(F.col("shingle"))
-    sh = shingle_docs(docs, id_col, text_col, k).withColumn("h", h)
-    votes = sh.groupBy(id_col).agg(
+    sh = shingle_docs(docs, "doc_id", "text", SHINGLE_K).withColumn("h", h)
+    votes = sh.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -989,7 +952,7 @@ def simhash_fingerprints(
     fp = F.lit(0).cast("long")
     for b in range(63):  # bit 63 left clear: keeps fingerprints non-negative
         fp = fp + F.when(F.col(f"v{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-    out = votes.select(F.col(id_col), fp.alias("simhash"))
+    out = votes.select(F.col("doc_id"), fp.alias("simhash"))
     for blk in range(4):
         out = out.withColumn(
             f"block{blk}",
@@ -1000,9 +963,6 @@ def simhash_fingerprints(
 
 def simhash_near_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 16,
     fingerprints: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, candidates via block
@@ -1019,15 +979,15 @@ def simhash_near_pairs(
     fps = (
         fingerprints
         if fingerprints is not None
-        else materialize(simhash_fingerprints(docs, id_col, text_col))
+        else materialize(simhash_fingerprints(docs))
     )
     pairs = None
     for blk in range(4):
         a = fps.select(
-            F.col(id_col).alias("doc_a"), F.col("simhash").alias("sim_a"), F.col(f"block{blk}").alias("bk")
+            F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), F.col(f"block{blk}").alias("bk")
         )
         b = fps.select(
-            F.col(id_col).alias("doc_b"), F.col("simhash").alias("sim_b"), F.col(f"block{blk}").alias("bk")
+            F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), F.col(f"block{blk}").alias("bk")
         )
         p = a.join(b, "bk").filter(F.col("doc_a") < F.col("doc_b")).drop("bk")
         pairs = p if pairs is None else pairs.union(p)
@@ -1035,7 +995,7 @@ def simhash_near_pairs(
     return (
         pairs.dropDuplicates(["doc_a", "doc_b"])
         .withColumn("hamming", dist.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 16)
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -1151,18 +1111,12 @@ def connected_components(
     )
 
 
-def contamination_flags(
-    train: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
+def contamination_flags(train: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag every training doc that shares at
     least one word-k-gram with the held-out benchmark/eval set — the
     overlap-removal step every serious LLM training pipeline runs before
     training (the GPT-3 paper's 13-gram filter is this op at k=13;
-    k defaults lower because the fixture docs are short).
+    ``CONTAMINATION_K`` is lower because the fixture docs are short).
 
     Returns (id, contaminated BOOLEAN) for every train doc — a flag, not
     a filtered table, so callers can audit WHAT would drop before
@@ -1177,16 +1131,20 @@ def contamination_flags(
     shuffle saving doesn't apply and exact string equality keeps the
     oracle parity non-probabilistic (contrast ngram_jaccard_pairs).
     """
-    bsh = shingle_docs(benchmark, id_col, text_col, k).select("shingle").distinct()
-    tsh = shingle_docs(train, id_col, text_col, k)
+    bsh = (
+        shingle_docs(benchmark, "doc_id", "text", CONTAMINATION_K)
+        .select("shingle")
+        .distinct()
+    )
+    tsh = shingle_docs(train, "doc_id", "text", CONTAMINATION_K)
     hits = (
         tsh.join(F.broadcast(bsh), "shingle", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("__hit", F.lit(True))
     )
-    return train.select(id_col).join(hits, id_col, "left").select(
-        F.col(id_col),
+    return train.select("doc_id").join(hits, "doc_id", "left").select(
+        F.col("doc_id"),
         F.coalesce(F.col("__hit"), F.lit(False)).alias("contaminated"),
     )
 
@@ -1265,9 +1223,6 @@ def bloom_might_contain(key_col: str, m_bits: int, k_hashes: int):
 def contamination_flags_bloom(
     train: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
     m_bits: int = 1 << 17,
     k_hashes: int = 5,
 ) -> DataFrame:
@@ -1289,20 +1244,24 @@ def contamination_flags_bloom(
       shuffled semi join whose probe side the bloom has already cut by
       ~100×.
     """
-    bsh = shingle_docs(benchmark, id_col, text_col, k).select("shingle").distinct()
+    bsh = (
+        shingle_docs(benchmark, "doc_id", "text", CONTAMINATION_K)
+        .select("shingle")
+        .distinct()
+    )
     bloom = bloom_build(bsh, "shingle", m_bits, k_hashes)
-    tsh = shingle_docs(train, id_col, text_col, k)
+    tsh = shingle_docs(train, "doc_id", "text", CONTAMINATION_K)
     candidates = tsh.join(F.broadcast(bloom)).filter(
         bloom_might_contain("shingle", m_bits, k_hashes)
     )
     hits = (
         candidates.join(F.broadcast(bsh), "shingle", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("__hit", F.lit(True))
     )
-    return train.select(id_col).join(hits, id_col, "left").select(
-        F.col(id_col),
+    return train.select("doc_id").join(hits, "doc_id", "left").select(
+        F.col("doc_id"),
         F.coalesce(F.col("__hit"), F.lit(False)).alias("contaminated"),
     )
 
@@ -1341,8 +1300,6 @@ def embedding_cosine_pairs(
 
 def embedding_cosine_pairs_blocked(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     blocks: int = 16,
 ) -> DataFrame:
@@ -1392,9 +1349,9 @@ def embedding_cosine_pairs_blocked(
 
     b_ = blocks
     e = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(b_)).cast("int").alias("g"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(b_)).cast("int").alias("g"),
     )
     # replicate each row into every task (min(g,k), max(g,k)), k = 0..B-1
     tasks = F.transform(
@@ -1441,8 +1398,8 @@ def embedding_cosine_pairs_blocked(
     cand = r.groupBy("ti", "tj").applyInPandas(
         tile_candidates, schema="id_a long, id_b long"
     )
-    va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    va = embeddings.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
+    vb = embeddings.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -1454,8 +1411,6 @@ def embedding_cosine_pairs_blocked(
 
 def embedding_cosine_pairs_ivf(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_centroids: int = 16,
 ) -> DataFrame:
@@ -1480,7 +1435,7 @@ def embedding_cosine_pairs_ivf(
 
     from .similarity import cosine_sim, ivf_assign_cells
 
-    assigned, _ = ivf_assign_cells(embeddings, n_centroids, id_col, vec_col)
+    assigned, _ = ivf_assign_cells(embeddings, n_centroids)
     margin = threshold - 1e-6
 
     def cell_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1490,8 +1445,8 @@ def embedding_cosine_pairs_ivf(
         )
         if len(pdf) < 2:
             return empty
-        ids = pdf[id_col].to_numpy()
-        mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+        ids = pdf["vec_id"].to_numpy()
+        mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
         with np.errstate(invalid="ignore", divide="ignore"):
             # zero-norm rows → NaN sims → no candidates, matching the
             # exact path's NaN exclusion
@@ -1506,8 +1461,8 @@ def embedding_cosine_pairs_ivf(
     cand = assigned.groupBy("cell").applyInPandas(
         cell_tile, schema="id_a long, id_b long"
     )
-    va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    va = embeddings.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
+    vb = embeddings.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")

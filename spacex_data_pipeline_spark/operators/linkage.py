@@ -36,6 +36,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Blocking q-gram length and the largest edit distance a pair verifies at,
+# shared by the matcher and its blocking report.
+QGRAM = 3
+MAX_DIST = 2
+
 
 def positional_qgram_keys(name: Column, q: int = 3) -> Column:
     """``gram:pos`` blocking keys of a string (empty array if shorter
@@ -109,17 +114,15 @@ def blocked_fuzzy_pairs(
     records: DataFrame,
     key_col: str,
     name_col: str,
-    q: int = 3,
-    max_dist: int = 2,
     max_gram_df: int = 100,
 ) -> DataFrame:
     """Matched record pairs ``(a_key, b_key, a_name, b_name, dist)``
     within ``records``, canonicalized by ``a_key < b_key``, with
-    ``levenshtein(a_name, b_name) ≤ max_dist``, found via positional
+    ``levenshtein(a_name, b_name) ≤ MAX_DIST``, found via positional
     q-gram blocking (module docstring). Names are compared
     lowercased/trimmed."""
     return _blocking_stages(
-        records, key_col, name_col, q, max_dist, max_gram_df
+        records, key_col, name_col, QGRAM, MAX_DIST, max_gram_df
     )["verified"]
 
 
@@ -127,21 +130,20 @@ def blocking_report(
     records: DataFrame,
     key_col: str,
     name_col: str,
-    q: int = 3,
-    max_dist: int = 2,
     max_gram_df: int = 100,
 ) -> DataFrame:
     """One-row blocking-efficiency report — the ER counterpart of
     shingle_df_stats' LSH observability: records in, distinct gram keys
     kept, hot keys dropped by the df cap, candidate pairs generated,
-    pairs that verify at ≤ max_dist, and the verify precision (the
+    pairs that verify at ≤ ``MAX_DIST``, and the verify precision (the
     fraction of candidate comparisons that were worth paying). Read
-    before tuning q / max_gram_df: precision near 100% with few matches
-    means blocking is too tight (recall risk); precision near 0% means
-    the cap or q is too loose and the join is burning Levenshtein calls."""
+    before tuning ``QGRAM`` / max_gram_df: precision near 100% with few
+    matches means blocking is too tight (recall risk); precision near 0%
+    means the cap or q is too loose and the join is burning Levenshtein
+    calls."""
     from ..functions.numeric import pct_rate
 
-    st = _blocking_stages(records, key_col, name_col, q, max_dist, max_gram_df)
+    st = _blocking_stages(records, key_col, name_col, QGRAM, MAX_DIST, max_gram_df)
     n_rec = st["names"].agg(F.count(F.lit(1)).alias("n_records"))
     n_keys = st["cold"].agg(
         F.count_distinct(F.col("gk")).alias("n_gram_keys")

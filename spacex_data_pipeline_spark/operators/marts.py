@@ -49,11 +49,10 @@ def by_period_conditional_rollup(
     fact: DataFrame,
     ts_col: str,
     success: Column,
-    period_alias: str = "year",
 ) -> DataFrame:
     """Generic fct_*_by_year: yearly conditional counts + null-safe rate."""
     return (
-        fact.groupBy(F.year(F.col(ts_col)).cast("int").alias(period_alias))
+        fact.groupBy(F.year(F.col(ts_col)).cast("int").alias("year"))
         .agg(*conditional_counts(success))
         .withColumn(
             "success_rate_pct",

@@ -80,8 +80,8 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_image_plan(media: DataFrame, max_side: int = 64) -> DataFrame:
-    """Image-resize plumbing: cap the longer side at ``max_side``
+def resize_image_plan(media: DataFrame) -> DataFrame:
+    """Image-resize plumbing: cap the longer side at 64 px
     preserving aspect ratio (the standard thumbnail/training-input
     normalization), via the same Arrow ``mapInPandas`` batch shape a
     Pillow ``Image.resize`` would run in.
@@ -89,7 +89,7 @@ def resize_image_plan(media: DataFrame, max_side: int = 64) -> DataFrame:
     The pixel work is STUBBED like decode_image_meta (no imaging libs in
     this container): source dims come from the same deterministic
     byte_len arithmetic, the scale rule is real —
-        scale      = min(1, max_side / max(w, h))
+        scale      = min(1, 64 / max(w, h))
         out_w/out_h = max(1, floor(w·scale)) / max(1, floor(h·scale))
         out_bytes  = out_w · out_h  (1 byte/px fake payload)
     — and the emitted payload is a deterministic out_bytes-long slice so
@@ -105,14 +105,10 @@ def resize_image_plan(media: DataFrame, max_side: int = 64) -> DataFrame:
             width = (blen % 640 + 1).astype("int64")
             height = (blen % 480 + 1).astype("int64")
             side = width.where(width >= height, height)
-            # integer floor(w*max_side/side), exact — no float rounding
+            # integer floor(w*64/side), exact — no float rounding
             # to mirror in SQL; no-op when already within bounds
-            out_w = (width * max_side // side).clip(lower=1).where(
-                side > max_side, width
-            )
-            out_h = (height * max_side // side).clip(lower=1).where(
-                side > max_side, height
-            )
+            out_w = (width * 64 // side).clip(lower=1).where(side > 64, width)
+            out_h = (height * 64 // side).clip(lower=1).where(side > 64, height)
             out_bytes = (out_w * out_h).astype("int64")
             yield pd.DataFrame(
                 {
@@ -132,9 +128,9 @@ def resize_image_plan(media: DataFrame, max_side: int = 64) -> DataFrame:
     return media.mapInPandas(resize, schema=RESIZED_SCHEMA)
 
 
-def extract_byte_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
+def extract_byte_features(media: DataFrame) -> DataFrame:
     """REAL feature extraction over the payload bytes (not a stub): an
-    L1-normalized ``n_bins``-bin byte-value histogram per payload — the
+    L1-normalized 16-bin byte-value histogram per payload — the
     cheap content signature used for corruption triage, format
     clustering, and near-dup blocking of binaries before any expensive
     decode. numpy ``frombuffer``+``bincount`` per Arrow batch — the
@@ -142,10 +138,10 @@ def extract_byte_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
     model swapped in for the histogram. Returns
     (doc_id, features array<double>) — feed it straight into the
     embedding near-dup / similarity operators. Map-only; features
-    (n_bins doubles) shuffle downstream, payloads never do."""
+    (16 doubles) shuffle downstream, payloads never do."""
     import numpy as np
 
-    width = 256 // n_bins
+    width = 256 // 16  # byte values per bin
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -153,11 +149,9 @@ def extract_byte_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
             for m in pdf["media"]:
                 arr = np.frombuffer(bytes(m), dtype=np.uint8)
                 if len(arr) == 0:
-                    feats.append([0.0] * n_bins)
+                    feats.append([0.0] * 16)
                     continue
-                hist = np.bincount(arr // width, minlength=n_bins).astype(
-                    np.float64
-                )
+                hist = np.bincount(arr // width, minlength=16).astype(np.float64)
                 feats.append(list(hist / hist.sum()))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
 
@@ -166,7 +160,7 @@ def extract_byte_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
     )
 
 
-def frame_sample_plan(media: DataFrame, every_nth: int = 10) -> DataFrame:
+def frame_sample_plan(media: DataFrame) -> DataFrame:
     """Video-frame-sampling plumbing: explode a deterministic frame index
     per payload (fake: one frame per 100 bytes), keep every nth — shows the
     explode-then-filter shape a real ffmpeg-based sampler would use, with
@@ -177,7 +171,7 @@ def frame_sample_plan(media: DataFrame, every_nth: int = 10) -> DataFrame:
             "doc_id",
             F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
         )
-        .filter(F.col("frame_idx") % every_nth == 0)
+        .filter(F.col("frame_idx") % 10 == 0)
     )
 
 
@@ -232,19 +226,12 @@ def dhash56_profile(media: DataFrame) -> DataFrame:
     )
 
 
-def phash_neardup_pairs(
-    hashed: DataFrame,
-    id_col: str = "doc_id",
-    hash_col: str = "phash",
-    max_hamming: int = 10,
-    n_bands: int = 4,
-    band_bits: int = 14,
-) -> DataFrame:
+def phash_neardup_pairs(hashed: DataFrame, max_hamming: int = 10) -> DataFrame:
     """Near-duplicate pairs among perceptual hashes via LSH banding —
     the media twin of the SimHash text path: split each 56-bit hash
     into 4×14-bit bands, bucket-join on (band, value) so only hashes
     agreeing EXACTLY on some band ever meet (a pair within hamming
-    distance d collides on ≥1 band whenever d < n_bands by pigeonhole),
+    distance d collides on ≥1 band whenever d < 4 by pigeonhole),
     then verify the survivors with the exact popcount of the XOR.
     Never all-pairs: the join fans out per bucket, and with real
     near-dup-heavy media the band buckets are what you'd cap (the
@@ -255,21 +242,21 @@ def phash_neardup_pairs(
     (id_a, id_b, hamming) for verified pairs."""
     from .dedup import materialize
 
-    hashed = materialize(hashed.select(id_col, hash_col))
-    mask = (1 << band_bits) - 1
+    hashed = materialize(hashed.select("doc_id", "phash"))
+    mask = (1 << 14) - 1
     b = hashed.select(
-        F.col(id_col).alias("__id"),
-        F.col(hash_col).alias("__h"),
+        F.col("doc_id").alias("__id"),
+        F.col("phash").alias("__h"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(k).alias("bk"),
-                        F.shiftright(F.col(hash_col), band_bits * k)
+                        F.shiftright(F.col("phash"), 14 * k)
                         .bitwiseAND(F.lit(mask))
                         .alias("bv"),
                     )
-                    for k in range(n_bands)
+                    for k in range(4)
                 ]
             )
         ).alias("b"),

@@ -44,12 +44,11 @@ def ranked_per_group(
     partition: Sequence[str],
     order: Sequence[Column],
     n: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
     """Per-group top-n via ``row_number`` window. One shuffle on the
     partition keys; with AQE skew handling for hot groups."""
     w = Window.partitionBy(*partition).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= n)
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
 
 
 def running_total(
@@ -380,7 +379,6 @@ def interval_overlap_join_binned(
     right_start: str,
     right_end: str,
     keys: Sequence[str] = (),
-    bin_seconds: int = 3600,
 ) -> DataFrame:
     """Interval × interval OVERLAP join (closed bounds: overlap iff
     ``l_start <= r_end AND r_start <= l_end``, optional equi keys) via
@@ -398,13 +396,13 @@ def interval_overlap_join_binned(
     bin — always shared by both sides): exactly-once survival for free.
 
     Scale: shuffle moves Σ(left bins) + Σ(right bins) rows on narrow
-    keys; pick ``bin_seconds`` near the median interval length so each
+    keys; the bin is one hour, near the median interval length, so each
     side explodes to O(1) bins. Replication degrades linearly with
     too-small bins, false candidates die in the exact filter with
     too-big bins — neither is quadratic. The interval-side columns are
     renamed before the join (the self-join lineage trap documented in
     range_join_binned) and restored after."""
-    w = F.lit(bin_seconds)
+    w = F.lit(3600)
     ls = F.unix_timestamp(F.col(left_start))
     le = F.unix_timestamp(F.col(left_end))
     lb = left.withColumn("__lbin", F.explode(F.sequence(F.floor(ls / w), F.floor(le / w))))
@@ -449,7 +447,6 @@ def salted_join(
     left_key: str,
     right_key: str,
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-resistant equi-join: salt the (skewed) left side's key into
     ``salt`` sub-keys and replicate the right side across all salt values,
@@ -460,17 +457,9 @@ def salted_join(
     document, a null-ish default id) and you want deterministic layout.
     Cost: right side inflates ×salt — use for dimension-sized right sides.
 
-    Only left-preserving join types are supported: the right side is
-    replicated ×salt, so 'right'/'full'/'right_semi' would emit each
-    unmatched right row once per salt value (null-extended duplicates).
-    For a right-skewed join, swap the sides and call with 'left'.
+    The join is inner: the right side is replicated ×salt, so a join that
+    kept unmatched right rows would emit each once per salt value.
     """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how.lower().replace("_", "") not in {h.replace("_", "") for h in allowed}:
-        raise ValueError(
-            f"salted_join supports left-preserving joins only {sorted(allowed)}, got {how!r}: "
-            "the ×salt right-side replication would duplicate unmatched right rows"
-        )
     l_salted = left.withColumn("__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt)))
     r_salted = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
@@ -478,7 +467,7 @@ def salted_join(
     out = l_salted.join(
         r_salted,
         (l_salted[left_key] == r_salted[right_key]) & (l_salted["__salt"] == r_salted["__salt"]),
-        how,
+        "inner",
     )
     return out.drop("__salt")
 
@@ -527,13 +516,11 @@ def bloom_prefilter_semi_join(
     probe: DataFrame,
     build: DataFrame,
     key: str,
-    m: int = 1 << 16,
-    k: int = 4,
 ) -> DataFrame:
     """LEFT SEMI join with an explicit broadcast Bloom pre-filter: the
-    build side's keys fold into an m-bit word-packed bitmap
+    build side's keys fold into an m = 2^16-bit word-packed bitmap
     (dedup.bloom_build — distributed bit_or assembly, ONE broadcast row
-    of ``map<int, bigint>``), and probe rows failing the k bit tests
+    of ``map<int, bigint>``), and probe rows failing the k = 4 bit tests
     drop BEFORE the join's shuffle. Blooms have no false negatives, so
     the result is EXACTLY ``probe.join(build, key, "left_semi")`` — the
     filter only cuts shuffle volume.
@@ -556,10 +543,10 @@ def bloom_prefilter_semi_join(
     so they cost shuffle bytes, never correctness."""
     from .dedup import bloom_build, bloom_might_contain
 
-    bf = bloom_build(build, key, m_bits=m, k_hashes=k)
+    bf = bloom_build(build, key, m_bits=1 << 16, k_hashes=4)
     pre = (
         probe.crossJoin(F.broadcast(bf))
-        .filter(bloom_might_contain(key, m_bits=m, k_hashes=k))
+        .filter(bloom_might_contain(key, m_bits=1 << 16, k_hashes=4))
         .drop("__bloom")
     )
     return pre.join(build.select(key), key, "left_semi")

@@ -53,9 +53,7 @@ def stratified_sample(
     return df.filter(b < thresh)
 
 
-def shard_and_shuffle(
-    df: DataFrame, key: str, n_shards: int = 8, seed: str = "shuffle"
-) -> DataFrame:
+def shard_and_shuffle(df: DataFrame, key: str, n_shards: int = 8) -> DataFrame:
     """Deterministic global permutation into training shards: every row
     gets (shard, pos) such that reading shards sequentially visits the
     corpus in a reproducible pseudo-random order — the global-shuffle
@@ -73,10 +71,10 @@ def shard_and_shuffle(
     extreme where one shard exceeds a task, split pos ranking into
     (bucket, sub-rank) with a coarser md5 prefix.
     """
-    pos_h = F.md5(F.concat(F.col(key).cast("string"), F.lit(seed + ":pos")))
+    pos_h = F.md5(F.concat(F.col(key).cast("string"), F.lit("shuffle:pos")))
     w = Window.partitionBy("shard").orderBy("__pos_h", key)
     return (
-        df.withColumn("shard", hash_bucket(F.col(key), seed, n_shards).cast("int"))
+        df.withColumn("shard", hash_bucket(F.col(key), "shuffle", n_shards).cast("int"))
         .withColumn("__pos_h", pos_h)
         .withColumn("pos", F.row_number().over(w).cast("int"))
         .drop("__pos_h")
@@ -88,12 +86,11 @@ def split_assign(
     key: str,
     val_pct: float = 0.01,
     test_pct: float = 0.01,
-    seed: str = "split",
 ) -> DataFrame:
     """Append a train/val/test ``split`` column — disjoint, exhaustive,
     and stable under appends (a document's split never changes when the
     corpus grows; the leakage guarantee evals depend on)."""
-    b = hash_bucket(F.col(key), seed)
+    b = hash_bucket(F.col(key), "split")
     val_hi = int(val_pct * BUCKETS)
     test_hi = val_hi + int(test_pct * BUCKETS)
     return df.withColumn(
@@ -104,26 +101,18 @@ def split_assign(
     )
 
 
-def temperature_sample_plan(
-    docs: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    tau: float = 0.5,
-    budget_frac: float = 0.5,
-    seed: str = "mix",
-) -> DataFrame:
+def temperature_sample_plan(docs: DataFrame) -> DataFrame:
     """Temperature-based mixture sampling: target source shares
-    p_s ∝ n_s^τ (τ < 1 upweights small sources — the multilingual/
-    low-resource rebalancing rule used for LLM mixtures), a total budget
-    of ``floor(N·budget_frac)`` docs, per-source acceptance thresholds,
+    p_s ∝ n_s^τ with τ = 0.5 (τ < 1 upweights small sources — the
+    multilingual/low-resource rebalancing rule used for LLM mixtures), a
+    total budget of ``floor(N·0.5)`` docs, per-source acceptance thresholds,
     and the realized counts after DETERMINISTIC hash sampling
     (membership is a pure function of the doc id — append-stable,
     re-runnable, the sampling.py discipline).
 
     Exactness: with τ = 0.5 the weight is sqrt(n) — IEEE-754 requires
-    sqrt correctly rounded, so it is bit-identical cross-engine (ANY
-    other τ goes through pow, which is libm-dependent — callers may use
-    it, but the oracle-backed entry pins τ = 0.5); the weight
+    sqrt correctly rounded, so it is bit-identical cross-engine (any
+    other τ would go through pow, which is libm-dependent); the weight
     normalizer folds the ~|sources| weights left-to-right in source
     order; thresholds are floor()-integerized (the one integerization
     both engines share — quantize_embeddings' argument).
@@ -132,13 +121,8 @@ def temperature_sample_plan(
     broadcast for the normalizer, a broadcast threshold join onto the
     corpus scan, and one more source-keyed count. The corpus is touched
     exactly twice, both as scans with map-side combine."""
-    if tau != 0.5:
-        w_expr = F.pow(F.col("n_docs").cast("double"), F.lit(tau))
-    else:
-        w_expr = F.sqrt(F.col("n_docs").cast("double"))
-    per = docs.groupBy(F.col(source_col).alias("source")).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
+    w_expr = F.sqrt(F.col("n_docs").cast("double"))
+    per = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     sq = per.withColumn("w", w_expr)
     z = sq.agg(
         F.aggregate(
@@ -149,7 +133,7 @@ def temperature_sample_plan(
         F.sum("n_docs").alias("__n_total"),
     )
     p = F.col("w") / F.col("__z")
-    budget = F.floor(F.col("__n_total").cast("double") * F.lit(budget_frac))
+    budget = F.floor(F.col("__n_total").cast("double") * F.lit(0.5))
     plan = (
         sq.crossJoin(F.broadcast(z))
         .withColumn("p_target", p)
@@ -172,9 +156,9 @@ def temperature_sample_plan(
         .select("source", "n_docs", "p_target", "target_docs", "threshold")
     )
     sampled = (
-        docs.select(F.col(source_col).alias("source"), F.col(id_col))
+        docs.select("source", "doc_id")
         .join(F.broadcast(plan.select("source", "threshold")), "source")
-        .filter(hash_bucket(F.col(id_col), seed) < F.col("threshold"))
+        .filter(hash_bucket(F.col("doc_id"), "mix") < F.col("threshold"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_sampled"))
     )
@@ -194,9 +178,7 @@ def temperature_sample_plan(
     )
 
 
-def weighted_priority(
-    key: Column, weight: Column, seed: str = "", max_weight: int = 32
-) -> Column:
+def weighted_priority(key: Column, weight: Column, seed: str = "") -> Column:
     """Efraimidis–Spirakis (A-ES) sampling priority for INTEGER weights,
     log- and pow-free: the textbook priority is u^(1/w) (select the
     top-k priorities ⇒ weighted sampling without replacement), but pow
@@ -206,11 +188,10 @@ def weighted_priority(
     u^(1/w) (P(u^(1/w) ≤ x) = P(u ≤ x^w) = x^w) — so the priority is
     the max of ``w`` independent 32-bit md5 draws keyed (key, j, seed).
 
-    Per-row cost is O(w) md5s, so weights are clamped to
-    ``max_weight`` (document the clamp where it matters: beyond ~32 the
-    selection probabilities saturate anyway — P ∝ w only holds until
+    Per-row cost is O(w) md5s, so weights are clamped to 32 (beyond ~32
+    the selection probabilities saturate anyway — P ∝ w only holds until
     near-certain inclusion). Zero shuffle; pure expression."""
-    w = F.least(F.greatest(weight.cast("long"), F.lit(1)), F.lit(max_weight))
+    w = F.least(F.greatest(weight.cast("long"), F.lit(1)), F.lit(32))
     draw = lambda j: F.conv(  # noqa: E731
         F.substring(
             F.md5(
@@ -235,9 +216,6 @@ def weighted_sample_per_group(
     weight_col: str,
     group_col: str,
     k: int,
-    seed: str = "ws",
-    n_buckets: int = 32,
-    max_weight: int = 32,
 ) -> DataFrame:
     """Top-k A-ES weighted sample WITHIN each group (weight-proportional,
     without replacement, deterministic: membership is a pure function of
@@ -246,15 +224,13 @@ def weighted_sample_per_group(
 
     The rank is the exact TWO-LEVEL bucketed top-k (the
     contrastive-negatives pattern): level 1 ranks within (group,
-    md5-bucket-of-key) and keeps each bucket's top-k, level 2 ranks the
-    ≤ k·n_buckets survivors per group — identical output to a direct
+    md5-bucket-of-key, 32 buckets) and keeps each bucket's top-k, level 2
+    ranks the ≤ 32·k survivors per group — identical output to a direct
     per-group window (the global top-k is inside the union of bucket
-    top-ks) with every reducer bounded at ~|group|/n_buckets rows, so
+    top-ks) with every reducer bounded at ~|group|/32 rows, so
     one giant source can't pin the job on one task."""
-    prio = weighted_priority(
-        F.col(key), F.col(weight_col), seed, max_weight
-    ).alias("priority")
-    bucket = hash_bucket(F.col(key), seed + ":b", n_buckets)
+    prio = weighted_priority(F.col(key), F.col(weight_col), "ws").alias("priority")
+    bucket = hash_bucket(F.col(key), "ws:b", 32)
     base = df.select(
         F.col(group_col), F.col(key), F.col(weight_col), prio,
         bucket.alias("__bkt"),

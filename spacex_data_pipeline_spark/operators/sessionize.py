@@ -16,21 +16,16 @@ from pyspark.sql import functions as F
 from ..functions.numeric import dsum
 
 
-def session_events(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def session_events(events: DataFrame) -> DataFrame:
     """Per-EVENT session assignment: lag → gap flag → running sum. Both
     windows and any downstream per-session aggregation share the single
     user_id shuffle (Catalyst reuses the partitioning)."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, "event_id")
-    gap_s = gap_minutes * 60
-    prev_ts = F.lag(F.col(ts_col)).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap_s = 30 * 60  # a new session after 30 idle minutes
+    prev_ts = F.lag(F.col("ts")).over(w)
     is_new = F.when(
         prev_ts.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev_ts)) > gap_s),
+        | ((F.unix_timestamp(F.col("ts")) - F.unix_timestamp(prev_ts)) > gap_s),
         1,
     ).otherwise(0)
     return (
@@ -38,7 +33,7 @@ def session_events(
         .withColumn(
             "session_id",
             F.sum("__new").over(
-                Window.partitionBy(user_col).orderBy(ts_col, "event_id")
+                Window.partitionBy("user_id").orderBy("ts", "event_id")
                 .rowsBetween(Window.unboundedPreceding, Window.currentRow)
             ),
         )
@@ -46,64 +41,54 @@ def session_events(
     )
 
 
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Assign session ids per user (new session when the gap from the
-    previous event exceeds ``gap_minutes``) and aggregate per session."""
-    sessions = session_events(events, user_col, ts_col, gap_minutes)
+    previous event exceeds 30 minutes) and aggregate per session."""
+    sessions = session_events(events)
     return (
-        sessions.groupBy(user_col, "session_id")
+        sessions.groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             dsum("value", "total_value"),
         )
         .withColumn("session_id", F.col("session_id").cast("bigint"))
     )
 
 
-def funnel_counts(
-    events: DataFrame,
-    stages: tuple[str, ...] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Ordered funnel analysis: how many users reach each stage, where
-    stage i counts only events at/after the user's FIRST reach of stage
-    i-1 (the strict-ordering semantics product funnels mean — a click
-    before any view does not advance the funnel).
+def funnel_counts(events: DataFrame) -> DataFrame:
+    """Ordered funnel analysis (view → click → purchase): how many users
+    reach each stage, where stage i counts only events at/after the
+    user's FIRST reach of stage i-1 (the strict-ordering semantics
+    product funnels mean — a click before any view does not advance the
+    funnel).
 
     Plan: one filtered min-aggregation per stage, each joined to the
     previous stage's reach times — all shuffles hash on the same user
     key, each stage's event scan is type-filtered at the source
     (predicate pushdown), and the per-stage counts are lazy 1-row
     aggregates unioned into the result (no driver-side count actions).
-    At 100 TB this is |stages| co-partitioned passes over a
+    At 100 TB this is one co-partitioned pass per stage over a
     type-pruned fraction of the events table.
     """
     reached = (
-        events.filter(F.col(type_col) == stages[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("__t"))
+        events.filter(F.col("event_type") == "view")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("__t"))
     )
     out = reached.agg(
         F.lit(0).alias("stage_idx"),
-        F.lit(stages[0]).alias("stage"),
+        F.lit("view").alias("stage"),
         F.count(F.lit(1)).alias("users"),
     )
-    for i, stage in enumerate(stages[1:], start=1):
+    for i, stage in enumerate(("click", "purchase"), start=1):
         nxt = (
-            events.filter(F.col(type_col) == stage)
-            .join(reached, user_col)
-            .filter(F.col(ts_col) >= F.col("__t"))
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias("__t"))
+            events.filter(F.col("event_type") == stage)
+            .join(reached, "user_id")
+            .filter(F.col("ts") >= F.col("__t"))
+            .groupBy("user_id")
+            .agg(F.min("ts").alias("__t"))
         )
         out = out.unionByName(
             nxt.agg(

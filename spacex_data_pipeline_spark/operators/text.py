@@ -23,6 +23,11 @@ from ..functions.hashing import normalize_text, rolling_hash
 # BPE-ish pretokenizer: letter runs, digit runs, single other-symbols.
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
+# BM25 term saturation and length normalization, shared by the in-plan
+# ranking and the persisted index's search.
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 # Tiny marker lexicons for the n-gram/marker language-ID heuristic.
@@ -67,28 +72,28 @@ def punct_ratio(col: Column) -> Column:
     return n_punct.cast("double") / F.greatest(F.length(col), F.lit(1))
 
 
-def _with_tokens(docs: DataFrame, id_col: str, text_col: str, extra: list[str] | None = None) -> DataFrame:
+def _with_tokens(docs: DataFrame, extra: list[str] | None = None) -> DataFrame:
     """Project the token array ONCE before deriving features — an inline
     ``tokens(col)`` would be re-expanded (regex chain and all) into every
     expression that references it (see hashing.shingles_from_words)."""
     return docs.select(
-        F.col(id_col), F.col(text_col), tokens(F.col(text_col)).alias("__toks"),
+        F.col("doc_id"), F.col("text"), tokens(F.col("text")).alias("__toks"),
         *(extra or []),
     )
 
 
-def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def text_stats(docs: DataFrame) -> DataFrame:
     """Per-doc stats: chars, whitespace tokens, BPE-ish tokens, average
     word length, punctuation ratio, stopword ratio."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = F.col("__toks")
     n_tok = F.size(toks)
     word_chars = F.aggregate(
         F.transform(toks, lambda w: F.length(w)), F.lit(0), lambda a, v: a + v
     )
     n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
-    return _with_tokens(docs, id_col, text_col).select(
-        F.col(id_col),
+    return _with_tokens(docs).select(
+        F.col("doc_id"),
         F.length(t).cast("int").alias("n_chars"),
         n_tok.cast("int").alias("n_tokens"),
         bpe_token_count(t).cast("int").alias("n_bpe_tokens"),
@@ -98,26 +103,26 @@ def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     )
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality score in [0,1]: length credit + lexical diversity,
     penalized by punctuation excess. Components are each one division;
     the blend is a left-assoc add chain (deterministic cross-engine)."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = F.col("__toks")
     n_tok = F.greatest(F.size(toks), F.lit(1))
     length_credit = F.least(F.length(t).cast("double") / F.lit(500.0), F.lit(1.0))
     diversity = F.size(F.array_distinct(toks)).cast("double") / n_tok
     punct_penalty = punct_ratio(t)
     score = length_credit * F.lit(0.4) + diversity * F.lit(0.4) + (F.lit(1.0) - punct_penalty) * F.lit(0.2)
-    return _with_tokens(docs, id_col, text_col).select(
-        F.col(id_col),
+    return _with_tokens(docs).select(
+        F.col("doc_id"),
         F.round(length_credit, 6).alias("length_credit"),
         F.round(diversity, 6).alias("diversity"),
         F.round(score, 6).alias("quality"),
     )
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-word language ID with a CJK fast path.
 
     Scores each language by marker-token hits; ties break by fixed language
@@ -132,7 +137,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         return F.size(F.filter(toks, lambda t: t.isin(*markers)))
 
     scores = {lang: marker_hits(markers) for lang, markers in LANG_MARKERS.items()}
-    has_cjk = F.length(F.regexp_replace(F.col(text_col), r"[^一-鿿]", "")) > 0
+    has_cjk = F.length(F.regexp_replace(F.col("text"), r"[^一-鿿]", "")) > 0
     best = F.greatest(*scores.values())
     guess = (
         F.when(has_cjk, F.lit("zh"))
@@ -142,36 +147,30 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         .when(scores["de"] == best, F.lit("de"))
         .otherwise(F.lit("fr"))
     )
-    return _with_tokens(docs, id_col, text_col).select(
-        F.col(id_col),
+    return _with_tokens(docs).select(
+        F.col("doc_id"),
         *[s.cast("int").alias(f"score_{lang}") for lang, s in scores.items()],
         guess.alias("lang_guess"),
     )
 
 
-def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Two content fingerprints: md5 (exact-dup key) and a 31-base
     polynomial rolling hash mod 2^31-1 (cheap shift-friendly key; the
     building block for Rabin-Karp-style chunking)."""
-    t = F.col(text_col)
+    t = F.col("text")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(t).alias("md5_hex"),
         rolling_hash(t).alias("rhash"),
     )
 
 
-def winnowing_fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    window: int = 4,
-) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
-    MOSS algorithm): hash every word k-gram, slide a window of ``window``
-    consecutive hashes, keep the MIN of each window, emit the distinct
-    selected hashes as (id, fp) rows.
+    MOSS algorithm): hash every word k-gram (k = 4), slide a window of
+    ``window`` = 4 consecutive hashes, keep the MIN of each window, emit
+    the distinct selected hashes as (id, fp) rows.
 
     Guarantee: any two documents sharing a run of at least
     ``window + k - 1`` tokens share at least one fingerprint — local
@@ -198,18 +197,14 @@ def winnowing_fingerprints(
     # split(normalize) would re-run the regex chain k times per gram
     # (measured 4.06 s → 0.99 s at sf0.1 for this operator).
     toks = docs.select(
-        F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__w")
+        F.col("doc_id"), F.split(normalize_text(F.col("text")), " ").alias("__w")
     )
     words = F.col("__w")
     n = F.size(words)
-    n_grams = n - (k - 1)
+    n_grams = n - 3
     gram_hash = lambda i: F.conv(  # noqa: E731
         F.substring(
-            F.md5(
-                F.concat_ws(
-                    " ", *[F.element_at(words, i + j) for j in range(k)]
-                )
-            ),
+            F.md5(F.concat_ws(" ", *[F.element_at(words, i + j) for j in range(4)])),
             1,
             15,
         ),
@@ -221,31 +216,25 @@ def winnowing_fingerprints(
     hs = F.when(n_grams >= 1, F.transform(F.sequence(F.lit(1), n_grams), gram_hash)).otherwise(
         F.array().cast("array<bigint>")
     )
-    with_hs = toks.select(F.col(id_col), hs.alias("__hs"))
+    with_hs = toks.select(F.col("doc_id"), hs.alias("__hs"))
     m = F.size(F.col("__hs"))
-    n_windows = m - (window - 1)
+    n_windows = m - 3
     sel = (
         F.when(
             n_windows >= 1,
             F.transform(
                 F.sequence(F.lit(1), n_windows),
-                lambda j: F.array_min(F.slice(F.col("__hs"), j, window)),
+                lambda j: F.array_min(F.slice(F.col("__hs"), j, 4)),
             ),
         )
         .when(m >= 1, F.array(F.array_min(F.col("__hs"))))
         .otherwise(F.array().cast("array<bigint>"))
     )
-    return with_hs.select(
-        F.col(id_col), F.explode(F.array_distinct(sel)).alias("fp")
-    )
+    return with_hs.select(F.col("doc_id"), F.explode(F.array_distinct(sel)).alias("fp"))
 
 
 def winnowing_near_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    window: int = 4,
     min_shared: int = 2,
     max_fp_df: int | None = None,
 ) -> DataFrame:
@@ -268,7 +257,7 @@ def winnowing_near_pairs(
     materialized once per the single-materialization rule."""
     from .dedup import materialize
 
-    fps = materialize(winnowing_fingerprints(docs, id_col, text_col, k, window))
+    fps = materialize(winnowing_fingerprints(docs))
     join_side = fps
     if max_fp_df is not None:
         hot = (
@@ -283,17 +272,15 @@ def winnowing_near_pairs(
         a.join(
             b,
             (F.col("a.fp") == F.col("b.fp"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
 
 
-def term_frequencies(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def term_frequencies(docs: DataFrame) -> DataFrame:
     """Corpus-level term statistics: per-(doc, term) frequency and per-term
     document frequency — the exact-integer core of TF-IDF (the float IDF
     weighting lives in :func:`tfidf_top_terms`; ln() is libm-dependent and
@@ -305,21 +292,14 @@ def term_frequencies(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     shuffle and it moves (term, count) pairs — vocabulary-sized, not
     corpus-sized, after map-side partial aggregation.
     """
-    toks = _with_tokens(docs, id_col, text_col).select(
-        F.col(id_col), F.explode("__toks").alias("term")
-    )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    toks = _with_tokens(docs).select(F.col("doc_id"), F.explode("__toks").alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    return tf.join(df_, "term").select(id_col, "term", "tf", "df")
+    return tf.join(df_, "term").select("doc_id", "term", "tf", "df")
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_n: int = 5,
-) -> DataFrame:
-    """Top-n characteristic terms per doc by tf·idf with *ratio* idf
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-5 characteristic terms per doc by tf·idf with *ratio* idf
     (idf = N/df), deterministic tie-break on the term string.
 
     Why not ln(N/df): ln is libm-dependent — Java's Math.log and DuckDB's
@@ -339,30 +319,28 @@ def tfidf_top_terms(
 
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("__n_docs"))
     scored = (
-        term_frequencies(docs, id_col, text_col)
+        term_frequencies(docs)
         .crossJoin(F.broadcast(n_docs))
         .withColumn("tfidf", F.col("tf").cast("double") * (F.col("__n_docs") / F.col("df")))
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("tfidf").desc(), F.col("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_n)
-        .select(id_col, "term", "tf", "df", "tfidf", F.col("rank").cast("int").alias("rank"))
+        .filter(F.col("rank") <= 5)
+        .select("doc_id", "term", "tf", "df", "tfidf", F.col("rank").cast("int").alias("rank"))
     )
 
 
-def bm25_tf(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def bm25_tf(docs: DataFrame) -> DataFrame:
     """The corpus inverted-index base behind :func:`bm25_topk` — per-doc
     term frequencies ``(id, term, tf)``, LAZY. Split out (r15) so a
     sweep-level share can materialize it once and hand the same table to
     every BM25 consumer (df/dl/total-mass all derive from it); the
     operator builds it itself when no ``tf=`` is passed."""
-    toks = _with_tokens(docs, id_col, text_col).select(
-        F.col(id_col), F.posexplode("__toks").alias("pos", "term")
+    toks = _with_tokens(docs).select(
+        F.col("doc_id"), F.posexplode("__toks").alias("pos", "term")
     )
-    return toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    return toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
 
 
 def bm25_topk(
@@ -370,11 +348,7 @@ def bm25_topk(
     query_doc_ids: list[int],
     n_query_terms: int = 3,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     tf: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 top-k retrieval over the corpus: each query is the first
@@ -383,10 +357,11 @@ def bm25_topk(
 
         score(q, d) = Σ_t idf_r(t) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl))
 
-    with the *ratio* idf idf_r = (N − df + 0.5)/(df + 0.5) — the log-free
-    variant for the same reason tfidf_top_terms uses N/df: ln is
-    libm-dependent across engines while −, +, ·, / are correctly-rounded
-    IEEE and bit-identical, so score AND ranking are hash-checkable.
+    with k1 = ``BM25_K1``, b = ``BM25_B`` and the *ratio* idf
+    idf_r = (N − df + 0.5)/(df + 0.5) — the log-free variant for the same
+    reason tfidf_top_terms uses N/df: ln is libm-dependent across engines
+    while −, +, ·, / are correctly-rounded IEEE and bit-identical, so
+    score AND ranking are hash-checkable.
     ln is monotone in the classic Robertson idf argument, so per-term idf
     ORDER matches textbook BM25; only the scale differs (documented
     variant, not an approximation of the ranking function's shape).
@@ -423,24 +398,24 @@ def bm25_topk(
 
     from .dedup import materialize
 
-    toks = _with_tokens(docs, id_col, text_col).select(
-        F.col(id_col), F.posexplode("__toks").alias("pos", "term")
+    toks = _with_tokens(docs).select(
+        F.col("doc_id"), F.posexplode("__toks").alias("pos", "term")
     )
     if tf is None:
-        tf = materialize(bm25_tf(docs, id_col, text_col))
+        tf = materialize(bm25_tf(docs))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # N over ALL docs (incl. token-less ones); total token mass from tf —
     # both ride as a broadcast 1-row aggregate, no driver-side collect.
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("__n_docs"))
     tot = tf.agg(F.sum("tf").cast("double").alias("__tot_tokens"))
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
 
     # Query terms: first n distinct terms of each query doc, ranked by
     # first-occurrence position (ties impossible: positions are distinct).
     qw = Window.partitionBy("query_id").orderBy("first_pos", "term")
     qterms = (
-        toks.filter(F.col(id_col).isin(query_doc_ids))
-        .groupBy(F.col(id_col).alias("query_id"), "term")
+        toks.filter(F.col("doc_id").isin(query_doc_ids))
+        .groupBy(F.col("doc_id").alias("query_id"), "term")
         .agg(F.min("pos").alias("first_pos"))
         .withColumn("qrn", F.row_number().over(qw))
         .filter(F.col("qrn") <= n_query_terms)
@@ -450,7 +425,7 @@ def bm25_topk(
     matched = (
         tf.join(F.broadcast(qterms), "term")
         .join(F.broadcast(df_.join(F.broadcast(qterms.select("term").distinct()), "term")), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(n_docs))
         .crossJoin(F.broadcast(tot))
     )
@@ -458,13 +433,14 @@ def bm25_topk(
         F.col("df") + F.lit(0.5)
     )
     avgdl = F.col("__tot_tokens") / F.col("__n_docs")
-    tfc = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / avgdl))
+    tfc = (F.col("tf") * F.lit(BM25_K1 + 1.0)) / (
+        F.col("tf")
+        + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * (F.col("dl") / avgdl))
     )
     scored_terms = matched.select(
-        "query_id", F.col(id_col), "term", (idf * tfc).alias("score_t")
+        "query_id", F.col("doc_id"), "term", (idf * tfc).alias("score_t")
     )
-    g = scored_terms.groupBy("query_id", id_col).agg(
+    g = scored_terms.groupBy("query_id", "doc_id").agg(
         F.aggregate(
             F.sort_array(F.collect_list(F.struct("term", "score_t"))),
             F.lit(0.0),
@@ -472,15 +448,15 @@ def bm25_topk(
         ).alias("score")
     )
     w1 = Window.partitionBy(
-        "query_id", F.pmod(F.col(id_col), F.lit(n_buckets))
-    ).orderBy(F.col("score").desc(), id_col)
-    w2 = Window.partitionBy("query_id").orderBy(F.col("score").desc(), id_col)
+        "query_id", F.pmod(F.col("doc_id"), F.lit(n_buckets))
+    ).orderBy(F.col("score").desc(), "doc_id")
+    w2 = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
     return (
         g.withColumn("__brn", F.row_number().over(w1))
         .filter(F.col("__brn") <= k)
         .withColumn("rank", F.row_number().over(w2).cast("int"))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank", "score")
+        .select("query_id", "doc_id", "rank", "score")
     )
 
 
@@ -498,25 +474,21 @@ def char_trigrams(s: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def trigram_tf(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def trigram_tf(docs: DataFrame) -> DataFrame:
     """The corpus trigram pass behind :func:`trigram_typicality` — per-doc
     char-trigram term frequencies ``(id, tri, tf)``, LAZY. Split out (r15)
     so a sweep-level share can materialize it once and hand the same table
     to every typicality consumer; the operator builds it itself when no
     ``tf=`` is passed."""
-    norm = docs.select(F.col(id_col), normalize_text(F.col(text_col)).alias("__s"))
+    norm = docs.select(F.col("doc_id"), normalize_text(F.col("text")).alias("__s"))
     occ = norm.select(
-        F.col(id_col), F.explode(char_trigrams(F.col("__s"))).alias("tri")
+        F.col("doc_id"), F.explode(char_trigrams(F.col("__s"))).alias("tri")
     )
-    return occ.groupBy(id_col, "tri").agg(F.count(F.lit(1)).alias("tf"))
+    return occ.groupBy("doc_id", "tri").agg(F.count(F.lit(1)).alias("tf"))
 
 
 def trigram_typicality(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep: tuple[str, ...] = (),
     with_sums: bool = False,
     tf: DataFrame | None = None,
@@ -564,7 +536,7 @@ def trigram_typicality(
     builds via :func:`trigram_tf`, the same code path).
     """
     norm = docs.select(
-        F.col(id_col), *[F.col(c) for c in keep], normalize_text(F.col(text_col)).alias("__s")
+        F.col("doc_id"), *[F.col(c) for c in keep], normalize_text(F.col("text")).alias("__s")
     )
     if tf is None:
         from .dedup import materialize
@@ -573,13 +545,13 @@ def trigram_typicality(
         # occurrence count), and tf feeds the scoring join too — so tf is
         # the one corpus-pass product, materialized once (the
         # single-materialization rule).
-        tf = materialize(trigram_tf(docs, id_col, text_col))
+        tf = materialize(trigram_tf(docs))
     if model is None:
         model = tf.groupBy("tri").agg(F.sum("tf").alias("c"))
     tot = model.agg(F.sum("c").alias("__tt"))
     per_doc = (
         tf.join(F.broadcast(model), "tri")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(F.col("tf") * F.col("c")).alias("__num"),
             F.sum("tf").alias("__ntri"),
@@ -594,11 +566,11 @@ def trigram_typicality(
         else []
     )
     return (
-        norm.select(id_col, *keep)
-        .join(per_doc, id_col, "left")
+        norm.select("doc_id", *keep)
+        .join(per_doc, "doc_id", "left")
         .crossJoin(F.broadcast(tot))
         .select(
-            id_col,
+            "doc_id",
             *keep,
             F.coalesce("__ntri", F.lit(0)).cast("int").alias("n_trigrams"),
             (
@@ -610,23 +582,17 @@ def trigram_typicality(
     )
 
 
-def pack_token_bins(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    budget: int = 512,
-    shards: int = 32,
-) -> DataFrame:
-    """Sequence packing: assign documents to fixed token-budget bins — the
+def pack_token_bins(docs: DataFrame) -> DataFrame:
+    """Sequence packing: assign documents to fixed 512-token bins — the
     step that turns a deduped corpus into training-sequence groups.
 
     Greedy streaming packing in deterministic order, SHARD-PARALLEL: a
     single global running sum would serialize the corpus through one
-    partition, so documents first hash into ``shards`` independent
-    streams (doc_id mod shards — deterministic, append-stable), and each
-    shard packs by running token count: bin = floor(cum_before / budget).
+    partition, so documents first hash into 32 independent streams
+    (doc_id mod 32 — deterministic, append-stable), and each shard packs
+    by running token count: bin = floor(cum_before / 512).
     One shuffle on the shard key; the window is a running integer sum.
-    Oversized docs (> budget) get a bin of their own and overflow it —
+    Oversized docs (> 512 tokens) get a bin of their own and overflow it —
     callers chunk those first (chunk_documents). Exact integer
     arithmetic end-to-end, so the assignment is oracle-checkable.
     Tokens are normalized whitespace tokens (:func:`token_count`).
@@ -634,23 +600,23 @@ def pack_token_bins(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col),
-        F.pmod(F.col(id_col), F.lit(shards)).cast("int").alias("shard"),
-        token_count(F.col(text_col)).alias("n_tokens"),
+        F.col("doc_id"),
+        F.pmod(F.col("doc_id"), F.lit(32)).cast("int").alias("shard"),
+        token_count(F.col("text")).alias("n_tokens"),
     )
     w = (
         Window.partitionBy("shard")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = F.sum("n_tokens").over(w)
     # floor, not cast: a double→int CAST truncates in Spark but ROUNDS in
     # DuckDB — floor division is the portable exact form (oracle uses //)
     return toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "shard",
         F.col("n_tokens").cast("int").alias("n_tokens"),
-        F.floor((cum - F.col("n_tokens")) / budget).cast("long").alias("bin_idx"),
+        F.floor((cum - F.col("n_tokens")) / 512).cast("long").alias("bin_idx"),
     )
 
 
@@ -663,22 +629,22 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redact_pii(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """PII scrub — the standard pre-training redaction pass: emails,
     phone numbers, IPv4 addresses replaced with typed placeholders, plus
     per-category hit flags. A pure narrow map (chained regexp_replace,
     codegen'd, no shuffle): at 100 TB this fuses into the ingest scan.
     Patterns apply in declaration order to the progressively-redacted
     text (an email never half-matches as a phone)."""
-    out = F.col(text_col)
+    out = F.col("text")
     flags = []
     for name, pat, repl in PII_PATTERNS:
-        flags.append(F.col(text_col).rlike(pat).alias(f"has_{name}"))
+        flags.append(F.col("text").rlike(pat).alias(f"has_{name}"))
         out = F.regexp_replace(out, pat, repl)
-    return docs.select(F.col(id_col), out.alias("redacted"), *flags)
+    return docs.select(F.col("doc_id"), out.alias("redacted"), *flags)
 
 
-def chunk_documents(docs: DataFrame, size: int = 16, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def chunk_documents(docs: DataFrame, size: int = 16) -> DataFrame:
     """Fixed-size word-window chunking via a Python UDTF — the
     table-function surface (one input row → N output rows with their own
     schema), completing the scalar/grouped/table UDF triple. Chunking into
@@ -692,16 +658,11 @@ def chunk_documents(docs: DataFrame, size: int = 16, id_col: str = "doc_id", tex
     """
     spark = docs.sparkSession
     _ensure_chunk_udtf(spark)
-    docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).createOrReplaceTempView("__chunk_src")
-    out = spark.sql(
+    docs.select("doc_id", "text").createOrReplaceTempView("__chunk_src")
+    return spark.sql(
         "SELECT c.* FROM __chunk_src, "
         f"LATERAL __chunk_doc(doc_id, text, {int(size)}) AS c"
     )
-    if id_col != "doc_id":
-        out = out.withColumnRenamed("doc_id", id_col)
-    return out
 
 
 # Sessions that already registered the __chunk_doc UDTF. Re-registering
@@ -740,8 +701,6 @@ def chunk_documents_columnar(
     docs: DataFrame,
     size: int = 16,
     overlap: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Pure-column bulk chunker — the SCALE path the UDTF chunker's
     docstring points at: explode over a computed chunk-index sequence,
@@ -764,11 +723,11 @@ def chunk_documents_columnar(
     # whitespace to single spaces then trim, so tabs/newlines at the
     # edges can't produce phantom empty tokens (F.trim strips spaces
     # only — found by review, mirrored in the oracle in lockstep)
-    t = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    t = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     raw = F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
         F.split(t, " ")
     )
-    toks = docs.select(F.col(id_col), raw.alias("__toks"))
+    toks = docs.select(F.col("doc_id"), raw.alias("__toks"))
     n = F.size(F.col("__toks"))
     # number of stride-aligned starts covering the doc; empty doc → 1
     n_chunks = F.when(n <= size, F.lit(1)).otherwise(
@@ -776,25 +735,23 @@ def chunk_documents_columnar(
     )
     idx = F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx")
     piece = F.slice(F.col("__toks"), F.col("chunk_idx") * stride + 1, size)
-    return toks.select(F.col(id_col), idx, F.col("__toks")).select(
-        F.col(id_col),
+    return toks.select(F.col("doc_id"), idx, F.col("__toks")).select(
+        F.col("doc_id"),
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         F.array_join(piece, " ").alias("chunk"),
         F.size(piece).cast("int").alias("n_words"),
     )
 
 
-def repetition_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 2
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Repetition quality rule (the Gopher/MassiveText family): per doc,
-    the most frequent word n-gram and the fraction of the document's
+    the most frequent word bigram and the fraction of the document's
     characters it covers — the filter that catches looping/boilerplate
     generations exact-dedup misses. Returns
     (id, top_ngram, top_count, char_frac).
 
-    Counts are MULTISET n-gram counts (no array_distinct — repetition is
-    the signal). Ties break on the lexicographically smallest n-gram, so
+    Counts are MULTISET bigram counts (no array_distinct — repetition is
+    the signal). Ties break on the lexicographically smallest bigram, so
     the result is deterministic and SQL-replicable. One shuffle on
     (id, ngram) for the count, one on id for the arg-max window; the
     division is a single double op (cross-engine IEEE-identical), with
@@ -804,37 +761,37 @@ def repetition_stats(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col),
-        F.length(F.col(text_col)).alias("__len"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("__words"),
+        F.col("doc_id"),
+        F.length(F.col("text")).alias("__len"),
+        F.split(normalize_text(F.col("text")), " ").alias("__words"),
     )
     w_ = F.col("__words")
     grams = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__len"),
         F.explode(
             F.when(
-                F.size(w_) >= n,
+                F.size(w_) >= 2,
                 F.transform(
-                    F.sequence(F.lit(0), F.size(w_) - n),
+                    F.sequence(F.lit(0), F.size(w_) - 2),
                     lambda i: F.concat_ws(
-                        " ", *[F.element_at(w_, i + j + 1) for j in range(n)]
+                        " ", *[F.element_at(w_, i + j + 1) for j in range(2)]
                     ),
                 ),
             ).otherwise(F.array().cast("array<string>"))
         ).alias("ngram"),
     )
-    counts = grams.groupBy(id_col, "__len", "ngram").agg(
+    counts = grams.groupBy("doc_id", "__len", "ngram").agg(
         F.count(F.lit(1)).alias("top_count")
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("top_count").desc(), F.col("ngram"))
+    w = Window.partitionBy("doc_id").orderBy(F.col("top_count").desc(), F.col("ngram"))
     top = (
         counts.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
     return top.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("ngram").alias("top_ngram"),
         F.col("top_count"),
         (
@@ -844,14 +801,9 @@ def repetition_stats(
     )
 
 
-def bigram_collocations(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 5,
-) -> DataFrame:
+def bigram_collocations(docs: DataFrame) -> DataFrame:
     """Collocation / phrase mining over the corpus: for every adjacent
-    word pair occurring ≥ ``min_count`` times, the lift ratio
+    word pair occurring ≥ 5 times, the lift ratio
     ``count(ab)·T / (count(a)·count(b))`` — the PMI statistic without
     the log (ln is libm-dependent and engines disagree in the last ulp;
     the RATIO is one integer product per side and a single IEEE divide,
@@ -865,7 +817,7 @@ def bigram_collocations(
     broadcast 1-row aggregate inside the same plan (no driver count).
     """
     toks = docs.select(
-        F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__w")
+        F.col("doc_id"), F.split(normalize_text(F.col("text")), " ").alias("__w")
     )
     w_ = F.col("__w")
     bi = toks.filter(F.size(w_) >= 2).select(
@@ -887,7 +839,7 @@ def bigram_collocations(
     c1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c_a"))
     c2 = uni.select(F.col("w").alias("w2"), F.col("c").alias("c_b"))
     return (
-        pair.filter(F.col("c_ab") >= min_count)
+        pair.filter(F.col("c_ab") >= 5)
         .join(c1, "w1")
         .join(c2, "w2")
         .crossJoin(F.broadcast(total))
@@ -903,9 +855,7 @@ def bigram_collocations(
     )
 
 
-def word_vocab(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def word_vocab(docs: DataFrame) -> DataFrame:
     """``(word, wcount)`` type table of the corpus's whitespace tokens.
 
     The BPE-training substrate: the ONE corpus-sized shuffle happens
@@ -914,7 +864,7 @@ def word_vocab(
     which Heaps' law keeps orders of magnitude smaller than the corpus
     (this is exactly how production BPE trainers scale: count words
     once, then iterate on the weighted vocabulary)."""
-    t = _with_tokens(docs, id_col, text_col)
+    t = _with_tokens(docs)
     return (
         t.select(F.explode("__toks").alias("word"))
         .groupBy("word")
@@ -922,9 +872,7 @@ def word_vocab(
     )
 
 
-def bpe_pair_counts(
-    vocab: DataFrame, word_col: str = "word", count_col: str = "wcount"
-) -> DataFrame:
+def bpe_pair_counts(vocab: DataFrame) -> DataFrame:
     """Adjacent character-pair statistics over a weighted vocabulary —
     the argmax candidate table of BPE's first merge iteration:
     ``pair_count`` = corpus occurrences (Σ wcount over every adjacent
@@ -935,7 +883,7 @@ def bpe_pair_counts(
     |vocab| × avg_word_len rows of 2-char strings, the aggregate is
     alphabet²-sized after map-side partials. Zero Python; substring and
     sequence are codegen'd expressions."""
-    w, c = F.col(word_col), F.col(count_col)
+    w, c = F.col("word"), F.col("wcount")
     pairs = F.transform(
         F.sequence(F.lit(1), F.length(w) - 1),
         lambda i: F.substring(w, i, F.lit(2)),
@@ -951,16 +899,10 @@ def bpe_pair_counts(
     )
 
 
-def length_bucketed_batches(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bucket_width: int = 64,
-    batch_size: int = 8,
-) -> DataFrame:
+def length_bucketed_batches(docs: DataFrame) -> DataFrame:
     """Length-bucketed batch assignment for inference/training: docs are
-    bucketed by token count (width ``bucket_width``) and numbered into
-    batches of ``batch_size`` WITHIN their bucket, so every batch holds
+    bucketed by token count (width 64) and numbered into batches of 8
+    WITHIN their bucket, so every batch holds
     similar-length sequences and padding waste is bounded by the bucket
     width — the standard dynamic-batching layout.
 
@@ -972,29 +914,21 @@ def length_bucketed_batches(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col),
-        token_count(F.col(text_col)).alias("n_tokens"),
+        F.col("doc_id"),
+        token_count(F.col("text")).alias("n_tokens"),
     )
-    b = toks.withColumn(
-        "bucket", F.floor(F.col("n_tokens") / bucket_width).cast("int")
-    )
-    w = Window.partitionBy("bucket").orderBy("n_tokens", id_col)
+    b = toks.withColumn("bucket", F.floor(F.col("n_tokens") / 64).cast("int"))
+    w = Window.partitionBy("bucket").orderBy("n_tokens", "doc_id")
     return b.withColumn(
         "batch_idx",
-        F.floor((F.row_number().over(w) - 1) / batch_size).cast("int"),
-    ).select(id_col, F.col("n_tokens").cast("int").alias("n_tokens"), "bucket", "batch_idx")
+        F.floor((F.row_number().over(w) - 1) / 8).cast("int"),
+    ).select("doc_id", F.col("n_tokens").cast("int").alias("n_tokens"), "bucket", "batch_idx")
 
 
-def textrank_keywords(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_iter: int = 5,
-    min_len: int = 3,
-) -> DataFrame:
+def textrank_keywords(docs: DataFrame, n_iter: int = 5) -> DataFrame:
     """Corpus-level TextRank keyword scores: PageRank (damping 0.85,
     ``n_iter`` fixed iterations) over the word co-occurrence graph —
-    nodes are content words (length ≥ ``min_len``, non-stopword),
+    nodes are content words (length ≥ 3, non-stopword),
     undirected edges are adjacency counts in the filtered token
     sequence.
 
@@ -1014,8 +948,8 @@ def textrank_keywords(
     from .dedup import materialize
 
     fw = F.filter(
-        tokens(F.col(text_col)),
-        lambda w: (F.length(w) >= min_len) & ~w.isin(*STOPWORDS),
+        tokens(F.col("text")),
+        lambda w: (F.length(w) >= 3) & ~w.isin(*STOPWORDS),
     )
     t = docs.select(fw.alias("__fw"))
     w_ = F.col("__fw")
@@ -1065,12 +999,7 @@ def textrank_keywords(
     )
 
 
-def inverted_postings(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    terms: list[str] | None = None,
-) -> DataFrame:
+def inverted_postings(docs: DataFrame, terms: list[str] | None = None) -> DataFrame:
     """Positional inverted-index postings ``(doc_id, pos, term)`` —
     the retrieval-engine substrate (BM25 ranks, phrase/proximity
     queries, collocation windows all consume this table). ``terms``
@@ -1078,24 +1007,17 @@ def inverted_postings(
     for a known query the filter lands pre-explode (a narrow scan
     predicate), so the posting build for a phrase query moves only the
     phrase terms' rows, never the corpus's."""
-    t = _with_tokens(docs, id_col, text_col)
+    t = _with_tokens(docs)
     if terms is not None:
         # prune docs that can't contribute before exploding
         t = t.filter(F.arrays_overlap(F.col("__toks"), F.array(*[F.lit(x) for x in terms])))
-    out = t.select(
-        F.col(id_col), F.posexplode("__toks").alias("pos", "term")
-    )
+    out = t.select(F.col("doc_id"), F.posexplode("__toks").alias("pos", "term"))
     if terms is not None:
         out = out.filter(F.col("term").isin(*terms))
     return out
 
 
-def phrase_search(
-    docs: DataFrame,
-    phrase: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def phrase_search(docs: DataFrame, phrase: str) -> DataFrame:
     """Exact-phrase query via positional posting intersection: term i
     of the phrase matches at ``start + i``, so each join step is an
     equi-join on ``(doc_id, start)`` — the classic positional-index
@@ -1111,26 +1033,20 @@ def phrase_search(
     terms = [t for t in str(phrase).strip().lower().split() if t]
     if not terms:
         raise ValueError("phrase must contain at least one term")
-    post = inverted_postings(docs, id_col, text_col, terms=sorted(set(terms)))
-    starts = post.filter(F.col("term") == terms[0]).select(id_col, "pos")
+    post = inverted_postings(docs, terms=sorted(set(terms)))
+    starts = post.filter(F.col("term") == terms[0]).select("doc_id", "pos")
     for i, term in enumerate(terms[1:], 1):
         nxt = post.filter(F.col("term") == term).select(
-            F.col(id_col), (F.col("pos") - i).alias("pos")
+            F.col("doc_id"), (F.col("pos") - i).alias("pos")
         )
-        starts = starts.join(nxt, [id_col, "pos"])
-    return starts.groupBy(id_col).agg(
+        starts = starts.join(nxt, ["doc_id", "pos"])
+    return starts.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_matches"),
         F.min("pos").cast("int").alias("first_pos"),
     )
 
 
-def persist_text_index(
-    docs: DataFrame,
-    path: str,
-    n_term_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
+def persist_text_index(docs: DataFrame, path: str, n_term_buckets: int = 64) -> None:
     """Materialize the BM25 serving index (bm25_topk's docstring
     promise made concrete): the tf postings written as parquet
     PARTITIONED BY an md5 term bucket — a query lists only its terms'
@@ -1145,32 +1061,30 @@ def persist_text_index(
     xxhash64, deliberately: the client must compute a term's bucket
     WITHOUT a Spark job (hashlib.md5 in plain Python matches), the same
     reason ANN serving computes probe cells client-side."""
-    _write_index_delta(docs, path, n_term_buckets, id_col, text_col, mode="overwrite")
+    _write_index_delta(docs, path, n_term_buckets, mode="overwrite")
 
 
-def _index_postings(docs, n_term_buckets, id_col, text_col):
+def _index_postings(docs, n_term_buckets):
     """(postings with denormalized dl + term_bucket, doclens) for a doc
     batch — the shared build step of persist and incremental update."""
     from .sampling import hash_bucket
 
-    toks = _with_tokens(docs, id_col, text_col).select(
-        F.col(id_col), F.explode("__toks").alias("term")
-    )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    post = tf.join(dl, id_col).withColumn(
+    toks = _with_tokens(docs).select(F.col("doc_id"), F.explode("__toks").alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    post = tf.join(dl, "doc_id").withColumn(
         "term_bucket", hash_bucket(F.col("term"), "tix", n_term_buckets).cast("int")
     )
     # every indexed doc appears in doclens, even all-stopword/empty ones
     # (dl=0) — doclens is the index's doc-id REGISTRY, consulted by the
     # update collision guard and the tombstone path
     doclens = (
-        docs.select(F.col(id_col))
-        .join(dl, id_col, "left")
+        docs.select(F.col("doc_id"))
+        .join(dl, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("dl"), F.lit(0)).cast("bigint").alias("dl"),
-            F.pmod(F.col(id_col), F.lit(n_term_buckets)).cast("int").alias(
+            F.pmod(F.col("doc_id"), F.lit(n_term_buckets)).cast("int").alias(
                 "doc_bucket"
             ),
         )
@@ -1178,8 +1092,8 @@ def _index_postings(docs, n_term_buckets, id_col, text_col):
     return post, doclens
 
 
-def _write_index_delta(docs, path, n_term_buckets, id_col, text_col, mode):
-    post, doclens = _index_postings(docs, n_term_buckets, id_col, text_col)
+def _write_index_delta(docs, path, n_term_buckets, mode):
+    post, doclens = _index_postings(docs, n_term_buckets)
     post.write.mode(mode).partitionBy("term_bucket").parquet(path + "/postings")
     doclens.write.mode(mode).partitionBy("doc_bucket").parquet(path + "/doclens")
     batch = docs.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
@@ -1210,8 +1124,6 @@ def update_text_index(
     new_docs: DataFrame,
     path: str,
     n_term_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """Incrementally ADD a doc batch to a persisted text index — the
     nightly-crawl-delta path: only the new batch is tokenized; its
@@ -1226,11 +1138,11 @@ def update_text_index(
     or a full rebuild; silently appending would double-count the doc in
     df/tf. The guard reads ONLY the doclens partitions the new ids hash
     to (partition-pruned doc-id registry), never the posting bodies."""
-    ids = new_docs.select(F.col(id_col)).distinct()
+    ids = new_docs.select(F.col("doc_id")).distinct()
     buckets = [
         r[0]
         for r in ids.select(
-            F.pmod(F.col(id_col), F.lit(n_term_buckets)).cast("int").alias("b")
+            F.pmod(F.col("doc_id"), F.lit(n_term_buckets)).cast("int").alias("b")
         )
         .distinct()
         .collect()
@@ -1242,7 +1154,7 @@ def update_text_index(
     if os.path.isdir(path + "/tombstones"):
         n_dead = (
             spark.read.parquet(path + "/tombstones")
-            .join(F.broadcast(ids), id_col, "left_semi")
+            .join(F.broadcast(ids), "doc_id", "left_semi")
             .count()
         )
         if n_dead:
@@ -1254,7 +1166,7 @@ def update_text_index(
     existing = (
         spark.read.parquet(path + "/doclens")
         .filter(F.col("doc_bucket").isin(buckets))
-        .join(F.broadcast(ids), id_col, "left_semi")
+        .join(F.broadcast(ids), "doc_id", "left_semi")
     )
     n_clash = existing.count()
     if n_clash:
@@ -1262,7 +1174,7 @@ def update_text_index(
             f"update_text_index: {n_clash} incoming id(s) already indexed — "
             "tombstone first or rebuild; appending would double-count df/tf"
         )
-    _write_index_delta(new_docs, path, n_term_buckets, id_col, text_col, mode="append")
+    _write_index_delta(new_docs, path, n_term_buckets, mode="append")
 
 
 def tombstone_text_index(
@@ -1270,7 +1182,6 @@ def tombstone_text_index(
     path: str,
     ids: list[int],
     n_term_buckets: int = 64,
-    id_col: str = "doc_id",
 ) -> None:
     """Logically DELETE docs from a persisted text index by appending
     (doc_id, dl) tombstones — the Lucene deleted-docs move: no posting
@@ -1290,19 +1201,19 @@ def tombstone_text_index(
     buckets = sorted({i % n_term_buckets for i in ids})
     found = (
         dl_reg.filter(F.col("doc_bucket").isin(buckets))
-        .filter(F.col(id_col).isin(ids))
-        .select(id_col, "dl")
+        .filter(F.col("doc_id").isin(ids))
+        .select("doc_id", "dl")
     )
     rows = found.collect()
     if len(rows) != len(set(ids)):
         missing = set(ids) - {r[0] for r in rows}
         raise ValueError(f"tombstone_text_index: ids not in index: {sorted(missing)}")
-    spark.createDataFrame(rows, f"{id_col} bigint, dl bigint").write.mode(
+    spark.createDataFrame(rows, "doc_id bigint, dl bigint").write.mode(
         "append"
     ).parquet(path + "/tombstones")
 
 
-def compact_text_index(spark, path: str, id_col: str = "doc_id") -> int:
+def compact_text_index(spark, path: str) -> int:
     """Physically reclaim tombstoned docs: rewrite postings and doclens
     WITHOUT the dead ids (keeping the partition layouts), fold the
     serve-time stats corrections into the stored stats, and drop the
@@ -1328,7 +1239,7 @@ def compact_text_index(spark, path: str, id_col: str = "doc_id") -> int:
         return 0
     dead = (
         spark.read.parquet(path + "/tombstones")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("dl").alias("dl"))
     )
     corr = dead.agg(
@@ -1341,7 +1252,7 @@ def compact_text_index(spark, path: str, id_col: str = "doc_id") -> int:
     shutil.rmtree(tmp, ignore_errors=True)
     for sub, part in (("postings", "term_bucket"), ("doclens", "doc_bucket")):
         spark.read.parquet(f"{root}/{sub}").join(
-            F.broadcast(dead), id_col, "left_anti"
+            F.broadcast(dead), "doc_id", "left_anti"
         ).write.partitionBy(part).parquet(f"{tmp}/{sub}")
     spark.createDataFrame(
         [(old_stats.n_docs - corr.n, old_stats.tot_tokens - corr.toks)],
@@ -1364,11 +1275,7 @@ def search_text_index(
     path: str,
     terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     n_term_buckets: int = 64,
-    n_buckets: int = 64,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Serve a BM25 query from a persisted text index: term buckets are
     computed CLIENT-SIDE (pure-Python md5 — no Spark job), the posting
@@ -1405,10 +1312,10 @@ def search_text_index(
     stats = spark.read.parquet(path + "/stats")
     if os.path.isdir(path + "/tombstones"):
         # a doc may be tombstoned twice across appended batches
-        dead = spark.read.parquet(path + "/tombstones").groupBy(id_col).agg(
+        dead = spark.read.parquet(path + "/tombstones").groupBy("doc_id").agg(
             F.max("dl").alias("dl")
         )
-        post = post.join(F.broadcast(dead), id_col, "left_anti")
+        post = post.join(F.broadcast(dead), "doc_id", "left_anti")
         corr = dead.agg(
             F.count(F.lit(1)).alias("__dead_n"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("__dead_toks"),
@@ -1426,12 +1333,13 @@ def search_text_index(
     )
     idf = (F.col("__n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     avgdl = F.col("__tot") / F.col("__n_docs")
-    tfc = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / avgdl))
+    tfc = (F.col("tf") * F.lit(BM25_K1 + 1.0)) / (
+        F.col("tf")
+        + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * (F.col("dl") / avgdl))
     )
     g = (
-        m.select(F.col(id_col), "term", (idf * tfc).alias("score_t"))
-        .groupBy(id_col)
+        m.select(F.col("doc_id"), "term", (idf * tfc).alias("score_t"))
+        .groupBy("doc_id")
         .agg(
             F.aggregate(
                 F.sort_array(F.collect_list(F.struct("term", "score_t"))),
@@ -1440,24 +1348,22 @@ def search_text_index(
             ).alias("score")
         )
     )
-    w1 = Window.partitionBy(F.pmod(F.col(id_col), F.lit(n_buckets))).orderBy(
-        F.col("score").desc(), id_col
+    w1 = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(64))).orderBy(
+        F.col("score").desc(), "doc_id"
     )
-    w2 = Window.partitionBy(F.lit(1)).orderBy(F.col("score").desc(), id_col)
+    w2 = Window.partitionBy(F.lit(1)).orderBy(F.col("score").desc(), "doc_id")
     return (
         g.withColumn("__brn", F.row_number().over(w1))
         .filter(F.col("__brn") <= k)
         .withColumn("rank", F.row_number().over(w2).cast("int"))
         .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "score")
+        .select("doc_id", "rank", "score")
     )
 
 
 def hashed_features(
     docs: DataFrame,
     dims: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     signed: bool = True,
     extra: list[str] | None = None,
 ) -> DataFrame:
@@ -1484,13 +1390,13 @@ def hashed_features(
     from ..functions.hashing import md5_int60
 
     extra = extra or []
-    t = _with_tokens(docs, id_col, text_col, extra).select(
-        F.col(id_col), *extra, F.explode("__toks").alias("__tok")
+    t = _with_tokens(docs, extra).select(
+        F.col("doc_id"), *extra, F.explode("__toks").alias("__tok")
     )
     t = t.select(
-        F.col(id_col), *extra, md5_int60(F.col("__tok")).alias("__h")
+        F.col("doc_id"), *extra, md5_int60(F.col("__tok")).alias("__h")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         *extra,
         (F.col("__h") % dims).alias("bucket"),
         (
@@ -1499,7 +1405,7 @@ def hashed_features(
             else F.lit(1)
         ).alias("__s"),
     )
-    out = t.groupBy(F.col(id_col), *extra, F.col("bucket")).agg(
+    out = t.groupBy(F.col("doc_id"), *extra, F.col("bucket")).agg(
         F.sum("__s").cast("long").alias("weight")
     )
     return out.filter(F.col("weight") != 0) if signed else out
@@ -1508,15 +1414,9 @@ def hashed_features(
 def model_weights(
     docs: DataFrame,
     target_source: str,
-    dims: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    source_col: str = "source",
-    positive_lang: str = "en",
     tf: DataFrame | None = None,
 ) -> DataFrame:
-    """The dims-sized weight table both corpus-fit linear models share:
+    """The 32-bucket weight table both corpus-fit linear models share:
     ``(bucket, w_cls, w_dsir)`` — the classifier cross-difference and the
     DSIR affinity cross-difference (see model_scores). Fit ONCE on a
     corpus snapshot, then broadcast to the batch scorers (model_scores).
@@ -1527,16 +1427,15 @@ def model_weights(
     by Spark instead of re-tokenizing)."""
     if tf is None:
         tf = hashed_features(
-            docs, dims=dims, id_col=id_col, text_col=text_col,
-            signed=False, extra=[lang_col, source_col],
+            docs, signed=False, extra=["lang", "source"],
         ).select(
-            F.col(id_col), F.col(lang_col), F.col(source_col),
+            F.col("doc_id"), F.col("lang"), F.col("source"),
             "bucket", F.col("weight").alias("w"),
         )
     model = tf.groupBy("bucket").agg(
-        F.sum(F.when(F.col(lang_col) == positive_lang, F.col("w")).otherwise(0)).alias("pos_b"),
-        F.sum(F.when(F.col(lang_col) != positive_lang, F.col("w")).otherwise(0)).alias("neg_b"),
-        F.sum(F.when(F.col(source_col) == target_source, F.col("w")).otherwise(0)).alias("t_b"),
+        F.sum(F.when(F.col("lang") == "en", F.col("w")).otherwise(0)).alias("pos_b"),
+        F.sum(F.when(F.col("lang") != "en", F.col("w")).otherwise(0)).alias("neg_b"),
+        F.sum(F.when(F.col("source") == target_source, F.col("w")).otherwise(0)).alias("t_b"),
         F.sum("w").alias("r_b"),
     )
     tot = model.agg(
@@ -1556,26 +1455,17 @@ def model_weights(
     )
 
 
-def model_scores(
-    docs: DataFrame,
-    target_source: str,
-    dims: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    source_col: str = "source",
-    positive_lang: str = "en",
-) -> DataFrame:
+def model_scores(docs: DataFrame, target_source: str) -> DataFrame:
     """Per-document scores from the two corpus-fit linear models over ONE
     shared hashed-feature pass (the queries.model_curation_report
     composition, exposed for pipeline/CLI use): the NB-style
-    ``positive_lang`` discriminant (s_cls) and the DSIR-style
+    English-vs-rest discriminant (s_cls) and the DSIR-style
     ``target_source`` affinity (s_dsir), both exact-integer cross-
     difference weights (see hashed_nb_lang_classifier /
     dsir_importance_scores for the algebra and its headroom bound).
     Returns ``(id, source, n_tokens, s_cls, s_dsir)`` — a doc passes the
     standard curation gate when BOTH scores are positive. Scale: one
-    (id, bucket) shuffle for tf, one dims-sized model broadcast back,
+    (id, bucket) shuffle for tf, one 32-bucket model broadcast back,
     one id-keyed score aggregation; k models share the single pass."""
     from .dedup import materialize
 
@@ -1584,21 +1474,16 @@ def model_scores(
     # 3x per call. Materialize the single pass the docstring promises.
     tf = materialize(
         hashed_features(
-            docs, dims=dims, id_col=id_col, text_col=text_col,
-            signed=False, extra=[lang_col, source_col],
+            docs, signed=False, extra=["lang", "source"],
         ).select(
-            F.col(id_col), F.col(lang_col), F.col(source_col),
+            F.col("doc_id"), F.col("lang"), F.col("source"),
             "bucket", F.col("weight").alias("w"),
         )
     )
-    wt = model_weights(
-        docs, target_source, dims=dims, id_col=id_col, text_col=text_col,
-        lang_col=lang_col, source_col=source_col, positive_lang=positive_lang,
-        tf=tf,
-    )
+    wt = model_weights(docs, target_source, tf=tf)
     return (
         tf.join(F.broadcast(wt), "bucket")
-        .groupBy(F.col(id_col), F.col(source_col))
+        .groupBy(F.col("doc_id"), F.col("source"))
         .agg(
             F.sum("w").cast("long").alias("n_tokens"),
             F.sum(F.col("w") * F.col("w_cls")).cast("long").alias("s_cls"),

@@ -20,23 +20,14 @@ def materialize_view(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-def materialize_table(
-    df: DataFrame,
-    path: str,
-    name: str | None = None,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
+def materialize_table(df: DataFrame, path: str, name: str | None = None) -> DataFrame:
     """dbt ``materialized='table'`` — eager CTAS to parquet; returns the
     re-read DataFrame so downstream models consume the materialized form.
 
     The re-read is pinned to ``df.schema``: the writer just produced that
     schema, so inferring it back would only cost a footer-merging job per
-    call, and partition columns keep their written types instead of the
-    ones inferred from directory names."""
-    w = df.write.mode("overwrite").format("parquet")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
+    call."""
+    df.write.mode("overwrite").format("parquet").save(path)
     out = df.sparkSession.read.schema(df.schema).parquet(path)
     if name:
         out.createOrReplaceTempView(name)

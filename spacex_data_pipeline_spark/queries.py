@@ -135,7 +135,7 @@ def shared_pass(build: Callable[[SparkSession, str], object]):
 def _doc_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import shingle_postings
 
-    return shingle_postings(_t(spark, sf_dir, "documents"), "doc_id", "text", 3)
+    return shingle_postings(_t(spark, sf_dir, "documents"))
 
 
 # The per-doc set-size table of the shared posting list (r14, guide §2.4 —
@@ -264,7 +264,7 @@ def _doc_jaccard_pairs80(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return materialize(
         ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), k=3, threshold=0.8,
+            _t(spark, sf_dir, "documents"), threshold=0.8,
             postings=_doc_shingle_postings(spark, sf_dir),
             sizes=_doc_shingle_sizes(spark, sf_dir),
         )
@@ -279,8 +279,7 @@ def _doc_containment_pairs80(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return materialize(
         containment_pairs(
-            _t(spark, sf_dir, "documents"), "doc_id", "text", k=3,
-            threshold_pct=80, min_shingles=5,
+            _t(spark, sf_dir, "documents"), threshold_pct=80, min_shingles=5,
             postings=_doc_shingle_postings(spark, sf_dir),
             sizes=_doc_shingle_sizes(spark, sf_dir),
         )
@@ -1119,7 +1118,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), k=3, threshold=0.2,
+        _t(spark, sf_dir, "documents"), threshold=0.2,
         postings=_doc_shingle_postings(spark, sf_dir),
         sizes=_doc_shingle_sizes(spark, sf_dir),
     )
@@ -1202,7 +1201,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = simhash_fingerprints(docs).localCheckpoint()
     fa = fps.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
     fb = fps.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
-    banded = simhash_near_pairs(docs, max_hamming=16, fingerprints=fps).select(
+    banded = simhash_near_pairs(docs, fingerprints=fps).select(
         "doc_a", "doc_b", F.lit(True).alias("banded")
     )
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
@@ -1359,7 +1358,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL (oracle inlines them as literals)."""
     from .operators.similarity import ann_lsh_topk
 
-    return ann_lsh_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=10)
+    return ann_lsh_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4])
 
 
 # Empty-text-safe oracle tokenizer. Spark's tokens() maps empty/whitespace
@@ -1734,7 +1733,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import documents_as_media, frame_sample_plan
 
     media = documents_as_media(_t(spark, sf_dir, "documents"))
-    return frame_sample_plan(media, every_nth=10).select(
+    return frame_sample_plan(media).select(
         "doc_id", F.col("frame_idx").cast("int").alias("frame_idx")
     )
 
@@ -1774,7 +1773,7 @@ def multimodal_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import documents_as_media, resize_image_plan
 
     media = documents_as_media(_t(spark, sf_dir, "documents"))
-    return resize_image_plan(media, max_side=64).select(
+    return resize_image_plan(media).select(
         "doc_id", "width", "height", "out_width", "out_height", "out_bytes"
     )
 
@@ -1815,7 +1814,7 @@ def multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import documents_as_media, extract_byte_features
 
     media = documents_as_media(_t(spark, sf_dir, "documents"))
-    feats = extract_byte_features(media.select("doc_id", "media"), n_bins=16)
+    feats = extract_byte_features(media.select("doc_id", "media"))
     return feats.select(
         "doc_id",
         F.posexplode("features").alias("bin", "share"),
@@ -2491,7 +2490,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index + search reproducible in SQL."""
     from .operators.similarity import ivf_topk
 
-    return ivf_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=10)
+    return ivf_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4])
 
 
 # ---------------------------------------------------------------------------
@@ -2776,7 +2775,7 @@ def pack_documents_token_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     is oracle-checked."""
     from .operators.text import pack_token_bins
 
-    return pack_token_bins(_t(spark, sf_dir, "documents"), budget=512, shards=32)
+    return pack_token_bins(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3390,7 +3389,7 @@ def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     train = docs.filter(F.col("doc_id") % 50 != 0)
-    return contamination_flags(train, bench, k=5)
+    return contamination_flags(train, bench)
 
 
 @register(
@@ -3455,7 +3454,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break, single-divide char fraction — fully SQL-replicable."""
     from .operators.text import repetition_stats
 
-    return repetition_stats(_t(spark, sf_dir, "documents"), n=2)
+    return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3788,9 +3787,7 @@ def length_bucketed_batches_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket key."""
     from .operators.text import length_bucketed_batches
 
-    return length_bucketed_batches(
-        _t(spark, sf_dir, "documents"), bucket_width=64, batch_size=8
-    )
+    return length_bucketed_batches(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3874,7 +3871,7 @@ def embeddings_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     random_projection keeps its array form."""
     from .operators.similarity import random_projection
 
-    proj = random_projection(_t(spark, sf_dir, "embeddings"), out_dim=16)
+    proj = random_projection(_t(spark, sf_dir, "embeddings"))
     return proj.select("vec_id", F.posexplode("proj").alias("pos", "value"))
 
 
@@ -3909,7 +3906,7 @@ def bigram_collocations_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (no driver count)."""
     from .operators.text import bigram_collocations
 
-    return bigram_collocations(_t(spark, sf_dir, "documents"), min_count=5)
+    return bigram_collocations(_t(spark, sf_dir, "documents"))
 
 
 # Shared CC oracle prefix: J≥0.8 Jaccard pairs → undirected edges →
@@ -4249,7 +4246,7 @@ def split_contamination_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     train = docs.filter(F.col("doc_id") % 50 != 0)
-    flags = contamination_flags(train, bench, k=5)
+    flags = contamination_flags(train, bench)
     with_split = split_assign(flags, "doc_id", val_pct=0.05, test_pct=0.05)
     return (
         with_split.groupBy("split")
@@ -4398,7 +4395,7 @@ def shingle_df_stats(
     acc = 10000
     eps = 1.0 / acc
     dfs = (
-        shingle_hash_docs(_t(spark, sf_dir, "documents"), "doc_id", "text", k=3)
+        shingle_hash_docs(_t(spark, sf_dir, "documents"), "doc_id", "text")
         .groupBy("h")
         .agg(F.countDistinct("doc_id").alias("df"))
     )
@@ -4682,7 +4679,7 @@ def winnowing_fingerprints_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffles."""
     from .operators.text import winnowing_fingerprints
 
-    return winnowing_fingerprints(_t(spark, sf_dir, "documents"), k=4, window=4)
+    return winnowing_fingerprints(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -5303,9 +5300,7 @@ def winnowing_near_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max_fp_df`` skew cap mirrors the shingle join's."""
     from .operators.text import winnowing_near_pairs
 
-    return winnowing_near_pairs(
-        _t(spark, sf_dir, "documents"), k=4, window=4, min_shared=2
-    )
+    return winnowing_near_pairs(_t(spark, sf_dir, "documents"), min_shared=2)
 
 
 @register(
@@ -6297,7 +6292,7 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.pq_adc_topk)."""
     from .operators.similarity import pq_adc_topk
 
-    return pq_adc_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=10)
+    return pq_adc_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4])
 
 
 @register(
@@ -6469,7 +6464,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     audited IVF and PQ paths (see operators/similarity.pq_ivf_topk)."""
     from .operators.similarity import pq_ivf_topk
 
-    return pq_ivf_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=10)
+    return pq_ivf_topk(_t(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4])
 
 
 @register(
@@ -6644,7 +6639,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qids = [0, 1, 2, 3, 4]
     exact = cosine_topk(emb, qids, k=10).select("query_id", "neighbor_id")
-    pq = pq_adc_topk(emb, qids, k=10).select(
+    pq = pq_adc_topk(emb, qids).select(
         "query_id", F.col("neighbor_id").alias("q_neighbor_id")
     )
     hits = exact.join(
@@ -6752,7 +6747,7 @@ def dedup_span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/dedup.duplicate_span_docs)."""
     from .operators.dedup import duplicate_span_docs
 
-    return duplicate_span_docs(_t(spark, sf_dir, "documents"), n=8)
+    return duplicate_span_docs(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -9530,7 +9525,7 @@ def decontaminate_bloom_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     train = docs.filter(F.col("doc_id") % 50 != 0)
-    return contamination_flags_bloom(train, bench, k=5)
+    return contamination_flags_bloom(train, bench)
 
 
 @register(
@@ -9807,7 +9802,7 @@ def dedup_jaccard_prefix_filtered(spark: SparkSession, sf_dir: str) -> DataFrame
     from .operators.dedup import jaccard_pairs_prefix_filtered
 
     return jaccard_pairs_prefix_filtered(
-        _t(spark, sf_dir, "documents"), k=3, threshold=0.8,
+        _t(spark, sf_dir, "documents"), threshold=0.8,
         # r14: ride the sweep-shared posting pass — the entry previously
         # re-ran tokenize+shingle+materialize over the whole corpus that
         # _doc_shingle_postings had already paid (guide §2.4).
@@ -11784,7 +11779,6 @@ def session_incident_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_end="session_end",
         right_start="incident_start",
         right_end="incident_end",
-        bin_seconds=3600,
     )
     return (
         j.groupBy("incident_start")
@@ -13004,7 +12998,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import ngram_jaccard_pairs
 
     pairs = ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), k=3, threshold=0.2,
+        _t(spark, sf_dir, "documents"), threshold=0.2,
         postings=_doc_shingle_postings(spark, sf_dir),
         sizes=_doc_shingle_sizes(spark, sf_dir),
     )
@@ -21804,7 +21798,7 @@ def lsh_recall_vs_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     truth = ngram_jaccard_pairs(
-        docs, k=3, threshold=0.5, postings=_doc_shingle_postings(spark, sf_dir),
+        docs, threshold=0.5, postings=_doc_shingle_postings(spark, sf_dir),
         sizes=_doc_shingle_sizes(spark, sf_dir),
     ).select("doc_a", "doc_b")
     _, bp = _doc_lsh_banded_pairs(spark, sf_dir)

@@ -15,7 +15,8 @@ the latest row per key for readers of an append-only table.
 
 At scale: parquet, partitioned by a low-cardinality time column, so that
 per-partition overwrite (``partitionOverwriteMode=dynamic``) replaces only
-the affected partitions of a 100 TB table.
+the affected partitions of a 100 TB table; the tables here are small and
+written unpartitioned.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def append(df: DataFrame, path: str) -> None:
     """Parquet append — TASK-atomic, not TRANSACTION-atomic, by decision.
 
     The reference wraps its load in a DB transaction
@@ -33,41 +34,31 @@ def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> N
     visible to concurrent readers). Decision (VERDICT r1 "what's missing"
     #3): stay on parquet here because (a) this container ships no Delta/
     Iceberg jars and fetching them is out of bounds, (b) the pipeline's
-    default write path is :func:`write_snapshot`, whose full/dynamic-
-    partition overwrite is idempotent — a failed run is simply re-run —
+    default write path is :func:`write_snapshot`, whose full overwrite
+    is idempotent — a failed run is simply re-run —
     and (c) readers of an append table go through :func:`dedup_on_read`,
     which also masks replayed batches. On a cluster with a lakehouse
     format available, swap ``format("parquet")`` for ``format("delta")``
     here and in :func:`write_snapshot`; the call sites do not change.
     """
-    w = df.write.mode("append").format("parquet")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
+    df.write.mode("append").format("parquet").save(path)
 
 
-def write_snapshot(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def write_snapshot(df: DataFrame, path: str) -> None:
     """Idempotent full-snapshot load (replaces the reference's dup-prone
-    daily append): dynamic partition overwrite when partitioned."""
-    w = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .option("partitionOverwriteMode", "dynamic")
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
+    daily append): a full overwrite."""
+    df.write.mode("overwrite").format("parquet").save(path)
 
 
-def dedup_on_read(df: DataFrame, key: str, order_col: str = "load_ts") -> DataFrame:
+def dedup_on_read(df: DataFrame, key: str) -> DataFrame:
     """Latest-row-per-key view over an append-only table.
 
-    ``row_number() OVER (PARTITION BY key ORDER BY order_col DESC) = 1`` —
+    ``row_number() OVER (PARTITION BY key ORDER BY load_ts DESC) = 1`` —
     the standard snapshot-vs-append dedup (SURVEY.md §2.5). The window
     shuffles by ``key`` only; at scale pre-bucket the table on ``key`` to
     make this shuffle-free.
     """
-    w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
+    w = Window.partitionBy(key).orderBy(F.col("load_ts").desc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

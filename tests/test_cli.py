@@ -10,6 +10,7 @@ is injected via the ``_spark`` hook so the CLI does not stop it.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -178,6 +179,64 @@ def test_cli_prep_training_writes_disjoint_shards(spark, sf_oracle, tmp_path, ca
         r.doc_id for r in spark.read.parquet(out2).select("doc_id").collect()
     )
     assert first == second  # layout-invariant determinism
+
+
+_BAD_PREP_TRAINING_ARGS = [
+    ["--shards", "0"],
+    ["--val-pct", "-0.01"],
+    ["--test-pct", "-0.01"],
+    ["--val-pct", "0.7", "--test-pct", "0.7"],
+    ["--curriculum-phases", "0"],
+    ["--containment-prune", "--containment-df-cap", "0"],
+    ["--typicality-tail-pct", "-1"],
+    ["--typicality-tail-pct", "100.5"],
+    ["--typicality-tail-pct", "nan"],
+]
+
+
+def _tree_bytes(root: str) -> dict[str, bytes]:
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as f:
+                out[os.path.relpath(path, root)] = f.read()
+    return out
+
+
+def test_cli_rejects_bad_numbers_before_any_spark_work(spark, sf_oracle, tmp_path, capsys):
+    """An out-of-range number is a usage error (exit 2) raised before any
+    Spark job runs, so a bad re-run leaves the shards already at --out
+    byte-identical (a failed overwrite would have emptied the directory)."""
+    out = str(tmp_path / "shards")
+    assert (
+        main(
+            ["prep-training", "--sf-dir", sf_oracle, "--out", out, "--shards", "4"],
+            _spark=spark,
+        )
+        == 0
+    )
+    before = _tree_bytes(out)
+    assert before
+    capsys.readouterr()
+    sc = spark.sparkContext
+    group = "cli-bad-numbers"
+    sc.setJobGroup(group, group)
+    try:
+        bad_runs = [
+            ["prep-training", "--sf-dir", sf_oracle, "--out", out, *bad]
+            for bad in _BAD_PREP_TRAINING_ARGS
+        ]
+        bad_runs.append(["search", "--index", out, "--k", "0", "alpha"])
+        for argv in bad_runs:
+            with pytest.raises(SystemExit) as exc:
+                main(argv, _spark=spark)
+            assert exc.value.code == 2, argv
+            assert "error:" in capsys.readouterr().err, argv
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert _tree_bytes(out) == before
 
 
 def test_cli_prep_training_line_dedup_flag(spark, sf_oracle, tmp_path, capsys):
@@ -484,9 +543,7 @@ def test_cli_prep_training_containment_prune_flag(spark, sf_oracle, tmp_path):
         kept_docs = (
             spark.read.parquet(out_plain).select("doc_id", "text").distinct()
         )
-        cont = containment_pairs(kept_docs, "doc_id", "text").select(
-            "doc_a", "doc_b"
-        )
+        cont = containment_pairs(kept_docs).select("doc_a", "doc_b")
         want = {r.doc_id for r in containment_dropped_ids(cont).collect()}
         assert removed == want
 

@@ -61,7 +61,7 @@ def test_ann_recall_floor(spark, sf_oracle):
     }
     ann = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ann_lsh_topk(emb, qids, k=10).collect()
+        for r in similarity.ann_lsh_topk(emb, qids).collect()
     }
     # uniform-random fixture embeddings are LSH's worst case; clustered
     # real embeddings concentrate far harder. Floor, not target.
@@ -75,7 +75,7 @@ def test_ann_results_subset_of_exact_cosine(spark, sf_oracle):
         (r.query_id, r.neighbor_id): r.cosine
         for r in similarity.cosine_topk(emb, [0, 1], k=500).collect()
     }
-    for r in similarity.ann_lsh_topk(emb, [0, 1], k=10).collect():
+    for r in similarity.ann_lsh_topk(emb, [0, 1]).collect():
         assert exact[(r.query_id, r.neighbor_id)] == r.cosine
 
 
@@ -93,7 +93,7 @@ def test_multimodal_decode_invariants(docs):
 
 def test_frame_sample_plan(docs):
     media = multimodal.documents_as_media(docs)
-    frames = multimodal.frame_sample_plan(media, every_nth=10)
+    frames = multimodal.frame_sample_plan(media)
     assert frames.filter(F.col("frame_idx") % 10 != 0).count() == 0
     assert frames.count() > 0
 
@@ -142,12 +142,12 @@ def test_ivf_recall_and_probe_monotonicity(spark, sf_oracle):
     }
     full_probe = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(emb, qids, k=10, n_centroids=8, n_probe=8).collect()
+        for r in similarity.ivf_topk(emb, qids, n_centroids=8, n_probe=8).collect()
     }
     assert full_probe == exact  # probing every cell == exact search
     partial = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(emb, qids, k=10, n_centroids=8, n_probe=3).collect()
+        for r in similarity.ivf_topk(emb, qids, n_centroids=8, n_probe=3).collect()
     }
     assert len(exact & partial) / len(exact) >= 0.3
 
@@ -387,7 +387,7 @@ def test_contamination_flags_empty_benchmark(spark):
         [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
     )
     empty = docs.filter("doc_id < 0")
-    out = contamination_flags(docs, empty, k=5).collect()
+    out = contamination_flags(docs, empty).collect()
     assert [(r.doc_id, r.contaminated) for r in out] == [(1, False)]
 
 
@@ -404,7 +404,7 @@ def test_resize_plan_payload_and_meta_invariants(spark, sf_oracle):
     media = documents_as_media(
         catalog.table(spark, sf_oracle, "documents").limit(50)
     )
-    rows = resize_image_plan(media, max_side=64).collect()
+    rows = resize_image_plan(media).collect()
     assert rows
     for r in rows:
         assert len(r.media) == r.out_bytes
@@ -434,7 +434,7 @@ def test_byte_features_match_python_reference(spark):
     media = spark.createDataFrame(
         [(i, bytearray(p)) for i, p in payloads], "doc_id long, media binary"
     )
-    got = {r.doc_id: r.features for r in extract_byte_features(media, n_bins=16).collect()}
+    got = {r.doc_id: r.features for r in extract_byte_features(media).collect()}
 
     def ref(p):
         if not p:
@@ -469,16 +469,16 @@ def test_bloom_prefilter_matches_exact_operator(spark, sf_oracle):
     train = docs.filter(F.col("doc_id") % 50 != 0)
     exact = {
         (r.doc_id, r.contaminated)
-        for r in contamination_flags(train, bench, k=5).collect()
+        for r in contamination_flags(train, bench).collect()
     }
     assert exact == {
         (r.doc_id, r.contaminated)
-        for r in contamination_flags_bloom(train, bench, k=5).collect()
+        for r in contamination_flags_bloom(train, bench).collect()
     }
     assert exact == {
         (r.doc_id, r.contaminated)
         for r in contamination_flags_bloom(
-            train, bench, k=5, m_bits=256, k_hashes=2
+            train, bench, m_bits=256, k_hashes=2
         ).collect()
     }
 
@@ -605,7 +605,7 @@ def test_winnowing_guarantee_shared_run_shares_fingerprint(spark):
         ],
         "doc_id long, text string",
     )
-    fps = winnowing_fingerprints(docs, k=4, window=4).collect()
+    fps = winnowing_fingerprints(docs).collect()
     by_doc: dict[int, set] = {}
     for r in fps:
         by_doc.setdefault(r.doc_id, set()).add(r.fp)
@@ -1054,7 +1054,7 @@ def test_pq_encode_self_and_recall(spark, sf_oracle):
     }
     pq = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.pq_adc_topk(emb, qids, k=10).collect()
+        for r in similarity.pq_adc_topk(emb, qids).collect()
     }
     assert len(exact & pq) / len(exact) >= 0.2
 
@@ -1114,15 +1114,15 @@ def test_ivfpq_full_probe_equals_adc(spark, sf_oracle):
     qids = [0, 1, 2, 3, 4]
     full = sorted(
         (r.query_id, r.neighbor_id, r.rank, r.adc)
-        for r in similarity.pq_ivf_topk(emb, qids, k=10, n_probe=16).collect()
+        for r in similarity.pq_ivf_topk(emb, qids, n_probe=16).collect()
     )
     adc = sorted(
         (r.query_id, r.neighbor_id, r.rank, r.adc)
-        for r in similarity.pq_adc_topk(emb, qids, k=10).collect()
+        for r in similarity.pq_adc_topk(emb, qids).collect()
     )
     assert full == adc
     adc_scores = {(q, n): s for q, n, _, s in adc}
-    pruned = similarity.pq_ivf_topk(emb, qids, k=10, n_probe=4).collect()
+    pruned = similarity.pq_ivf_topk(emb, qids, n_probe=4).collect()
     for r in pruned:
         if (r.query_id, r.neighbor_id) in adc_scores:
             assert adc_scores[(r.query_id, r.neighbor_id)] == r.adc
@@ -1173,7 +1173,7 @@ def test_span_surgery_idempotent_and_exact(spark):
         (3, ""),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in duplicate_span_docs(docs, n=8).collect()}
+    out = {r.doc_id: r for r in duplicate_span_docs(docs).collect()}
 
     # doc 0 owns the shared gram (min doc_id): keeps everything
     assert out[0].n_removed_tokens == 0
@@ -1187,7 +1187,7 @@ def test_span_surgery_idempotent_and_exact(spark):
     rewritten = spark.createDataFrame(
         [(i, out[i].text_dedup) for i in range(4)], "doc_id long, text string"
     )
-    again = {r.doc_id: r for r in duplicate_span_docs(rewritten, n=8).collect()}
+    again = {r.doc_id: r for r in duplicate_span_docs(rewritten).collect()}
     for i in range(4):
         assert again[i].n_removed_tokens == 0
         assert again[i].text_dedup == out[i].text_dedup
@@ -1298,7 +1298,7 @@ def test_blocked_fuzzy_pairs_finds_planted_typos(spark):
     )
     got = {
         (r.a_key, r.b_key): r.dist
-        for r in blocked_fuzzy_pairs(recs, "k", "name", max_dist=2).collect()
+        for r in blocked_fuzzy_pairs(recs, "k", "name").collect()
     }
     assert got == {(1, 2): 1, (1, 3): 0, (2, 3): 1, (1, 4): 1, (2, 4): 2, (3, 4): 1}
 
@@ -2208,7 +2208,7 @@ def test_group_kfold_keeps_dup_clusters_together(spark, sf_oracle):
     from spacex_data_pipeline_spark.queries import REGISTRY
 
     docs = catalog.table(spark, sf_oracle, "documents")
-    pairs = ngram_jaccard_pairs(docs, k=3, threshold=0.8)
+    pairs = ngram_jaccard_pairs(docs, threshold=0.8)
     comp = connected_components(docs.select("doc_id"), pairs)
     folded = comp.select(
         "component", hash_bucket(F.col("component"), "kfold", 5).alias("fold")
@@ -2424,9 +2424,7 @@ def test_interval_overlap_join_binned_semantics(spark):
         [("a", "2024-01-01 08:00:00", "2024-01-01 12:00:00")],
         "k string, rs string, re string",
     ).select("k", F.to_timestamp("rs").alias("rs"), F.to_timestamp("re").alias("re"))
-    out = interval_overlap_join_binned(
-        left, right, "s", "e", "rs", "re", keys=["k"], bin_seconds=3600
-    )
+    out = interval_overlap_join_binned(left, right, "s", "e", "rs", "re", keys=["k"])
     got = sorted(r.lid for r in out.collect())
     assert got == [1, 2, 3, 4]  # each exactly once, no bin duplicates
 
@@ -3335,7 +3333,7 @@ def test_ivfpq_nprobe_recall_curve_shape(spark, sf_oracle):
     }
     adc = {
         (r.query_id, r.neighbor_id)
-        for r in pq_adc_topk(emb, qids, k=10).collect()
+        for r in pq_adc_topk(emb, qids).collect()
     }
     ceiling = len(exact & adc)
     assert rows[-1].hits == ceiling

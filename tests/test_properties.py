@@ -132,7 +132,7 @@ def test_length_bucketed_batches_bound_padding(spark):
 
     rows = [(i, "w " * (i % 300 + 1)) for i in range(400)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = length_bucketed_batches(df, bucket_width=64, batch_size=8).collect()
+    out = length_bucketed_batches(df).collect()
     assert len(out) == 400
     groups: dict[tuple, list[int]] = {}
     for r in out:

@@ -65,19 +65,19 @@ def test_pair_generators_shared_sizes_equivalence(spark, sf_smoke):
     sizes= table return exactly the rows of the in-plan aggregate
     (the r14 sweep-share contract)."""
     docs = catalog.table(spark, sf_smoke, "documents")
-    sh = shingle_postings(docs, "doc_id", "text", 3)
+    sh = shingle_postings(docs)
     sz = materialize(sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")))
     assert _rows(
-        ngram_jaccard_pairs(docs, k=3, threshold=0.2, postings=sh, sizes=sz)
-    ) == _rows(ngram_jaccard_pairs(docs, k=3, threshold=0.2, postings=sh))
+        ngram_jaccard_pairs(docs, threshold=0.2, postings=sh, sizes=sz)
+    ) == _rows(ngram_jaccard_pairs(docs, threshold=0.2, postings=sh))
     assert _rows(
         containment_pairs(
-            docs, "doc_id", "text", k=3, threshold_pct=80, min_shingles=5,
+            docs, threshold_pct=80, min_shingles=5,
             postings=sh, sizes=sz,
         )
     ) == _rows(
         containment_pairs(
-            docs, "doc_id", "text", k=3, threshold_pct=80, min_shingles=5,
+            docs, threshold_pct=80, min_shingles=5,
             postings=sh,
         )
     )
@@ -87,10 +87,10 @@ def test_prefix_filtered_shared_postings_equivalence(spark, sf_smoke):
     """jaccard_pairs_prefix_filtered with postings= returns exactly the
     rows of the self-built posting list (r14 sweep-share contract)."""
     docs = catalog.table(spark, sf_smoke, "documents")
-    sh = shingle_postings(docs, "doc_id", "text", 3)
+    sh = shingle_postings(docs)
     assert _rows(
-        jaccard_pairs_prefix_filtered(docs, k=3, threshold=0.8, postings=sh)
-    ) == _rows(jaccard_pairs_prefix_filtered(docs, k=3, threshold=0.8))
+        jaccard_pairs_prefix_filtered(docs, threshold=0.8, postings=sh)
+    ) == _rows(jaccard_pairs_prefix_filtered(docs, threshold=0.8))
 
 
 def test_span_surgery_base_materialization_is_value_neutral(
@@ -102,6 +102,6 @@ def test_span_surgery_base_materialization_is_value_neutral(
     from spacex_data_pipeline_spark.operators import dedup
 
     docs = catalog.table(spark, sf_smoke, "documents").limit(60)
-    got = _rows(duplicate_span_docs(docs, n=8))
+    got = _rows(duplicate_span_docs(docs))
     monkeypatch.setattr(dedup, "materialize", lambda df: df)
-    assert got == _rows(duplicate_span_docs(docs, n=8))
+    assert got == _rows(duplicate_span_docs(docs))

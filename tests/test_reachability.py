@@ -1,5 +1,6 @@
 """Every top-level definition in the package is reached from a runtime
-surface, so code with no caller cannot come back unnoticed.
+surface, and every option of an operator, function, source or plan is set
+by one, so code and options with no caller cannot come back unnoticed.
 
 The runtime surfaces are the registered builders, module-level
 statements, the CLI (``__main__.py``), ``bench.py``, ``__spark_entry__.py``
@@ -50,29 +51,42 @@ def _is_registered(fn: ast.AST) -> bool:
     )
 
 
-def unreached_definitions() -> set[tuple[str, str]]:
-    defs: dict[tuple[str, str], set[str]] = {}
-    roots: set[str] = set()
+def _surfaces() -> list[str]:
+    return [
+        os.path.join(_REPO, "bench.py"),
+        os.path.join(_REPO, "__spark_entry__.py"),
+        *glob.glob(os.path.join(_REPO, "perfbench", "*.py")),
+    ]
+
+
+def _package() -> dict[str, ast.Module]:
+    out = {}
     for path in glob.glob(os.path.join(_PKG, "**", "*.py"), recursive=True):
-        rel = os.path.relpath(path, _PKG)
         with open(path) as f:
-            tree = ast.parse(f.read())
+            out[os.path.relpath(path, _PKG)] = ast.parse(f.read())
+    return out
+
+
+def _reach(trees: dict[str, ast.Module]):
+    """Definitions by (module, name), and the ones a runtime surface reaches."""
+    defs: dict[tuple[str, str], ast.AST] = {}
+    roots: set[str] = set()
+    for rel, tree in trees.items():
         if rel == "__main__.py":
             roots |= _refs(tree)
             continue
         for st in tree.body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs[(rel, st.name)] = _refs(st)
+                defs[(rel, st.name)] = st
                 if _is_registered(st):
                     roots.add(st.name)
             else:
                 roots |= _refs(st)
-    surfaces = ["bench.py", "__spark_entry__.py"]
-    surfaces += glob.glob(os.path.join(_REPO, "perfbench", "*.py"))
-    for path in surfaces:
-        with open(os.path.join(_REPO, path)) as f:
+    for path in _surfaces():
+        with open(path) as f:
             roots |= _refs(ast.parse(f.read()))
 
+    refs = {key: _refs(node) for key, node in defs.items()}
     by_name: dict[str, list[tuple[str, str]]] = {}
     for key in defs:
         by_name.setdefault(key[1], []).append(key)
@@ -83,9 +97,14 @@ def unreached_definitions() -> set[tuple[str, str]]:
             if key in reached:
                 continue
             reached.add(key)
-            for name in defs[key] - seen:
+            for name in refs[key] - seen:
                 seen.add(name)
                 frontier.append(name)
+    return defs, reached
+
+
+def unreached_definitions() -> set[tuple[str, str]]:
+    defs, reached = _reach(_package())
     return set(defs) - reached
 
 
@@ -98,4 +117,206 @@ def test_every_definition_is_reached_from_a_runtime_surface():
     assert set(REFERENCE_FORMS) <= unreached, (
         "a reference form gained a runtime caller; drop it from "
         "REFERENCE_FORMS: " + str(sorted(set(REFERENCE_FORMS) - unreached))
+    )
+
+
+# --- Options --------------------------------------------------------------
+#
+# An optional parameter of a function in these packages exists only where a
+# runtime caller sets it. A call sets an option when it passes a value other
+# than the default: a literal (or module constant) that differs from it, any
+# other expression, or an option of the enclosing function that is itself
+# set or whose own default differs. Calls are matched to definitions by
+# name, like the walk above, so a shared name can only make an option look
+# set, never unset.
+
+_OPTION_DIRS = ("operators", "functions", "sources", "plans")
+
+# Options no runtime caller sets that stay, in three groups. The
+# parameters of REFERENCE_FORMS stay with them: only tests call those.
+
+# Options a test varies: the test checks behaviour at a value the runtime
+# never uses, so the option stays until that test is decided on its own.
+# An option such a test feeds through stays with it, and the text-index
+# verbs keep n_term_buckets as one set, since a search must use the
+# bucket count the index was built with.
+TEST_VARIED_OPTIONS = {
+    ("functions/checks.py", "heavy_hitters", "k"),
+    ("operators/dedup.py", "connected_components", "max_iter"),
+    ("operators/dedup.py", "containment_pairs", "min_shingles"),
+    ("operators/dedup.py", "containment_pairs", "threshold_pct"),
+    ("operators/dedup.py", "contamination_flags_bloom", "k_hashes"),
+    ("operators/dedup.py", "contamination_flags_bloom", "m_bits"),
+    ("operators/dedup.py", "duplicate_ngram_spans", "n"),
+    ("operators/dedup.py", "embedding_cosine_pairs_blocked", "blocks"),
+    ("operators/dedup.py", "embedding_cosine_pairs_ivf", "n_centroids"),
+    ("operators/dedup.py", "minhash_lsh_candidates", "threshold"),
+    ("operators/linkage.py", "blocking_report", "max_gram_df"),
+    ("operators/relational.py", "interval_overlap_join_binned", "keys"),
+    ("operators/relational.py", "salted_join", "salt"),
+    ("operators/relational.py", "skyline_2d", "bucket_shift"),
+    ("operators/similarity.py", "covariance_matrix_quantized", "dim"),
+    ("operators/similarity.py", "gram_matrix_quantized", "dim"),
+    ("operators/similarity.py", "ivf_assign_cells", "n_centroids"),
+    ("operators/similarity.py", "ivf_topk", "n_centroids"),
+    ("operators/similarity.py", "ivf_topk", "n_probe"),
+    ("operators/similarity.py", "power_iteration_from_cells", "dim"),
+    ("operators/similarity.py", "pq_ivf_topk", "n_probe"),
+    ("operators/text.py", "bm25_topk", "k"),
+    ("operators/text.py", "bm25_topk", "n_buckets"),
+    ("operators/text.py", "bm25_topk", "n_query_terms"),
+    ("operators/text.py", "chunk_documents", "size"),
+    ("operators/text.py", "chunk_documents_columnar", "size"),
+    ("operators/text.py", "hashed_features", "dims"),
+    ("operators/text.py", "persist_text_index", "n_term_buckets"),
+    ("operators/text.py", "search_text_index", "n_term_buckets"),
+    ("operators/text.py", "textrank_keywords", "n_iter"),
+    ("operators/text.py", "tombstone_text_index", "n_term_buckets"),
+    ("operators/text.py", "update_text_index", "n_term_buckets"),
+    ("operators/text.py", "winnowing_near_pairs", "min_shared"),
+}
+# Deployment settings: fixed in this repo, set per deployment.
+DEPLOYMENT_SETTINGS = {
+    ("sources/rest_api.py", "http_fetch", "url"),
+    ("sources/rest_api.py", "http_fetch", "timeout"),
+}
+
+_UNKNOWN = object()
+_LITERAL = (ast.Constant, ast.Name, ast.Load, ast.BinOp, ast.UnaryOp,
+            ast.Tuple, ast.List, ast.operator, ast.unaryop)
+
+
+def _value(node: ast.AST, consts: dict[str, object]):
+    """The value of a literal expression over module constants, else _UNKNOWN."""
+    for n in ast.walk(node):
+        if not isinstance(n, _LITERAL) or (isinstance(n, ast.Name) and n.id not in consts):
+            return _UNKNOWN
+    try:
+        return eval(compile(ast.Expression(node), "<option>", "eval"),
+                    {"__builtins__": {}}, dict(consts))
+    except (ArithmeticError, TypeError, ValueError):
+        return _UNKNOWN
+
+
+def _constants(tree: ast.Module) -> dict[str, object]:
+    out: dict[str, object] = {}
+    for st in tree.body:
+        if isinstance(st, (ast.Assign, ast.AnnAssign)) and st.value is not None:
+            value = _value(st.value, out)
+            for t in st.targets if isinstance(st, ast.Assign) else [st.target]:
+                if isinstance(t, ast.Name) and value is not _UNKNOWN:
+                    out[t.id] = value
+    return out
+
+
+def _aliases(tree: ast.AST) -> dict[str, str]:
+    """``from m import name as alias`` renames in ``tree``: alias -> name."""
+    return {a.asname: a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.asname}
+
+
+def _options(fn: ast.FunctionDef) -> dict[str, ast.AST]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = {p.arg: d for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)}
+    out.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    return out
+
+
+def _bound(call: ast.Call, fn: ast.FunctionDef):
+    """(parameter, argument) pairs of ``call``; None for a splatted argument."""
+    params = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            yield from ((p, None) for p in params[i:])
+            break
+        if i < len(params):
+            yield params[i], arg
+    for kw in call.keywords:
+        if kw.arg is None:
+            yield from ((p, None) for p in _options(fn))
+        else:
+            yield kw.arg, kw.value
+
+
+def options_set_at_runtime() -> tuple[set, set]:
+    """Every option of a top-level package function, keyed (module,
+    function, parameter), and the ones a runtime surface sets."""
+    trees = _package()
+    defs, reached = _reach(trees)
+    consts = {rel: _constants(tree) for rel, tree in trees.items()}
+    aliases = {rel: _aliases(tree) for rel, tree in trees.items()}
+    fns: dict[str, list[tuple[str, ast.FunctionDef]]] = {}
+    defaults: dict[tuple[str, str, str], object] = {}
+    for (rel, name), node in defs.items():
+        if isinstance(node, ast.FunctionDef):
+            fns.setdefault(name, []).append((rel, node))
+            for p, d in _options(node).items():
+                defaults[(rel, name, p)] = _value(d, consts[rel])
+
+    # Runtime code: reached definitions, module-level statements, the CLI
+    # and the surfaces outside the package.
+    bodies = [(rel, defs[(rel, name)]) for rel, name in reached]
+    for rel, tree in trees.items():
+        bodies += [(rel, st) for st in tree.body if rel == "__main__.py" or not isinstance(
+            st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))]
+    for path in _surfaces():
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        consts[path], aliases[path] = _constants(tree), _aliases(tree)
+        bodies += [(path, st) for st in tree.body]
+
+    set_: set[tuple[str, str, str]] = set()
+    feeds: dict[tuple[str, str, str], set] = {}
+    for rel, body in bodies:
+        outer = {}
+        if isinstance(body, ast.FunctionDef):
+            stored = {n.id for n in ast.walk(body)
+                      if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
+            outer = {p: (rel, body.name, p) for p in _options(body)
+                     if p not in stored and (rel, body.name, p) in defaults}
+        for call in (n for n in ast.walk(body) if isinstance(n, ast.Call)):
+            f = call.func
+            name = (aliases[rel].get(f.id, f.id) if isinstance(f, ast.Name)
+                    else f.attr if isinstance(f, ast.Attribute) else None)
+            for trel, fn in fns.get(name, ()):
+                for p, arg in _bound(call, fn):
+                    key = (trel, fn.name, p)
+                    if key not in defaults:
+                        continue
+                    if isinstance(arg, ast.Name) and arg.id in outer:
+                        # the enclosing option's value: set when it is
+                        # set, its own default when it is not
+                        feeds.setdefault(outer[arg.id], set()).add(key)
+                        v = defaults[outer[arg.id]]
+                    else:
+                        v = _UNKNOWN if arg is None else _value(arg, consts[rel])
+                    d = defaults[key]
+                    if v is _UNKNOWN or d is _UNKNOWN or v != d or type(v) is not type(d):
+                        set_.add(key)
+    frontier = list(set_)
+    while frontier:
+        for key in feeds.get(frontier.pop(), set()) - set_:
+            set_.add(key)
+            frontier.append(key)
+    return set(defaults), set_
+
+
+def unset_options() -> set[tuple[str, str, str]]:
+    options, set_ = options_set_at_runtime()
+    return {key for key in options - set_ if key[0].split(os.sep)[0] in _OPTION_DIRS}
+
+
+def test_every_option_is_set_by_a_runtime_caller():
+    unset = unset_options()
+    kept = TEST_VARIED_OPTIONS | DEPLOYMENT_SETTINGS
+    reference = {key for key in unset if key[:2] in REFERENCE_FORMS}
+    assert unset - kept - reference == set(), (
+        "options no runtime caller sets to anything but their default; "
+        "inline the default, or give the option a caller: "
+        + str(sorted(unset - kept - reference))
+    )
+    assert kept <= unset, (
+        "an allowlisted option is gone or now set at runtime; drop it from "
+        "the allowlist: " + str(sorted(kept - unset))
     )

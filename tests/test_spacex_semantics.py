@@ -250,9 +250,9 @@ def test_append_pipeline_lands_batch_as_one_file_without_python_workers(
     seen = []
     real_append = sinks.append
 
-    def spy(df, path, partition_by=None):
+    def spy(df, path):
         seen.append(df)
-        real_append(df, path, partition_by)
+        real_append(df, path)
 
     monkeypatch.setattr(sinks, "append", spy)
     wh = Warehouse(str(tmp_path / "wh"))
