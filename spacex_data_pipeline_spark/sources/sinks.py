@@ -21,8 +21,19 @@ written unpartitioned.
 
 from __future__ import annotations
 
+import math
+import os
+import shutil
+
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .. import catalog
+
+# Rows per file a whole-table rewrite aims at: compact's default target,
+# and the file size upsert_by_key writes.
+TARGET_ROWS_PER_FILE = 1_000_000
 
 
 def append(df: DataFrame, path: str) -> None:
@@ -66,10 +77,24 @@ def dedup_on_read(df: DataFrame, key: str) -> DataFrame:
     )
 
 
+def _file_rows(path: str) -> tuple[tuple[str, int], ...] | None:
+    """``(name, rows)`` of each data file Spark reads behind ``path``, in
+    ``catalog._data_files`` order, with the row count from the file's
+    parquet footer. Reads footers with pyarrow and starts no Spark job.
+    None when ``os`` cannot list the path (object stores)."""
+    files = catalog._data_files(path)
+    if files is None:
+        return None
+    return tuple(
+        (name, pq.read_metadata(os.path.join(path, name) if name else path).num_rows)
+        for name, *_ in files
+    )
+
+
 def compact(
     spark: SparkSession,
     path: str,
-    target_rows_per_file: int = 1_000_000,
+    target_rows_per_file: int = TARGET_ROWS_PER_FILE,
 ) -> int:
     """Small-file compaction: rewrite a parquet table into
     ceil(rows / target) files — the maintenance op an append-heavy
@@ -78,25 +103,44 @@ def compact(
     open cost and starve row-group pruning). Returns the file count
     after compaction.
 
-    Rewrite-via-staging: read → repartition → write to a sibling temp
-    dir → swap via two renames. The swap is atomic-ish, not atomic: a
-    reader listing the path BETWEEN the two renames sees it missing,
-    and a crash there leaves the data at ``.__compact_old__`` for
-    manual rollback (never lost). True atomicity needs a metadata
-    pointer swap (a metastore or a table format like Iceberg/Delta) —
-    out of scope for path-based tables; schedule compaction in a
-    maintenance window instead. The backup is kept until the swapped-in
-    listing is verified, then dropped. At 100 TB run this per PARTITION
-    (compact the partitions a maintenance scan flags as fragmented),
-    not whole-table; the repartition shuffle is the unavoidable cost of
-    merging files.
-    """
-    import math
+    ``rows`` is the sum of the data files' footer row counts, so no
+    count job runs. A table that is already compact — its data files,
+    all at the top level, number ceil(rows / target) and none holds more
+    than ``target`` rows — is left as it is, like a lakehouse
+    ``OPTIMIZE``: nothing is read or written and no Spark job runs (a
+    rewrite would only reshuffle the same rows). :func:`upsert_by_key`
+    writes tables of this shape for the default target. A table under
+    ``k=v`` partition directories is always rewritten. A path ``os``
+    cannot list (an object store) is counted with a Spark job and always
+    rewritten.
 
+    Rewrite-via-staging: read → repartition (a one-file target is a
+    shuffle-free ``coalesce(1)``) → write to a sibling temp dir → swap
+    via two renames. The swap is atomic-ish, not atomic: a reader
+    listing the path BETWEEN the two renames sees it missing, and a
+    crash there leaves the data at ``.__compact_old__`` for manual
+    rollback (never lost: a later compaction that would rewrite the
+    path refuses to run while that backup exists). True atomicity needs a
+    metadata pointer swap (a metastore or a table format like
+    Iceberg/Delta) — out of scope for path-based tables; schedule
+    compaction in a maintenance window instead. The backup is kept until
+    the swapped-in listing is verified, then dropped. At 100 TB run this
+    per PARTITION (compact the partitions a maintenance scan flags as
+    fragmented), not whole-table; the repartition shuffle is the
+    unavoidable cost of merging files.
+    """
+    footers = _file_rows(path)
+    if footers is not None:
+        files = max(1, math.ceil(sum(n for _, n in footers) / target_rows_per_file))
+        if len(footers) == files and all(
+            "/" not in name and n <= target_rows_per_file for name, n in footers
+        ):
+            return files
     df = spark.read.parquet(path)
-    n = df.count()
-    files = max(1, math.ceil(n / target_rows_per_file))
-    return _staged_swap(df.repartition(files), path, stem="compact")
+    if footers is None:
+        files = max(1, math.ceil(df.count() / target_rows_per_file))
+    out = df.coalesce(1) if files == 1 else df.repartition(files)
+    return _staged_swap(out, path, stem="compact")
 
 
 def _staged_swap(df: DataFrame, path: str, stem: str) -> int:
@@ -105,11 +149,10 @@ def _staged_swap(df: DataFrame, path: str, stem: str) -> int:
     listing verifies (see :func:`compact`'s docstring for the atomicity
     contract: a reader between the renames sees the path missing; a
     crash leaves the data at ``.__{stem}_old__``, never lost). Shared by
-    every read-modify-rewrite sink (compact, upsert). Returns the file
-    count after the swap."""
-    import os
-    import shutil
-
+    every read-modify-rewrite sink (compact, upsert). A backup left by
+    an interrupted swap may be the only copy of the table, so its
+    presence raises ``FileExistsError`` before anything is written.
+    Returns the file count after the swap."""
     tmp = path.rstrip("/") + f".__{stem}_tmp__"
     old = path.rstrip("/") + f".__{stem}_old__"
     # Both staging dirs are derived from `path`, so all three share one
@@ -117,8 +160,13 @@ def _staged_swap(df: DataFrame, path: str, stem: str) -> int:
     parent = os.path.dirname(os.path.abspath(path).rstrip("/"))
     assert {os.path.dirname(os.path.abspath(tmp)),
             os.path.dirname(os.path.abspath(old))} == {parent}
+    if os.path.lexists(old):
+        raise FileExistsError(
+            f"{old} is the backup of an interrupted {stem} of {path} and may "
+            f"be the only copy of the table; restore it to {path} or remove "
+            "it, then retry"
+        )
     df.write.mode("overwrite").format("parquet").save(tmp)
-    shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)  # readers see the path missing between these
     os.rename(tmp, path)  # two renames (see docstring)
     out_files = [f for f in os.listdir(path) if f.endswith(".parquet")]
@@ -139,6 +187,13 @@ def upsert_by_key(spark: SparkSession, df: DataFrame, path: str, key: str) -> in
     lakehouse format: existing ⟕-anti incoming keys (the tiny key set
     broadcasts) ∪ incoming, rewritten through the same verified staged
     swap as :func:`compact`.
+
+    It rewrites every row anyway, so it writes the merged table already
+    compacted: ``coalesce(max(1, ceil(existing_rows /
+    TARGET_ROWS_PER_FILE)))`` files, with ``existing_rows`` summed from
+    the footers, no Spark job. A following :func:`compact` at the
+    default target then finds nothing to do. A path ``os`` cannot list
+    keeps one file per input partition.
 
     Scale contract: a path-based upsert is inherently a rewrite of the
     files it touches — at 100 TB partition the table on a key prefix and
@@ -161,6 +216,7 @@ def upsert_by_key(spark: SparkSession, df: DataFrame, path: str, key: str) -> in
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+    footers = _file_rows(path)
     existing = spark.read.parquet(path)
     # NULL-SAFE anti-join: a plain `key` equi-anti-join never matches NULL
     # keys, so re-delivered null-key rows would duplicate instead of
@@ -172,6 +228,9 @@ def upsert_by_key(spark: SparkSession, df: DataFrame, path: str, key: str) -> in
         F.broadcast(incoming_keys), existing[key].eqNullSafe(F.col("__k")), "left_anti"
     )
     merged = keep.unionByName(df.select(*existing.columns))
+    if footers is not None:
+        rows = sum(n for _, n in footers)
+        merged = merged.coalesce(max(1, math.ceil(rows / TARGET_ROWS_PER_FILE)))
     return _staged_swap(merged, path, stem="upsert")
 
 

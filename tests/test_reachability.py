@@ -128,7 +128,9 @@ def test_every_definition_is_reached_from_a_runtime_surface():
 # other expression, or an option of the enclosing function that is itself
 # set or whose own default differs. Calls are matched to definitions by
 # name, like the walk above, so a shared name can only make an option look
-# set, never unset.
+# set, never unset. A call through a name the enclosing body binds to a
+# function (``real = sinks.append; real(df, path, x)``) matches that
+# function as well as the name itself.
 
 _OPTION_DIRS = ("operators", "functions", "sources", "plans")
 
@@ -215,6 +217,30 @@ def _aliases(tree: ast.AST) -> dict[str, str]:
             for a in n.names if a.asname}
 
 
+def _bindings(body: ast.AST) -> dict[str, set[str]]:
+    """Simple bindings in ``body`` of a name to a function, ``name =
+    mod.fn`` or ``name = fn``: name -> the names it is bound to."""
+    out: dict[str, set[str]] = {}
+    for n in ast.walk(body):
+        if isinstance(n, ast.Assign) and isinstance(n.value, (ast.Name, ast.Attribute)):
+            bound = n.value.id if isinstance(n.value, ast.Name) else n.value.attr
+            for t in n.targets:
+                if isinstance(t, ast.Name):
+                    out.setdefault(t.id, set()).add(bound)
+    return out
+
+
+def _callees(call: ast.Call, aliases: dict[str, str], bindings: dict[str, set[str]]) -> set[str]:
+    """The names ``call`` may call: the called name, and the names it is
+    bound to in the enclosing body."""
+    f = call.func
+    if isinstance(f, ast.Attribute):
+        return {f.attr}
+    if not isinstance(f, ast.Name):
+        return set()
+    return {aliases.get(n, n) for n in {f.id} | bindings.get(f.id, set())}
+
+
 def _options(fn: ast.FunctionDef) -> dict[str, ast.AST]:
     a = fn.args
     pos = a.posonlyargs + a.args
@@ -275,11 +301,10 @@ def options_set_at_runtime() -> tuple[set, set]:
                       if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
             outer = {p: (rel, body.name, p) for p in _options(body)
                      if p not in stored and (rel, body.name, p) in defaults}
+        bindings = _bindings(body)
         for call in (n for n in ast.walk(body) if isinstance(n, ast.Call)):
-            f = call.func
-            name = (aliases[rel].get(f.id, f.id) if isinstance(f, ast.Name)
-                    else f.attr if isinstance(f, ast.Attribute) else None)
-            for trel, fn in fns.get(name, ()):
+            callees = _callees(call, aliases[rel], bindings)
+            for trel, fn in (t for name in callees for t in fns.get(name, ())):
                 for p, arg in _bound(call, fn):
                     key = (trel, fn.name, p)
                     if key not in defaults:
@@ -320,3 +345,17 @@ def test_every_option_is_set_by_a_runtime_caller():
         "an allowlisted option is gone or now set at runtime; drop it from "
         "the allowlist: " + str(sorted(kept - unset))
     )
+
+
+def test_a_call_through_a_bound_name_matches_the_bound_function():
+    """``real = sinks.append; real(df, path, x)`` sets ``append``'s third
+    parameter, as does a binding to a bare or import-renamed name."""
+    target = ast.parse("def append(df, path, partition_by=None): pass").body[0]
+    for binding in ("real = sinks.append", "real = append", "real = app"):
+        body = ast.parse(
+            f"def spy(df, path, x):\n    {binding}\n    return real(df, path, x)\n"
+        ).body[0]
+        (call,) = [n for n in ast.walk(body) if isinstance(n, ast.Call)]
+        callees = _callees(call, {"app": "append"}, _bindings(body))
+        assert "append" in callees
+        assert dict(_bound(call, target))["partition_by"].id == "x"

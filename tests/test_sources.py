@@ -4,14 +4,67 @@ skips footer inference only while the files are unchanged."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spacex_data_pipeline_spark import catalog
 
 
+def _counting_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group -> (its result, jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _listing(path):
+    """(name, size, mtime_ns) of every entry directly under ``path``."""
+    import os
+
+    return sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(path))
+
+
+def _footer_rows(path):
+    """Row count of each top-level parquet file under ``path``, by name."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    return {
+        os.path.basename(f): pq.read_metadata(f).num_rows
+        for f in glob.glob(os.path.join(path, "*.parquet"))
+    }
+
+
+def _write_files(path, sizes):
+    """A table of one pyarrow-written file per entry of ``sizes``, holding
+    that many rows of a unique ``v``."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    start = 0
+    for i, n in enumerate(sizes):
+        pq.write_table(pa.table({"v": list(range(start, start + n))}), f"{path}/part-{i}.parquet")
+        start += n
+
+
 def test_compact_merges_small_files(spark, tmp_path):
     """Compaction rewrites append debris into ceil(rows/target) files,
-    preserves the data exactly, and leaves no staging dirs behind."""
+    preserves the data exactly, and leaves no staging dirs behind. The
+    row count comes from the footers and a one-file target is a
+    coalesce: a schema-inference job and the write job, no count job
+    and no shuffle."""
     import os
 
     from spacex_data_pipeline_spark.sources.sinks import compact
@@ -22,13 +75,148 @@ def test_compact_merges_small_files(spark, tmp_path):
     before = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
     assert before == 8
 
-    after = compact(spark, path, target_rows_per_file=1000)
+    after, jobs = _counting_jobs(spark, lambda: compact(spark, path, target_rows_per_file=1000))
     assert after == 1
+    assert jobs == 2
     back = spark.read.parquet(path)
     assert back.count() == 1000
     assert sorted(r.v for r in back.collect()) == list(range(1000))
     assert not os.path.exists(path + ".__compact_tmp__")
     assert not os.path.exists(path + ".__compact_old__")
+
+
+@pytest.mark.parametrize("sizes,target", [([1000], 1000), ([250, 250, 250, 250], 250)])
+def test_compact_leaves_a_compact_table_alone(spark, tmp_path, sizes, target):
+    """Files that already number ceil(rows/target), none over target:
+    compact returns their count, starts no Spark job, and touches no
+    file (same names, sizes and mtimes)."""
+    from spacex_data_pipeline_spark.sources.sinks import compact
+
+    path = str(tmp_path / "compact")
+    _write_files(path, sizes)
+    before = _listing(path)
+    after, jobs = _counting_jobs(spark, lambda: compact(spark, path, target_rows_per_file=target))
+    assert after == len(sizes)
+    assert jobs == 0
+    assert _listing(path) == before
+
+
+def test_compact_rewrites_the_right_file_count_with_an_oversized_file(spark, tmp_path):
+    """Two files for 160 rows at target 100 is the right count, but one
+    file holds 150 rows: the table is rewritten into files of at most
+    100 rows."""
+    from spacex_data_pipeline_spark.sources.sinks import compact
+
+    path = str(tmp_path / "lopsided")
+    _write_files(path, [150, 10])
+    assert compact(spark, path, target_rows_per_file=100) == 2
+    rows = _footer_rows(path)
+    assert len(rows) == 2 and max(rows.values()) <= 100
+    assert sorted(r.v for r in spark.read.parquet(path).collect()) == list(range(160))
+
+
+def test_compact_rewrites_partition_directories(spark, tmp_path):
+    """A ``k=v`` table is never taken as compact, even when its one data
+    file would pass the count and row checks: compaction rewrites it
+    into a top-level file, ``k`` becoming a data column."""
+    import os
+
+    from spacex_data_pipeline_spark.sources.sinks import compact
+
+    path = str(tmp_path / "parted")
+    spark.range(0, 100).withColumn("k", F.lit(1)).coalesce(1).write.partitionBy("k").parquet(path)
+    assert os.path.isdir(os.path.join(path, "k=1"))
+    assert compact(spark, path, target_rows_per_file=1000) == 1
+    assert not os.path.exists(os.path.join(path, "k=1"))
+    assert list(_footer_rows(path).values()) == [100]
+    back = spark.read.parquet(path)
+    assert sorted((r.id, r.k) for r in back.collect()) == [(i, 1) for i in range(100)]
+
+
+def test_compact_of_an_unlistable_path_counts_and_rewrites(spark, tmp_path, monkeypatch):
+    """Where ``os`` cannot list the path (an object store), compact has no
+    footers: it counts the rows with a Spark job and rewrites, even a
+    table that is already compact."""
+    from spacex_data_pipeline_spark.sources.sinks import compact
+
+    path = str(tmp_path / "remote")
+    _write_files(path, [1000])
+    before = _listing(path)
+    monkeypatch.setattr(catalog, "_data_files", lambda p: None)
+    after, jobs = _counting_jobs(spark, lambda: compact(spark, path, target_rows_per_file=1000))
+    assert after == 1
+    # schema inference, the count (a job per AQE stage) and the write
+    assert jobs >= 3
+    assert {n for n, _, _ in _listing(path)}.isdisjoint(n for n, _, _ in before)
+    assert sorted(r.v for r in spark.read.parquet(path).collect()) == list(range(1000))
+
+
+@pytest.mark.parametrize("target", [None, 300])
+def test_upsert_writes_right_sized_files(spark, tmp_path, monkeypatch, target):
+    """An upsert into an 8-file table leaves ceil(existing rows /
+    TARGET_ROWS_PER_FILE) files holding the merged rows; at the default
+    target that is one file, which a following compact leaves alone
+    without a Spark job."""
+    import math
+
+    from spacex_data_pipeline_spark.sources import sinks
+
+    if target is not None:
+        monkeypatch.setattr(sinks, "TARGET_ROWS_PER_FILE", target)
+    path = str(tmp_path / "upsert_sized")
+    base = spark.range(0, 1000).withColumn("s", F.lit("old"))
+    base.repartition(8).write.parquet(path)
+    assert len(_footer_rows(path)) == 8
+    incoming = spark.createDataFrame([(5, "new"), (2000, "new")], "id long, s string")
+
+    files = sinks.upsert_by_key(spark, incoming, path, "id")
+    want = math.ceil(1000 / sinks.TARGET_ROWS_PER_FILE)
+    assert files == want and len(_footer_rows(path)) == want
+    got = sorted((r.id, r.s) for r in spark.read.parquet(path).collect())
+    assert got == sorted([(i, "old") for i in range(1000) if i != 5] + [(5, "new"), (2000, "new")])
+    if target is None:
+        before = _listing(path)
+        assert _counting_jobs(spark, lambda: sinks.compact(spark, path)) == (1, 0)
+        assert _listing(path) == before
+
+
+def test_interrupted_swap_backup_is_never_deleted(spark, tmp_path, monkeypatch):
+    """A crash between the swap's two renames leaves the table only at
+    the ``.__upsert_old__`` backup. An append then recreates the path;
+    the next upsert must refuse to run, naming the backup, and leave the
+    backup's files byte-identical."""
+    import os
+    import re
+
+    from spacex_data_pipeline_spark.sources import sinks
+
+    path = str(tmp_path / "tbl")
+    old = path + ".__upsert_old__"
+    spark.range(0, 100).withColumn("s", F.lit("old")).write.parquet(path)
+    batch = spark.createDataFrame([(1, "new")], "id long, s string")
+
+    real_rename = os.rename
+
+    def crash_on_swap_in(src, dst):
+        if str(src).endswith(".__upsert_tmp__"):
+            raise OSError("crash between the renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_swap_in)
+    with pytest.raises(OSError, match="crash between the renames"):
+        sinks.upsert_by_key(spark, batch, path, "id")
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(path) and os.path.isdir(old)
+
+    def contents(d):
+        return {e.name: open(e.path, "rb").read() for e in os.scandir(d)}
+
+    backup = contents(old)
+    sinks.append(batch, path)
+    with pytest.raises(FileExistsError, match=re.escape(old)):
+        sinks.upsert_by_key(spark, batch, path, "id")
+    assert contents(old) == backup
+    assert sorted(r.id for r in spark.read.parquet(old).collect()) == list(range(100))
 
 
 def test_upsert_by_key_replaces_and_inserts(spark, sf_oracle, tmp_path):
@@ -303,16 +491,7 @@ def test_schema_memo_fresh_context_runs_no_footer_job(sf_smoke, tmp_path):
 
 def _read_counting_jobs(spark, sf_dir, name):
     """catalog.table under a fresh job group -> (df, jobs it started)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"schema-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        df = catalog.table(spark, sf_dir, name)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+    return _counting_jobs(spark, lambda: catalog.table(spark, sf_dir, name))
 
 
 def test_schema_memo_sees_a_rewritten_file(spark, tmp_path):
