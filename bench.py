@@ -320,9 +320,7 @@ def _minhash_production(spark, sf_dir):
     from spacex_data_pipeline_spark import catalog
     from spacex_data_pipeline_spark.operators.dedup import minhash_lsh_candidates
 
-    return minhash_lsh_candidates(
-        catalog.table(spark, sf_dir, "documents"), threshold=0.2
-    )
+    return minhash_lsh_candidates(catalog.table(spark, sf_dir, "documents"))
 
 
 OVERRIDES = {"dedup_minhash_lsh": _minhash_production}
@@ -553,12 +551,8 @@ def skew_guard_bench(spark, sf_dir) -> dict[str, float]:
         # 100%-contained, the exact quadratic the df cap bounds; same
         # contract as the Jaccard cap (capped pairs subset, lower-bound
         # scores; test_scale_patterns pins it).
-        "skew_containment_uncapped": lambda: containment_pairs(
-            docs, threshold_pct=80
-        ),
-        "skew_containment_capped": lambda: containment_pairs(
-            docs, threshold_pct=80, max_shingle_df=50
-        ),
+        "skew_containment_uncapped": lambda: containment_pairs(docs),
+        "skew_containment_capped": lambda: containment_pairs(docs, max_shingle_df=50),
         # r7 late: PPJoin prefix filtering vs the equi-join, both at the
         # t=0.2 corpus threshold (where the replaced-page output is
         # quadratic and equi-join's constant wins) and at t=0.8 on the
@@ -574,10 +568,8 @@ def skew_guard_bench(spark, sf_dir) -> dict[str, float]:
         "skew_jaccard_hi_prefix": lambda: jaccard_pairs_prefix_filtered(
             _footer_docs(spark, sf_dir), threshold=0.8
         ),
-        "skew_minhash_uncapped": lambda: minhash_lsh_candidates(docs, threshold=0.2),
-        "skew_minhash_capped": lambda: minhash_lsh_candidates(
-            docs, threshold=0.2, max_bucket_size=50
-        ),
+        "skew_minhash_uncapped": lambda: minhash_lsh_candidates(docs),
+        "skew_minhash_capped": lambda: minhash_lsh_candidates(docs, max_bucket_size=50),
         # r14 (VERDICT r13 #5): the VIRAL-BUCKET shape for the banded
         # join itself — the footer corpus plants a shared legal footer on
         # 20% of otherwise-DISTINCT documents, so hot band buckets form
@@ -589,10 +581,10 @@ def skew_guard_bench(spark, sf_dir) -> dict[str, float]:
         # sample → audit → choose → run loop for the banded-join family
         # (runbook: SCALE.md "Hot-bucket caps").
         "skew_lshband_viral_uncapped": lambda: minhash_lsh_candidates(
-            _footer_docs(spark, sf_dir), threshold=0.2
+            _footer_docs(spark, sf_dir)
         ),
         "skew_lshband_viral_capped": lambda: minhash_lsh_candidates(
-            _footer_docs(spark, sf_dir), threshold=0.2, max_bucket_size=50
+            _footer_docs(spark, sf_dir), max_bucket_size=50
         ),
         "skew_winnow_uncapped": lambda: winnowing_near_pairs(docs),
         "skew_winnow_capped": lambda: winnowing_near_pairs(docs, max_fp_df=50),

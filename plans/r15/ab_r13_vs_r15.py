@@ -97,9 +97,7 @@ def minhash_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = dedup_mod.band_keys
     dedup_mod.band_keys = band_keys_r13
     try:
-        return dedup_mod.minhash_lsh_candidates(
-            catalog.table(spark, sf_dir, "documents"), threshold=0.2
-        )
+        return dedup_mod.minhash_lsh_candidates(catalog.table(spark, sf_dir, "documents"))
     finally:
         dedup_mod.band_keys = old
 
@@ -124,7 +122,7 @@ def pipeline_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("diversity"),
     )
     kept = scored.filter((F.col("n_tokens") >= 30) & (F.col("diversity") >= 0.3))
-    survivors = exact_dedup_first(kept, "text", "doc_id")
+    survivors = exact_dedup_first(kept)
     return kept.join(survivors, "doc_id").select(
         "doc_id", "lang", "n_tokens", F.round("diversity", 6).alias("diversity")
     )
@@ -133,9 +131,7 @@ def pipeline_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spacex_data_pipeline_spark import catalog
 
-    return dedup_mod.minhash_lsh_candidates(
-        catalog.table(spark, sf_dir, "documents"), threshold=0.2
-    )
+    return dedup_mod.minhash_lsh_candidates(catalog.table(spark, sf_dir, "documents"))
 
 
 PAIRS = {

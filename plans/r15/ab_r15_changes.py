@@ -149,10 +149,7 @@ def groupkfold_with_cc(spark, sf_dir, cc_fn):
     jp = ngram_jaccard_pairs(
         docs, threshold=0.8, postings=sh, sizes=sz
     ).select("doc_a", "doc_b")
-    ct = containment_pairs(
-        docs, threshold_pct=80, min_shingles=5,
-        postings=sh, sizes=sz,
-    ).select("doc_a", "doc_b")
+    ct = containment_pairs(docs, postings=sh, sizes=sz).select("doc_a", "doc_b")
     comp = cc_fn(docs.select("doc_id"), jp.unionByName(ct))
     folded = comp.select(
         "doc_id",
@@ -277,7 +274,7 @@ def main() -> None:
         from spacex_data_pipeline_spark.operators.text import bm25_topk
         from spacex_data_pipeline_spark.queries import _MRR_QIDS
 
-        return bm25_topk(_t(s, d, "documents"), list(_MRR_QIDS), k=10)
+        return bm25_topk(_t(s, d, "documents"), list(_MRR_QIDS))
 
     PAIRS["bm25_self_retrieval_mrr"] = (
         mrr_old, lambda s, d: REGISTRY["bm25_self_retrieval_mrr"].fn(s, d))

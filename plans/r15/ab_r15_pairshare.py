@@ -51,7 +51,7 @@ def _own_jp80(spark, sf_dir):
 
 def _own_ct80(spark, sf_dir):
     return dedup_mod.containment_pairs(
-        _t(spark, sf_dir, "documents"), threshold_pct=80, min_shingles=5,
+        _t(spark, sf_dir, "documents"),
         postings=_doc_shingle_postings(spark, sf_dir),
         sizes=_doc_shingle_sizes(spark, sf_dir),
     )
@@ -60,9 +60,7 @@ def _own_ct80(spark, sf_dir):
 def lsh_verify_old(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     truth = _own_jp80(spark, sf_dir)
-    cand = dedup_mod.minhash_lsh_candidates(
-        docs, threshold=0.2
-    ).withColumnRenamed("est_jaccard", "est")
+    cand = dedup_mod.minhash_lsh_candidates(docs).withColumnRenamed("est_jaccard", "est")
     return truth.join(cand, ["doc_a", "doc_b"], "left").select(
         "doc_a",
         "doc_b",

@@ -396,7 +396,7 @@ def main(argv: Sequence[str] | None = None, _spark=None) -> int:
                 .filter(F.col("quality") >= 0.5)
                 .filter(token_count(F.col("text")) >= 30)
             )
-            survivors = exact_dedup_first(kept, "text", "doc_id")
+            survivors = exact_dedup_first(kept)
             kept = kept.join(survivors, "doc_id")
             if args.containment_prune:
                 # doc-level near-dup prune AFTER exact dedup (identical

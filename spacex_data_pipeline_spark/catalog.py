@@ -29,7 +29,6 @@ stores) are read and inferred as a plain read every time.
 from __future__ import annotations
 
 import os
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,15 +56,17 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # cores — the 100 TB failure mode is a single monolithic ingest file (or a
 # one-row-group writer), where the whole first stage of every query runs
 # on one task. The guard fires only when BOTH hold:
-#   (a) the input holds a single data file of at least
-#       SPARK_GRAFT_FANOUT_MIN_BYTES (default 1 GiB — two orders of
-#       magnitude above every local fixture, so local/bench behavior is
-#       byte-identical and the driver's lower-core-count runs stay
-#       comparable): a bare file, or a directory whose only data file it
-#       is (a one-part-file Spark output is the same hazard), and
+#   (a) the input holds a single data file of at least _FANOUT_MIN_BYTES
+#       (1 GiB — two orders of magnitude above every local fixture, so
+#       local/bench behavior is byte-identical and the driver's
+#       lower-core-count runs stay comparable): a bare file, or a
+#       directory whose only data file it is (a one-part-file Spark
+#       output is the same hazard), and
 #   (b) the scan actually plans fewer partitions than defaultParallelism
 #       (a well-row-grouped 10 GiB file already splits via
 #       maxPartitionBytes and is left alone).
+# The floor is a constant, read at call time, so a test lowers it to
+# exercise the guard on fixture files; no deployment sets it.
 # The round-robin repartition is deterministic under retry (Spark sorts
 # before round-robin — spark.sql.execution.sortBeforeRepartition, default
 # on), and Catalyst pushes filters/column pruning THROUGH Repartition into
@@ -74,25 +75,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # result. The r14 blanket fan-out (fires on local fixtures) was measured
 # and rejected; this guard exists so the posture is in the code path the
 # driver exercises while provably never firing at fixture scale.
-_FANOUT_MIN_BYTES_DEFAULT = 1 << 30
-
-
-def _fanout_floor() -> int:
-    # read per call (not at import) so tests can exercise the guard by env;
-    # a malformed value warns and falls back to the default instead of
-    # failing every table() call
-    raw = os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES")
-    if raw is None:
-        return _FANOUT_MIN_BYTES_DEFAULT
-    try:
-        return int(raw)
-    except ValueError:
-        warnings.warn(
-            f"SPARK_GRAFT_FANOUT_MIN_BYTES={raw!r} is not an integer; "
-            f"using the default {_FANOUT_MIN_BYTES_DEFAULT}",
-            stacklevel=2,
-        )
-        return _FANOUT_MIN_BYTES_DEFAULT
+_FANOUT_MIN_BYTES = 1 << 30
 
 
 def _skipped_by_spark(name: str) -> bool:
@@ -144,7 +127,7 @@ def _fan_out_single_split(
         files is None
         or len(files) != 1
         or "/" in files[0][0]
-        or files[0][1] < _fanout_floor()
+        or files[0][1] < _FANOUT_MIN_BYTES
     ):
         return df
     par = spark.sparkContext.defaultParallelism

@@ -199,8 +199,8 @@ def key_skew_report(df: DataFrame, *key_cols: str) -> DataFrame:
     )
 
 
-def heavy_hitters(df: DataFrame, *key_cols: str, k: int = 20) -> DataFrame:
-    """Top-k hottest key values with their row share — the concrete
+def heavy_hitters(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Top-20 hottest key values with their row share — the concrete
     hot-key list a salting or filter decision acts on. One shuffle on
     the key; the top-k is a TakeOrderedAndProject (per-partition heap,
     k-row driver merge), never a global sort."""
@@ -212,7 +212,7 @@ def heavy_hitters(df: DataFrame, *key_cols: str, k: int = 20) -> DataFrame:
     )
     total = counts.agg(F.sum("freq").alias("__t"))
     ranked = topk(
-        counts, [F.col("freq").desc(), *[F.col(c).asc() for c in key_cols]], k
+        counts, [F.col("freq").desc(), *[F.col(c).asc() for c in key_cols]], 20
     )
     return ranked.crossJoin(F.broadcast(total)).select(
         *key_cols,

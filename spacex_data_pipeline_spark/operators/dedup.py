@@ -40,6 +40,20 @@ from ..functions.hashing import (
 SHINGLE_K = 3
 # Word n-gram size of the benchmark-contamination check, exact and Bloom.
 CONTAMINATION_K = 5
+# Bitmap size and hash count of the contamination Bloom filter: about
+# 1 % false positives at the fixture benchmark's shingle count.
+BLOOM_M_BITS = 1 << 17
+BLOOM_K_HASHES = 5
+# Token n-gram length of the exact-substring span stats and surgery.
+SPAN_N = 8
+# Directional containment threshold (percent of the contained doc's
+# shingles) and the smallest shingle set that takes part.
+CONTAINMENT_PCT = 80
+CONTAINMENT_MIN_SHINGLES = 5
+# Rounds of min-label propagation before connected_components warns.
+CC_MAX_ITER = 20
+# Hash blocks of the exact blocked cosine join (B(B+1)/2 tasks).
+COSINE_BLOCKS = 16
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -60,8 +74,8 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
-def exact_dedup_first(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
-    """Keep the lowest-id row per exact content value.
+def exact_dedup_first(df: DataFrame) -> DataFrame:
+    """Keep the lowest ``doc_id`` per exact ``text`` value.
 
     groupBy(content) would shuffle whole documents; grouping on the content
     itself is still fine for correctness, but at 100 TB shuffle the 8-byte
@@ -70,16 +84,17 @@ def exact_dedup_first(df: DataFrame, content_col: str, id_col: str) -> DataFrame
     (hash, then verify) variant when they are not.
     """
     return (
-        df.groupBy(F.xxhash64(F.col(content_col)).alias("__h"))
-        .agg(F.min(id_col).alias(id_col))
+        df.groupBy(F.xxhash64(F.col("text")).alias("__h"))
+        .agg(F.min("doc_id").alias("doc_id"))
         .drop("__h")
     )
 
 
-def exact_dedup_rows(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
+def exact_dedup_rows(df: DataFrame) -> DataFrame:
     """Full surviving rows (not just ids): window row_number over the
-    content hash, ordered by id — one shuffle, deterministic survivor."""
-    w = Window.partitionBy(F.xxhash64(F.col(content_col))).orderBy(id_col)
+    ``text`` hash, ordered by ``doc_id`` — one shuffle, deterministic
+    survivor."""
+    w = Window.partitionBy(F.xxhash64(F.col("text"))).orderBy("doc_id")
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
@@ -217,21 +232,22 @@ def line_dedup_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingle_docs(docs: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(id, shingle) pairs — distinct word-k-shingles per doc.
+def shingle_docs(docs: DataFrame, k: int = 3) -> DataFrame:
+    """(doc_id, shingle) pairs — distinct word-k-shingles of each doc's
+    ``text``.
 
     Two-phase projection: tokenize once, then shingle from the materialized
     array (see hashing.shingles_from_words for why this matters)."""
     toks = docs.select(
-        F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__words")
+        F.col("doc_id"), F.split(normalize_text(F.col("text")), " ").alias("__words")
     )
     return toks.select(
-        F.col(id_col), F.explode(shingles_from_words(F.col("__words"), k)).alias("shingle")
+        F.col("doc_id"), F.explode(shingles_from_words(F.col("__words"), k)).alias("shingle")
     )
 
 
-def shingle_hash_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, shingle-hash) pairs with NO string construction: the
+def shingle_hash_docs(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle-hash) pairs with NO string construction: the
     ``SHINGLE_K`` word columns feed ``xxhash64`` directly (multi-arg),
     skipping concat and array_distinct entirely. Duplicates are kept —
     min/bit-vote aggregation downstream is multiset-safe for min
@@ -244,26 +260,27 @@ def shingle_hash_docs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     detection is degenerate anyway; exact_dedup_* catches identical tiny
     docs."""
     toks = docs.select(
-        F.col(id_col), F.split(normalize_text(F.col(text_col)), " ").alias("__words")
+        F.col("doc_id"), F.split(normalize_text(F.col("text")), " ").alias("__words")
     )
     w = F.col("__words")
     pos = toks.filter(F.size(w) >= SHINGLE_K).select(
-        F.col(id_col),
+        F.col("doc_id"),
         w,
         F.explode(F.sequence(F.lit(1), F.size(w) - (SHINGLE_K - 1))).alias("__i"),
     )
     return pos.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.xxhash64(
             *[F.element_at(F.col("__words"), F.col("__i") + j) for j in range(SHINGLE_K)]
         ).alias("h"),
     )
 
 
-def duplicate_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
+def duplicate_ngram_spans(docs: DataFrame) -> DataFrame:
     """Substring-level exact-duplicate statistics: for every document,
-    how much of it is covered by token n-grams that occur MORE THAN ONCE
-    anywhere in the corpus (including repeats inside the same document).
+    how much of it is covered by token ``SPAN_N``-grams that occur MORE
+    THAN ONCE anywhere in the corpus (including repeats inside the same
+    document).
     This is the accounting pass of exact-substring training-data dedup
     (the Lee et al. "Deduplicating Training Data Makes Language Models
     Better" family): doc- and line-level dedup miss boilerplate spans
@@ -298,6 +315,7 @@ def duplicate_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     from ..functions.numeric import pct_rate
     from .text import tokens
 
+    n = SPAN_N
     t = docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
     base = materialize(t.select("doc_id", F.size("__toks").alias("n_tokens"), "__toks"))
     pos = base.filter(F.col("n_tokens") >= n).select(
@@ -376,19 +394,20 @@ def duplicate_span_docs(docs: DataFrame) -> DataFrame:
     serves all three (same trade as the gram table below)."""
     from .text import tokens
 
+    n = SPAN_N
     t = docs.select(F.col("doc_id"), tokens(F.col("text")).alias("__toks"))
     base = materialize(t.select("doc_id", F.size("__toks").alias("n_tokens"), "__toks"))
-    pos = base.filter(F.col("n_tokens") >= 8).select(
+    pos = base.filter(F.col("n_tokens") >= n).select(
         F.col("doc_id"),
         "__toks",
-        F.explode(F.sequence(F.lit(1), F.col("n_tokens") - 7)).alias("start"),
+        F.explode(F.sequence(F.lit(1), F.col("n_tokens") - (n - 1))).alias("start"),
     )
     grams = materialize(
         pos.select(
             F.col("doc_id"),
             "start",
             F.xxhash64(
-                *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(8)]
+                *[F.element_at(F.col("__toks"), F.col("start") + j) for j in range(n)]
             ).alias("h"),
         )
     )
@@ -408,7 +427,7 @@ def duplicate_span_docs(docs: DataFrame) -> DataFrame:
     removed = (
         nonowner.select(
             F.col("doc_id"),
-            F.explode(F.sequence(F.col("start"), F.col("start") + F.lit(7))).alias("p"),
+            F.explode(F.sequence(F.col("start"), F.col("start") + F.lit(n - 1))).alias("p"),
         )
         .distinct()
     )
@@ -558,8 +577,6 @@ def ngram_jaccard_pairs(
 
 def containment_pairs(
     docs: DataFrame,
-    threshold_pct: int = 80,
-    min_shingles: int = 5,
     max_shingle_df: int | None = None,
     postings: DataFrame | None = None,
     sizes: DataFrame | None = None,
@@ -575,9 +592,10 @@ def containment_pairs(
     pairs sharing ≥1 shingle materialize; posting list materialized
     once, both join sides + the size join read the materialized
     blocks), but DIRECTIONAL: (a,b) with a≠b, normalized by |A| only.
-    The threshold compare is exact-integer (inter·100 ≥ pct·|A|), so no
-    float sits on the keep/drop boundary; ``min_shingles`` drops
-    sub-k*-word fragments whose containment is trivially 100%.
+    The threshold compare is exact-integer (inter·100 ≥
+    ``CONTAINMENT_PCT``·|A|), so no float sits on the keep/drop
+    boundary; ``CONTAINMENT_MIN_SHINGLES`` drops sub-k*-word fragments
+    whose containment is trivially 100%.
     Scale: identical profile to the Jaccard join — the quadratic risk
     is the same hot-shingle fan-out, and ``max_shingle_df`` is the same
     escape hatch (hot shingles leave the JOIN side via a broadcast
@@ -616,8 +634,8 @@ def containment_pairs(
     return (
         pairs.join(na, "doc_a")
         .filter(
-            (F.col("a_size") >= min_shingles)
-            & (F.col("inter") * 100 >= F.lit(threshold_pct) * F.col("a_size"))
+            (F.col("a_size") >= CONTAINMENT_MIN_SHINGLES)
+            & (F.col("inter") * 100 >= F.lit(CONTAINMENT_PCT) * F.col("a_size"))
         )
         .select(
             "doc_a",
@@ -759,19 +777,7 @@ def jaccard_pairs_prefix_filtered(
     corpus tokenize+shingle pass with the equi-join generators in a sweep
     (same contract as ngram_jaccard_pairs; contents identical to the
     in-function build by construction). None builds it here."""
-    if postings is not None:
-        sh = postings
-    else:
-        toks = docs.select(
-            F.col("doc_id"),
-            F.split(normalize_text(F.col("text")), " ").alias("__words"),
-        )
-        sh = materialize(
-            toks.select(
-                F.col("doc_id"),
-                F.explode(shingle_hashes_from_words(F.col("__words"), SHINGLE_K)).alias("h"),
-            )
-        )
+    sh = postings if postings is not None else shingle_postings(docs)
     df_tbl = sh.groupBy("h").agg(F.count(F.lit(1)).alias("__df"))
     w_rank = Window.partitionBy("doc_id").orderBy("__df", "h")
     w_size = Window.partitionBy("doc_id")
@@ -823,10 +829,9 @@ def jaccard_pairs_prefix_filtered(
 
 def minhash_lsh_candidates(
     docs: DataFrame,
-    threshold: float = 0.2,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """MinHash-LSH near-dup candidates with estimated Jaccard.
+    """MinHash-LSH near-dup candidates with estimated Jaccard ≥ 0.2.
 
     shingle → 64-hash MinHash signature → 32 bands × 2 rows → explode band
     keys → self-join per bucket (id_a < id_b) → distinct pairs → estimate
@@ -857,7 +862,7 @@ def minhash_lsh_candidates(
     # would cost 64 full text passes per shingle. (Affine a*h+b
     # mixing would be cheaper still, but wrapping long multiply throws
     # under Spark 4's ANSI mode.)
-    sh = shingle_hash_docs(docs, "doc_id", "text")
+    sh = shingle_hash_docs(docs)
     # Materialize the signature table ONCE (localCheckpoint, same pattern
     # as connected_components' edge list): the plan references sigs three
     # times (band explode + the two per-side re-attach joins), and the
@@ -926,7 +931,7 @@ def minhash_lsh_candidates(
     ) / F.lit(64.0)
     return (
         cand.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
+        .filter(F.col("est_jaccard") >= 0.2)
         .select("doc_a", "doc_b", "est_jaccard")
     )
 
@@ -940,7 +945,7 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     for banded Hamming search).
     """
     h = F.xxhash64(F.col("shingle"))
-    sh = shingle_docs(docs, "doc_id", "text", SHINGLE_K).withColumn("h", h)
+    sh = shingle_docs(docs, SHINGLE_K).withColumn("h", h)
     votes = sh.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -1000,11 +1005,7 @@ def simhash_near_pairs(
     )
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Connected components over a near-dup pair graph → canonical dedup
     groups: every node (``nodes.doc_id``) gets ``component`` = the minimum
     id reachable from it over the pairs (``edges.doc_a``, ``edges.doc_b``);
@@ -1065,6 +1066,7 @@ def connected_components(
     )
     labels = touched.select(F.col("src").alias("node"), F.col("src").alias("label"))
     changed = 0
+    max_iter = CC_MAX_ITER
     for _ in range(max_iter):
         nbr = (
             sym.join(labels, sym.dst == labels.node)
@@ -1088,14 +1090,14 @@ def connected_components(
             break
     if changed != 0:
         # ADVICE r2: never return unconverged labels silently — a dup
-        # chain with diameter > max_iter would yield non-minimal
+        # chain with diameter > CC_MAX_ITER would yield non-minimal
         # components and hash-mismatch the transitive-closure oracle
         # with no diagnostic pointing here.
         warnings.warn(
             f"connected_components did not converge after {max_iter} "
             f"iterations ({changed} labels still changing); labels are "
-            "an under-merged upper bound — raise max_iter (rounds needed "
-            "= graph diameter)",
+            "an under-merged upper bound — raise dedup.CC_MAX_ITER (rounds "
+            "needed = graph diameter)",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -1132,11 +1134,11 @@ def contamination_flags(train: DataFrame, benchmark: DataFrame) -> DataFrame:
     oracle parity non-probabilistic (contrast ngram_jaccard_pairs).
     """
     bsh = (
-        shingle_docs(benchmark, "doc_id", "text", CONTAMINATION_K)
+        shingle_docs(benchmark, CONTAMINATION_K)
         .select("shingle")
         .distinct()
     )
-    tsh = shingle_docs(train, "doc_id", "text", CONTAMINATION_K)
+    tsh = shingle_docs(train, CONTAMINATION_K)
     hits = (
         tsh.join(F.broadcast(bsh), "shingle", "left_semi")
         .select("doc_id")
@@ -1220,12 +1222,7 @@ def bloom_might_contain(key_col: str, m_bits: int, k_hashes: int):
     return out
 
 
-def contamination_flags_bloom(
-    train: DataFrame,
-    benchmark: DataFrame,
-    m_bits: int = 1 << 17,
-    k_hashes: int = 5,
-) -> DataFrame:
+def contamination_flags_bloom(train: DataFrame, benchmark: DataFrame) -> DataFrame:
     """:func:`contamination_flags` with a Bloom prefilter — the 100 TB
     decontamination topology. Identical output (the bloom admits false
     positives but never false negatives, and every candidate is exactly
@@ -1245,14 +1242,14 @@ def contamination_flags_bloom(
       ~100×.
     """
     bsh = (
-        shingle_docs(benchmark, "doc_id", "text", CONTAMINATION_K)
+        shingle_docs(benchmark, CONTAMINATION_K)
         .select("shingle")
         .distinct()
     )
-    bloom = bloom_build(bsh, "shingle", m_bits, k_hashes)
-    tsh = shingle_docs(train, "doc_id", "text", CONTAMINATION_K)
+    bloom = bloom_build(bsh, "shingle", BLOOM_M_BITS, BLOOM_K_HASHES)
+    tsh = shingle_docs(train, CONTAMINATION_K)
     candidates = tsh.join(F.broadcast(bloom)).filter(
-        bloom_might_contain("shingle", m_bits, k_hashes)
+        bloom_might_contain("shingle", BLOOM_M_BITS, BLOOM_K_HASHES)
     )
     hits = (
         candidates.join(F.broadcast(bsh), "shingle", "left_semi")
@@ -1301,7 +1298,6 @@ def embedding_cosine_pairs(
 def embedding_cosine_pairs_blocked(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    blocks: int = 16,
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold via a balanced BLOCK-PAIR
     equi-join — same output as :func:`embedding_cosine_pairs`, no
@@ -1323,7 +1319,8 @@ def embedding_cosine_pairs_blocked(
     - tasks are equi-join keys → ShuffledHashJoin/SortMergeJoin over
       B(B+1)/2 keys, each holding ~2n/B rows — no cartesian node, no
       hot partition, AQE-coalescible, and per-task memory is n/B-sized
-      (tune `blocks` so a block fits an executor at the target scale).
+      (tune ``COSINE_BLOCKS`` so a block fits an executor at the target
+      scale).
 
     The truly sub-quadratic path for HIGH thresholds / clustered data is
     :func:`embedding_cosine_pairs_ivf` (cluster-then-dedup à la SemDeDup).
@@ -1347,7 +1344,7 @@ def embedding_cosine_pairs_blocked(
 
     from .similarity import cosine_sim
 
-    b_ = blocks
+    b_ = COSINE_BLOCKS
     e = embeddings.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").alias("v"),
@@ -1412,7 +1409,6 @@ def embedding_cosine_pairs_blocked(
 def embedding_cosine_pairs_ivf(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    n_centroids: int = 16,
 ) -> DataFrame:
     """Cluster-then-dedup (SemDeDup shape): assign every vector to its
     nearest IVF cell (O(n·C), one BLAS map pass, deterministic
@@ -1435,7 +1431,7 @@ def embedding_cosine_pairs_ivf(
 
     from .similarity import cosine_sim, ivf_assign_cells
 
-    assigned, _ = ivf_assign_cells(embeddings, n_centroids)
+    assigned, _ = ivf_assign_cells(embeddings)
     margin = threshold - 1e-6
 
     def cell_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:

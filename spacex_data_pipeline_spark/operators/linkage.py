@@ -130,20 +130,19 @@ def blocking_report(
     records: DataFrame,
     key_col: str,
     name_col: str,
-    max_gram_df: int = 100,
 ) -> DataFrame:
     """One-row blocking-efficiency report — the ER counterpart of
     shingle_df_stats' LSH observability: records in, distinct gram keys
-    kept, hot keys dropped by the df cap, candidate pairs generated,
-    pairs that verify at ≤ ``MAX_DIST``, and the verify precision (the
-    fraction of candidate comparisons that were worth paying). Read
-    before tuning ``QGRAM`` / max_gram_df: precision near 100% with few
-    matches means blocking is too tight (recall risk); precision near 0%
-    means the cap or q is too loose and the join is burning Levenshtein
-    calls."""
+    kept, hot keys dropped by the df cap (100), candidate pairs
+    generated, pairs that verify at ≤ ``MAX_DIST``, and the verify
+    precision (the fraction of candidate comparisons that were worth
+    paying). Read before tuning ``QGRAM`` / the df cap: precision near
+    100% with few matches means blocking is too tight (recall risk);
+    precision near 0% means the cap or q is too loose and the join is
+    burning Levenshtein calls."""
     from ..functions.numeric import pct_rate
 
-    st = _blocking_stages(records, key_col, name_col, QGRAM, MAX_DIST, max_gram_df)
+    st = _blocking_stages(records, key_col, name_col, QGRAM, MAX_DIST, 100)
     n_rec = st["names"].agg(F.count(F.lit(1)).alias("n_records"))
     n_keys = st["cold"].agg(
         F.count_distinct(F.col("gk")).alias("n_gram_keys")

@@ -20,6 +20,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# skyline_2d's x-bucket width in bits: x values sharing ``x >> shift``
+# share a bucket of the two-phase prefix min.
+SKYLINE_BUCKET_SHIFT = 10
+
 
 def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """Global top-k: ``orderBy(...).limit(k)`` — Spark fuses this to
@@ -378,16 +382,15 @@ def interval_overlap_join_binned(
     left_end: str,
     right_start: str,
     right_end: str,
-    keys: Sequence[str] = (),
 ) -> DataFrame:
     """Interval × interval OVERLAP join (closed bounds: overlap iff
-    ``l_start <= r_end AND r_start <= l_end``, optional equi keys) via
+    ``l_start <= r_end AND r_start <= l_end``) via
     time binning — the interval-interval sibling of
     :func:`range_join_binned`'s point-in-interval shape.
 
     A bare overlap predicate plans as a nested loop (|L|·|R|
     comparisons). Binned, BOTH sides explode to the integer bins their
-    span covers and meet on an EQUI key (keys…, bin); the exact overlap
+    span covers and meet on an EQUI key (the bin); the exact overlap
     predicate then runs on equi-matched candidates only. An overlapping
     pair shares EVERY bin its intersection covers, so a naive bin join
     would duplicate it — instead of a post-join ``distinct`` (a second
@@ -407,10 +410,7 @@ def interval_overlap_join_binned(
     le = F.unix_timestamp(F.col(left_end))
     lb = left.withColumn("__lbin", F.explode(F.sequence(F.floor(ls / w), F.floor(le / w))))
     rb = right
-    renames = {right_start: "__iv_start", right_end: "__iv_end"}
-    for k in keys:
-        renames[k] = f"__iv_{k}"
-    for old, new in renames.items():
+    for old, new in ((right_start, "__iv_start"), (right_end, "__iv_end")):
         rb = rb.withColumnRenamed(old, new)
     rs = F.unix_timestamp(F.col("__iv_start"))
     re_ = F.unix_timestamp(F.col("__iv_end"))
@@ -418,8 +418,6 @@ def interval_overlap_join_binned(
         "__rbin", F.explode(F.sequence(F.floor(rs / w), F.floor(re_ / w)))
     )
     cond = F.col("__lbin") == F.col("__rbin")
-    for k in keys:
-        cond = cond & (F.col(k) == F.col(f"__iv_{k}"))
     overlap = (F.col(left_start) <= F.col("__iv_end")) & (
         F.col("__iv_start") <= F.col(left_end)
     )
@@ -434,8 +432,6 @@ def interval_overlap_join_binned(
         == F.col("__lbin")
     )
     out = lb.join(rb, cond & overlap & responsible).drop("__lbin", "__rbin")
-    for k in keys:
-        out = out.drop(f"__iv_{k}")
     return out.withColumnRenamed("__iv_start", right_start).withColumnRenamed(
         "__iv_end", right_end
     )
@@ -446,20 +442,20 @@ def salted_join(
     right: DataFrame,
     left_key: str,
     right_key: str,
-    salt: int = 8,
 ) -> DataFrame:
     """Skew-resistant equi-join: salt the (skewed) left side's key into
-    ``salt`` sub-keys and replicate the right side across all salt values,
-    so one hot key spreads over ``salt`` reducers instead of one straggler.
+    8 sub-keys and replicate the right side across all 8 salt values,
+    so one hot key spreads over 8 reducers instead of one straggler.
 
     AQE's skew-join split handles post-hoc skew automatically; explicit
     salting is the a-priori tool when a key is KNOWN hot (e.g. the empty
     document, a null-ish default id) and you want deterministic layout.
-    Cost: right side inflates ×salt — use for dimension-sized right sides.
+    Cost: right side inflates ×8 — use for dimension-sized right sides.
 
     The join is inner: the right side is replicated ×salt, so a join that
     kept unmatched right rows would emit each once per salt value.
     """
+    salt = 8
     l_salted = left.withColumn("__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt)))
     r_salted = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
@@ -552,7 +548,7 @@ def bloom_prefilter_semi_join(
     return pre.join(build.select(key), key, "left_semi")
 
 
-def skyline_2d(df: DataFrame, x: str, y: str, bucket_shift: int = 10) -> DataFrame:
+def skyline_2d(df: DataFrame, x: str, y: str) -> DataFrame:
     """2-D SKYLINE (Pareto frontier, minimize ``x`` then ``y``) — the
     preference-query operator relational engines expose as
     ``SKYLINE OF x MIN, y MIN``: keep exactly the rows no other row
@@ -566,14 +562,15 @@ def skyline_2d(df: DataFrame, x: str, y: str, bucket_shift: int = 10) -> DataFra
     come from the ``x``-group table (|distinct x| rows, bounded by the
     value domain, never by the data): per-group min, then a strict
     exclusive prefix min across groups via the same two-phase scan as
-    :func:`global_running_sum` — per-bucket mins (``x >> bucket_shift``),
+    :func:`global_running_sum` — per-bucket mins (``x >>
+    SKYLINE_BUCKET_SHIFT``),
     an exclusive cross-bucket min over the bucket table only, and a
     within-bucket exclusive window, so no reducer ever sees more than
     one bucket's groups. One group shuffle + one attach join; the
     quadratic dominance test never runs. ``x`` must be integral and
     non-negative (bucket identity is a bit shift)."""
     g = df.groupBy(x).agg(F.min(y).alias("__gmin"))
-    gb = g.withColumn("__b", F.shiftright(F.col(x).cast("long"), bucket_shift))
+    gb = g.withColumn("__b", F.shiftright(F.col(x).cast("long"), SKYLINE_BUCKET_SHIFT))
     per = gb.groupBy("__b").agg(F.min("__gmin").alias("__bmin"))
     wb = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
     off = per.select("__b", F.min("__bmin").over(wb).alias("__pbmin"))

@@ -33,6 +33,9 @@ GRAM_SCALE = 1_000_000
 # Product quantization: sub-spaces per vector, codes per sub-space.
 PQ_SUBSPACES = 4
 PQ_CODES = 16
+# IVF: centroid cells of the index build, and cells a query probes.
+IVF_CENTROIDS = 16
+IVF_PROBE = 4
 
 
 def dot_ltr(a: Column, b: Column) -> Column:
@@ -467,13 +470,10 @@ def zscore_mean_per_label(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ivf_assign_cells(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-) -> tuple[DataFrame, DataFrame]:
+def ivf_assign_cells(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """IVF index build: assign every vector to its nearest 'centroid' cell.
 
-    Centroids are the first ``n_centroids`` vectors by id — deterministic
+    Centroids are the first ``IVF_CENTROIDS`` vectors by id — deterministic
     and RNG-free; a production build would k-means them, but the
     partition/probe mechanics (the part that matters for the engine) are
     identical. Assignment is one MAP pass: the centroid set rides along
@@ -496,11 +496,11 @@ def ivf_assign_cells(
     # Cell ids must be DETERMINISTIC (rank by id), not
     # monotonically_increasing_id: the latter depends on partition layout,
     # which would make assignment tie-breaks (ORDER BY aff DESC, cell)
-    # unstable across runs/engines. The window runs on n_centroids rows —
+    # unstable across runs/engines. The window runs on IVF_CENTROIDS rows —
     # single-partition by construction, cost-free.
     cents = (
         embeddings.orderBy("vec_id")
-        .limit(n_centroids)
+        .limit(IVF_CENTROIDS)
         .select(
             (F.row_number().over(Window.orderBy("vec_id")) - 1).cast("int").alias("cell"),
             F.col("embedding").alias("cv"),
@@ -572,16 +572,12 @@ def assign_to_cells(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    n_centroids: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF approximate top-k: score only vectors in the query's ``n_probe``
-    nearest cells. The partition-pruned ANN shape: at 100 TB the cell id is
-    the storage partition key and a query reads n_probe partitions, not the
-    corpus. Recall rises with n_probe (== exact when n_probe = n_centroids).
+def ivf_topk(embeddings: DataFrame, query_ids: list[int]) -> DataFrame:
+    """IVF approximate top-k: score only vectors in the query's
+    ``IVF_PROBE`` nearest cells. The partition-pruned ANN shape: at 100 TB
+    the cell id is the storage partition key and a query reads IVF_PROBE
+    partitions, not the corpus. Recall rises with IVF_PROBE (== exact when
+    IVF_PROBE = IVF_CENTROIDS).
 
     Probe selection stays on the exact interpreted dot (|queries|×C rows
     — trivially small); the in-cell candidate scoring — the
@@ -590,7 +586,7 @@ def ivf_topk(
     """
     from pyspark.sql import Window
 
-    assigned, cents = ivf_assign_cells(embeddings, n_centroids)
+    assigned, cents = ivf_assign_cells(embeddings)
     q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
@@ -600,7 +596,7 @@ def ivf_topk(
     wq = Window.partitionBy("query_id").orderBy(F.col("aff").desc(), F.col("cell"))
     probes = (
         qcells.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
+        .filter(F.col("rn") <= IVF_PROBE)
         .select("query_id", "qv", "cell")
     )
     pairs = (
@@ -841,13 +837,9 @@ def pq_adc_topk(embeddings: DataFrame, query_ids: list[int]) -> DataFrame:
     )
 
 
-def pq_ivf_topk(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    n_probe: int = 4,
-) -> DataFrame:
+def pq_ivf_topk(embeddings: DataFrame, query_ids: list[int]) -> DataFrame:
     """IVF-PQ search — the FAISS-style composition that actually serves
-    billion-vector ANN: the IVF cell prunes the corpus to ``n_probe``
+    billion-vector ANN: the IVF cell prunes the corpus to ``IVF_PROBE``
     partitions per query, and within the probed cells vectors exist only
     as their m PQ codes, scored by ADC lookup-table sums. Both halves
     reuse the audited pieces (ivf_assign_cells' exact cell choice;
@@ -857,7 +849,7 @@ def pq_ivf_topk(
 
     Scale shape: at 100 TB the (cell, codes) table IS the stored index —
     partitioned by cell, 4 bytes of codes per vector — so the
-    probe-join reads n_probe partitions and the cand↔codes join
+    probe-join reads IVF_PROBE partitions and the cand↔codes join
     disappears into the storage layout (here it is an explicit vec-keyed
     join because the fixture keeps them as separate frames). Everything
     broadcast except the corpus-sized code scan.
@@ -878,7 +870,7 @@ def pq_ivf_topk(
     wq = Window.partitionBy("query_id").orderBy(F.col("aff").desc(), F.col("cell"))
     probes = (
         qcells.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
+        .filter(F.col("rn") <= IVF_PROBE)
         .select("query_id", "cell")
     )
     cand = (
@@ -1073,7 +1065,7 @@ def label_compactness(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def gram_matrix_quantized(embeddings: DataFrame, dim: int = 64) -> DataFrame:
+def gram_matrix_quantized(embeddings: DataFrame) -> DataFrame:
     """EXACT integer Gram (second-moment) matrix of the corpus:
     G[i,j] = Σ_v q(v)[i]·q(v)[j] with q(x) = floor(x·``GRAM_SCALE``) — the PCA /
     whitening precursor (center by subtracting the mean outer product
@@ -1098,7 +1090,7 @@ def gram_matrix_quantized(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    iu = np.triu_indices(dim)
+    iu = np.triu_indices(EMBED_DIM)
 
     def gen(batches):
         # nested def: cloudpickle ships it by value (module-level
@@ -1122,7 +1114,7 @@ def gram_matrix_quantized(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     )
 
 
-def covariance_matrix_quantized(embeddings: DataFrame, dim: int = 64) -> DataFrame:
+def covariance_matrix_quantized(embeddings: DataFrame) -> DataFrame:
     """EXACT covariance matrix of the quantized embedding corpus:
     cov[i,j] = (n·G[i,j] − s_i·s_j) / n² / scale², from the one-pass Gram
     cells (:func:`gram_matrix_quantized`) plus the d column sums — the
@@ -1138,7 +1130,7 @@ def covariance_matrix_quantized(embeddings: DataFrame, dim: int = 64) -> DataFra
     two broadcast joins of d-row tables. Eigen-decomposing the d×d
     result for PCA is a driver-side scalar job.
     """
-    g = gram_matrix_quantized(embeddings, dim)
+    g = gram_matrix_quantized(embeddings)
     q = embeddings.select(
         F.posexplode(
             F.transform(
@@ -1186,7 +1178,7 @@ def mirror_gram_cells(cells: DataFrame) -> DataFrame:
     ).select("i", "j", F.col("g").cast("decimal(38,0)").alias("g"))
 
 
-def power_iteration_from_cells(full: DataFrame, dim: int = 64) -> DataFrame:
+def power_iteration_from_cells(full: DataFrame) -> DataFrame:
     """Top direction of an exact-integer cell matrix by a 3-iteration
     integer power method: v_{k+1} = rescale(G · v_k) from the all-ones
     vector, where rescale maps the vector to integer micro-units
@@ -1201,7 +1193,7 @@ def power_iteration_from_cells(full: DataFrame, dim: int = 64) -> DataFrame:
     j int, g decimal(38,0)); every operation here is bounded by d² rows,
     and the per-iteration max is a 1-row broadcast."""
     v = (
-        full.sparkSession.range(dim)
+        full.sparkSession.range(EMBED_DIM)
         .select(F.col("id").cast("int").alias("pos"), F.lit(1).cast("long").alias("v"))
     )
     for _ in range(3):

@@ -27,6 +27,13 @@ BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 # ranking and the persisted index's search.
 BM25_K1 = 1.2
 BM25_B = 0.75
+# Doc-id buckets of BM25's two-level top-k rank.
+BM25_BUCKETS = 64
+# Term buckets of a persisted text index: the postings' partition count
+# and the doclens modulus every index verb must agree on.
+TERM_BUCKETS = 64
+# Words per chunk of the UDTF and the columnar chunker.
+CHUNK_SIZE = 16
 
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
@@ -233,18 +240,13 @@ def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     return with_hs.select(F.col("doc_id"), F.explode(F.array_distinct(sel)).alias("fp"))
 
 
-def winnowing_near_pairs(
-    docs: DataFrame,
-    min_shared: int = 2,
-    max_fp_df: int | None = None,
-) -> DataFrame:
+def winnowing_near_pairs(docs: DataFrame, max_fp_df: int | None = None) -> DataFrame:
     """Local-similarity pair search over winnowing fingerprints: equi-join
-    docs on shared fingerprints, keep pairs sharing ≥ ``min_shared`` —
-    the consumer that turns :func:`winnowing_fingerprints` into a dedup/
-    plagiarism candidate generator. By the winnowing guarantee every
-    pair sharing a ≥ window+k-1 token run appears here (with
-    ``min_shared=1``); higher ``min_shared`` trades recall on single
-    short overlaps for precision.
+    docs on shared fingerprints, keep pairs sharing ≥ 2 — the consumer
+    that turns :func:`winnowing_fingerprints` into a dedup/plagiarism
+    candidate generator. By the winnowing guarantee every pair sharing a
+    ≥ window+k-1 token run shares a fingerprint; requiring two trades
+    recall on single short overlaps for precision.
 
     Same scale story as the shingle join: only pairs sharing a
     fingerprint materialize, and fingerprint density is ~2/(window+1)
@@ -276,7 +278,7 @@ def winnowing_near_pairs(
         )
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 2)
     )
 
 
@@ -346,13 +348,10 @@ def bm25_tf(docs: DataFrame) -> DataFrame:
 def bm25_topk(
     docs: DataFrame,
     query_doc_ids: list[int],
-    n_query_terms: int = 3,
-    k: int = 10,
-    n_buckets: int = 64,
     tf: DataFrame | None = None,
 ) -> DataFrame:
-    """BM25 top-k retrieval over the corpus: each query is the first
-    ``n_query_terms`` distinct terms (by first occurrence) of a query
+    """BM25 top-10 retrieval over the corpus: each query is the first
+    3 distinct terms (by first occurrence) of a query
     document; every corpus document that matches ≥1 query term is scored
 
         score(q, d) = Σ_t idf_r(t) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl))
@@ -376,7 +375,7 @@ def bm25_topk(
     map-side-combined, vocabulary-sized after the combine; query terms are
     a ≤|q|·n_terms broadcast (inverted-index probe, never a corpus×corpus
     join); only MATCHING (query, doc) rows are scored; the final top-k is
-    the exact TWO-LEVEL rank (bucket by pmod(doc_id, n_buckets), keep each
+    the exact TWO-LEVEL rank (bucket by pmod(doc_id, BM25_BUCKETS), keep each
     bucket's top-k by (score DESC, doc_id), then rank the ≤k·B survivors) —
     no corpus-sized single-reducer window survives (the
     contrastive_pairs_embeddings discipline; total order ⇒ identical to
@@ -418,7 +417,7 @@ def bm25_topk(
         .groupBy(F.col("doc_id").alias("query_id"), "term")
         .agg(F.min("pos").alias("first_pos"))
         .withColumn("qrn", F.row_number().over(qw))
-        .filter(F.col("qrn") <= n_query_terms)
+        .filter(F.col("qrn") <= 3)
         .select("query_id", "term")
     )
 
@@ -448,14 +447,14 @@ def bm25_topk(
         ).alias("score")
     )
     w1 = Window.partitionBy(
-        "query_id", F.pmod(F.col("doc_id"), F.lit(n_buckets))
+        "query_id", F.pmod(F.col("doc_id"), F.lit(BM25_BUCKETS))
     ).orderBy(F.col("score").desc(), "doc_id")
     w2 = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "doc_id")
     return (
         g.withColumn("__brn", F.row_number().over(w1))
-        .filter(F.col("__brn") <= k)
+        .filter(F.col("__brn") <= 10)
         .withColumn("rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .select("query_id", "doc_id", "rank", "score")
     )
 
@@ -644,8 +643,8 @@ def redact_pii(docs: DataFrame) -> DataFrame:
     return docs.select(F.col("doc_id"), out.alias("redacted"), *flags)
 
 
-def chunk_documents(docs: DataFrame, size: int = 16) -> DataFrame:
-    """Fixed-size word-window chunking via a Python UDTF — the
+def chunk_documents(docs: DataFrame) -> DataFrame:
+    """``CHUNK_SIZE``-word window chunking via a Python UDTF — the
     table-function surface (one input row → N output rows with their own
     schema), completing the scalar/grouped/table UDF triple. Chunking into
     training-window-sized pieces is the canonical LLM-pipeline use.
@@ -661,7 +660,7 @@ def chunk_documents(docs: DataFrame, size: int = 16) -> DataFrame:
     docs.select("doc_id", "text").createOrReplaceTempView("__chunk_src")
     return spark.sql(
         "SELECT c.* FROM __chunk_src, "
-        f"LATERAL __chunk_doc(doc_id, text, {int(size)}) AS c"
+        f"LATERAL __chunk_doc(doc_id, text, {int(CHUNK_SIZE)}) AS c"
     )
 
 
@@ -697,11 +696,7 @@ def _ensure_chunk_udtf(spark) -> None:
     _CHUNK_UDTF_SESSIONS.add(spark)
 
 
-def chunk_documents_columnar(
-    docs: DataFrame,
-    size: int = 16,
-    overlap: int = 0,
-) -> DataFrame:
+def chunk_documents_columnar(docs: DataFrame, overlap: int = 0) -> DataFrame:
     """Pure-column bulk chunker — the SCALE path the UDTF chunker's
     docstring points at: explode over a computed chunk-index sequence,
     slice the projected token array per index. Zero Python, narrow map +
@@ -711,10 +706,11 @@ def chunk_documents_columnar(
     at least one chunk.
 
     Contract (matches the UDTF at overlap=0, equivalence-tested): chunks
-    are word slices of ``size`` starting every stride tokens; the last
-    chunk may be shorter; an empty/whitespace doc yields ONE empty
-    chunk. ``overlap`` must be < ``size``.
+    are word slices of ``CHUNK_SIZE`` starting every stride tokens; the
+    last chunk may be shorter; an empty/whitespace doc yields ONE empty
+    chunk. ``overlap`` must be < ``CHUNK_SIZE``.
     """
+    size = CHUNK_SIZE
     if not 0 <= overlap < size:
         raise ValueError(f"overlap must be in [0, size); got {overlap} vs {size}")
     stride = size - overlap
@@ -925,9 +921,9 @@ def length_bucketed_batches(docs: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("n_tokens").cast("int").alias("n_tokens"), "bucket", "batch_idx")
 
 
-def textrank_keywords(docs: DataFrame, n_iter: int = 5) -> DataFrame:
+def textrank_keywords(docs: DataFrame) -> DataFrame:
     """Corpus-level TextRank keyword scores: PageRank (damping 0.85,
-    ``n_iter`` fixed iterations) over the word co-occurrence graph —
+    5 fixed iterations) over the word co-occurrence graph —
     nodes are content words (length ≥ 3, non-stopword),
     undirected edges are adjacency counts in the filtered token
     sequence.
@@ -978,7 +974,7 @@ def textrank_keywords(docs: DataFrame, n_iter: int = 5) -> DataFrame:
         F.count(F.lit(1)).alias("degree")
     )
     ranks = nodes.select("word", F.lit(1_000_000).cast("long").alias("r"))
-    for _ in range(n_iter):
+    for _ in range(5):
         contrib = (
             edges.join(ranks, edges["src"] == ranks["word"])
             .select(F.col("dst"), F.expr("(r * w) div wu").alias("__c"))
@@ -1046,7 +1042,7 @@ def phrase_search(docs: DataFrame, phrase: str) -> DataFrame:
     )
 
 
-def persist_text_index(docs: DataFrame, path: str, n_term_buckets: int = 64) -> None:
+def persist_text_index(docs: DataFrame, path: str) -> None:
     """Materialize the BM25 serving index (bm25_topk's docstring
     promise made concrete): the tf postings written as parquet
     PARTITIONED BY an md5 term bucket — a query lists only its terms'
@@ -1061,10 +1057,10 @@ def persist_text_index(docs: DataFrame, path: str, n_term_buckets: int = 64) -> 
     xxhash64, deliberately: the client must compute a term's bucket
     WITHOUT a Spark job (hashlib.md5 in plain Python matches), the same
     reason ANN serving computes probe cells client-side."""
-    _write_index_delta(docs, path, n_term_buckets, mode="overwrite")
+    _write_index_delta(docs, path, mode="overwrite")
 
 
-def _index_postings(docs, n_term_buckets):
+def _index_postings(docs):
     """(postings with denormalized dl + term_bucket, doclens) for a doc
     batch — the shared build step of persist and incremental update."""
     from .sampling import hash_bucket
@@ -1073,7 +1069,7 @@ def _index_postings(docs, n_term_buckets):
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     post = tf.join(dl, "doc_id").withColumn(
-        "term_bucket", hash_bucket(F.col("term"), "tix", n_term_buckets).cast("int")
+        "term_bucket", hash_bucket(F.col("term"), "tix", TERM_BUCKETS).cast("int")
     )
     # every indexed doc appears in doclens, even all-stopword/empty ones
     # (dl=0) — doclens is the index's doc-id REGISTRY, consulted by the
@@ -1084,7 +1080,7 @@ def _index_postings(docs, n_term_buckets):
         .select(
             F.col("doc_id"),
             F.coalesce(F.col("dl"), F.lit(0)).cast("bigint").alias("dl"),
-            F.pmod(F.col("doc_id"), F.lit(n_term_buckets)).cast("int").alias(
+            F.pmod(F.col("doc_id"), F.lit(TERM_BUCKETS)).cast("int").alias(
                 "doc_bucket"
             ),
         )
@@ -1092,8 +1088,8 @@ def _index_postings(docs, n_term_buckets):
     return post, doclens
 
 
-def _write_index_delta(docs, path, n_term_buckets, mode):
-    post, doclens = _index_postings(docs, n_term_buckets)
+def _write_index_delta(docs, path, mode):
+    post, doclens = _index_postings(docs)
     post.write.mode(mode).partitionBy("term_bucket").parquet(path + "/postings")
     doclens.write.mode(mode).partitionBy("doc_bucket").parquet(path + "/doclens")
     batch = docs.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
@@ -1119,12 +1115,7 @@ def _write_index_delta(docs, path, n_term_buckets, mode):
     os.rename(path + "/stats.__new__", path + "/stats")
 
 
-def update_text_index(
-    spark,
-    new_docs: DataFrame,
-    path: str,
-    n_term_buckets: int = 64,
-) -> None:
+def update_text_index(spark, new_docs: DataFrame, path: str) -> None:
     """Incrementally ADD a doc batch to a persisted text index — the
     nightly-crawl-delta path: only the new batch is tokenized; its
     posting files APPEND into the term-bucket directories (existing
@@ -1142,7 +1133,7 @@ def update_text_index(
     buckets = [
         r[0]
         for r in ids.select(
-            F.pmod(F.col("doc_id"), F.lit(n_term_buckets)).cast("int").alias("b")
+            F.pmod(F.col("doc_id"), F.lit(TERM_BUCKETS)).cast("int").alias("b")
         )
         .distinct()
         .collect()
@@ -1174,15 +1165,10 @@ def update_text_index(
             f"update_text_index: {n_clash} incoming id(s) already indexed — "
             "tombstone first or rebuild; appending would double-count df/tf"
         )
-    _write_index_delta(new_docs, path, n_term_buckets, mode="append")
+    _write_index_delta(new_docs, path, mode="append")
 
 
-def tombstone_text_index(
-    spark,
-    path: str,
-    ids: list[int],
-    n_term_buckets: int = 64,
-) -> None:
+def tombstone_text_index(spark, path: str, ids: list[int]) -> None:
     """Logically DELETE docs from a persisted text index by appending
     (doc_id, dl) tombstones — the Lucene deleted-docs move: no posting
     file is touched; the serve path anti-joins the (tiny, broadcast)
@@ -1194,11 +1180,9 @@ def tombstone_text_index(
 
     dl rides into the tombstone from the doclens registry (partition-
     pruned by doc-id bucket) — the stats correction needs it, and the
-    posting bodies are never scanned. Unknown ids raise.
-    ``n_term_buckets`` must match the build's (it sets the doclens
-    partition modulus)."""
+    posting bodies are never scanned. Unknown ids raise."""
     dl_reg = spark.read.parquet(path + "/doclens")
-    buckets = sorted({i % n_term_buckets for i in ids})
+    buckets = sorted({i % TERM_BUCKETS for i in ids})
     found = (
         dl_reg.filter(F.col("doc_bucket").isin(buckets))
         .filter(F.col("doc_id").isin(ids))
@@ -1231,12 +1215,19 @@ def compact_text_index(spark, path: str) -> int:
     the new one is in place. A reader between the renames sees the path
     missing; a crash leaves the old index whole at the path or at the
     backup, never a mix of old and new tables. A failed second rename
-    moves the backup back."""
+    moves the backup back. A backup left by a crash may be the only whole
+    index, so its presence raises ``FileExistsError`` before anything is
+    written."""
     import os
     import shutil
 
+    from ..sources.sinks import refuse_leftover_backup
+
     if not os.path.isdir(path + "/tombstones"):
         return 0
+    root = path.rstrip("/")
+    tmp, old = root + ".__compact_tmp__", root + ".__compact_old__"
+    refuse_leftover_backup(old, path, "index compaction")
     dead = (
         spark.read.parquet(path + "/tombstones")
         .groupBy("doc_id")
@@ -1247,8 +1238,6 @@ def compact_text_index(spark, path: str) -> int:
     ).collect()[0]
     old_stats = spark.read.parquet(path + "/stats").collect()[0]
 
-    root = path.rstrip("/")
-    tmp, old = root + ".__compact_tmp__", root + ".__compact_old__"
     shutil.rmtree(tmp, ignore_errors=True)
     for sub, part in (("postings", "term_bucket"), ("doclens", "doc_bucket")):
         spark.read.parquet(f"{root}/{sub}").join(
@@ -1259,7 +1248,6 @@ def compact_text_index(spark, path: str) -> int:
         "n_docs bigint, tot_tokens bigint",
     ).write.parquet(tmp + "/stats")
 
-    shutil.rmtree(old, ignore_errors=True)
     os.rename(root, old)  # readers see the path missing between these
     try:
         os.rename(tmp, root)  # two renames
@@ -1270,13 +1258,7 @@ def compact_text_index(spark, path: str) -> int:
     return int(corr.n)
 
 
-def search_text_index(
-    spark,
-    path: str,
-    terms: list[str],
-    k: int = 10,
-    n_term_buckets: int = 64,
-) -> DataFrame:
+def search_text_index(spark, path: str, terms: list[str], k: int = 10) -> DataFrame:
     """Serve a BM25 query from a persisted text index: term buckets are
     computed CLIENT-SIDE (pure-Python md5 — no Spark job), the posting
     read carries a static partition filter on those buckets (plan shows
@@ -1300,7 +1282,7 @@ def search_text_index(
     buckets = sorted(
         {
             int(hashlib.md5((t + "tix").encode()).hexdigest()[:8], 16)
-            % n_term_buckets
+            % TERM_BUCKETS
             for t in terms
         }
     )
@@ -1348,7 +1330,7 @@ def search_text_index(
             ).alias("score")
         )
     )
-    w1 = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(64))).orderBy(
+    w1 = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(BM25_BUCKETS))).orderBy(
         F.col("score").desc(), "doc_id"
     )
     w2 = Window.partitionBy(F.lit(1)).orderBy(F.col("score").desc(), "doc_id")
@@ -1363,13 +1345,12 @@ def search_text_index(
 
 def hashed_features(
     docs: DataFrame,
-    dims: int = 32,
     signed: bool = True,
     extra: list[str] | None = None,
 ) -> DataFrame:
     """Hashing-trick bag-of-words features (Weinberger et al. 2009): every
-    token hashes to ``bucket = h % dims`` with a sign drawn from the next
-    hash bit (``h % 2*dims >= dims`` → −1), and per-(doc, bucket) weights
+    token hashes to ``bucket = h % 32`` with a sign drawn from the next
+    hash bit (``h % 64 >= 32`` → −1), and per-(doc, bucket) weights
     are the signed occurrence sums — the fixed-width, vocabulary-free
     feature map every large-scale linear model / DSIR-style selector
     consumes. Returns ``(id, *extra, bucket, weight)`` sparse rows;
@@ -1382,13 +1363,14 @@ def hashed_features(
     md5_int60) so a SQL oracle replays bucket AND sign bit exactly.
 
     Scale shape: token explode (narrow) → ONE map-side-combined shuffle
-    on (id, bucket) whose key cardinality is |docs|·dims regardless of
+    on (id, bucket) whose key cardinality is |docs|·32 regardless of
     vocabulary size — feature hashing's whole point at 100 TB: no
     vocabulary build pass, no OOV handling, bounded width. ``extra``
     columns (labels/source) ride the same shuffle instead of joining a
     corpus-sized table back on afterwards."""
     from ..functions.hashing import md5_int60
 
+    dims = 32
     extra = extra or []
     t = _with_tokens(docs, extra).select(
         F.col("doc_id"), *extra, F.explode("__toks").alias("__tok")

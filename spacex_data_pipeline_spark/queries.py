@@ -247,8 +247,8 @@ def _doc_bm25_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # byte-identical table (the _doc_cc_components fixpoint's edge list,
 # dedup_minhash_lsh_verify's truth side, dedup_simhash's truth side,
 # dedup_cross_split_leakage, containment_groupkfold, and
-# neardup_transitivity_audit), and containment_pairs(k=3,
-# threshold_pct=80, min_shingles=5) likewise has FOUR
+# neardup_transitivity_audit), and containment_pairs (k=3, 80 pct,
+# at least 5 shingles) likewise has FOUR
 # (_doc_chain_depths' walk edges, containment_neardup_docs,
 # containment_prune_report, containment_groupkfold). Both hold the full
 # operator outputs; consumers project the columns they used before.
@@ -279,7 +279,7 @@ def _doc_containment_pairs80(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return materialize(
         containment_pairs(
-            _t(spark, sf_dir, "documents"), threshold_pct=80, min_shingles=5,
+            _t(spark, sf_dir, "documents"),
             postings=_doc_shingle_postings(spark, sf_dir),
             sizes=_doc_shingle_sizes(spark, sf_dir),
         )
@@ -1042,7 +1042,7 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte xxhash64 of the content, never the text itself."""
     from .operators.dedup import exact_dedup_first
 
-    return exact_dedup_first(_t(spark, sf_dir, "documents"), "text", "doc_id")
+    return exact_dedup_first(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1157,7 +1157,7 @@ def dedup_minhash_lsh_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: the truth side is the shared verified pair table
     # (_doc_jaccard_pairs80) — one postings self-join per sweep
     truth = _doc_jaccard_pairs80(spark, sf_dir)
-    cand = minhash_lsh_candidates(docs, threshold=0.2).withColumnRenamed(
+    cand = minhash_lsh_candidates(docs).withColumnRenamed(
         "est_jaccard", "est"
     )
     return truth.join(cand, ["doc_a", "doc_b"], "left").select(
@@ -1241,7 +1241,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import embedding_cosine_pairs_blocked
 
     return embedding_cosine_pairs_blocked(
-        _t(spark, sf_dir, "embeddings"), threshold=0.35, blocks=16
+        _t(spark, sf_dir, "embeddings"), threshold=0.35
     )
 
 
@@ -1279,7 +1279,7 @@ def dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import embedding_cosine_pairs_ivf
 
     return embedding_cosine_pairs_ivf(
-        _t(spark, sf_dir, "embeddings"), threshold=0.35, n_centroids=16
+        _t(spark, sf_dir, "embeddings"), threshold=0.35
     )
 
 
@@ -2684,7 +2684,7 @@ def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     against pure-SQL list slicing."""
     from .operators.text import chunk_documents
 
-    return chunk_documents(_t(spark, sf_dir, "documents"), size=16)
+    return chunk_documents(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -2744,7 +2744,7 @@ def pipeline_training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("diversity"),
     )
     kept = scored.filter((F.col("n_tokens") >= 30) & (F.col("diversity") >= 0.3))
-    return exact_dedup_rows(kept, "text", "doc_id").select(
+    return exact_dedup_rows(kept).select(
         "doc_id", "lang", "n_tokens", F.round("diversity", 6).alias("diversity")
     )
 
@@ -3754,7 +3754,7 @@ def salted_join_order_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    j = relational.salted_join(o, c, "o_custkey", "c_custkey", salt=8)
+    j = relational.salted_join(o, c, "o_custkey", "c_custkey")
     return j.join(F.broadcast(n), j.c_nationkey == n.n_nationkey).select(
         "o_orderkey", "n_name"
     )
@@ -4395,7 +4395,7 @@ def shingle_df_stats(
     acc = 10000
     eps = 1.0 / acc
     dfs = (
-        shingle_hash_docs(_t(spark, sf_dir, "documents"), "doc_id", "text")
+        shingle_hash_docs(_t(spark, sf_dir, "documents"))
         .groupBy("h")
         .agg(F.countDistinct("doc_id").alias("df"))
     )
@@ -5043,7 +5043,7 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text import chunk_documents_columnar
 
     return chunk_documents_columnar(
-        _t(spark, sf_dir, "documents"), size=16, overlap=4
+        _t(spark, sf_dir, "documents"), overlap=4
     )
 
 
@@ -5300,7 +5300,7 @@ def winnowing_near_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max_fp_df`` skew cap mirrors the shingle join's."""
     from .operators.text import winnowing_near_pairs
 
-    return winnowing_near_pairs(_t(spark, sf_dir, "documents"), min_shared=2)
+    return winnowing_near_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -6109,7 +6109,7 @@ def dedup_ngram_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled; see operators/dedup.duplicate_ngram_spans."""
     from .operators.dedup import duplicate_ngram_spans
 
-    return duplicate_ngram_spans(_t(spark, sf_dir, "documents"), n=8)
+    return duplicate_ngram_spans(_t(spark, sf_dir, "documents"))
 
 
 _TRIGRAM_SUMS_SQL = """
@@ -6554,7 +6554,7 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qids = [0, 1, 2]
     bm = bm25_topk(
-        _t(spark, sf_dir, "documents"), qids, k=10,
+        _t(spark, sf_dir, "documents"), qids,
         tf=_doc_bm25_tf(spark, sf_dir),
     ).select("query_id", "doc_id", F.col("rank").alias("brank"))
     vc = cosine_topk(_t(spark, sf_dir, "embeddings"), qids, k=10).select(
@@ -6686,7 +6686,7 @@ def dedup_span_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     to dedup_savings_report's whole-doc number."""
     from .operators.dedup import duplicate_ngram_spans
 
-    per = duplicate_ngram_spans(_t(spark, sf_dir, "documents"), n=8)
+    per = duplicate_ngram_spans(_t(spark, sf_dir, "documents"))
     return per.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum((F.col("n_dup_tokens") > 0).cast("long")).alias(
@@ -6872,7 +6872,7 @@ def dedup_span_rates_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import duplicate_ngram_spans
 
     docs = _t(spark, sf_dir, "documents")
-    per = duplicate_ngram_spans(docs, n=8)
+    per = duplicate_ngram_spans(docs)
     return (
         per.join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("source")
@@ -7285,7 +7285,7 @@ def heavy_hitters_event_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort (functions/checks.heavy_hitters)."""
     from .functions.checks import heavy_hitters
 
-    return heavy_hitters(_t(spark, sf_dir, "events"), "user_id", k=20)
+    return heavy_hitters(_t(spark, sf_dir, "events"), "user_id")
 
 
 @register(
@@ -7391,7 +7391,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     step (the CC-fixpoint discipline)."""
     from .operators.text import textrank_keywords as _tr
 
-    out = _tr(_t(spark, sf_dir, "documents"), n_iter=5)
+    out = _tr(_t(spark, sf_dir, "documents"))
     return relational.topk(
         out, [F.col("rank_score").desc(), F.col("word").asc()], 50
     )
@@ -9227,7 +9227,7 @@ def cluster_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     docs = _t(spark, sf_dir, "documents")
-    assigned, _ = ivf_assign_cells(emb, 16)
+    assigned, _ = ivf_assign_cells(emb)
     q = quality_score(docs).select("doc_id", "quality")
     langs = docs.select("doc_id", "lang")
     return (
@@ -9889,7 +9889,7 @@ def feature_hash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text import hashed_features
 
     return hashed_features(
-        _t(spark, sf_dir, "documents"), dims=32, signed=True
+        _t(spark, sf_dir, "documents"), signed=True
     )
 
 
@@ -9954,7 +9954,7 @@ def hashed_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical; same cut as model_scores / classifier_decile_lift).
     tf = materialize(
         hashed_features(
-            _t(spark, sf_dir, "documents"), dims=32, signed=False, extra=["lang"]
+            _t(spark, sf_dir, "documents"), signed=False, extra=["lang"]
         ).select(
             "doc_id",
             (F.col("lang") == "en").cast("int").alias("is_en"),
@@ -10042,7 +10042,7 @@ def dsir_importance_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (model aggregate + wt re-inline + scoring join) — one pass now.
     tf = materialize(
         hashed_features(
-            _t(spark, sf_dir, "documents"), dims=32, signed=False, extra=["source"]
+            _t(spark, sf_dir, "documents"), signed=False, extra=["source"]
         ).select("doc_id", "source", "bucket", F.col("weight").alias("w"))
     )
     model = tf.groupBy("bucket").agg(
@@ -10340,7 +10340,7 @@ def bm25_self_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     ranked = bm25_topk(
-        docs, list(_MRR_QIDS), k=10, tf=_doc_bm25_tf(spark, sf_dir)
+        docs, list(_MRR_QIDS), tf=_doc_bm25_tf(spark, sf_dir)
     )
     selfr = ranked.filter(F.col("doc_id") == F.col("query_id")).select(
         "query_id", "rank"
@@ -13379,7 +13379,7 @@ def ivf_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     qids = [0, 1, 2, 3, 4]
-    assigned, cents = ivf_assign_cells(emb, 16)
+    assigned, cents = ivf_assign_cells(emb)
     exact = cosine_topk(emb, qids, k=10).select("query_id", "neighbor_id")
     q = emb.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
@@ -14514,7 +14514,7 @@ def classifier_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tf = materialize(
         hashed_features(
-            _t(spark, sf_dir, "documents"), dims=32, signed=False, extra=["lang"]
+            _t(spark, sf_dir, "documents"), signed=False, extra=["lang"]
         ).select(
             "doc_id",
             (F.col("lang") == "en").cast("int").alias("is_en"),
@@ -20747,7 +20747,7 @@ def ivfpq_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     qids = [0, 1, 2, 3, 4]
     m, dim, n_codes = 4, 64, 16
     d = dim // m
-    assigned, cents = ivf_assign_cells(emb, 16)
+    assigned, cents = ivf_assign_cells(emb)
     codes = pq_encode(emb, m, n_codes, dim)
     cbs = pq_codebooks(emb, m, n_codes, dim)
     qsubs = F.array(
@@ -22180,7 +22180,7 @@ def ivfpq_append_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     init = staged.filter(F.col("vstage") == 0).select("vec_id", "embedding")
-    _, cents = ivf_assign_cells(init, 16)
+    _, cents = ivf_assign_cells(init)
     assigned = assign_to_cells(staged.select("vec_id", "embedding"), cents)
     cbs = pq_codebooks(init, m, 16, dim)
     codes = pq_encode_with(staged.select("vec_id", "embedding"), cbs, m, dim)

@@ -21,6 +21,7 @@ written unpartitioned.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import shutil
@@ -28,6 +29,7 @@ import shutil
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import catalog
 
@@ -77,18 +79,49 @@ def dedup_on_read(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-def _file_rows(path: str) -> tuple[tuple[str, int], ...] | None:
-    """``(name, rows)`` of each data file Spark reads behind ``path``, in
-    ``catalog._data_files`` order, with the row count from the file's
-    parquet footer. Reads footers with pyarrow and starts no Spark job.
-    None when ``os`` cannot list the path (object stores)."""
+# The footer key under which Spark's parquet writer stores the table's
+# schema as JSON: the string Spark's own schema inference deserializes.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _file_rows(path: str) -> tuple[tuple[str, int, str | None], ...] | None:
+    """``(name, rows, schema)`` of each data file Spark reads behind
+    ``path``, in ``catalog._data_files`` order: the row count and the
+    Spark schema JSON (None for a file not written by Spark) from the
+    file's parquet footer. Reads footers with pyarrow and starts no Spark
+    job. None when ``os`` cannot list the path (object stores)."""
     files = catalog._data_files(path)
     if files is None:
         return None
-    return tuple(
-        (name, pq.read_metadata(os.path.join(path, name) if name else path).num_rows)
-        for name, *_ in files
-    )
+    out = []
+    for name, *_ in files:
+        meta = pq.read_metadata(os.path.join(path, name) if name else path)
+        schema = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+        out.append((name, meta.num_rows, schema.decode() if schema else None))
+    return tuple(out)
+
+
+def _read_table(
+    spark: SparkSession, path: str, footers: tuple[tuple[str, int, str | None], ...] | None
+) -> DataFrame:
+    """Read the table at ``path`` whose data files ``_file_rows`` listed.
+    When every data file sits at the top level, all carry the same Spark
+    schema string and no ``_metadata``/``_common_metadata`` summary file
+    exists, Spark's inference would deserialize exactly that string, so
+    it is pinned with ``spark.read.schema`` and no inference job runs.
+    Otherwise (partition directories, pyarrow-written or mixed files, a
+    summary file, an unlistable path) it is a plain read."""
+    schemas = {s for _, _, s in footers or ()}
+    if (
+        len(schemas) == 1
+        and None not in schemas
+        and all("/" not in name for name, _, _ in footers)
+        and not any(
+            os.path.exists(os.path.join(path, f)) for f in ("_metadata", "_common_metadata")
+        )
+    ):
+        return spark.read.schema(StructType.fromJson(json.loads(schemas.pop()))).parquet(path)
+    return spark.read.parquet(path)
 
 
 def compact(
@@ -104,9 +137,11 @@ def compact(
     after compaction.
 
     ``rows`` is the sum of the data files' footer row counts, so no
-    count job runs. A table that is already compact — its data files,
-    all at the top level, number ceil(rows / target) and none holds more
-    than ``target`` rows — is left as it is, like a lakehouse
+    count job runs, and a rewrite reads with the schema the footers hold
+    (:func:`_read_table`), so no schema-inference job runs. A table that
+    is already compact — its data files, all at the top level, number
+    ceil(rows / target) and none holds more than ``target`` rows — is
+    left as it is, like a lakehouse
     ``OPTIMIZE``: nothing is read or written and no Spark job runs (a
     rewrite would only reshuffle the same rows). :func:`upsert_by_key`
     writes tables of this shape for the default target. A table under
@@ -131,16 +166,30 @@ def compact(
     """
     footers = _file_rows(path)
     if footers is not None:
-        files = max(1, math.ceil(sum(n for _, n in footers) / target_rows_per_file))
+        files = max(1, math.ceil(sum(n for _, n, _ in footers) / target_rows_per_file))
         if len(footers) == files and all(
-            "/" not in name and n <= target_rows_per_file for name, n in footers
+            "/" not in name and n <= target_rows_per_file for name, n, _ in footers
         ):
             return files
-    df = spark.read.parquet(path)
+    df = _read_table(spark, path, footers)
     if footers is None:
         files = max(1, math.ceil(df.count() / target_rows_per_file))
     out = df.coalesce(1) if files == 1 else df.repartition(files)
     return _staged_swap(out, path, stem="compact")
+
+
+def refuse_leftover_backup(old: str, path: str, op: str) -> None:
+    """Raise ``FileExistsError`` when ``old``, the backup a two-rename swap
+    of ``path`` keeps between its renames, is still there: an ``op`` was
+    interrupted, and the backup may be the only whole copy of the data.
+    Every swap calls this before it writes anything (:func:`_staged_swap`,
+    ``operators/text.compact_text_index``)."""
+    if os.path.lexists(old):
+        raise FileExistsError(
+            f"{old} is the backup of an interrupted {op} of {path} and may "
+            f"be the only whole copy of its data; restore it to {path} or "
+            "remove it, then retry"
+        )
 
 
 def _staged_swap(df: DataFrame, path: str, stem: str) -> int:
@@ -160,12 +209,7 @@ def _staged_swap(df: DataFrame, path: str, stem: str) -> int:
     parent = os.path.dirname(os.path.abspath(path).rstrip("/"))
     assert {os.path.dirname(os.path.abspath(tmp)),
             os.path.dirname(os.path.abspath(old))} == {parent}
-    if os.path.lexists(old):
-        raise FileExistsError(
-            f"{old} is the backup of an interrupted {stem} of {path} and may "
-            f"be the only copy of the table; restore it to {path} or remove "
-            "it, then retry"
-        )
+    refuse_leftover_backup(old, path, stem)
     df.write.mode("overwrite").format("parquet").save(tmp)
     os.rename(path, old)  # readers see the path missing between these
     os.rename(tmp, path)  # two renames (see docstring)
@@ -192,8 +236,10 @@ def upsert_by_key(spark: SparkSession, df: DataFrame, path: str, key: str) -> in
     compacted: ``coalesce(max(1, ceil(existing_rows /
     TARGET_ROWS_PER_FILE)))`` files, with ``existing_rows`` summed from
     the footers, no Spark job. A following :func:`compact` at the
-    default target then finds nothing to do. A path ``os`` cannot list
-    keeps one file per input partition.
+    default target then finds nothing to do. The existing rows are read
+    with the schema the footers hold (:func:`_read_table`), so no
+    schema-inference job runs either. A path ``os`` cannot list keeps one
+    file per input partition.
 
     Scale contract: a path-based upsert is inherently a rewrite of the
     files it touches — at 100 TB partition the table on a key prefix and
@@ -217,7 +263,7 @@ def upsert_by_key(spark: SparkSession, df: DataFrame, path: str, key: str) -> in
         .drop("__rn")
     )
     footers = _file_rows(path)
-    existing = spark.read.parquet(path)
+    existing = _read_table(spark, path, footers)
     # NULL-SAFE anti-join: a plain `key` equi-anti-join never matches NULL
     # keys, so re-delivered null-key rows would duplicate instead of
     # replace — eqNullSafe makes NULL behave as one more key value (still
@@ -229,7 +275,7 @@ def upsert_by_key(spark: SparkSession, df: DataFrame, path: str, key: str) -> in
     )
     merged = keep.unionByName(df.select(*existing.columns))
     if footers is not None:
-        rows = sum(n for _, n in footers)
+        rows = sum(n for _, n, _ in footers)
         merged = merged.coalesce(max(1, math.ceil(rows / TARGET_ROWS_PER_FILE)))
     return _staged_swap(merged, path, stem="upsert")
 

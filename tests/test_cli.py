@@ -292,7 +292,7 @@ def test_cli_prep_training_span_dedup_flag(spark, sf_oracle, tmp_path):
     assert back.filter(F.trim(F.col("text")) == "").count() == 0
     from spacex_data_pipeline_spark.operators.dedup import duplicate_ngram_spans
 
-    again = duplicate_ngram_spans(back.select("doc_id", "text"), n=8)
+    again = duplicate_ngram_spans(back.select("doc_id", "text"))
     assert again.filter(F.col("n_dup_grams") > 0).count() == 0
 
 

@@ -33,7 +33,7 @@ def test_minhash_recovers_strong_near_dups(docs, exact_pairs):
     assert strong, "fixture should contain planted near-dups"
     mh = {
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_candidates(docs, threshold=0.2).collect()
+        for r in dedup.minhash_lsh_candidates(docs).collect()
     }
     recovered = strong & mh
     assert len(recovered) / len(strong) >= 0.9
@@ -48,8 +48,8 @@ def test_simhash_close_for_strong_near_dups(docs, exact_pairs):
 
 def test_exact_dedup_matches_distinct_count(spark, sf_oracle, docs):
     n_distinct = docs.select("text").distinct().count()
-    assert dedup.exact_dedup_first(docs, "text", "doc_id").count() == n_distinct
-    assert dedup.exact_dedup_rows(docs, "text", "doc_id").count() == n_distinct
+    assert dedup.exact_dedup_first(docs).count() == n_distinct
+    assert dedup.exact_dedup_rows(docs).count() == n_distinct
 
 
 def test_ann_recall_floor(spark, sf_oracle):
@@ -131,29 +131,31 @@ def test_zscore_grouped_map(spark, sf_oracle):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_ivf_recall_and_probe_monotonicity(spark, sf_oracle):
-    """IVF with n_probe = n_centroids must equal exact brute force; fewer
-    probes trade recall for partition pruning."""
+def test_ivf_recall_and_probe_monotonicity(spark, sf_oracle, monkeypatch):
+    """IVF probing every cell must equal exact brute force; the default
+    IVF_PROBE trades recall for partition pruning."""
     emb = catalog.table(spark, sf_oracle, "embeddings")
     qids = [0, 1, 2, 3, 4]
     exact = {
         (r.query_id, r.neighbor_id)
         for r in similarity.cosine_topk(emb, qids, k=10).collect()
     }
+    monkeypatch.setattr(similarity, "IVF_PROBE", similarity.IVF_CENTROIDS)
     full_probe = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(emb, qids, n_centroids=8, n_probe=8).collect()
+        for r in similarity.ivf_topk(emb, qids).collect()
     }
     assert full_probe == exact  # probing every cell == exact search
+    monkeypatch.undo()
     partial = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(emb, qids, n_centroids=8, n_probe=3).collect()
+        for r in similarity.ivf_topk(emb, qids).collect()
     }
     assert len(exact & partial) / len(exact) >= 0.3
 
 
 @pytest.mark.slow
-def test_blocked_cosine_pairs_match_brute_force(spark, sf_oracle):
+def test_blocked_cosine_pairs_match_brute_force(spark, sf_oracle, monkeypatch):
     """The balanced block-pair join is a pure execution-strategy change:
     its output must equal the crossJoin baseline exactly (same LTR cosine
     bits, same pairs) at the registered threshold and a looser one."""
@@ -165,17 +167,14 @@ def test_blocked_cosine_pairs_match_brute_force(spark, sf_oracle):
         }
         blocked = {
             (r.id_a, r.id_b, r.cosine)
-            for r in dedup.embedding_cosine_pairs_blocked(
-                emb, threshold=t, blocks=16
-            ).collect()
+            for r in dedup.embedding_cosine_pairs_blocked(emb, threshold=t).collect()
         }
         assert blocked == brute
     # block count must not change results (task tiling only)
+    monkeypatch.setattr(dedup, "COSINE_BLOCKS", 3)
     few = {
         (r.id_a, r.id_b, r.cosine)
-        for r in dedup.embedding_cosine_pairs_blocked(
-            emb, threshold=0.35, blocks=3
-        ).collect()
+        for r in dedup.embedding_cosine_pairs_blocked(emb, threshold=0.35).collect()
     }
     assert few == {
         (r.id_a, r.id_b, r.cosine)
@@ -298,12 +297,12 @@ def test_zero_vector_cosine_edge(spark):
     )
     tile = sorted(
         (r.id_a, r.id_b, round(r.cosine, 9))
-        for r in dedup.embedding_cosine_pairs_blocked(df, threshold=0.9, blocks=4).collect()
+        for r in dedup.embedding_cosine_pairs_blocked(df, threshold=0.9).collect()
     )
     assert brute == tile == want
     ivf = sorted(
         (r.id_a, r.id_b)
-        for r in dedup.embedding_cosine_pairs_ivf(df, threshold=0.9, n_centroids=2).collect()
+        for r in dedup.embedding_cosine_pairs_ivf(df, threshold=0.9).collect()
     )
     assert ivf == [(1, 2), (1, 3), (2, 3)]
 
@@ -451,7 +450,7 @@ def test_byte_features_match_python_reference(spark):
     assert got[0] == pytest.approx([1 / 16] * 16, abs=1e-12)
 
 
-def test_bloom_prefilter_matches_exact_operator(spark, sf_oracle):
+def test_bloom_prefilter_matches_exact_operator(spark, sf_oracle, monkeypatch):
     """contamination_flags_bloom must produce byte-identical flags to the
     broadcast-exact operator — the bloom admits false positives but the
     confirm join removes them, and the no-false-negative guarantee means
@@ -475,11 +474,12 @@ def test_bloom_prefilter_matches_exact_operator(spark, sf_oracle):
         (r.doc_id, r.contaminated)
         for r in contamination_flags_bloom(train, bench).collect()
     }
+    # an undersized filter admits more false positives, never a wrong flag
+    monkeypatch.setattr(dedup, "BLOOM_M_BITS", 256)
+    monkeypatch.setattr(dedup, "BLOOM_K_HASHES", 2)
     assert exact == {
         (r.doc_id, r.contaminated)
-        for r in contamination_flags_bloom(
-            train, bench, m_bits=256, k_hashes=2
-        ).collect()
+        for r in contamination_flags_bloom(train, bench).collect()
     }
 
 
@@ -614,23 +614,22 @@ def test_winnowing_guarantee_shared_run_shares_fingerprint(spark):
     assert 3 not in by_doc
 
 
-def test_columnar_chunker_matches_udtf_and_overlap_covers_boundaries(spark, docs):
+def test_columnar_chunker_matches_udtf_and_overlap_covers_boundaries(
+    spark, docs, monkeypatch
+):
     """The pure-column chunker must reproduce the UDTF chunker exactly at
     overlap=0 (same chunks, indices, casing), and with overlap > 0 every
-    size-long token run must appear whole in at least one chunk (the
+    overlap-long token run must appear whole in at least one chunk (the
     boundary-coverage property RAG windowing exists for)."""
+    from spacex_data_pipeline_spark.operators import text
     from spacex_data_pipeline_spark.operators.text import (
         chunk_documents,
         chunk_documents_columnar,
     )
 
     sample = docs.limit(40)
-    udtf_rows = sorted(
-        map(tuple, chunk_documents(sample, size=16).collect())
-    )
-    col_rows = sorted(
-        map(tuple, chunk_documents_columnar(sample, size=16, overlap=0).collect())
-    )
+    udtf_rows = sorted(map(tuple, chunk_documents(sample).collect()))
+    col_rows = sorted(map(tuple, chunk_documents_columnar(sample, overlap=0).collect()))
     assert udtf_rows == col_rows
 
     # edge tabs/newlines must not produce phantom empty tokens (review
@@ -639,18 +638,18 @@ def test_columnar_chunker_matches_udtf_and_overlap_covers_boundaries(spark, docs
         [(1, "\tfoo bar baz"), (2, "a b\n"), (3, "\n"), (4, "x  \t y")],
         "doc_id long, text string",
     )
-    u = sorted(map(tuple, chunk_documents(edgy, size=4).collect()))
-    c = sorted(map(tuple, chunk_documents_columnar(edgy, size=4, overlap=0).collect()))
+    monkeypatch.setattr(text, "CHUNK_SIZE", 4)
+    u = sorted(map(tuple, chunk_documents(edgy).collect()))
+    c = sorted(map(tuple, chunk_documents_columnar(edgy, overlap=0).collect()))
     assert u == c
 
     # overlap: with size=8, overlap=4 (stride 4), any 4-token run lies
     # fully inside some chunk
-    text = " ".join(f"w{i}" for i in range(30))
-    one = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    chunks = [
-        r.chunk.split() for r in chunk_documents_columnar(one, size=8, overlap=4).collect()
-    ]
-    words = text.split()
+    corpus = " ".join(f"w{i}" for i in range(30))
+    one = spark.createDataFrame([(1, corpus)], "doc_id long, text string")
+    monkeypatch.setattr(text, "CHUNK_SIZE", 8)
+    chunks = [r.chunk.split() for r in chunk_documents_columnar(one, overlap=4).collect()]
+    words = corpus.split()
     for start in range(len(words) - 3):
         run = words[start : start + 4]
         assert any(
@@ -660,7 +659,7 @@ def test_columnar_chunker_matches_udtf_and_overlap_covers_boundaries(spark, docs
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        chunk_documents_columnar(one, size=8, overlap=8)
+        chunk_documents_columnar(one, overlap=8)
 
 
 
@@ -930,7 +929,7 @@ def test_contrastive_two_level_negatives_equal_direct_rank(spark, sf_oracle):
     assert got == want
 
 
-def test_bm25_two_level_rank_matches_direct(spark, sf_oracle):
+def test_bm25_two_level_rank_matches_direct(spark, sf_oracle, monkeypatch):
     """The bucketed two-level top-k is EXACT: (score DESC, doc_id) is a
     total order, so the direct single-window rank — recomputed here from
     the same scored table — selects the identical (query, doc, rank)
@@ -939,14 +938,17 @@ def test_bm25_two_level_rank_matches_direct(spark, sf_oracle):
     short matching docs above the long query doc itself.)"""
     from pyspark.sql import Window
 
+    from spacex_data_pipeline_spark.operators import text
     from spacex_data_pipeline_spark.operators.text import bm25_topk
     from spacex_data_pipeline_spark.queries import _t
 
     docs = _t(spark, sf_oracle, "documents")
-    got = bm25_topk(docs, [0, 1, 2], k=5, n_buckets=7).collect()
-    # direct form: n_buckets=1 collapses level 1 into a single bucket,
-    # making level 2 the plain global rank
-    direct = bm25_topk(docs, [0, 1, 2], k=5, n_buckets=1).collect()
+    monkeypatch.setattr(text, "BM25_BUCKETS", 7)
+    got = bm25_topk(docs, [0, 1, 2]).collect()
+    # direct form: one bucket collapses level 1, making level 2 the
+    # plain global rank
+    monkeypatch.setattr(text, "BM25_BUCKETS", 1)
+    direct = bm25_topk(docs, [0, 1, 2]).collect()
     assert sorted(((r.query_id, r.rank, r.doc_id, r.score) for r in got)) == sorted(
         (r.query_id, r.rank, r.doc_id, r.score) for r in direct
     )
@@ -954,7 +956,7 @@ def test_bm25_two_level_rank_matches_direct(spark, sf_oracle):
     for r in got:
         by_q.setdefault(r.query_id, set()).add(r.doc_id)
     for q in (0, 1, 2):
-        assert len(by_q[q]) == 5
+        assert len(by_q[q]) == 10
     assert all(r.score > 0 for r in got)
 
 
@@ -975,7 +977,7 @@ def test_duplicate_ngram_spans_interval_union(spark):
         (4, "tiny doc"),                              # < 8 tokens
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in duplicate_ngram_spans(docs, n=8).collect()}
+    got = {r.doc_id: r for r in duplicate_ngram_spans(docs).collect()}
 
     assert got[0].n_tokens == 10 and got[0].n_grams == 3
     # only the leading 8-gram of doc 0 is duplicated → 8 covered tokens
@@ -1104,25 +1106,27 @@ def test_scd2_invariants(spark, sf_oracle):
             assert a.priority != b.priority
 
 
-def test_ivfpq_full_probe_equals_adc(spark, sf_oracle):
+def test_ivfpq_full_probe_equals_adc(spark, sf_oracle, monkeypatch):
     """Probing every IVF cell makes IVF-PQ score exactly the ADC set:
-    pq_ivf_topk(n_probe == n_centroids) must equal pq_adc_topk row for
+    pq_ivf_topk(IVF_PROBE == IVF_CENTROIDS) must equal pq_adc_topk row for
     row (both exclude self) — the PQ twin of the IVF==exact full-probe
     identity. Fewer probes must return a subset-consistent ADC score
     for every (query, neighbor) it keeps."""
     emb = catalog.table(spark, sf_oracle, "embeddings")
     qids = [0, 1, 2, 3, 4]
+    monkeypatch.setattr(similarity, "IVF_PROBE", similarity.IVF_CENTROIDS)
     full = sorted(
         (r.query_id, r.neighbor_id, r.rank, r.adc)
-        for r in similarity.pq_ivf_topk(emb, qids, n_probe=16).collect()
+        for r in similarity.pq_ivf_topk(emb, qids).collect()
     )
+    monkeypatch.undo()
     adc = sorted(
         (r.query_id, r.neighbor_id, r.rank, r.adc)
         for r in similarity.pq_adc_topk(emb, qids).collect()
     )
     assert full == adc
     adc_scores = {(q, n): s for q, n, _, s in adc}
-    pruned = similarity.pq_ivf_topk(emb, qids, n_probe=4).collect()
+    pruned = similarity.pq_ivf_topk(emb, qids).collect()
     for r in pruned:
         if (r.query_id, r.neighbor_id) in adc_scores:
             assert adc_scores[(r.query_id, r.neighbor_id)] == r.adc
@@ -1196,7 +1200,7 @@ def test_span_surgery_idempotent_and_exact(spark):
     # non-owner docs... globally, removed tokens <= duplicated tokens
     from spacex_data_pipeline_spark.operators.dedup import duplicate_ngram_spans
 
-    stats = {r.doc_id: r for r in duplicate_ngram_spans(docs, n=8).collect()}
+    stats = {r.doc_id: r for r in duplicate_ngram_spans(docs).collect()}
     for i in range(4):
         assert out[i].n_removed_tokens <= stats[i].n_dup_tokens
 
@@ -1343,8 +1347,8 @@ def test_heavy_hitters_share_and_order(spark):
 
     rows = [("a",)] * 60 + [("b",)] * 30 + [("c",)] * 10
     df = spark.createDataFrame(rows, "k string")
-    got = [(r.k, r.freq, r.share_pct) for r in heavy_hitters(df, "k", k=2).collect()]
-    assert got == [("a", 60, 60.0), ("b", 30, 30.0)]
+    got = [(r.k, r.freq, r.share_pct) for r in heavy_hitters(df, "k").collect()]
+    assert got == [("a", 60, 60.0), ("b", 30, 30.0), ("c", 10, 10.0)]
 
 
 def test_weighted_sample_two_level_equals_direct_rank(spark, sf_oracle):
@@ -1495,14 +1499,14 @@ def test_text_index_persist_serve_matches_bm25(spark, sf_oracle, tmp_path):
         if t not in seen:
             seen.add(t)
             terms.append(t)
-        if len(terms) == 2:
+        if len(terms) == 3:
             break
 
     served = search_text_index(spark, path, terms, k=10)
     got = {r.doc_id: (r.rank, r.score) for r in served.collect()}
     want = {
         r.doc_id: (r.rank, r.score)
-        for r in bm25_topk(docs, [0], n_query_terms=2, k=10).collect()
+        for r in bm25_topk(docs, [0]).collect()
     }
     assert got == want
 
@@ -1640,6 +1644,7 @@ def test_text_index_compaction_failed_swap_leaves_whole_old_index(
     leaves no staging directory behind."""
     import os
 
+    from spacex_data_pipeline_spark.operators import text
     from spacex_data_pipeline_spark.operators.text import (
         compact_text_index,
         persist_text_index,
@@ -1652,8 +1657,9 @@ def test_text_index_compaction_failed_swap_leaves_whole_old_index(
         "doc_id long, text string",
     )
     path = str(tmp_path / "ix")
-    persist_text_index(docs, path, n_term_buckets=4)
-    tombstone_text_index(spark, path, [2, 5], n_term_buckets=4)
+    monkeypatch.setattr(text, "TERM_BUCKETS", 4)
+    persist_text_index(docs, path)
+    tombstone_text_index(spark, path, [2, 5])
 
     def files(p):
         return sorted(
@@ -1665,9 +1671,7 @@ def test_text_index_compaction_failed_swap_leaves_whole_old_index(
     def served(p):
         return sorted(
             tuple(r)
-            for r in search_text_index(
-                spark, p, ["alpha", "tok2"], k=10, n_term_buckets=4
-            ).collect()
+            for r in search_text_index(spark, p, ["alpha", "tok2"], k=10).collect()
         )
 
     before_files, before = files(path), served(path)
@@ -1682,7 +1686,7 @@ def test_text_index_compaction_failed_swap_leaves_whole_old_index(
     monkeypatch.setattr(os, "rename", second_rename_fails)
     with pytest.raises(OSError, match="second rename failed"):
         compact_text_index(spark, path)
-    monkeypatch.undo()
+    monkeypatch.setattr(os, "rename", real_rename)
 
     whole = path if os.path.isdir(path) else path + ".__compact_old__"
     assert files(whole) == before_files
@@ -1697,6 +1701,47 @@ def test_text_index_compaction_failed_swap_leaves_whole_old_index(
     assert sorted(os.listdir(tmp_path)) == ["ix"]
 
 
+def test_text_index_compaction_never_deletes_a_leftover_backup(spark, tmp_path):
+    """A crash between compact_text_index's two renames leaves the whole
+    old index only at ``.__compact_old__``. A later compaction of an
+    index rebuilt at the path must refuse to run, naming the backup, and
+    leave the backup's files byte-identical."""
+    import os
+    import re
+    import shutil
+
+    from spacex_data_pipeline_spark.operators.text import (
+        compact_text_index,
+        persist_text_index,
+        tombstone_text_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta tok{i}") for i in range(4)], "doc_id long, text string"
+    )
+    path = str(tmp_path / "ix")
+    old = path + ".__compact_old__"
+    persist_text_index(docs, path)
+    shutil.copytree(path, old)  # the backup a crash left behind
+    tombstone_text_index(spark, path, [1])
+
+    def contents(d):
+        out = {}
+        for root, _, names in os.walk(d):
+            for n in names:
+                f = os.path.join(root, n)
+                with open(f, "rb") as fh:
+                    out[os.path.relpath(f, d)] = fh.read()
+        return out
+
+    backup = contents(old)
+    with pytest.raises(FileExistsError, match=re.escape(old)):
+        compact_text_index(spark, path)
+    assert contents(old) == backup
+    assert not os.path.exists(path + ".__compact_tmp__")
+    assert "tombstones" in os.listdir(path)
+
+
 def test_blocking_report_accounts_for_planted_corpus(spark):
     """On a corpus of 3 near-identical names + 1 outlier: candidates
     equal the verified matches (precision 100), no hot keys at a high
@@ -1707,7 +1752,7 @@ def test_blocking_report_accounts_for_planted_corpus(spark):
         [(1, "abcdef"), (2, "abcdex"), (3, "abcdey"), (4, "zzzzzz")],
         "k long, name string",
     )
-    r = blocking_report(recs, "k", "name", max_gram_df=50).collect()[0]
+    r = blocking_report(recs, "k", "name").collect()[0]
     assert r.n_records == 4
     assert r.n_hot_keys == 0
     assert r.n_candidates == 3  # (1,2),(1,3),(2,3) share positional grams
@@ -1980,7 +2025,7 @@ def test_global_row_number_descending_order_via_negated_grain(spark):
     assert got == want
 
 
-def test_gram_matrix_quantized_matches_naive_on_negatives(spark):
+def test_gram_matrix_quantized_matches_naive_on_negatives(spark, monkeypatch):
     """floor() rounds toward -inf in numpy, Spark and DuckDB alike — the
     quantized Gram must agree with a naive per-pair computation on
     vectors with negative components and zero vectors."""
@@ -1992,6 +2037,7 @@ def test_gram_matrix_quantized_matches_naive_on_negatives(spark):
     )
 
     dim = 4
+    monkeypatch.setattr(similarity, "EMBED_DIM", dim)
     vecs = [
         [0.5, -0.5, 0.000001, -0.000001],
         [-1.0, 1.0, -0.3333333, 0.25],
@@ -2015,7 +2061,7 @@ def test_gram_matrix_quantized_matches_naive_on_negatives(spark):
     }
     got = {
         (r.i, r.j): r.g
-        for r in gram_matrix_quantized(df, dim=dim).collect()
+        for r in gram_matrix_quantized(df).collect()
     }
     assert got == want
     # covariance composition: centering identity vs the direct formula
@@ -2027,7 +2073,7 @@ def test_gram_matrix_quantized_matches_naive_on_negatives(spark):
     }
     got_cov = {
         (r.i, r.j): r.cov
-        for r in covariance_matrix_quantized(df, dim=dim).collect()
+        for r in covariance_matrix_quantized(df).collect()
     }
     assert got_cov == want_cov
 
@@ -2051,14 +2097,14 @@ def test_hashed_features_invariants(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    tf = hashed_features(docs, dims=8, signed=False, extra=["lang"])
+    tf = hashed_features(docs, signed=False, extra=["lang"])
     rows = tf.collect()
     assert sum(r.weight for r in rows) == 4 + 3 + 0 + 0 + 1
     assert {r.doc_id for r in rows} == {1, 2, 5}  # blank docs drop
-    assert all(0 <= r.bucket < 8 for r in rows)
+    assert all(0 <= r.bucket < 32 for r in rows)
     assert all(r.lang in {"en", "fr"} for r in rows)
 
-    signed = hashed_features(docs, dims=8, signed=True).collect()
+    signed = hashed_features(docs, signed=True).collect()
     tf_by_key = {(r.doc_id, r.bucket): r.weight for r in rows}
     for r in signed:
         assert r.weight != 0  # cancellations are filtered
@@ -2091,7 +2137,7 @@ def test_hashed_classifier_confusion_is_complete_and_exact(spark, sf_oracle):
         + [(i + 10, "chien chien", "fr") for i in range(10)],
         "doc_id long, text string, lang string",
     )
-    tf = hashed_features(planted, dims=8, signed=False, extra=["lang"]).select(
+    tf = hashed_features(planted, signed=False, extra=["lang"]).select(
         "doc_id",
         (F.col("lang") == "en").cast("int").alias("is_en"),
         "bucket",
@@ -2131,7 +2177,7 @@ def test_dsir_importance_favors_target_like_docs(spark):
         + [(200 + i, "zz yy xx ww vv uu", "srcB") for i in range(20)]
     )
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    tf = hashed_features(docs, dims=32, signed=False, extra=["source"]).select(
+    tf = hashed_features(docs, signed=False, extra=["source"]).select(
         "doc_id", "source", "bucket", F.col("weight").alias("w")
     )
     model = tf.groupBy("bucket").agg(
@@ -2294,7 +2340,7 @@ def test_bm25_self_retrieval_mrr_planted(spark):
 
     uniq = [(i, f"tok{i}a tok{i}b tok{i}c") for i in range(6)]
     docs = spark.createDataFrame(uniq, "doc_id long, text string")
-    ranked = bm25_topk(docs, [0, 1, 2], k=10)
+    ranked = bm25_topk(docs, [0, 1, 2])
     selfr = {r.query_id: r.rank for r in ranked.collect() if r.doc_id == r.query_id}
     assert selfr == {0: 1, 1: 1, 2: 1}
 
@@ -2302,7 +2348,7 @@ def test_bm25_self_retrieval_mrr_planted(spark):
     # keeps 0 first (0 < 99), so self still ranks 1 — but 99 now occupies
     # rank 2 of query 0's list
     dup = docs.union(spark.createDataFrame([(99, uniq[0][1])], "doc_id long, text string"))
-    r0 = {r.rank: r.doc_id for r in bm25_topk(dup, [0], k=10).collect()}
+    r0 = {r.rank: r.doc_id for r in bm25_topk(dup, [0]).collect()}
     assert r0[1] == 0 and r0[2] == 99
 
 
@@ -2400,8 +2446,8 @@ def test_cusum_finds_planted_level_shift(spark):
 
 
 def test_interval_overlap_join_binned_semantics(spark):
-    """Closed-bound overlap semantics, the exactly-once responsibility-bin
-    guarantee across multi-bin overlaps, and key scoping."""
+    """Closed-bound overlap semantics and the exactly-once
+    responsibility-bin guarantee across multi-bin overlaps."""
     from pyspark.sql import functions as F
 
     from spacex_data_pipeline_spark.operators.relational import (
@@ -2410,21 +2456,20 @@ def test_interval_overlap_join_binned_semantics(spark):
 
     left = spark.createDataFrame(
         [
-            (1, "a", "2024-01-01 08:30:00", "2024-01-01 11:30:00"),  # 3-bin overlap: once
-            (2, "a", "2024-01-01 09:00:00", "2024-01-01 09:10:00"),  # contained: once
-            (3, "a", "2024-01-01 10:00:00", "2024-01-01 10:00:00"),  # zero-length inside: once
-            (4, "a", "2024-01-01 12:00:00", "2024-01-01 12:30:00"),  # l_start == r_end: IN (closed)
-            (5, "a", "2024-01-01 12:00:01", "2024-01-01 13:00:00"),  # past end: OUT
-            (6, "a", "2024-01-01 07:00:00", "2024-01-01 07:59:59"),  # before start: OUT
-            (7, "b", "2024-01-01 09:00:00", "2024-01-01 10:00:00"),  # wrong key: OUT
+            (1, "2024-01-01 08:30:00", "2024-01-01 11:30:00"),  # 3-bin overlap: once
+            (2, "2024-01-01 09:00:00", "2024-01-01 09:10:00"),  # contained: once
+            (3, "2024-01-01 10:00:00", "2024-01-01 10:00:00"),  # zero-length inside: once
+            (4, "2024-01-01 12:00:00", "2024-01-01 12:30:00"),  # l_start == r_end: IN (closed)
+            (5, "2024-01-01 12:00:01", "2024-01-01 13:00:00"),  # past end: OUT
+            (6, "2024-01-01 07:00:00", "2024-01-01 07:59:59"),  # before start: OUT
         ],
-        "lid long, k string, s string, e string",
-    ).select("lid", "k", F.to_timestamp("s").alias("s"), F.to_timestamp("e").alias("e"))
+        "lid long, s string, e string",
+    ).select("lid", F.to_timestamp("s").alias("s"), F.to_timestamp("e").alias("e"))
     right = spark.createDataFrame(
-        [("a", "2024-01-01 08:00:00", "2024-01-01 12:00:00")],
-        "k string, rs string, re string",
-    ).select("k", F.to_timestamp("rs").alias("rs"), F.to_timestamp("re").alias("re"))
-    out = interval_overlap_join_binned(left, right, "s", "e", "rs", "re", keys=["k"])
+        [("2024-01-01 08:00:00", "2024-01-01 12:00:00")],
+        "rs string, re string",
+    ).select(F.to_timestamp("rs").alias("rs"), F.to_timestamp("re").alias("re"))
+    out = interval_overlap_join_binned(left, right, "s", "e", "rs", "re")
     got = sorted(r.lid for r in out.collect())
     assert got == [1, 2, 3, 4]  # each exactly once, no bin duplicates
 
@@ -2603,7 +2648,7 @@ def test_bitmap_packing_handles_negative_ids_identically_in_both_engines(spark):
     assert s_cells == d_cells
 
 
-def test_gram_deflation_recovers_second_axis(spark):
+def test_gram_deflation_recovers_second_axis(spark, monkeypatch):
     """deflate_gram_cells kills the top direction and exposes the second:
     on a synthetic corpus with two known orthogonal axes of different
     energy, the power iteration finds axis-0 first, and after deflation
@@ -2625,15 +2670,16 @@ def test_gram_deflation_recovers_second_axis(spark):
         rows.append((k, [1.0, 0.01, 0.0, 0.0]))
         rows.append((100 + k, [0.0, 0.5, 0.02, 0.0]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    full = mirror_gram_cells(gram_matrix_quantized(emb, dim=4))
+    monkeypatch.setattr(similarity, "EMBED_DIM", 4)
+    full = mirror_gram_cells(gram_matrix_quantized(emb))
     v1 = [
         r.v_micro
-        for r in power_iteration_from_cells(full, dim=4).orderBy("pos").collect()
+        for r in power_iteration_from_cells(full).orderBy("pos").collect()
     ]
     g2 = deflate_gram_cells(full, v1)
     v2 = [
         r.v_micro
-        for r in power_iteration_from_cells(g2, dim=4).orderBy("pos").collect()
+        for r in power_iteration_from_cells(g2).orderBy("pos").collect()
     ]
 
     def cos(a, b):
@@ -2733,7 +2779,7 @@ def test_containment_catches_embedded_doc_jaccard_misses(spark):
     df = spark.createDataFrame([(1, small), (2, host)], "doc_id long, text string")
     got = {
         (r.doc_a, r.doc_b): (r.a_size, r.inter, r.containment_pct)
-        for r in dedup.containment_pairs(df, threshold_pct=80, min_shingles=5).collect()
+        for r in dedup.containment_pairs(df).collect()
     }
     assert (1, 2) in got
     a_size, inter, pct = got[(1, 2)]

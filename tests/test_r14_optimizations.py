@@ -70,16 +70,8 @@ def test_pair_generators_shared_sizes_equivalence(spark, sf_smoke):
     assert _rows(
         ngram_jaccard_pairs(docs, threshold=0.2, postings=sh, sizes=sz)
     ) == _rows(ngram_jaccard_pairs(docs, threshold=0.2, postings=sh))
-    assert _rows(
-        containment_pairs(
-            docs, threshold_pct=80, min_shingles=5,
-            postings=sh, sizes=sz,
-        )
-    ) == _rows(
-        containment_pairs(
-            docs, threshold_pct=80, min_shingles=5,
-            postings=sh,
-        )
+    assert _rows(containment_pairs(docs, postings=sh, sizes=sz)) == _rows(
+        containment_pairs(docs, postings=sh)
     )
 
 

@@ -53,9 +53,7 @@ def test_bm25_topk_shared_tf_equivalence(spark, sf_smoke):
     sweep-share contract)."""
     docs = catalog.table(spark, sf_smoke, "documents")
     tf = materialize(bm25_tf(docs))
-    assert _rows(bm25_topk(docs, [0, 1, 2], k=10, tf=tf)) == _rows(
-        bm25_topk(docs, [0, 1, 2], k=10)
-    )
+    assert _rows(bm25_topk(docs, [0, 1, 2], tf=tf)) == _rows(bm25_topk(docs, [0, 1, 2]))
 
 
 def test_cc_matches_union_find_reference(spark):
@@ -102,17 +100,6 @@ def test_fanout_guard_never_fires_at_fixture_scale(spark, sf_smoke):
         assert "Repartition" not in plan, name
 
 
-def test_fanout_guard_malformed_floor_falls_back_to_default(
-    spark, sf_smoke, monkeypatch
-):
-    """A malformed SPARK_GRAFT_FANOUT_MIN_BYTES must not break table(): it
-    warns and the 1 GiB default applies, so fixtures stay un-fanned."""
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_BYTES", "1GiB")
-    with pytest.warns(UserWarning, match="SPARK_GRAFT_FANOUT_MIN_BYTES"):
-        df = catalog.table(spark, sf_smoke, "orders")
-    assert "Repartition" not in df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def test_fanout_guard_treats_one_file_directory_like_a_file(
     spark, sf_smoke, tmp_path, monkeypatch
 ):
@@ -126,7 +113,7 @@ def test_fanout_guard_treats_one_file_directory_like_a_file(
     catalog.table(spark, sf_smoke, "orders").coalesce(1).write.parquet(str(table_dir))
     parts = [f for f in os.listdir(table_dir) if f.endswith(".parquet")]
     assert len(parts) == 1 and os.path.exists(table_dir / "_SUCCESS")
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_BYTES", "1")
+    monkeypatch.setattr(catalog, "_FANOUT_MIN_BYTES", 1)
     fanned = catalog.table(spark, str(tmp_path), "orders")
     assert (
         fanned.rdd.getNumPartitions()
@@ -145,9 +132,9 @@ def test_fanout_guard_fires_above_floor_and_keeps_pushdown(
     the single-split scan to defaultParallelism AND Catalyst still pushes
     filters/pruning through the repartition into the parquet scan —
     values unchanged."""
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT_MIN_BYTES", "1")
+    monkeypatch.setattr(catalog, "_FANOUT_MIN_BYTES", 1)
     fanned = catalog.table(spark, sf_smoke, "orders")
-    monkeypatch.delenv("SPARK_GRAFT_FANOUT_MIN_BYTES")
+    monkeypatch.undo()
     plain = catalog.table(spark, sf_smoke, "orders")
     assert (
         fanned.rdd.getNumPartitions()

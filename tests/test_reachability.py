@@ -1,6 +1,7 @@
 """Every top-level definition in the package is reached from a runtime
-surface, and every option of an operator, function, source or plan is set
-by one, so code and options with no caller cannot come back unnoticed.
+surface, every option of an operator, function, source or plan is set by
+one, and no environment variable but a deployment setting is read, so
+code, options and env knobs with no caller cannot come back unnoticed.
 
 The runtime surfaces are the registered builders, module-level
 statements, the CLI (``__main__.py``), ``bench.py``, ``__spark_entry__.py``
@@ -134,50 +135,9 @@ def test_every_definition_is_reached_from_a_runtime_surface():
 
 _OPTION_DIRS = ("operators", "functions", "sources", "plans")
 
-# Options no runtime caller sets that stay, in three groups. The
-# parameters of REFERENCE_FORMS stay with them: only tests call those.
-
-# Options a test varies: the test checks behaviour at a value the runtime
-# never uses, so the option stays until that test is decided on its own.
-# An option such a test feeds through stays with it, and the text-index
-# verbs keep n_term_buckets as one set, since a search must use the
-# bucket count the index was built with.
-TEST_VARIED_OPTIONS = {
-    ("functions/checks.py", "heavy_hitters", "k"),
-    ("operators/dedup.py", "connected_components", "max_iter"),
-    ("operators/dedup.py", "containment_pairs", "min_shingles"),
-    ("operators/dedup.py", "containment_pairs", "threshold_pct"),
-    ("operators/dedup.py", "contamination_flags_bloom", "k_hashes"),
-    ("operators/dedup.py", "contamination_flags_bloom", "m_bits"),
-    ("operators/dedup.py", "duplicate_ngram_spans", "n"),
-    ("operators/dedup.py", "embedding_cosine_pairs_blocked", "blocks"),
-    ("operators/dedup.py", "embedding_cosine_pairs_ivf", "n_centroids"),
-    ("operators/dedup.py", "minhash_lsh_candidates", "threshold"),
-    ("operators/linkage.py", "blocking_report", "max_gram_df"),
-    ("operators/relational.py", "interval_overlap_join_binned", "keys"),
-    ("operators/relational.py", "salted_join", "salt"),
-    ("operators/relational.py", "skyline_2d", "bucket_shift"),
-    ("operators/similarity.py", "covariance_matrix_quantized", "dim"),
-    ("operators/similarity.py", "gram_matrix_quantized", "dim"),
-    ("operators/similarity.py", "ivf_assign_cells", "n_centroids"),
-    ("operators/similarity.py", "ivf_topk", "n_centroids"),
-    ("operators/similarity.py", "ivf_topk", "n_probe"),
-    ("operators/similarity.py", "power_iteration_from_cells", "dim"),
-    ("operators/similarity.py", "pq_ivf_topk", "n_probe"),
-    ("operators/text.py", "bm25_topk", "k"),
-    ("operators/text.py", "bm25_topk", "n_buckets"),
-    ("operators/text.py", "bm25_topk", "n_query_terms"),
-    ("operators/text.py", "chunk_documents", "size"),
-    ("operators/text.py", "chunk_documents_columnar", "size"),
-    ("operators/text.py", "hashed_features", "dims"),
-    ("operators/text.py", "persist_text_index", "n_term_buckets"),
-    ("operators/text.py", "search_text_index", "n_term_buckets"),
-    ("operators/text.py", "textrank_keywords", "n_iter"),
-    ("operators/text.py", "tombstone_text_index", "n_term_buckets"),
-    ("operators/text.py", "update_text_index", "n_term_buckets"),
-    ("operators/text.py", "winnowing_near_pairs", "min_shared"),
-}
-# Deployment settings: fixed in this repo, set per deployment.
+# The only options no runtime caller sets: deployment settings, fixed in
+# this repo and set per deployment, and the parameters of REFERENCE_FORMS,
+# which only tests call.
 DEPLOYMENT_SETTINGS = {
     ("sources/rest_api.py", "http_fetch", "url"),
     ("sources/rest_api.py", "http_fetch", "timeout"),
@@ -334,17 +294,101 @@ def unset_options() -> set[tuple[str, str, str]]:
 
 def test_every_option_is_set_by_a_runtime_caller():
     unset = unset_options()
-    kept = TEST_VARIED_OPTIONS | DEPLOYMENT_SETTINGS
     reference = {key for key in unset if key[:2] in REFERENCE_FORMS}
-    assert unset - kept - reference == set(), (
+    assert unset - DEPLOYMENT_SETTINGS - reference == set(), (
         "options no runtime caller sets to anything but their default; "
         "inline the default, or give the option a caller: "
-        + str(sorted(unset - kept - reference))
+        + str(sorted(unset - DEPLOYMENT_SETTINGS - reference))
     )
-    assert kept <= unset, (
+    assert DEPLOYMENT_SETTINGS <= unset, (
         "an allowlisted option is gone or now set at runtime; drop it from "
-        "the allowlist: " + str(sorted(kept - unset))
+        "the allowlist: " + str(sorted(DEPLOYMENT_SETTINGS - unset))
     )
+
+
+# --- Environment variables ------------------------------------------------
+#
+# The package and the driver surfaces read only the deployment settings
+# from the environment; a value a test needs to vary is a module constant
+# the test patches, not an env knob.
+
+DEPLOYMENT_ENV = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR"}
+
+
+def _is_environ(node: ast.AST) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr == "environ") or (
+        isinstance(node, ast.Name) and node.id == "environ"
+    )
+
+
+def _env_key(node: ast.AST) -> str | None:
+    """The variable an ``os.environ[...]``, ``os.environ.get(...)`` or
+    ``os.getenv(...)`` read names; ``"<dynamic>"`` for a key that is not
+    a string literal; None for any other node."""
+    if isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Load):
+        key = node.slice if _is_environ(node.value) else None
+    elif isinstance(node, ast.Call) and node.args and (
+        (isinstance(node.func, ast.Attribute) and node.func.attr == "get"
+         and _is_environ(node.func.value))
+        or (isinstance(node.func, ast.Attribute) and node.func.attr == "getenv")
+        or (isinstance(node.func, ast.Name) and node.func.id == "getenv")
+    ):
+        key = node.args[0]
+    else:
+        return None
+    if key is None:
+        return None
+    if isinstance(key, ast.Constant) and isinstance(key.value, str):
+        return key.value
+    return "<dynamic>"
+
+
+def env_reads(sources: dict[str, str]) -> dict[str, set[str]]:
+    """Variables read from the environment in ``sources`` (file name ->
+    source text): variable -> the files that read it."""
+    out: dict[str, set[str]] = {}
+    for name, text in sources.items():
+        for node in ast.walk(ast.parse(text)):
+            key = _env_key(node)
+            if key is not None:
+                out.setdefault(key, set()).add(name)
+    return out
+
+
+def test_only_deployment_settings_are_read_from_the_environment():
+    paths = [
+        *glob.glob(os.path.join(_PKG, "**", "*.py"), recursive=True),
+        os.path.join(_REPO, "bench.py"),
+        os.path.join(_REPO, "__spark_entry__.py"),
+    ]
+    sources = {}
+    for path in paths:
+        with open(path) as f:
+            sources[os.path.relpath(path, _REPO)] = f.read()
+    reads = env_reads(sources)
+    extra = {k: sorted(v) for k, v in reads.items() if k not in DEPLOYMENT_ENV}
+    assert extra == {}, (
+        "environment variables outside the deployment settings; make the "
+        "value a module constant: " + str(extra)
+    )
+
+
+def test_env_read_forms_are_all_seen():
+    """Each read form counts; a write, or a non-environ ``get``, does not."""
+    src = (
+        "import os\n"
+        "from os import environ, getenv\n"
+        "a = os.environ.get('A', '1')\n"
+        "b = os.environ['B']\n"
+        "c = os.getenv('C')\n"
+        "d = environ.get(name)\n"
+        "e = getenv('E')\n"
+        "os.environ['W'] = '1'\n"
+        "f = {}.get('F')\n"
+    )
+    assert env_reads({"m.py": src}) == {
+        k: {"m.py"} for k in ("A", "B", "C", "<dynamic>", "E")
+    }
 
 
 def test_a_call_through_a_bound_name_matches_the_bound_function():

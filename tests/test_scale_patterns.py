@@ -20,7 +20,7 @@ def test_salted_join_matches_plain_join(spark, sf_oracle):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     salted = (
-        salted_join(li, o, "l_orderkey", "o_orderkey", salt=4)
+        salted_join(li, o, "l_orderkey", "o_orderkey")
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -108,9 +108,9 @@ def test_minhash_bucket_cap_bounds_degenerate_buckets(spark):
     boiler = " ".join(f"w{j}" for j in range(30))
     rows = [(i, boiler) for i in range(40)]  # 40 identical docs
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    uncapped = minhash_lsh_candidates(df, threshold=0.0).count()
+    uncapped = minhash_lsh_candidates(df).count()
     assert uncapped == 40 * 39 // 2
-    capped = minhash_lsh_candidates(df, threshold=0.0, max_bucket_size=10).count()
+    capped = minhash_lsh_candidates(df, max_bucket_size=10).count()
     assert capped == 0
 
 
@@ -135,23 +135,22 @@ def test_skew_guards_are_noops_at_loose_caps(spark, sf_oracle):
     assert guarded == base
     mh_base = {
         (r.doc_a, r.doc_b, r.est_jaccard)
-        for r in minhash_lsh_candidates(docs, threshold=0.2).collect()
+        for r in minhash_lsh_candidates(docs).collect()
     }
     mh_guarded = {
         (r.doc_a, r.doc_b, r.est_jaccard)
-        for r in minhash_lsh_candidates(
-            docs, threshold=0.2, max_bucket_size=10**6
-        ).collect()
+        for r in minhash_lsh_candidates(docs, max_bucket_size=10**6).collect()
     }
     assert mh_guarded == mh_base
 
 
-def test_connected_components_warns_when_unconverged(spark):
+def test_connected_components_warns_when_unconverged(spark, monkeypatch):
     """A path graph of diameter d needs ~d rounds of min-label
-    propagation; with max_iter below that the operator must WARN rather
-    than silently return under-merged labels (ADVICE r2)."""
+    propagation; with CC_MAX_ITER below that the operator must WARN
+    rather than silently return under-merged labels (ADVICE r2)."""
     import warnings
 
+    from spacex_data_pipeline_spark.operators import dedup
     from spacex_data_pipeline_spark.operators.dedup import connected_components
 
     n = 8
@@ -161,14 +160,16 @@ def test_connected_components_warns_when_unconverged(spark):
     )
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        out = connected_components(nodes, chain, max_iter=2).collect()
+        monkeypatch.setattr(dedup, "CC_MAX_ITER", 2)
+        out = connected_components(nodes, chain).collect()
     assert any("did not converge" in str(w.message) for w in caught)
     assert len({r.component for r in out}) > 1  # visibly under-merged
 
     # and with enough rounds: converged, one component, no warning
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        out = connected_components(nodes, chain, max_iter=n).collect()
+        monkeypatch.setattr(dedup, "CC_MAX_ITER", n)
+        out = connected_components(nodes, chain).collect()
     assert not any("did not converge" in str(w.message) for w in caught)
     assert {r.component for r in out} == {0}
 
@@ -207,7 +208,7 @@ def test_caps_drop_only_hot_key_pairs(spark):
     # the genuine pair survives exactly (it shares no hot shingle)
     assert capped[(100, 101)] == uncapped[(100, 101)]
     # every dropped pair is hot-connected: both docs carry a hot shingle
-    sh = shingle_docs(df, "doc_id", "text")
+    sh = shingle_docs(df)
     from pyspark.sql import functions as SF
 
     hot_docs = {
@@ -323,13 +324,13 @@ def test_winnowing_fp_cap_drops_only_boilerplate_pairs(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
 
     uncapped = {
-        (r.doc_a, r.doc_b) for r in winnowing_near_pairs(df, min_shared=1).collect()
+        (r.doc_a, r.doc_b) for r in winnowing_near_pairs(df).collect()
     }
     assert (100, 101) in uncapped
     assert len(uncapped) > 30 * 29 // 2  # boilerplate all-pairs present
     capped = {
         (r.doc_a, r.doc_b)
-        for r in winnowing_near_pairs(df, min_shared=1, max_fp_df=10).collect()
+        for r in winnowing_near_pairs(df, max_fp_df=10).collect()
     }
     assert (100, 101) in capped          # rare-fp pair survives
     assert not any(a < 100 for a, _ in capped)  # hot boilerplate pairs gone
@@ -366,12 +367,17 @@ def test_prefix_filtered_jaccard_equals_equijoin_exact(spark, sf_oracle):
         assert got == want and len(want) > 0
 
 
-def test_containment_df_cap_is_monotone_and_bounded(spark):
+def test_containment_df_cap_is_monotone_and_bounded(spark, monkeypatch):
     """The containment skew cap mirrors the Jaccard cap's contract:
     capped pairs ⊆ uncapped pairs, reported containment never
     increases under the cap, and a genuine embedded pair sharing no
-    hot shingle survives exactly."""
+    hot shingle survives exactly. Every pair sharing a shingle counts
+    here (threshold 0, no size floor)."""
+    from spacex_data_pipeline_spark.operators import dedup
     from spacex_data_pipeline_spark.operators.dedup import containment_pairs
+
+    monkeypatch.setattr(dedup, "CONTAINMENT_PCT", 0)
+    monkeypatch.setattr(dedup, "CONTAINMENT_MIN_SHINGLES", 1)
 
     boiler = "subscribe to our newsletter for updates today"
     rows = []
@@ -384,13 +390,11 @@ def test_containment_df_cap_is_monotone_and_bounded(spark):
 
     uncapped = {
         (r.doc_a, r.doc_b): r.containment_pct
-        for r in containment_pairs(df, threshold_pct=0, min_shingles=1).collect()
+        for r in containment_pairs(df).collect()
     }
     capped = {
         (r.doc_a, r.doc_b): r.containment_pct
-        for r in containment_pairs(
-            df, threshold_pct=0, min_shingles=1, max_shingle_df=10
-        ).collect()
+        for r in containment_pairs(df, max_shingle_df=10).collect()
     }
     assert set(capped) <= set(uncapped)
     assert all(capped[p] <= uncapped[p] for p in capped)

@@ -62,8 +62,8 @@ def _write_files(path, sizes):
 def test_compact_merges_small_files(spark, tmp_path):
     """Compaction rewrites append debris into ceil(rows/target) files,
     preserves the data exactly, and leaves no staging dirs behind. The
-    row count comes from the footers and a one-file target is a
-    coalesce: a schema-inference job and the write job, no count job
+    row count and the schema come from the footers and a one-file target
+    is a coalesce: the write job alone, no count or schema-inference job
     and no shuffle."""
     import os
 
@@ -77,7 +77,7 @@ def test_compact_merges_small_files(spark, tmp_path):
 
     after, jobs = _counting_jobs(spark, lambda: compact(spark, path, target_rows_per_file=1000))
     assert after == 1
-    assert jobs == 2
+    assert jobs == 1
     back = spark.read.parquet(path)
     assert back.count() == 1000
     assert sorted(r.v for r in back.collect()) == list(range(1000))
@@ -178,6 +178,94 @@ def test_upsert_writes_right_sized_files(spark, tmp_path, monkeypatch, target):
         before = _listing(path)
         assert _counting_jobs(spark, lambda: sinks.compact(spark, path)) == (1, 0)
         assert _listing(path) == before
+
+
+def _plain_read(spark, path, footers):
+    return spark.read.parquet(path)
+
+
+def test_upsert_starts_no_schema_inference_job(spark, tmp_path, monkeypatch):
+    """Reading the existing rows with the footers' Spark schema saves
+    exactly the one job a plain read spends inferring it: the same upsert
+    into a twin table with the plain read starts one job more, and both
+    leave the same rows."""
+    from spacex_data_pipeline_spark.sources import sinks
+
+    base = spark.range(0, 200).withColumn("s", F.lit("old"))
+    incoming = spark.createDataFrame([(5, "new"), (900, "new")], "id long, s string")
+    pinned, plain = str(tmp_path / "pinned"), str(tmp_path / "plain")
+    for p in (pinned, plain):
+        base.repartition(4).write.parquet(p)
+    _, pinned_jobs = _counting_jobs(
+        spark, lambda: sinks.upsert_by_key(spark, incoming, pinned, "id")
+    )
+    monkeypatch.setattr(sinks, "_read_table", _plain_read)
+    _, plain_jobs = _counting_jobs(
+        spark, lambda: sinks.upsert_by_key(spark, incoming, plain, "id")
+    )
+    assert plain_jobs - pinned_jobs == 1
+    assert sorted(map(str, spark.read.parquet(pinned).collect())) == sorted(
+        map(str, spark.read.parquet(plain).collect())
+    )
+
+
+def test_footer_schema_equals_inferred_schema_on_a_raw_table(spark, tmp_path):
+    """On the raw SpaceX table (two appended batches, then an upsert
+    rewrite) the schema pinned from the footers is the schema a plain
+    read infers, and pinning it starts no job."""
+    import datetime as dt
+
+    from spacex_data_pipeline_spark.sources import rest_api, sinks
+    from tests.test_spacex_semantics import BATCH_TS, PAYLOAD
+
+    path = str(tmp_path / "raw")
+    for day in range(2):
+        sinks.append(
+            rest_api.normalize(spark, PAYLOAD, load_ts=BATCH_TS + dt.timedelta(days=day)),
+            path,
+        )
+
+    def check():
+        footers = sinks._file_rows(path)
+        assert len({s for _, _, s in footers}) == 1
+        pinned, jobs = _counting_jobs(spark, lambda: sinks._read_table(spark, path, footers))
+        assert jobs == 0
+        assert pinned.schema == spark.read.parquet(path).schema
+        assert sorted(map(str, pinned.collect())) == sorted(
+            map(str, spark.read.parquet(path).collect())
+        )
+
+    check()
+    batch = rest_api.normalize(spark, PAYLOAD[:1], load_ts=BATCH_TS + dt.timedelta(days=2))
+    sinks.upsert_by_key(spark, batch, path, "launch_id")
+    check()
+
+
+@pytest.mark.parametrize("layout", ["pyarrow", "mixed", "summary"])
+def test_read_falls_back_to_inference_unless_footers_agree(spark, tmp_path, layout):
+    """Files without Spark's schema string (pyarrow-written), files whose
+    strings differ, or a ``_common_metadata`` summary file (which Spark's
+    inference reads first) get a plain read, which infers with a job."""
+    from spacex_data_pipeline_spark.sources import sinks
+
+    path = str(tmp_path / layout)
+    if layout == "pyarrow":
+        _write_files(path, [10, 10])
+    else:
+        spark.range(0, 10).withColumnRenamed("id", "v").write.parquet(path)
+        if layout == "mixed":  # nullable v: a different schema string
+            spark.createDataFrame([(10,)], "v long").write.mode("append").parquet(path)
+        else:
+            import glob
+
+            import pyarrow.parquet as pq
+
+            part = glob.glob(f"{path}/*.parquet")[0]
+            pq.write_metadata(pq.read_schema(part), f"{path}/_common_metadata")
+    footers = sinks._file_rows(path)
+    df, jobs = _counting_jobs(spark, lambda: sinks._read_table(spark, path, footers))
+    assert jobs == 1
+    assert len({s for _, _, s in footers}) == (1 if layout != "mixed" else 2)
 
 
 def test_interrupted_swap_backup_is_never_deleted(spark, tmp_path, monkeypatch):
